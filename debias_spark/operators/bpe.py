@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from debias_spark.numeric import floor_eps_sql
+
 
 def word_freqs(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """(s, freq): space-joined character symbols per word TYPE, weighted
@@ -203,8 +205,8 @@ def bpe_encode_oracle(n_merges: int, duck_tokens_all: str) -> str:
            count(*) AS n_words,
            CAST(sum(len(string_split(s, ' '))) AS BIGINT) AS n_bpe_tokens,
            CAST(sum(wc) AS BIGINT) AS sum_chars,
-           CAST(floor(sum(wc)::DOUBLE / sum(len(string_split(s, ' ')))
-                      * 10000 + 0.5 + 1e-9) AS BIGINT) AS fertility_e4
+           {floor_eps_sql("sum(wc)::DOUBLE / sum(len(string_split(s, ' ')))", 10000)}
+               AS fertility_e4
     FROM enc{n_merges} GROUP BY doc_id
     """
     )

@@ -14,6 +14,8 @@ import os
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from debias_spark.numeric import floor_eps
+
 
 def salted_join(
     fact: DataFrame,
@@ -57,14 +59,7 @@ def key_skew_profile(df: DataFrame, key: str, top: int = 10) -> DataFrame:
         .select(
             key,
             "n",
-            # centi-units integer via floor(x*100 + 0.5 + eps), not
-            # round(x, 2): an integer ratio landing on an exact .xx5 tie
-            # splits Spark (shortest-decimal HALF_UP) from DuckDB (binary
-            # round) — the llm_ops13 flesch recipe.
-            F.floor(
-                F.col("n") * F.col("n_keys") / F.col("total_rows") * 100
-                + F.lit(0.5 + 1e-9)
-            )
+            floor_eps(F.col("n") * F.col("n_keys") / F.col("total_rows"), 100)
             .cast("long")
             .alias("x_mean_centi"),
         )

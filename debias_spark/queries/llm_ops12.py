@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from debias_spark.catalog import table
+from debias_spark.numeric import floor_eps, floor_eps_sql
 from debias_spark.operators.similarity import dot, l2_norm
 from debias_spark.registry import register
 
@@ -99,12 +100,12 @@ def embedding_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "embedding_kmeans_update",
     "Y33",
-    oracle=_ASSIGN_CTE + """
+    oracle=_ASSIGN_CTE + f"""
     SELECT a.cent_id,
            count(*) AS n_members,
-           CAST(floor(avg(e.v[1]) * 10000 + 0.5 + 1e-9) AS BIGINT) AS m0_e4,
-           CAST(floor(avg(e.v[2]) * 10000 + 0.5 + 1e-9) AS BIGINT) AS m1_e4,
-           CAST(floor(avg(e.v[3]) * 10000 + 0.5 + 1e-9) AS BIGINT) AS m2_e4
+           {floor_eps_sql("avg(e.v[1])", 10000)} AS m0_e4,
+           {floor_eps_sql("avg(e.v[2])", 10000)} AS m1_e4,
+           {floor_eps_sql("avg(e.v[3])", 10000)} AS m2_e4
     FROM a JOIN e ON e.vec_id = a.vec_id
     GROUP BY a.cent_id
     """,
@@ -123,16 +124,12 @@ def embedding_kmeans_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     round's broadcast (and at 100 TB adds minibatching), but the per-round
     dataflow is exactly what this key hashes.
 
-    Means are emitted as e4 INTEGERS via floor(x*1e4 + 0.5 + 1e-9), not
-    round(x, 4): Spark rounds the shortest-decimal repr HALF_UP while
-    DuckDB rounds the binary double, so exact .xxx5 ties diverge (this
-    was round 5's one red driver row) — floor of the identical double is
-    bit-stable in both engines (the llm_ops13 flesch recipe)."""
+    Means are emitted as floor-eps e4 INTEGERS, not round(x, 4): a
+    round() tie on an exact .xxx5 mean once split the two engines here."""
     assigned = _assignment(spark, sf_dir)
-    eps = F.lit(0.5 + 1e-9)
     return assigned.groupBy("cent_id").agg(
         F.count("*").alias("n_members"),
-        F.floor(F.avg(F.get("v", 0).cast("double")) * 10000 + eps).cast("long").alias("m0_e4"),
-        F.floor(F.avg(F.get("v", 1).cast("double")) * 10000 + eps).cast("long").alias("m1_e4"),
-        F.floor(F.avg(F.get("v", 2).cast("double")) * 10000 + eps).cast("long").alias("m2_e4"),
+        floor_eps(F.avg(F.get("v", 0).cast("double")), 10000).cast("long").alias("m0_e4"),
+        floor_eps(F.avg(F.get("v", 1).cast("double")), 10000).cast("long").alias("m1_e4"),
+        floor_eps(F.avg(F.get("v", 2).cast("double")), 10000).cast("long").alias("m2_e4"),
     )

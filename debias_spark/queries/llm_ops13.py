@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
 
 from debias_spark.catalog import table
+from debias_spark.numeric import floor_eps, floor_eps_sql
 from debias_spark.registry import register
 
 _DIM = 64
@@ -167,7 +168,7 @@ def embedding_pca_power_topvec(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "text_readability_flesch",
     "Y35",
-    oracle="""
+    oracle=f"""
     WITH c AS MATERIALIZED (
         SELECT doc_id,
                greatest(len(regexp_extract_all(text, '[.!?]+')), 1) AS n_sentences,
@@ -179,9 +180,8 @@ def embedding_pca_power_topvec(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(n_sentences AS INTEGER) AS n_sentences,
            CAST(n_words AS INTEGER) AS n_words,
            CAST(n_syllables AS INTEGER) AS n_syllables,
-           CAST(floor((206.835 - 1.015 * n_words / n_sentences
-                               - 84.6 * n_syllables / n_words) * 100
-                      + 0.500000001e0) AS BIGINT) AS flesch_centi
+           {floor_eps_sql("206.835 - 1.015 * n_words / n_sentences"
+                          " - 84.6 * n_syllables / n_words", 100)} AS flesch_centi
     FROM c
     """,
 )
@@ -211,15 +211,10 @@ def text_readability_flesch(spark: SparkSession, sf_dir: str) -> DataFrame:
         - F.lit(1.015) * F.col("n_words") / F.col("n_sentences")
         - F.lit(84.6) * F.col("n_syllables") / F.col("n_words")
     )
-    # centi-Flesch as an INTEGER via floor(x*100 + 0.5 + eps): Spark's
-    # round() rounds the shortest decimal repr HALF_UP while DuckDB rounds
-    # the binary double, so exact .xx5 ties (common here — integer ratios)
-    # diverge; floor of the identical double is bit-stable in both engines
-    # and the epsilon sends exact-tie doubles up on both sides.
     return c.select(
         "doc_id",
         "n_sentences",
         "n_words",
         "n_syllables",
-        F.floor(score * 100 + F.lit(0.5 + 1e-9)).cast("long").alias("flesch_centi"),
+        floor_eps(score, 100).cast("long").alias("flesch_centi"),
     )

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from debias_spark.catalog import table
+from debias_spark.numeric import EPS, floor_eps, floor_eps_sql
 from debias_spark.operators.bpe import bpe_encode_oracle, bpe_fit, word_freqs
 from debias_spark.operators.similarity import dot, l2_norm
 from debias_spark.registry import register
@@ -21,21 +22,6 @@ from debias_spark.registry import register
 _DUCK_ALL_TOKENS = (
     "list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '')"
 )
-
-# Floor-eps doctrine: Spark adds this PRE-FOLDED constant in ONE IEEE
-# addition (F.lit(_EPS)); the oracles must spell the identical single
-# addition — `+ 0.500000001e0` (the shortest round-trip repr of this
-# fold, parsed by DuckDB to the bit-identical double), never
-# `+ 0.5 + 1e-9` (two left-assoc additions, up to 1 ulp apart, which
-# can flip floor() at the integer-boundary ties the eps exists to pin).
-# Migration is INCREMENTAL by design: each respelled oracle invalidates
-# a driver-proven hash, so legacy two-add sites move over in window-
-# sized batches via CHANGED_SINCE_CHECK (r8: this file + llm_ops20 +
-# relational_ext39; r9: the transcendental-adjacent sites the r8 advice
-# named — llm_ops8/13/17/21/25, relational_ext20/36).  Until a site
-# migrates, tools/float_margin_audit.py guards it (eps 0 vs 2e-9 re-run
-# fails on any transcendental boundary hit).
-_EPS = 0.5 + 1e-9
 
 
 @register(
@@ -81,9 +67,7 @@ def bpe_encode_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n_words"),
         F.sum("n_sym").cast("long").alias("n_bpe_tokens"),
         F.sum("wc").cast("long").alias("sum_chars"),
-        F.floor(
-            F.sum("wc").cast("double") / F.sum("n_sym") * 10000 + F.lit(_EPS)
-        )
+        floor_eps(F.sum("wc").cast("double") / F.sum("n_sym"), 10000)
         .cast("long")
         .alias("fertility_e4"),
     )
@@ -102,8 +86,7 @@ _SEM_ASSIGN_CTE = f"""
             SELECT e.vec_id, c.cent_id,
                    row_number() OVER (
                        PARTITION BY e.vec_id
-                       ORDER BY floor(list_cosine_similarity(e.v, c.cv)
-                                      * 10000 + 0.500000001e0)
+                       ORDER BY {floor_eps_sql("list_cosine_similarity(e.v, c.cv)", 10000)}
                                     DESC, c.cent_id) AS rn
             FROM e CROSS JOIN c
         ) WHERE rn = 1
@@ -117,13 +100,12 @@ _SEM_ASSIGN_CTE = f"""
     oracle=_SEM_ASSIGN_CTE + f"""
     SELECT a1.cent_id,
            a1.vec_id AS id_a, a2.vec_id AS id_b,
-           CAST(floor(list_cosine_similarity(e1.v, e2.v) * 10000 + 0.500000001e0)
-                AS BIGINT) AS sim_e4
+           {floor_eps_sql("list_cosine_similarity(e1.v, e2.v)", 10000)} AS sim_e4
     FROM a a1
     JOIN a a2 ON a2.cent_id = a1.cent_id AND a1.vec_id < a2.vec_id
     JOIN e e1 ON e1.vec_id = a1.vec_id
     JOIN e e2 ON e2.vec_id = a2.vec_id
-    WHERE floor(list_cosine_similarity(e1.v, e2.v) * 10000 + 0.500000001e0)
+    WHERE {floor_eps_sql("list_cosine_similarity(e1.v, e2.v)", 10000)}
           >= {_SEM_THRESH_E4}
     """,
 )
@@ -154,18 +136,13 @@ def semdedup_cluster_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         l2_norm(F.col("embedding")).alias("nrm"),
     )
     # assignment argmax orders on the floor-eps e4 INTEGER, not round():
-    # Spark round() (HALF_UP on shortest-decimal repr) and DuckDB round()
-    # (binary double) can flip an exact .xxxx5 tie, and here the value sits
-    # in rank position where a flip changes cluster membership (r6 advice).
+    # here a flipped tie would change cluster membership.
     scored = base.crossJoin(F.broadcast(cents)).select(
         "vec_id",
         "cent_id",
         "v",
         "nrm",
-        F.floor(
-            dot(F.col("v"), F.col("cv")) / (F.col("nrm") * F.col("cn")) * 10000
-            + F.lit(_EPS)
-        )
+        floor_eps(dot(F.col("v"), F.col("cv")) / (F.col("nrm") * F.col("cn")), 10000)
         .cast("long")
         .alias("sim_e4"),
     )
@@ -191,7 +168,7 @@ def semdedup_cluster_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         v = np.stack(pdf["v"].to_numpy()).astype(np.float64)
         nrm = np.sqrt((v * v).sum(axis=1))
         sims = (v @ v.T) / (nrm[:, None] * nrm[None, :])
-        e4 = np.floor(sims * 10000 + _EPS).astype(np.int64)
+        e4 = np.floor(sims * 10000 + EPS).astype(np.int64)
         iu = np.triu_indices(len(ids), 1)
         keep = e4[iu] >= _SEM_THRESH_E4
         a, b = ids[iu[0]][keep], ids[iu[1]][keep]
@@ -229,8 +206,7 @@ _MAT_TOPK = 5
         WHERE vec_id < {_MAT_PROBES}
     ), coarse AS MATERIALIZED (
         SELECT query_id, vec_id AS cand_id, v, pv,
-               CAST(floor(list_cosine_similarity(pvc, vc) * 10000 + 0.500000001e0)
-                    AS BIGINT) AS coarse_e4
+               {floor_eps_sql("list_cosine_similarity(pvc, vc)", 10000)} AS coarse_e4
         FROM p JOIN e ON e.vec_id <> p.query_id
     ), shortlist AS (
         SELECT query_id, cand_id, v, pv FROM (
@@ -240,8 +216,7 @@ _MAT_TOPK = 5
         ) WHERE rn <= {_MAT_SHORTLIST}
     ), fine AS (
         SELECT query_id, cand_id,
-               CAST(floor(list_cosine_similarity(pv, v) * 10000 + 0.500000001e0)
-                    AS BIGINT) AS sim_e4
+               {floor_eps_sql("list_cosine_similarity(pv, v)", 10000)} AS sim_e4
         FROM shortlist
     )
     SELECT query_id, CAST(rn AS INTEGER) AS rank, cand_id, sim_e4 FROM (
@@ -279,9 +254,8 @@ def embedding_matryoshka_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.slice(F.col("embedding"), 1, _MAT_COARSE_DIMS).alias("pvc"),
         l2_norm(F.slice(F.col("embedding"), 1, _MAT_COARSE_DIMS)).alias("pncm"),
     )
-    coarse_e4 = F.floor(
-        dot(F.col("pvc"), F.col("vc")) / (F.col("pncm") * F.col("ncm")) * 10000
-        + F.lit(_EPS)
+    coarse_e4 = floor_eps(
+        dot(F.col("pvc"), F.col("vc")) / (F.col("pncm") * F.col("ncm")), 10000
     ).cast("long")
     scored = (
         base.crossJoin(F.broadcast(probes))
@@ -297,9 +271,8 @@ def embedding_matryoshka_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rn") <= _MAT_SHORTLIST)
         .drop("rn", "coarse_e4")
     )
-    sim_e4 = F.floor(
-        dot(F.col("pv"), F.col("v")) / (F.col("pnrm") * F.col("nrm")) * 10000
-        + F.lit(_EPS)
+    sim_e4 = floor_eps(
+        dot(F.col("pv"), F.col("v")) / (F.col("pnrm") * F.col("nrm")), 10000
     ).cast("long")
     fine = shortlist.select("query_id", "cand_id", sim_e4.alias("sim_e4"))
     w2 = Window.partitionBy("query_id").orderBy(F.desc("sim_e4"), F.asc("cand_id"))

@@ -17,9 +17,8 @@ from pyspark.sql.types import BinaryType, LongType, StructField, StructType
 from pyspark.sql.window import Window
 
 from debias_spark.catalog import table
+from debias_spark.numeric import floor_eps, floor_eps_sql
 from debias_spark.registry import register
-
-_EPS = 0.5 + 1e-9
 
 _PQ_SUBSPACES = 8
 _PQ_DIMS = 8  # 64-dim vectors -> 8 subvectors of 8 dims
@@ -40,9 +39,8 @@ _PQ_CODES = 4  # codebook entries per subspace: first 4 vectors' subvectors
         SELECT j, vec_id AS code, sv AS cv FROM sub WHERE vec_id < {_PQ_CODES}
     ), scored AS (
         SELECT s.vec_id, s.j, cb.code,
-               CAST(floor(list_sum([ (s.sv[i] - cb.cv[i]) * (s.sv[i] - cb.cv[i])
-                                     FOR i IN range(1, {_PQ_DIMS} + 1) ])
-                          * 10000 + 0.5 + 1e-9) AS BIGINT) AS d_e4
+               {floor_eps_sql("list_sum([ (s.sv[i] - cb.cv[i]) * (s.sv[i] - cb.cv[i])"
+                              f" FOR i IN range(1, {_PQ_DIMS} + 1) ])", 10000)} AS d_e4
         FROM sub s JOIN cb ON cb.j = s.j
     )
     SELECT vec_id, CAST(j AS INTEGER) AS subspace,
@@ -97,7 +95,7 @@ def embedding_pq_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         "j",
         "code",
-        F.floor(sqd * 10000 + F.lit(_EPS)).cast("long").alias("d_e4"),
+        floor_eps(sqd, 10000).cast("long").alias("d_e4"),
     )
     w = Window.partitionBy("vec_id", "j").orderBy("d_e4", "code")
     return (
@@ -137,9 +135,8 @@ _DRIFT_MIN_DF = 3
         FROM documents
     )
     SELECT term, df0, df1,
-           CAST(floor(ln(((df1 + 1.0) / (n.n1 + 1.0))
-                         / ((df0 + 1.0) / (n.n0 + 1.0)))
-                      * 10000 + 0.5 + 1e-9) AS BIGINT) AS logratio_e4
+           {floor_eps_sql("ln(((df1 + 1.0) / (n.n1 + 1.0))"
+                          " / ((df0 + 1.0) / (n.n0 + 1.0)))", 10000)} AS logratio_e4
     FROM df CROSS JOIN n
     WHERE df0 + df1 >= {_DRIFT_MIN_DF}
     ORDER BY abs(ln(((df1 + 1.0) / (n.n1 + 1.0)) / ((df0 + 1.0) / (n.n0 + 1.0))))
@@ -188,7 +185,7 @@ def docs_vocab_drift_logratio(spark: SparkSession, sf_dir: str) -> DataFrame:
             "term",
             "df0",
             "df1",
-            F.floor(lr * 10000 + F.lit(_EPS)).cast("long").alias("logratio_e4"),
+            floor_eps(lr, 10000).cast("long").alias("logratio_e4"),
             F.abs(lr).alias("_absr"),
         )
         .orderBy(F.desc("_absr"), F.asc("term"))

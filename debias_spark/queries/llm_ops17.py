@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from debias_spark.catalog import table
+from debias_spark.numeric import floor_eps, floor_eps_sql
 from debias_spark.registry import register
 
 _HAM_PROBES = 10
@@ -128,12 +129,9 @@ _ZIPF_TOP = 200
         FROM freq ORDER BY f DESC, term LIMIT {_ZIPF_TOP}
     )
     SELECT count(*) AS n_terms,
-           CAST(floor(regr_slope(ln(f::DOUBLE), ln(r::DOUBLE)) * 10000
-                      + 0.500000001e0) AS BIGINT) AS slope_e4,
-           CAST(floor(regr_intercept(ln(f::DOUBLE), ln(r::DOUBLE)) * 10000
-                      + 0.500000001e0) AS BIGINT) AS intercept_e4,
-           CAST(floor(regr_r2(ln(f::DOUBLE), ln(r::DOUBLE)) * 10000
-                      + 0.500000001e0) AS BIGINT) AS r2_e4
+           {floor_eps_sql("regr_slope(ln(f::DOUBLE), ln(r::DOUBLE))", 10000)} AS slope_e4,
+           {floor_eps_sql("regr_intercept(ln(f::DOUBLE), ln(r::DOUBLE))", 10000)} AS intercept_e4,
+           {floor_eps_sql("regr_r2(ln(f::DOUBLE), ln(r::DOUBLE))", 10000)} AS r2_e4
     FROM ranked
     """,
 )
@@ -161,10 +159,9 @@ def text_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
         "f", F.row_number().over(Window.orderBy(F.desc("f"), F.asc("term"))).alias("r")
     )
     lf, lr = F.log(F.col("f").cast("double")), F.log(F.col("r").cast("double"))
-    eps = F.lit(0.5 + 1e-9)
     return ranked.agg(
         F.count("*").alias("n_terms"),
-        F.floor(F.regr_slope(lf, lr) * 10000 + eps).cast("long").alias("slope_e4"),
-        F.floor(F.regr_intercept(lf, lr) * 10000 + eps).cast("long").alias("intercept_e4"),
-        F.floor(F.regr_r2(lf, lr) * 10000 + eps).cast("long").alias("r2_e4"),
+        floor_eps(F.regr_slope(lf, lr), 10000).cast("long").alias("slope_e4"),
+        floor_eps(F.regr_intercept(lf, lr), 10000).cast("long").alias("intercept_e4"),
+        floor_eps(F.regr_r2(lf, lr), 10000).cast("long").alias("r2_e4"),
     )

@@ -14,25 +14,26 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from debias_spark.catalog import table
+from debias_spark.numeric import floor_eps_sql
 from debias_spark.registry import register
 
 # Laplace-smoothed multinomial NB, 80/20 split on doc_id % 5.  All
 # log-probabilities are rounded to INTEGER micro-nats per token FIRST
-# (floor(ln(p)*1e6 + 0.5 + 1e-9), a deterministic function of integer
+# (floor_eps_sql(ln(p), 1e6), a deterministic function of integer
 # counts) and only then summed — BIGINT addition is order-independent,
 # so Spark's partition-order-dependent double summation never enters the
 # hash (the same discipline as the Y18 bigram-LM key).
-_NB_SQL = """
-WITH train_tok AS {mat}(
+_NB_SQL = f"""
+WITH train_tok AS {{mat}}(
     SELECT doc_id, lang, token
     FROM (
-        SELECT doc_id, lang, {explode} AS token FROM {docs}
+        SELECT doc_id, lang, {{explode}} AS token FROM {{docs}}
         WHERE doc_id % 5 != 0
     ) WHERE token != ''
 ), test_tok AS (
     SELECT doc_id, lang AS actual_lang, token, count(*) AS m
     FROM (
-        SELECT doc_id, lang, {explode} AS token FROM {docs}
+        SELECT doc_id, lang, {{explode}} AS token FROM {{docs}}
         WHERE doc_id % 5 = 0
     ) WHERE token != ''
     GROUP BY doc_id, lang, token
@@ -40,7 +41,7 @@ WITH train_tok AS {mat}(
     SELECT lang,
            count(*) AS lang_docs,
            sum(count(*)) OVER () AS total_docs
-    FROM {docs} WHERE doc_id % 5 != 0 GROUP BY lang
+    FROM {{docs}} WHERE doc_id % 5 != 0 GROUP BY lang
 ), vocab AS (
     SELECT count(DISTINCT token) AS v FROM train_tok
 ), lang_tot AS (
@@ -49,9 +50,8 @@ WITH train_tok AS {mat}(
     SELECT lang, token, count(*) AS c FROM train_tok GROUP BY lang, token
 ), scored AS (
     SELECT tt.doc_id, tt.actual_lang, lt.lang,
-           sum(tt.m * CAST(floor(ln(CAST(coalesce(c.c, 0) + 1 AS DOUBLE)
-                                     / (lt.tot + vocab.v)) * 1000000
-                                 + 0.5 + 1e-9) AS BIGINT)) AS ll_micro
+           sum(tt.m * {floor_eps_sql("ln(CAST(coalesce(c.c, 0) + 1 AS DOUBLE)"
+                                     " / (lt.tot + vocab.v))", 1000000)}) AS ll_micro
     FROM test_tok tt
     CROSS JOIN lang_tot lt
     CROSS JOIN vocab
@@ -62,9 +62,8 @@ WITH train_tok AS {mat}(
            row_number() OVER (
                PARTITION BY doc_id
                ORDER BY ll_micro
-                   + CAST(floor(ln(CAST(p.lang_docs AS DOUBLE)
-                                   / p.total_docs) * 1000000
-                               + 0.5 + 1e-9) AS BIGINT) DESC,
+                   + {floor_eps_sql("ln(CAST(p.lang_docs AS DOUBLE) / p.total_docs)", 1000000)}
+                   DESC,
                    lang ASC) AS rn
     FROM scored JOIN priors p USING (lang)
 )
@@ -147,20 +146,20 @@ SELECT t.doc_id, t.token, v.df
 FROM tok t JOIN vocab v ON t.token = v.token
 """
 
-_PMI_TAIL_SQL = """
-WITH {dt_cte}n_docs AS (
-    SELECT count(*) AS n FROM {docs}
+_PMI_TAIL_SQL = f"""
+WITH {{dt_cte}}n_docs AS (
+    SELECT count(*) AS n FROM {{docs}}
 ), pairs AS (
     SELECT a.token AS tok_a, b.token AS tok_b,
            a.df AS df_a, b.df AS df_b, count(*) AS n_ab
-    FROM {dt} a JOIN {dt} b
+    FROM {{dt}} a JOIN {{dt}} b
       ON a.doc_id = b.doc_id AND a.token < b.token
     GROUP BY a.token, b.token, a.df, b.df
     HAVING count(*) >= 5
 ), scored AS (
     SELECT tok_a, tok_b, CAST(n_ab AS BIGINT) AS n_ab,
-           CAST(floor(ln(CAST(n_ab AS DOUBLE) * n.n / (df_a * df_b))
-                      * 1000000 + 0.5 + 1e-9) AS BIGINT) AS pmi_micro
+           {floor_eps_sql("ln(CAST(n_ab AS DOUBLE) * n.n / (df_a * df_b))", 1000000)}
+               AS pmi_micro
     FROM pairs CROSS JOIN n_docs n
 )
 SELECT tok_a, tok_b, n_ab, pmi_micro

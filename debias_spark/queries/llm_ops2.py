@@ -10,6 +10,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from debias_spark.catalog import table
+from debias_spark.numeric import floor_eps, floor_eps_sql
 from debias_spark.operators.skew import fan_out
 from debias_spark.operators.dedup import bind_once
 from debias_spark.registry import register
@@ -29,10 +30,10 @@ _TOKS = r"list_filter(string_split_regex(lower(text), '\s+'), t -> t <> '')"
         FROM documents
     )
     SELECT doc_id, n_tokens,
-           CAST(floor(coalesce(sum_len / nullif(n_tokens, 0), 0) * 10000
-                      + 0.5 + 1e-9) AS BIGINT) AS mean_word_len_e4,
-           CAST(floor(coalesce(n_distinct::DOUBLE / nullif(n_tokens, 0), 0) * 10000
-                      + 0.5 + 1e-9) AS BIGINT) AS frac_unique_e4,
+           {floor_eps_sql("coalesce(sum_len / nullif(n_tokens, 0), 0)", 10000)}
+               AS mean_word_len_e4,
+           {floor_eps_sql("coalesce(n_distinct::DOUBLE / nullif(n_tokens, 0), 0)", 10000)}
+               AS frac_unique_e4,
            (n_tokens >= 10 AND n_tokens <= 100000
             AND coalesce(sum_len / nullif(n_tokens, 0), 0) BETWEEN 2 AND 12
             AND coalesce(n_distinct::DOUBLE / nullif(n_tokens, 0), 0) >= 0.1) AS passes
@@ -65,11 +66,8 @@ def text_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.select(
         "doc_id",
         n_tokens.alias("n_tokens"),
-        # floor-eps e4 integers: these are integer-ratio formulas, exactly
-        # the exact-.xxx5-tie shape where Spark/DuckDB round() diverges
-        # (llm_ops13 flesch recipe).
-        F.floor(mean_wl * 10000 + F.lit(0.5 + 1e-9)).cast("long").alias("mean_word_len_e4"),
-        F.floor(frac_uq * 10000 + F.lit(0.5 + 1e-9)).cast("long").alias("frac_unique_e4"),
+        floor_eps(mean_wl, 10000).cast("long").alias("mean_word_len_e4"),
+        floor_eps(frac_uq, 10000).cast("long").alias("frac_unique_e4"),
         passes.alias("passes"),
     )
 

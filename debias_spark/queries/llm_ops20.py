@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from debias_spark.catalog import table
+from debias_spark.numeric import floor_eps, floor_eps_sql
 from debias_spark.operators import similarity
 from debias_spark.registry import register
 
@@ -21,11 +22,8 @@ _K_CAND = 10  # relevance candidates fed to MMR
 _LAMBDA = "0.7"  # relevance weight; (1 - lambda) penalizes redundancy
 
 # Greedy MMR unrolled to 3 selections.  rel/pair sims enter as floor-eps
-# e4 INTEGERS (floor(sim*1e4 + 0.500000001e0)) — not round(sim, 4): Spark
-# rounds the shortest-decimal repr HALF_UP while DuckDB rounds the binary
-# double, so an exact .xxxx5 tie could flip an argmax (r6 advice); the
-# floor of the identical double is bit-stable on both engines.  The MMR
-# score 0.7*rel - 0.3*ms is then arithmetic on the same small integers,
+# e4 INTEGERS (debias_spark.numeric), so no rounding tie can flip an
+# argmax.  The MMR score 0.7*rel - 0.3*ms is then arithmetic on the same small integers,
 # so every comparison is over bit-identical doubles; ties break on
 # cand_id.  The same tail text runs on Spark (over checkpointed views)
 # and DuckDB (over MATERIALIZED CTEs).
@@ -70,19 +68,16 @@ _MMR_ORACLE_CTES = f"""e AS MATERIALIZED (
 ), rel AS MATERIALIZED (
     SELECT cand_id, sim FROM (
         SELECT c.vec_id AS cand_id,
-               CAST(floor(list_cosine_similarity(q.v, c.v) * 10000
-                          + 0.500000001e0) AS BIGINT) AS sim,
+               {floor_eps_sql("list_cosine_similarity(q.v, c.v)", 10000)} AS sim,
                row_number() OVER (
-                   ORDER BY floor(list_cosine_similarity(q.v, c.v) * 10000
-                                  + 0.500000001e0) DESC,
+                   ORDER BY {floor_eps_sql("list_cosine_similarity(q.v, c.v)", 10000)} DESC,
                             c.vec_id) AS rn
         FROM e q JOIN e c ON c.vec_id <> q.vec_id
         WHERE q.vec_id = 0
     ) WHERE rn <= {_K_CAND}
 ), pairs AS MATERIALIZED (
     SELECT a.cand_id AS a, b.cand_id AS b,
-           CAST(floor(list_cosine_similarity(ea.v, eb.v) * 10000
-                      + 0.500000001e0) AS BIGINT) AS sim
+           {floor_eps_sql("list_cosine_similarity(ea.v, eb.v)", 10000)} AS sim
     FROM rel a JOIN rel b ON a.cand_id <> b.cand_id
     JOIN e ea ON ea.vec_id = a.cand_id
     JOIN e eb ON eb.vec_id = b.cand_id
@@ -108,11 +103,9 @@ def embedding_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     selections value-for-value.
 
     Determinism: every similarity enters as a floor-eps e4 integer
-    (floor(sim*1e4 + 0.500000001e0)) before any comparison — the round-6
-    doctrine for values in RANK position, where a Spark-vs-DuckDB
-    round() disagreement on an exact .xxxx5 tie would change which
-    candidate gets selected; the MMR scores are arithmetic on those
-    shared integers.
+    before any comparison — these values sit in RANK position, where a
+    flipped tie would change which candidate gets selected; the MMR
+    scores are arithmetic on those shared integers.
 
     Scale shape: retrieval is the H8 broadcast-probe scan (or the H8b
     LSH-bucketed variant at corpus scale); everything after operates on
@@ -120,7 +113,6 @@ def embedding_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     independent of corpus size.  The candidate+pair frames are
     localCheckpointed once (10 + 90 rows) so the unrolled chain replans
     nothing upstream."""
-    _eps = 0.5 + 1e-9
     emb = table(spark, sf_dir, "embeddings")
     base = emb.select(
         F.col("vec_id").alias("cand_id"),
@@ -137,11 +129,10 @@ def embedding_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("cand_id") != 0)
         .select(
             "cand_id",
-            F.floor(
+            floor_eps(
                 similarity.dot(F.col("q"), F.col("v"))
-                / (F.col("qn") * F.col("nrm"))
-                * 10000
-                + F.lit(_eps)
+                / (F.col("qn") * F.col("nrm")),
+                10000,
             )
             .cast("long")
             .alias("sim"),
@@ -174,14 +165,13 @@ def embedding_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "a",
             "b",
-            F.floor(
+            floor_eps(
                 similarity.dot(F.col("va"), F.col("vb"))
                 / (
                     similarity.l2_norm(F.col("va"))
                     * similarity.l2_norm(F.col("vb"))
-                )
-                * 10000
-                + F.lit(_eps)
+                ),
+                10000,
             )
             .cast("long")
             .alias("sim"),

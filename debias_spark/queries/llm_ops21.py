@@ -13,13 +13,14 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from debias_spark.catalog import table
+from debias_spark.numeric import floor_eps, floor_eps_sql
 from debias_spark.registry import register
 
 
 @register(
     "text_kl_divergence_lang",
     "Y50",
-    oracle=r"""
+    oracle=rf"""
     WITH toks AS (
         SELECT lang,
                unnest(list_filter(string_split_regex(lower(text), '\s+'),
@@ -32,10 +33,9 @@ from debias_spark.registry import register
     m AS (SELECT sum(c) AS m FROM lt)
     SELECT lt.lang,
            CAST(any_value(n.n) AS BIGINT) AS n_tokens,
-           CAST(floor(sum((lt.c / CAST(n.n AS DOUBLE))
-                          * ln(CAST(lt.c * m.m AS DOUBLE)
-                               / CAST(n.n * g.g AS DOUBLE)))
-                      * 1000000 + 0.500000001e0) AS BIGINT) AS kl_e6
+           {floor_eps_sql("sum((lt.c / CAST(n.n AS DOUBLE))"
+                          " * ln(CAST(lt.c * m.m AS DOUBLE)"
+                          " / CAST(n.n * g.g AS DOUBLE)))", 1000000)} AS kl_e6
     FROM lt
     JOIN n ON n.lang = lt.lang
     JOIN g ON g.token = lt.token
@@ -90,7 +90,7 @@ def text_kl_divergence_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("lang")
         .agg(
             F.any_value("n").cast("long").alias("n_tokens"),
-            F.floor(F.sum(contrib) * 1000000 + F.lit(0.5 + 1e-9))
+            floor_eps(F.sum(contrib), 1000000)
             .cast("long")
             .alias("kl_e6"),
         )
@@ -101,7 +101,7 @@ def text_kl_divergence_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "text_trigram_diversity",
     "Y51",
-    oracle=r"""
+    oracle=rf"""
     WITH toks AS (
         SELECT lang,
                list_filter(string_split_regex(lower(text), '\s+'),
@@ -118,9 +118,8 @@ def text_kl_divergence_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT lang,
            CAST(sum(c) AS BIGINT) AS n_trigrams,
            CAST(count(*) AS BIGINT) AS n_distinct,
-           CAST(floor(CAST(count(*) * 1000000 AS DOUBLE)
-                      / CAST(sum(c) AS DOUBLE) + 0.500000001e0) AS BIGINT)
-               AS diversity_e6
+           {floor_eps_sql("CAST(count(*) * 1000000 AS DOUBLE)"
+                          " / CAST(sum(c) AS DOUBLE)")} AS diversity_e6
     FROM lt
     GROUP BY lang
     ORDER BY lang
@@ -166,10 +165,8 @@ def text_trigram_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.sum("c").alias("n_trigrams"),
             F.count("*").alias("n_distinct"),
-            F.floor(
-                (F.count("*") * 1000000).cast("double")
-                / F.sum("c").cast("double")
-                + F.lit(0.5 + 1e-9)
+            floor_eps(
+                (F.count("*") * 1000000).cast("double") / F.sum("c").cast("double")
             )
             .cast("long")
             .alias("diversity_e6"),

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
 from debias_spark.catalog import table
+from debias_spark.numeric import floor_eps, floor_eps_sql
 from debias_spark.queries.llm_ops11 import _synth_bmp_frame
 from debias_spark.registry import register
 
@@ -102,7 +103,7 @@ def multimodal_image_tile_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "embedding_centroid_drift",
     "Y52",
-    oracle="""
+    oracle=f"""
     WITH dims AS (
         SELECT unnest(range(1, (SELECT max(len(embedding)) FROM embeddings)
                                + 1)) AS i
@@ -117,9 +118,9 @@ def multimodal_image_tile_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT ls.label,
            CAST(max(ls.cnt) AS BIGINT) AS n_vecs,
-           CAST(floor(sum(ls.s * g.gs)
-                      / (sqrt(sum(ls.s * ls.s)) * sqrt(sum(g.gs * g.gs)))
-                      * 1000000 + 0.5 + 1e-9) AS BIGINT) AS cos_e6
+           {floor_eps_sql("sum(ls.s * g.gs)"
+                          " / (sqrt(sum(ls.s * ls.s)) * sqrt(sum(g.gs * g.gs)))", 1000000)}
+               AS cos_e6
     FROM ls JOIN g ON g.i = ls.i
     GROUP BY ls.label
     ORDER BY ls.label
@@ -157,14 +158,13 @@ def embedding_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("label")
         .agg(
             F.max("cnt").alias("n_vecs"),
-            F.floor(
+            floor_eps(
                 F.sum(F.col("s") * F.col("gs"))
                 / (
                     F.sqrt(F.sum(F.col("s") * F.col("s")))
                     * F.sqrt(F.sum(F.col("gs") * F.col("gs")))
-                )
-                * 1000000
-                + F.lit(0.5 + 1e-9)
+                ),
+                1000000,
             )
             .cast("long")
             .alias("cos_e6"),

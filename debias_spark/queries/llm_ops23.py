@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from debias_spark.catalog import table
+from debias_spark.numeric import floor_eps, floor_eps_sql
 from debias_spark.registry import register
 
 _BUDGET = 100_000  # total sampled-doc budget the mixture distributes
@@ -37,10 +38,8 @@ _BOILER_DF = 5  # chunk document-frequency threshold
         FROM s
     )
     SELECT s.lang, s.n_docs,
-           CAST(floor(s.w / tot.sw * 1000000 + 0.5 + 1e-9) AS BIGINT)
-               AS weight_e6,
-           CAST(floor({_BUDGET} * s.w / tot.sw + 0.5 + 1e-9) AS BIGINT)
-               AS target_docs
+           {floor_eps_sql("s.w / tot.sw", 1000000)} AS weight_e6,
+           {floor_eps_sql(f"{_BUDGET} * s.w / tot.sw")} AS target_docs
     FROM s, tot
     ORDER BY s.lang
     """,
@@ -72,16 +71,15 @@ def corpus_mixture_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda acc, x: acc + x["w"],
         ).alias("sw")
     )
-    eps = F.lit(0.5 + 1e-9)
     return (
         s.crossJoin(F.broadcast(tot))
         .select(
             "lang",
             F.col("n_docs").cast("long").alias("n_docs"),
-            F.floor(F.col("w") / F.col("sw") * 1000000 + eps)
+            floor_eps(F.col("w") / F.col("sw"), 1000000)
             .cast("long")
             .alias("weight_e6"),
-            F.floor(F.lit(_BUDGET) * F.col("w") / F.col("sw") + eps)
+            floor_eps(F.lit(_BUDGET) * F.col("w") / F.col("sw"))
             .cast("long")
             .alias("target_docs"),
         )

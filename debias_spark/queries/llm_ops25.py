@@ -11,16 +11,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from debias_spark.catalog import table
+from debias_spark.numeric import floor_eps, floor_eps_sql
 from debias_spark.operators.skew import fan_out
 from debias_spark.registry import register
-
-_EPS = 0.5 + 1e-9
 
 
 @register(
     "docs_trigram_renyi_entropy",
     "Y56",
-    oracle=r"""
+    oracle=rf"""
     WITH t AS (
         SELECT doc_id, substring(lower(text), 1, 512) AS txt
         FROM documents WHERE len(text) >= 3
@@ -39,8 +38,8 @@ _EPS = 0.5 + 1e-9
     SELECT doc_id,
            CAST(n AS BIGINT) AS n_grams,
            CAST(n_distinct AS BIGINT) AS n_distinct,
-           CAST(floor(ln(CAST(n * n AS DOUBLE) / CAST(c2 AS DOUBLE))
-                      * 1000000 + 0.500000001e0) AS BIGINT) AS renyi2_e6
+           {floor_eps_sql("ln(CAST(n * n AS DOUBLE) / CAST(c2 AS DOUBLE))", 1000000)}
+               AS renyi2_e6
     FROM s ORDER BY doc_id
     """,
 )
@@ -86,10 +85,9 @@ def docs_trigram_renyi_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.col("n").cast("long").alias("n_grams"),
         F.col("n_distinct").cast("long").alias("n_distinct"),
-        F.floor(
-            F.log((F.col("n") * F.col("n")).cast("double") / F.col("c2").cast("double"))
-            * 1000000
-            + F.lit(_EPS)
+        floor_eps(
+            F.log((F.col("n") * F.col("n")).cast("double") / F.col("c2").cast("double")),
+            1000000,
         )
         .cast("long")
         .alias("renyi2_e6"),

@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from debias_spark.catalog import table
+from debias_spark.numeric import floor_eps, floor_eps_sql
 from debias_spark.operators.similarity import dot, l2_norm
 from debias_spark.registry import register
 
@@ -31,12 +32,11 @@ _THRESH_E4 = 6000
         WHERE vec_id % {_HOLDOUT_MOD} = 0
     ), scored AS (
         SELECT c.vec_id, h.holdout_id,
-               CAST(floor(list_cosine_similarity(c.v, h.hv) * 10000
-                          + 0.5 + 1e-9) AS BIGINT) AS sim_e4,
+               {floor_eps_sql("list_cosine_similarity(c.v, h.hv)", 10000)} AS sim_e4,
                row_number() OVER (
                    PARTITION BY c.vec_id
-                   ORDER BY floor(list_cosine_similarity(c.v, h.hv) * 10000
-                                  + 0.5 + 1e-9) DESC, h.holdout_id
+                   ORDER BY {floor_eps_sql("list_cosine_similarity(c.v, h.hv)", 10000)}
+                                DESC, h.holdout_id
                ) AS rn
         FROM e c CROSS JOIN h
         WHERE c.vec_id % {_HOLDOUT_MOD} <> 0
@@ -73,9 +73,8 @@ def embedding_decontamination_screen(spark: SparkSession, sf_dir: str) -> DataFr
         F.col("embedding").alias("v"),
         l2_norm(F.col("embedding")).alias("nrm"),
     )
-    sim_e4 = F.floor(
-        dot(F.col("v"), F.col("hv")) / (F.col("nrm") * F.col("hn")) * 10000
-        + F.lit(0.5 + 1e-9)
+    sim_e4 = floor_eps(
+        dot(F.col("v"), F.col("hv")) / (F.col("nrm") * F.col("hn")), 10000
     ).cast("long")
     scored = corpus.crossJoin(F.broadcast(hold)).select(
         "vec_id", "holdout_id", sim_e4.alias("sim_e4")

@@ -13,18 +13,18 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from debias_spark.catalog import table
+from debias_spark.numeric import floor_eps, floor_eps_sql
 from debias_spark.operators.similarity import dot, l2_norm
 from debias_spark.queries.llm_ops15 import _SEM_ASSIGN_CTE
 from debias_spark.registry import register
 
-_EPS = 0.5 + 1e-9
 _K = 8  # pinned centroids, shared with Y32/Y38
 
 
 @register(
     "embedding_cluster_ari",
     "Y59",
-    oracle=_SEM_ASSIGN_CTE + """
+    oracle=_SEM_ASSIGN_CTE + f"""
     , ct AS MATERIALIZED (
         SELECT a.cent_id, e.label, count(*) AS n
         FROM a JOIN embeddings e ON e.vec_id = a.vec_id
@@ -42,11 +42,10 @@ _K = 8  # pinned centroids, shared with Y32/Y38
     )
     SELECT CAST(m.total AS BIGINT) AS n_vecs,
            CAST(m.s AS BIGINT) AS pair_agree,
-           CAST(floor(CAST(2 * (m.s * (m.total * (m.total - 1) / 2)
-                                - ra.a * rb.b) AS DOUBLE)
-                      / CAST((ra.a + rb.b) * (m.total * (m.total - 1) / 2)
-                             - 2 * ra.a * rb.b AS DOUBLE)
-                      * 1000000 + 0.5 + 1e-9) AS BIGINT) AS ari_e6
+           {floor_eps_sql("CAST(2 * (m.s * (m.total * (m.total - 1) / 2)"
+                          " - ra.a * rb.b) AS DOUBLE)"
+                          " / CAST((ra.a + rb.b) * (m.total * (m.total - 1) / 2)"
+                          " - 2 * ra.a * rb.b AS DOUBLE)", 1000000)} AS ari_e6
     FROM m, ra, rb
     """,
 )
@@ -80,10 +79,7 @@ def embedding_cluster_ari(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         "label",
         "cent_id",
-        F.floor(
-            dot(F.col("v"), F.col("cv")) / (F.col("nrm") * F.col("cn")) * 10000
-            + F.lit(_EPS)
-        )
+        floor_eps(dot(F.col("v"), F.col("cv")) / (F.col("nrm") * F.col("cn")), 10000)
         .cast("long")
         .alias("sim_e4"),
     )
@@ -121,7 +117,7 @@ def embedding_cluster_ari(spark: SparkSession, sf_dir: str) -> DataFrame:
     return j.select(
         F.col("total").cast("long").alias("n_vecs"),
         F.col("s").cast("long").alias("pair_agree"),
-        F.floor(num / den * 1000000 + F.lit(_EPS)).cast("long").alias("ari_e6"),
+        floor_eps(num / den, 1000000).cast("long").alias("ari_e6"),
     )
 
 

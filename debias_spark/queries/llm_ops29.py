@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from debias_spark.catalog import table
+from debias_spark.numeric import floor_eps, floor_eps_sql
 from debias_spark.operators.skew import fan_out
 from debias_spark.operators.similarity import dot, l2_norm
 from debias_spark.registry import register
@@ -26,10 +27,6 @@ from debias_spark.registry import register
 _TRAIN_LT = 98
 _VAL_EQ = 98
 _THRESH_E4 = 6000
-# floor-eps doctrine (llm_ops15): Spark adds the pre-folded 0.5 + 1e-9 in
-# ONE IEEE addition; the oracle spells the identical single addition as
-# the literal 0.500000001e0.
-_EPS = 0.5 + 1e-9
 
 
 @register(
@@ -48,8 +45,8 @@ _EPS = 0.5 + 1e-9
     ), contaminated AS (
         SELECT DISTINCT b.doc_id
         FROM base b JOIN ev
-          ON floor(list_cosine_similarity(b.v, ev.ev) * 10000
-                   + 0.500000001e0) >= {_THRESH_E4}
+          ON {floor_eps_sql("list_cosine_similarity(b.v, ev.ev)", 10000)}
+             >= {_THRESH_E4}
         WHERE b.split = 'train'
     )
     SELECT b.split, b.lang,
@@ -111,9 +108,8 @@ def docs_train_split_decontaminated(spark: SparkSession, sf_dir: str) -> DataFra
     ev = base.filter(F.col("split") != "train").select(
         F.col("v").alias("ev"), F.col("nrm").alias("en")
     )
-    sim_e4 = F.floor(
-        dot(F.col("v"), F.col("ev")) / (F.col("nrm") * F.col("en")) * 10000
-        + F.lit(_EPS)
+    sim_e4 = floor_eps(
+        dot(F.col("v"), F.col("ev")) / (F.col("nrm") * F.col("en")), 10000
     ).cast("long")
     # EXISTS via max-sim: one row per train doc survives the screen shuffle
     screened = (

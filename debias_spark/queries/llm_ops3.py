@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from debias_spark.catalog import table
+from debias_spark.numeric import floor_eps, floor_eps_sql
 from debias_spark.registry import register
 
 
@@ -124,7 +125,7 @@ def text_ngram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "embedding_norm_stats",
     "Z3",
-    oracle="""
+    oracle=f"""
     WITH n AS (
         SELECT label,
                sqrt(list_aggregate([x * x FOR x IN CAST(embedding AS DOUBLE[])],
@@ -133,9 +134,9 @@ def text_ngram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT label,
            count(*) AS n_vecs,
-           CAST(floor(avg(nrm) * 10000 + 0.5 + 1e-9) AS BIGINT) AS avg_norm_e4,
-           CAST(floor(min(nrm) * 10000 + 0.5 + 1e-9) AS BIGINT) AS min_norm_e4,
-           CAST(floor(max(nrm) * 10000 + 0.5 + 1e-9) AS BIGINT) AS max_norm_e4
+           {floor_eps_sql("avg(nrm)", 10000)} AS avg_norm_e4,
+           {floor_eps_sql("min(nrm)", 10000)} AS min_norm_e4,
+           {floor_eps_sql("max(nrm)", 10000)} AS max_norm_e4
     FROM n GROUP BY label ORDER BY label
     """,
 )
@@ -156,11 +157,9 @@ def embedding_norm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("label")
         .agg(
             F.count("*").alias("n_vecs"),
-            # floor-eps e4 integers, not round(,4)+0.0: the .xxx5 repr-tie
-            # class diverges across engines (llm_ops13 flesch recipe).
-            F.floor(F.avg("nrm") * 10000 + F.lit(0.5 + 1e-9)).cast("long").alias("avg_norm_e4"),
-            F.floor(F.min("nrm") * 10000 + F.lit(0.5 + 1e-9)).cast("long").alias("min_norm_e4"),
-            F.floor(F.max("nrm") * 10000 + F.lit(0.5 + 1e-9)).cast("long").alias("max_norm_e4"),
+            floor_eps(F.avg("nrm"), 10000).cast("long").alias("avg_norm_e4"),
+            floor_eps(F.min("nrm"), 10000).cast("long").alias("min_norm_e4"),
+            floor_eps(F.max("nrm"), 10000).cast("long").alias("max_norm_e4"),
         )
         .orderBy("label")
     )

@@ -12,7 +12,6 @@ planning surface a 100 TB corpus pipeline needs AROUND that refresh loop.
 
 from __future__ import annotations
 
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -194,9 +193,8 @@ _SPAN_K = 20  # char k-gram width; spans merge overlapping duplicated grams
 # (tools/hotgram_stress.py: a 24M-row hot partition stays robust and
 # still beats the alternatives); past it, the two-pass agg + left-semi
 # spelling bounds every task via map-side partial counts and AQE's
-# skew-splittable join.  Env-overridable (read at import) so stress runs
-# can force the two-pass path on small fixtures.
-_GRAM_WINDOW_MAX = int(os.environ.get("DEBIAS_GRAM_WINDOW_MAX", 32_000_000))
+# skew-splittable join.
+_GRAM_WINDOW_MAX = 32_000_000
 
 
 @register(
@@ -288,9 +286,8 @@ def docs_substring_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     #
     # r14 hardening, diagnose-then-choose (the fan_out / _salt_factor
     # doctrine — derive the shape from the input, never a constant
-    # tuned for one scale).  Measured (OPTIMIZATION_r14.md, tools/
-    # hotgram_stress.py): every skew-safe spelling LOSES at sf0.1
-    # (salted collect_list pack +80%, two-pass agg+semi +~15% flat and
+    # tuned for one scale).  Measured (tools/hotgram_stress.py): every
+    # skew-safe spelling LOSES at sf0.1 (salted collect_list pack +80%, two-pass agg+semi +~15% flat and
     # 2x the md5 work), the salted pack additionally GC-thrashes under
     # the very skew it targets (object arrays), and the spill-backed
     # WindowExec stays robust to a 24M-row hot gram — the agg+semi

@@ -25,7 +25,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from debias_spark.catalog import table
-from debias_spark.queries.llm_ops16 import _EPS, _PQ_DIMS, _PQ_SUBSPACES
+from debias_spark.numeric import EPS, floor_eps, floor_eps_sql
+from debias_spark.queries.llm_ops16 import _PQ_DIMS, _PQ_SUBSPACES
 from debias_spark.queries.llm_ops36 import _IVF_DIM, _IVF_K, _SCORE_ROUND
 from debias_spark.registry import register
 
@@ -41,9 +42,10 @@ _NQ = 10  # probe set: vec_id < 10 (the Y5b contract)
 # squared-L2 between two DuckDB 8-dim list slices, floored to e4 ints —
 # the Y41 spelling (llm_ops16.py): fold order is left-to-right in both
 # engines, so the doubles match bit-for-bit before the floor
-_SQD_DUCK = (
-    "CAST(floor(list_sum([({a}[i] - {b}[i]) * ({a}[i] - {b}[i])"
-    f" FOR i IN range(1, {_PQ_DIMS} + 1)]) * 10000 + {_EPS}) AS BIGINT)"
+_SQD_DUCK = floor_eps_sql(
+    "list_sum([({a}[i] - {b}[i]) * ({a}[i] - {b}[i])"
+    f" FOR i IN range(1, {_PQ_DIMS} + 1)])",
+    10000,
 )
 
 
@@ -185,7 +187,7 @@ def pq_codes_vectorized(book: dict[int, list[float]]):
             for k in range(_PQ_DIMS):
                 diff = xs[:, k : k + 1] - cb[j, :, k]  # n x CODES
                 d = d + diff * diff
-            e4 = np.floor(d * 10000.0 + _EPS).astype(np.int64)
+            e4 = np.floor(d * 10000.0 + EPS).astype(np.int64)
             codes[:, j] = e4.argmin(axis=1)
         return pd.Series(list(codes))
 
@@ -256,7 +258,7 @@ def pq_codes_expr(book: dict[int, list[float]]):
             F.transform(
                 F.sequence(F.lit(0), F.lit(_PQ_CODES - 1)),
                 lambda c: F.struct(
-                    F.floor(
+                    floor_eps(
                         F.aggregate(
                             F.zip_with(
                                 F.slice(vcol, j * _PQ_DIMS + 1, _PQ_DIMS),
@@ -269,9 +271,8 @@ def pq_codes_expr(book: dict[int, list[float]]):
                             ),
                             F.lit(0.0),
                             lambda acc, x: acc + x,
-                        )
-                        * 10000
-                        + F.lit(_EPS)
+                        ),
+                        10000,
                     )
                     .cast("long")
                     .alias("d"),
@@ -344,7 +345,7 @@ def ivfpq_search(
         "query_id",
         "j",
         "code",
-        F.floor(sqd_q * 10000 + F.lit(_EPS)).cast("long").alias("qd_e4"),
+        floor_eps(sqd_q, 10000).cast("long").alias("qd_e4"),
     )
     ad = (
         coded.join(F.broadcast(probes.select("query_id", "cell")), "cell")

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from debias_spark.catalog import table
+from debias_spark.numeric import floor_eps, floor_eps_sql
 from debias_spark.registry import register
 
 VOCAB_TOP = 1000  # unigram-LM vocabulary cap (bounded broadcast at any corpus size)
@@ -43,8 +44,7 @@ VOCAB_TOP = 1000  # unigram-LM vocabulary cap (bounded broadcast at any corpus s
     )
     SELECT t.doc_id,
            count(*) AS n_tokens,
-           CAST(floor(avg(-ln(coalesce(v.n, 1) / (total.big_n + 1.0)))
-                      * 1000000 + 0.5 + 1e-9) AS BIGINT) AS avg_surprisal_e6
+           {floor_eps_sql("avg(-ln(coalesce(v.n, 1) / (total.big_n + 1.0)))", 1000000)} AS avg_surprisal_e6
     FROM toks t
     LEFT JOIN vocab v ON t.token = v.token
     CROSS JOIN total
@@ -84,9 +84,7 @@ def text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id")
         .agg(
             F.count("*").alias("n_tokens"),
-            # floor-eps e6 integer, not round(,6): .x5 repr-tie class
-            # (llm_ops13 flesch recipe).
-            F.floor(F.avg(surprisal) * 1000000 + F.lit(0.5 + 1e-9)).cast("long").alias("avg_surprisal_e6"),
+            floor_eps(F.avg(surprisal), 1000000).cast("long").alias("avg_surprisal_e6"),
         )
     )
 

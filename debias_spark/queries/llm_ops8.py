@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from debias_spark.catalog import table
+from debias_spark.numeric import floor_eps, floor_eps_sql
 from debias_spark.operators.skew import fan_out
 from debias_spark.registry import register
 
@@ -25,7 +26,7 @@ def _tokens(col: str = "text"):
 @register(
     "text_bigram_lm_score",
     "Y18",
-    oracle=r"""
+    oracle=rf"""
     WITH toks AS (
         SELECT doc_id,
                list_filter(string_split_regex(lower(text), '\s+'),
@@ -33,7 +34,7 @@ def _tokens(col: str = "text"):
         FROM documents
     ), bg AS (
         SELECT doc_id,
-               unnest([{'w1': t[i], 'w2': t[i + 1]}
+               unnest([{{'w1': t[i], 'w2': t[i + 1]}}
                        FOR i IN range(1, len(t))], recursive := true)
         FROM toks
     ), uni AS (
@@ -46,8 +47,8 @@ def _tokens(col: str = "text"):
     )
     SELECT bg.doc_id,
            count(*) AS n_bigrams,
-           CAST(floor(avg(-ln((big.n12 + 1.0) / (uni.n1 + vv.v)))
-                      * 1000000 + 0.500000001e0) AS BIGINT) AS avg_nll_e6
+           {floor_eps_sql("avg(-ln((big.n12 + 1.0) / (uni.n1 + vv.v)))", 1000000)}
+               AS avg_nll_e6
     FROM bg
     JOIN big ON bg.w1 = big.w1 AND bg.w2 = big.w2
     JOIN uni ON bg.w1 = uni.w
@@ -93,9 +94,7 @@ def text_bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id")
         .agg(
             F.count("*").alias("n_bigrams"),
-            # floor-eps e6 integer, not round(,6): .x5 repr-tie class
-            # (llm_ops13 flesch recipe).
-            F.floor(F.avg(nll) * 1000000 + F.lit(0.5 + 1e-9)).cast("long").alias("avg_nll_e6"),
+            floor_eps(F.avg(nll), 1000000).cast("long").alias("avg_nll_e6"),
         )
     )
 

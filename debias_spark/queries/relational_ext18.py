@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from debias_spark.catalog import table
+from debias_spark.numeric import floor_eps_sql
 from debias_spark.registry import register
 
 
@@ -59,7 +60,7 @@ def join_salted_hotkey(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "diag_key_skew_profile",
     "X105",
-    oracle="""
+    oracle=f"""
     WITH counts AS MATERIALIZED (
         SELECT l_suppkey, count(*) AS n FROM lineitem GROUP BY l_suppkey
     ), tot AS (
@@ -68,8 +69,7 @@ def join_salted_hotkey(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM counts
     )
     SELECT l_suppkey, n,
-           CAST(floor(n * t.n_keys / t.total_rows * 100 + 0.5 + 1e-9)
-                AS BIGINT) AS x_mean_centi
+           {floor_eps_sql("n * t.n_keys / t.total_rows", 100)} AS x_mean_centi
     FROM counts, tot t
     ORDER BY n DESC, l_suppkey
     LIMIT 10

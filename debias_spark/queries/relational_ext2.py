@@ -12,21 +12,22 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from debias_spark.catalog import table
+from debias_spark.numeric import floor_eps, floor_eps_sql
 from debias_spark.registry import register
 
 
 @register(
     "tpch_q1_pricing_summary",
     "X1",
-    oracle="""
+    oracle=f"""
     SELECT l_returnflag, l_linestatus,
            round(sum(l_quantity), 2) AS sum_qty,
            round(sum(l_extendedprice), 2) AS sum_base_price,
            round(sum(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
            round(sum(l_extendedprice * (1 - l_discount) * (1 + l_tax)), 2) AS sum_charge,
-           CAST(floor(avg(l_quantity) * 10000 + 0.5 + 1e-9) AS BIGINT) AS avg_qty_e4,
-           CAST(floor(avg(l_extendedprice) * 10000 + 0.5 + 1e-9) AS BIGINT) AS avg_price_e4,
-           CAST(floor(avg(l_discount) * 10000 + 0.5 + 1e-9) AS BIGINT) AS avg_disc_e4,
+           {floor_eps_sql("avg(l_quantity)", 10000)} AS avg_qty_e4,
+           {floor_eps_sql("avg(l_extendedprice)", 10000)} AS avg_price_e4,
+           {floor_eps_sql("avg(l_discount)", 10000)} AS avg_disc_e4,
            count(*) AS count_order
     FROM lineitem
     WHERE l_shipdate <= TIMESTAMP '1998-09-01'
@@ -49,13 +50,9 @@ def tpch_q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum("l_extendedprice"), 2).alias("sum_base_price"),
             F.round(F.sum(disc_price), 2).alias("sum_disc_price"),
             F.round(F.sum(disc_price * (1 + F.col("l_tax"))), 2).alias("sum_charge"),
-            # e4 integers via floor(x*1e4 + 0.5 + eps), not round(x, 4):
-            # Spark HALF_UPs the shortest-decimal repr while DuckDB rounds
-            # the binary double, so exact .xxx5 ties diverge (llm_ops13
-            # flesch recipe; round-5 Y33 was this bug firing).
-            F.floor(F.avg("l_quantity") * 10000 + F.lit(0.5 + 1e-9)).cast("long").alias("avg_qty_e4"),
-            F.floor(F.avg("l_extendedprice") * 10000 + F.lit(0.5 + 1e-9)).cast("long").alias("avg_price_e4"),
-            F.floor(F.avg("l_discount") * 10000 + F.lit(0.5 + 1e-9)).cast("long").alias("avg_disc_e4"),
+            floor_eps(F.avg("l_quantity"), 10000).cast("long").alias("avg_qty_e4"),
+            floor_eps(F.avg("l_extendedprice"), 10000).cast("long").alias("avg_price_e4"),
+            floor_eps(F.avg("l_discount"), 10000).cast("long").alias("avg_disc_e4"),
             F.count("*").alias("count_order"),
         )
         .orderBy("l_returnflag", "l_linestatus")

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from debias_spark.catalog import table
+from debias_spark.numeric import floor_eps, floor_eps_sql
 from debias_spark.registry import register
 
 _CELL = 0.5  # degrees; at |lat| <= 2 a 3x3 neighborhood covers 50 km (0.45 deg)
@@ -90,8 +91,7 @@ _LAT, _LON = _coords_sql("c_custkey")
     )
     SELECT probe_id, cand_id, dist_m FROM (
         SELECT probe_id, cand_id,
-               CAST(floor({_haversine_m_sql('plat', 'plon', 'clat', 'clon')}
-                          + 0.500000001e0) AS BIGINT) AS dist_m
+               {floor_eps_sql(_haversine_m_sql('plat', 'plon', 'clat', 'clon'))} AS dist_m
         FROM cand
     ) WHERE dist_m <= {int(_RADIUS_M)}
     """,
@@ -109,9 +109,8 @@ def geo_grid_radius_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle, skew = densest cell — salt or split hot cells exactly like
     any hot join key); verification is a per-pair projection.  At 100 TB
     the cell size tunes the candidates-per-probe ratio the way band
-    count tunes LSH.  Distance emits as integer meters via the
-    floor(x + 0.5 + eps) rule (SCALE.md round-5 note 3) so round-half
-    ties cannot split the engines."""
+    count tunes LSH.  Distance emits as integer meters via
+    ``floor_eps`` so round-half ties cannot split the engines."""
     cust = table(spark, sf_dir, "customer")
     lat, lon = _coords_spark(F.col("c_custkey"))
     pts = cust.select(
@@ -147,7 +146,7 @@ def geo_grid_radius_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pair's inclusion
     return (
         cand.withColumn(
-            "dist_m", F.floor(hav + F.lit(0.5 + 1e-9)).cast("long")
+            "dist_m", floor_eps(hav).cast("long")
         )
         .filter(F.col("dist_m") <= int(_RADIUS_M))
         .select("probe_id", F.col("id").alias("cand_id"), "dist_m")
@@ -157,7 +156,7 @@ def geo_grid_radius_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "timeseries_linear_interp",
     "X110",
-    oracle="""
+    oracle=f"""
     WITH src AS MATERIALIZED (
         SELECT CAST(floor(epoch(ts) / 3600) * 3600 AS BIGINT) AS hour_s,
                event_type,
@@ -193,12 +192,11 @@ def geo_grid_radius_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT hour_s, event_type,
            (v IS NOT NULL) AS observed,
-           CAST(floor(
-               CASE WHEN v IS NOT NULL THEN v
-                    WHEN pv IS NULL THEN nv
-                    WHEN nv IS NULL THEN pv
-                    ELSE pv + (nv - pv) * (hour_s - ph) / (nh - ph)
-               END * 1000 + 0.500000001e0) AS BIGINT) AS interp_millicents
+           {floor_eps_sql("CASE WHEN v IS NOT NULL THEN v"
+                          " WHEN pv IS NULL THEN nv"
+                          " WHEN nv IS NULL THEN pv"
+                          " ELSE pv + (nv - pv) * (hour_s - ph) / (nh - ph)"
+                          " END", 1000)} AS interp_millicents
     FROM anchored
     """,
 )
@@ -215,8 +213,8 @@ def timeseries_linear_interp(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast dense grid, and two window passes partitioned by series key
     — per-series state is O(1) (last/next anchor), the canonical
     streaming-friendly interpolation plan.  Output rounds to integer
-    milli-cents via the floor(x + 0.5 + eps) rule (SCALE.md round-5 note
-    3); `observed` marks real vs interpolated points."""
+    milli-cents via ``floor_eps``; `observed` marks real vs
+    interpolated points."""
     from pyspark.sql.window import Window
 
     ev = table(spark, sf_dir, "events").filter(F.col("event_id") % 7 == 0)
@@ -273,7 +271,5 @@ def timeseries_linear_interp(spark: SparkSession, sf_dir: str) -> DataFrame:
         "hour_s",
         "event_type",
         F.col("v").isNotNull().alias("observed"),
-        F.floor(interp * 1000 + F.lit(0.5 + 1e-9)).cast("long").alias(
-            "interp_millicents"
-        ),
+        floor_eps(interp, 1000).cast("long").alias("interp_millicents"),
     )

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from debias_spark.catalog import table
+from debias_spark.numeric import floor_eps, floor_eps_sql
 from debias_spark.registry import register
 
 
@@ -193,7 +194,7 @@ def agg_percentile_disc(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "events_autocorr_lag",
     "X115",
-    oracle="""
+    oracle=f"""
     WITH h AS MATERIALIZED (
         SELECT event_type, date_trunc('hour', ts) AS hr, count(*) AS n
         FROM events GROUP BY event_type, hr
@@ -206,9 +207,9 @@ def agg_percentile_disc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT event_type,
            count(*) AS n_hours,
-           CAST(floor(corr(n, l1) * 10000 + 0.5 + 1e-9) AS BIGINT) AS acf1_e4,
-           CAST(floor(corr(n, l2) * 10000 + 0.5 + 1e-9) AS BIGINT) AS acf2_e4,
-           CAST(floor(corr(n, l3) * 10000 + 0.5 + 1e-9) AS BIGINT) AS acf3_e4
+           {floor_eps_sql("corr(n, l1)", 10000)} AS acf1_e4,
+           {floor_eps_sql("corr(n, l2)", 10000)} AS acf2_e4,
+           {floor_eps_sql("corr(n, l3)", 10000)} AS acf3_e4
     FROM l GROUP BY event_type ORDER BY event_type
     """,
 )
@@ -237,14 +238,13 @@ def events_autocorr_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lag("n", 2).over(w).cast("double").alias("l2"),
         F.lag("n", 3).over(w).cast("double").alias("l3"),
     )
-    eps = F.lit(0.5 + 1e-9)
     return (
         lagged.groupBy("event_type")
         .agg(
             F.count("*").alias("n_hours"),
-            F.floor(F.corr("n", "l1") * 10000 + eps).cast("long").alias("acf1_e4"),
-            F.floor(F.corr("n", "l2") * 10000 + eps).cast("long").alias("acf2_e4"),
-            F.floor(F.corr("n", "l3") * 10000 + eps).cast("long").alias("acf3_e4"),
+            floor_eps(F.corr("n", "l1"), 10000).cast("long").alias("acf1_e4"),
+            floor_eps(F.corr("n", "l2"), 10000).cast("long").alias("acf2_e4"),
+            floor_eps(F.corr("n", "l3"), 10000).cast("long").alias("acf3_e4"),
         )
         .orderBy("event_type")
     )
@@ -253,7 +253,7 @@ def events_autocorr_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "abtest_chi2_independence",
     "X116",
-    oracle="""
+    oracle=f"""
     WITH cell AS MATERIALIZED (
         SELECT event_type, isodow(ts) AS dow, count(*)::DOUBLE AS o
         FROM events GROUP BY event_type, dow
@@ -265,7 +265,7 @@ def events_autocorr_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
                / (rt.r * ct.c / n.n) AS t
         FROM cell JOIN rt USING (event_type) JOIN ct USING (dow) CROSS JOIN n
     )
-    SELECT CAST(floor(sum(t) * 10000 + 0.5 + 1e-9) AS BIGINT) AS chi2_e4,
+    SELECT {floor_eps_sql("sum(t)", 10000)} AS chi2_e4,
            (SELECT count(*) FROM rt) AS n_types,
            (SELECT count(*) FROM ct) AS n_dows,
            CAST(((SELECT count(*) FROM rt) - 1)
@@ -306,7 +306,7 @@ def abtest_chi2_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_dows = ct.agg(F.count("*").alias("n_dows"))
     return (
         terms.agg(
-            F.floor(F.sum("t") * 10000 + F.lit(0.5 + 1e-9))
+            floor_eps(F.sum("t"), 10000)
             .cast("long")
             .alias("chi2_e4")
         )

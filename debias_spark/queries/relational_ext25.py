@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from debias_spark.catalog import table
+from debias_spark.numeric import floor_eps_sql
 from debias_spark.registry import register
 
 
@@ -30,19 +31,18 @@ FROM (
 ) GROUP BY x
 """
 
-_KS_TAIL_SQL = """
-WITH {bins_cte}cum AS (
+_KS_TAIL_SQL = f"""
+WITH {{bins_cte}}cum AS (
     SELECT sum(c1) OVER (ORDER BY x) AS f1,
            sum(c2) OVER (ORDER BY x) AS f2
-    FROM {bins}
+    FROM {{bins}}
 ), tot AS (
-    SELECT sum(c1) AS n1, sum(c2) AS n2 FROM {bins}
+    SELECT sum(c1) AS n1, sum(c2) AS n2 FROM {{bins}}
 )
 SELECT CAST(n1 AS BIGINT) AS n1,
        CAST(n2 AS BIGINT) AS n2,
-       CAST(floor(max(abs(CAST(f1 AS DOUBLE) / n1
-                         - CAST(f2 AS DOUBLE) / n2)) * 1000000
-                  + 0.5 + 1e-9) AS BIGINT) AS ks_micro
+       {floor_eps_sql("max(abs(CAST(f1 AS DOUBLE) / n1"
+                      " - CAST(f2 AS DOUBLE) / n2))", 1000000)} AS ks_micro
 FROM cum, tot
 GROUP BY n1, n2
 """
@@ -75,8 +75,7 @@ def abtest_ks_statistic(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Float discipline: f1/n1 is an int/int IEEE division (deterministic on
     both engines), and the statistic is emitted as integer micro-units via
-    the repo's floor(x*1e6 + 0.5 + 1e-9) rule — no raw double crosses the
-    driver-hash boundary.
+    ``floor_eps_sql`` — no raw double reaches the result hash.
 
     Plan shape: scan -> hash aggregate (shuffle on ~bounded bins) ->
     one-task window over bins -> broadcast 1-row total -> 1-row result."""
@@ -180,10 +179,10 @@ FROM {orders}
 GROUP BY m
 """
 
-_THEILSEN_TAIL_SQL = """
-WITH {monthly_cte}pairs AS (
+_THEILSEN_TAIL_SQL = f"""
+WITH {{monthly_cte}}pairs AS (
     SELECT CAST(b.cents - a.cents AS DOUBLE) / (b.m - a.m) AS slope
-    FROM {monthly} a JOIN {monthly} b ON b.m > a.m
+    FROM {{monthly}} a JOIN {{monthly}} b ON b.m > a.m
 ), ranked AS (
     SELECT slope,
            row_number() OVER (ORDER BY slope) AS rn,
@@ -191,9 +190,8 @@ WITH {monthly_cte}pairs AS (
     FROM pairs
 )
 SELECT CAST(max(n) AS BIGINT) AS n_pairs,
-       CAST(floor(max(CASE WHEN rn = CAST(floor((n + 1) / 2.0) AS BIGINT)
-                           THEN slope END) * 100 + 0.5 + 1e-9) AS BIGINT)
-           AS theilsen_slope_centi
+       {floor_eps_sql("max(CASE WHEN rn = CAST(floor((n + 1) / 2.0) AS BIGINT)"
+                      " THEN slope END)", 100)} AS theilsen_slope_centi
 FROM ranked
 """
 

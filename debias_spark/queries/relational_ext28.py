@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from debias_spark.catalog import table
+from debias_spark.numeric import floor_eps, floor_eps_sql
 from debias_spark.registry import register
 
 _CENTS_SQL = "CAST(round(l_extendedprice * 100) AS BIGINT)"
@@ -42,10 +43,10 @@ _CENTS_SQL = "CAST(round(l_extendedprice * 100) AS BIGINT)"
         FROM ranked
     )
     SELECT CAST(n AS BIGINT) AS n_parts,
-           CAST(floor(CAST(n * sxy - sx * sy AS DOUBLE)
-                      / (sqrt(CAST(n * sxx - sx * sx AS DOUBLE))
-                         * sqrt(CAST(n * syy - sy * sy AS DOUBLE)))
-                      * 1000000 + 0.5 + 1e-9) AS BIGINT) AS spearman_e6
+           {floor_eps_sql("CAST(n * sxy - sx * sy AS DOUBLE)"
+                          " / (sqrt(CAST(n * sxx - sx * sx AS DOUBLE))"
+                          " * sqrt(CAST(n * syy - sy * sy AS DOUBLE)))", 1000000)}
+               AS spearman_e6
     FROM moments
     """,
 )
@@ -116,7 +117,7 @@ def stats_spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     db = (F.col("n") * F.col("syy") - F.col("sy") * F.col("sy")).cast("double")
     return m.select(
         F.col("n").cast("long").alias("n_parts"),
-        F.floor(num / (F.sqrt(da) * F.sqrt(db)) * 1000000 + F.lit(0.5 + 1e-9))
+        floor_eps(num / (F.sqrt(da) * F.sqrt(db)), 1000000)
         .cast("long")
         .alias("spearman_e6"),
     )
@@ -319,7 +320,7 @@ def sql_table_function_lateral(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "orders_holt_linear_forecast",
     "X143",
-    oracle="""
+    oracle=f"""
     -- NOT list_reduce: DuckDB v1.0's list_reduce with a STRUCT-valued
     -- lambda corrupts the accumulator across iterations (measured: a
     -- single step from acc=(11,0.5) gives b=1.375; the identical step
@@ -346,10 +347,10 @@ def sql_table_function_lateral(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM rec r JOIN ordered o ON o.rn = r.rn + 1
     )
     SELECT CAST(rec.rn AS BIGINT) AS n_months,
-           CAST(floor(l * 10000 + 0.5 + 1e-9) AS BIGINT) AS level_e4,
-           CAST(floor(b * 10000 + 0.5 + 1e-9) AS BIGINT) AS trend_e4,
-           CAST(floor((l + b) * 10000 + 0.5 + 1e-9) AS BIGINT) AS fc1_e4,
-           CAST(floor((l + 3 * b) * 10000 + 0.5 + 1e-9) AS BIGINT)
+           {floor_eps_sql("l", 10000)} AS level_e4,
+           {floor_eps_sql("b", 10000)} AS trend_e4,
+           {floor_eps_sql("l + b", 10000)} AS fc1_e4,
+           {floor_eps_sql("l + 3 * b", 10000)}
                AS fc3_e4
     FROM rec JOIN (SELECT count(*) AS n FROM ordered) cnt ON rec.rn = cnt.n
     """,
@@ -405,7 +406,7 @@ def orders_holt_linear_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def e4(x):
-        return F.floor(x * 10000 + F.lit(0.5 + 1e-9)).cast("long")
+        return floor_eps(x, 10000).cast("long")
 
     return m.select(
         F.col("n_months").cast("long").alias("n_months"),

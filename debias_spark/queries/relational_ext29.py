@@ -15,15 +15,15 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from debias_spark.catalog import table
+from debias_spark.numeric import floor_eps, floor_eps_sql
 from debias_spark.registry import register
 
-_EPS = 0.5 + 1e-9
 
 
 @register(
     "stats_kendall_tau",
     "X37",
-    oracle="""
+    oracle=f"""
     WITH nat AS MATERIALIZED (
         SELECT c.c_nationkey AS nk,
                count(DISTINCT c.c_custkey) AS x,
@@ -41,10 +41,9 @@ _EPS = 0.5 + 1e-9
     SELECT CAST((SELECT count(*) FROM nat) AS BIGINT) AS n_nations,
            CAST(c AS BIGINT) AS concordant,
            CAST(d AS BIGINT) AS discordant,
-           CAST(floor(CAST(c - d AS DOUBLE)
-                      / (sqrt(CAST(n0 - tx AS DOUBLE))
-                         * sqrt(CAST(n0 - ty AS DOUBLE)))
-                      * 1000000 + 0.5 + 1e-9) AS BIGINT) AS tau_b_e6
+           {floor_eps_sql("CAST(c - d AS DOUBLE)"
+                          " / (sqrt(CAST(n0 - tx AS DOUBLE))"
+                          " * sqrt(CAST(n0 - ty AS DOUBLE)))", 1000000)} AS tau_b_e6
     FROM p
     """,
 )
@@ -99,14 +98,13 @@ def stats_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_nations",
         F.col("c").cast("long").alias("concordant"),
         F.col("d").cast("long").alias("discordant"),
-        F.floor(
+        floor_eps(
             (F.col("c") - F.col("d")).cast("double")
             / (
                 F.sqrt((F.col("n0") - F.col("tx")).cast("double"))
                 * F.sqrt((F.col("n0") - F.col("ty")).cast("double"))
-            )
-            * 1000000
-            + F.lit(_EPS)
+            ),
+            1000000,
         )
         .cast("long")
         .alias("tau_b_e6"),
@@ -240,7 +238,7 @@ def events_poisson_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "events_hourly_ohlc",
     "X49",
-    oracle="""
+    oracle=f"""
     WITH r AS (
         SELECT event_type,
                strftime(date_trunc('hour', ts), '%Y-%m-%d %H') AS hr,
@@ -255,14 +253,14 @@ def events_poisson_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT event_type, hr,
            CAST(count(*) AS BIGINT) AS n_events,
            CAST(min(CASE WHEN rn = 1 THEN
-                CAST(floor(value * 1000000 + 0.5 + 1e-9) AS BIGINT)
+                {floor_eps_sql("value", 1000000)}
                 END) AS BIGINT) AS open_e6,
-           CAST(max(CAST(floor(value * 1000000 + 0.5 + 1e-9) AS BIGINT))
+           CAST(max({floor_eps_sql("value", 1000000)})
                 AS BIGINT) AS high_e6,
-           CAST(min(CAST(floor(value * 1000000 + 0.5 + 1e-9) AS BIGINT))
+           CAST(min({floor_eps_sql("value", 1000000)})
                 AS BIGINT) AS low_e6,
            CAST(min(CASE WHEN rn = n THEN
-                CAST(floor(value * 1000000 + 0.5 + 1e-9) AS BIGINT)
+                {floor_eps_sql("value", 1000000)}
                 END) AS BIGINT) AS close_e6
     FROM r GROUP BY event_type, hr
     ORDER BY event_type, hr
@@ -286,7 +284,7 @@ def events_hourly_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("event_type", F.date_trunc("hour", "ts")).orderBy(
         "ts", "event_id"
     )
-    e6 = F.floor(F.col("value") * 1000000 + F.lit(_EPS)).cast("long")
+    e6 = floor_eps(F.col("value"), 1000000).cast("long")
     r = ev.select(
         "event_type",
         F.date_format(F.date_trunc("hour", "ts"), "yyyy-MM-dd HH").alias("hr"),

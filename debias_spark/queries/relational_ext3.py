@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from debias_spark.catalog import table
+from debias_spark.numeric import floor_eps, floor_eps_sql
 from debias_spark.registry import register
 
 
@@ -245,14 +246,12 @@ def join_range_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "agg_stats_pack",
     "X19",
-    oracle="""
+    oracle=f"""
     SELECT event_type,
-           CAST(floor(corr(value, CAST(user_id AS DOUBLE)) * 10000 + 0.5 + 1e-9)
-                AS BIGINT) AS corr_vu_e4,
-           CAST(floor(covar_samp(value, CAST(user_id AS DOUBLE)) * 10000 + 0.5 + 1e-9)
-                AS BIGINT) AS covar_vu_e4,
-           CAST(floor(var_samp(value) * 10000 + 0.5 + 1e-9) AS BIGINT) AS var_v_e4,
-           CAST(floor(stddev_samp(value) * 10000 + 0.5 + 1e-9) AS BIGINT) AS std_v_e4
+           {floor_eps_sql("corr(value, CAST(user_id AS DOUBLE))", 10000)} AS corr_vu_e4,
+           {floor_eps_sql("covar_samp(value, CAST(user_id AS DOUBLE))", 10000)} AS covar_vu_e4,
+           {floor_eps_sql("var_samp(value)", 10000)} AS var_v_e4,
+           {floor_eps_sql("stddev_samp(value)", 10000)} AS std_v_e4
     FROM events GROUP BY event_type
     """,
 )
@@ -263,14 +262,11 @@ def agg_stats_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     conventions, so they stay out of the oracle contract.)"""
     ev = table(spark, sf_dir, "events")
     u = F.col("user_id").cast("double")
-    eps = F.lit(0.5 + 1e-9)
-    # floor-eps e4 integers, not round(,4): the .xxx5 repr-tie class
-    # diverges across engines (llm_ops13 flesch recipe).
     return ev.groupBy("event_type").agg(
-        F.floor(F.corr("value", u) * 10000 + eps).cast("long").alias("corr_vu_e4"),
-        F.floor(F.covar_samp("value", u) * 10000 + eps).cast("long").alias("covar_vu_e4"),
-        F.floor(F.var_samp("value") * 10000 + eps).cast("long").alias("var_v_e4"),
-        F.floor(F.stddev_samp("value") * 10000 + eps).cast("long").alias("std_v_e4"),
+        floor_eps(F.corr("value", u), 10000).cast("long").alias("corr_vu_e4"),
+        floor_eps(F.covar_samp("value", u), 10000).cast("long").alias("covar_vu_e4"),
+        floor_eps(F.var_samp("value"), 10000).cast("long").alias("var_v_e4"),
+        floor_eps(F.stddev_samp("value"), 10000).cast("long").alias("std_v_e4"),
     )
 
 
@@ -340,16 +336,16 @@ def map_fn_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "profile_table_stats",
     "X15",
-    oracle="""
+    oracle=f"""
     SELECT 'events' AS tbl,
            count(*) AS n_rows,
            count(DISTINCT user_id) AS n_users,
            count(DISTINCT event_type) AS n_types,
            count(*) - count(props) AS null_props,
-           CAST(floor(min(value) * 10000 + 0.5 + 1e-9) AS BIGINT) AS min_value_e4,
-           CAST(floor(max(value) * 10000 + 0.5 + 1e-9) AS BIGINT) AS max_value_e4,
-           CAST(floor(avg(value) * 10000 + 0.5 + 1e-9) AS BIGINT) AS avg_value_e4,
-           CAST(floor(stddev_samp(value) * 10000 + 0.5 + 1e-9) AS BIGINT) AS std_value_e4
+           {floor_eps_sql("min(value)", 10000)} AS min_value_e4,
+           {floor_eps_sql("max(value)", 10000)} AS max_value_e4,
+           {floor_eps_sql("avg(value)", 10000)} AS avg_value_e4,
+           {floor_eps_sql("stddev_samp(value)", 10000)} AS std_value_e4
     FROM events
     """,
 )
@@ -365,10 +361,8 @@ def profile_table_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.countDistinct("user_id").alias("n_users"),
         F.countDistinct("event_type").alias("n_types"),
         (F.count("*") - F.count("props")).alias("null_props"),
-        # floor-eps e4 integers, not round(,4): Spark/DuckDB diverge on
-        # exact .xxx5 decimal-repr ties (llm_ops13 flesch recipe).
-        F.floor(F.min("value") * 10000 + F.lit(0.5 + 1e-9)).cast("long").alias("min_value_e4"),
-        F.floor(F.max("value") * 10000 + F.lit(0.5 + 1e-9)).cast("long").alias("max_value_e4"),
-        F.floor(F.avg("value") * 10000 + F.lit(0.5 + 1e-9)).cast("long").alias("avg_value_e4"),
-        F.floor(F.stddev_samp("value") * 10000 + F.lit(0.5 + 1e-9)).cast("long").alias("std_value_e4"),
+        floor_eps(F.min("value"), 10000).cast("long").alias("min_value_e4"),
+        floor_eps(F.max("value"), 10000).cast("long").alias("max_value_e4"),
+        floor_eps(F.avg("value"), 10000).cast("long").alias("avg_value_e4"),
+        floor_eps(F.stddev_samp("value"), 10000).cast("long").alias("std_value_e4"),
     )

@@ -11,34 +11,33 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from debias_spark.catalog import table
+from debias_spark.numeric import floor_eps_sql
 from debias_spark.registry import register
 
 # Same computation, two IGNORE NULLS spellings: Spark puts the modifier
 # after the call (lag(m) IGNORE NULLS), DuckDB inside it (lag(m IGNORE
 # NULLS)).  The window only MOVES stored doubles (no arithmetic), so the
 # carried values are bit-identical and the floor-e6 checksums exact.
-_IGNORE_NULLS_SQL = """
+_IGNORE_NULLS_SQL = f"""
     WITH m AS (
         SELECT user_id,
                ts, event_id,
                CASE WHEN event_type = 'error' THEN NULL ELSE value END AS m
-        FROM {events}
+        FROM {{events}}
     ), w AS (
         SELECT user_id, m,
-               last_value({ff_arg}) OVER (
+               last_value({{ff_arg}}) OVER (
                    PARTITION BY user_id ORDER BY ts, event_id
                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS ff,
-               lag({lag_arg}) OVER (
+               lag({{lag_arg}}) OVER (
                    PARTITION BY user_id ORDER BY ts, event_id) AS prev
         FROM m
     )
     SELECT user_id,
            count(*) AS n_rows,
            CAST(count(*) - count(m) AS BIGINT) AS n_gaps,
-           CAST(sum(CAST(floor(coalesce(ff, 0) * 1000000 + 0.5 + 1e-9)
-                         AS BIGINT)) AS BIGINT) AS ff_checksum_e6,
-           CAST(sum(CAST(floor(coalesce(prev, 0) * 1000000 + 0.5 + 1e-9)
-                         AS BIGINT)) AS BIGINT) AS prev_checksum_e6
+           CAST(sum({floor_eps_sql("coalesce(ff, 0)", 1000000)}) AS BIGINT) AS ff_checksum_e6,
+           CAST(sum({floor_eps_sql("coalesce(prev, 0)", 1000000)}) AS BIGINT) AS prev_checksum_e6
     FROM w GROUP BY user_id ORDER BY user_id
 """
 
@@ -65,7 +64,7 @@ def window_ignore_nulls_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     grouped aggregate — no unpartitioned window, no second scan."""
     table(spark, sf_dir, "events").createOrReplaceTempView("_x144_ev")
     return spark.sql(
-        """
+        f"""
     WITH m AS (
         SELECT user_id, ts, event_id,
                CASE WHEN event_type = 'error' THEN NULL ELSE value END AS m
@@ -82,10 +81,8 @@ def window_ignore_nulls_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT user_id,
            count(*) AS n_rows,
            CAST(count(*) - count(m) AS BIGINT) AS n_gaps,
-           CAST(sum(CAST(floor(coalesce(ff, 0) * 1000000 + 0.5 + 1e-9)
-                         AS BIGINT)) AS BIGINT) AS ff_checksum_e6,
-           CAST(sum(CAST(floor(coalesce(prev, 0) * 1000000 + 0.5 + 1e-9)
-                         AS BIGINT)) AS BIGINT) AS prev_checksum_e6
+           CAST(sum({floor_eps_sql("coalesce(ff, 0)", 1000000)}) AS BIGINT) AS ff_checksum_e6,
+           CAST(sum({floor_eps_sql("coalesce(prev, 0)", 1000000)}) AS BIGINT) AS prev_checksum_e6
     FROM w GROUP BY user_id ORDER BY user_id
     """
     )

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from debias_spark.catalog import table
+from debias_spark.numeric import floor_eps, floor_eps_sql
 from debias_spark.registry import register
 
 
@@ -198,14 +199,13 @@ _NJ_MIN_JACC_E4 = 2000
     )
     SELECT i.pa, i.pb,
            CAST(i.i AS BIGINT) AS n_common,
-           CAST(floor(CAST(i.i AS DOUBLE) * 10000
-                      / (da.d + db.d - i.i) + 0.500000001e0) AS BIGINT)
+           {floor_eps_sql("CAST(i.i AS DOUBLE) * 10000 / (da.d + db.d - i.i)")}
                AS jaccard_e4
     FROM inter i
     JOIN deg da ON da.src = i.pa
     JOIN deg db ON db.src = i.pb
-    WHERE floor(CAST(i.i AS DOUBLE) * 10000 / (da.d + db.d - i.i)
-                + 0.500000001e0) >= {_NJ_MIN_JACC_E4}
+    WHERE {floor_eps_sql("CAST(i.i AS DOUBLE) * 10000 / (da.d + db.d - i.i)")}
+          >= {_NJ_MIN_JACC_E4}
     ORDER BY pa, pb
     """,
 )
@@ -246,10 +246,9 @@ def graph_neighbor_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     da = deg.select(F.col("src").alias("pa"), F.col("d").alias("da"))
     db = deg.select(F.col("src").alias("pb"), F.col("d").alias("db"))
     j = inter.join(da, "pa").join(db, "pb")
-    jacc_e4 = F.floor(
+    jacc_e4 = floor_eps(
         F.col("i").cast("double") * 10000
         / (F.col("da") + F.col("db") - F.col("i"))
-        + F.lit(0.5 + 1e-9)
     ).cast("long")
     return (
         j.select(

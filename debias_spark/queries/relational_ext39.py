@@ -13,15 +13,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from debias_spark.catalog import table
+from debias_spark.numeric import floor_eps, floor_eps_sql
 from debias_spark.registry import register
-
-_EPS = 0.5 + 1e-9
 
 
 @register(
     "lineitem_anova_f",
     "X160",
-    oracle="""
+    oracle=f"""
     WITH g AS MATERIALIZED (
         SELECT l_returnflag AS flag,
                CAST(count(*) AS HUGEINT) AS n,
@@ -45,10 +44,10 @@ _EPS = 0.5 + 1e-9
     )
     SELECT CAST(nt AS BIGINT) AS n_rows,
            CAST(k AS INT) AS n_groups,
-           CAST(floor((sb - CAST(st * st AS DOUBLE) / CAST(nt AS DOUBLE))
-                      / (k - 1)
-                      / ((CAST(qt AS DOUBLE) - sb) / CAST(nt - k AS DOUBLE))
-                      * 1000000 + 0.500000001e0) AS BIGINT) AS f_e6
+           {floor_eps_sql("(sb - CAST(st * st AS DOUBLE) / CAST(nt AS DOUBLE))"
+                          " / (k - 1)"
+                          " / ((CAST(qt AS DOUBLE) - sb) / CAST(nt - k AS DOUBLE))", 1000000)}
+               AS f_e6
     FROM tot
     """,
 )
@@ -100,10 +99,9 @@ def lineitem_anova_f(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tot.select(
         F.col("nt").cast("long").alias("n_rows"),
         F.col("k").cast("int").alias("n_groups"),
-        F.floor(
-            ssb / (F.col("k") - 1) / (ssw / (F.col("nt") - F.col("k")).cast("double"))
-            * 1000000
-            + F.lit(_EPS)
+        floor_eps(
+            ssb / (F.col("k") - 1) / (ssw / (F.col("nt") - F.col("k")).cast("double")),
+            1000000,
         )
         .cast("long")
         .alias("f_e6"),

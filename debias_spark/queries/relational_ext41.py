@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from debias_spark.catalog import table
+from debias_spark.numeric import floor_eps, floor_eps_sql
 from debias_spark.registry import register
 
 # per-reducer row budget: a key whose row count exceeds this gets split
@@ -23,7 +24,6 @@ from debias_spark.registry import register
 # production budgets are memory-derived (rows_per_task ~ spill threshold)
 _ROW_BUDGET = 1024
 _SALT_CAP = 32
-_EPS = 0.5 + 1e-9  # floor-eps doctrine: folded constant, ONE addition
 
 
 @register(
@@ -41,8 +41,7 @@ _EPS = 0.5 + 1e-9  # floor-eps doctrine: folded constant, ONE addition
     )
     SELECT l.l_returnflag AS flag,
            count(*) AS n,
-           CAST(sum(CAST(floor(l_extendedprice * (1 - l_discount) * 100
-                                + 0.500000001e0) AS BIGINT)) AS BIGINT)
+           CAST(sum({floor_eps_sql("l_extendedprice * (1 - l_discount)", 100)}) AS BIGINT)
                AS rev_cents,
            a.salt_k, a.max_key_rows
     FROM lineitem l CROSS JOIN adv a
@@ -79,8 +78,8 @@ def diag_skew_salt_autotune(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     max_key_rows = int(prof["max_key_rows"])
     salt_k = max(1, min(_SALT_CAP, -(-max_key_rows // _ROW_BUDGET)))
-    cents = F.floor(
-        F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100 + F.lit(_EPS)
+    cents = floor_eps(
+        F.col("l_extendedprice") * (1 - F.col("l_discount")), 100
     ).cast("long")
     salted = li.withColumn(
         "_salt", F.pmod(F.xxhash64("l_orderkey", "l_linenumber"), F.lit(salt_k))
@@ -134,11 +133,10 @@ CBO_CONFS = ("spark.sql.cbo.enabled", "spark.sql.cbo.joinReorder.enabled")
     # sink_managed_table_insert and sql_analyze_table_stats; the query
     # itself is the H5 star shape benched there
     bench=False,
-    oracle="""
+    oracle=f"""
     SELECT c.c_mktsegment AS segment,
            count(*) AS n_lines,
-           CAST(sum(CAST(floor(l.l_extendedprice * (1 - l.l_discount) * 100
-                               + 0.500000001e0) AS BIGINT)) AS BIGINT)
+           CAST(sum({floor_eps_sql("l.l_extendedprice * (1 - l.l_discount)", 100)}) AS BIGINT)
                AS rev_cents
     FROM lineitem l
     JOIN orders o ON o.o_orderkey = l.l_orderkey
@@ -170,10 +168,7 @@ def join_cbo_reorder_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         names = build_cbo_star_tables(spark, sf_dir, "x161")
         for k in CBO_CONFS:
             spark.conf.set(k, "true")
-        cents = (
-            "CAST(floor(l_extendedprice * (1 - l_discount) * 100"
-            " + 0.500000001e0) AS BIGINT)"
-        )
+        cents = floor_eps_sql("l_extendedprice * (1 - l_discount)", 100)
         out = spark.sql(
             f"""
             SELECT c_mktsegment AS segment,

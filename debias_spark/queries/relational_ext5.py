@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from debias_spark.catalog import table
+from debias_spark.numeric import floor_eps, floor_eps_sql
 from debias_spark.registry import register
 
 
@@ -231,7 +232,7 @@ def tpch_q21_sole_late_shipper(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "event_dwell_time",
     "X31",
-    oracle="""
+    oracle=f"""
     WITH nexted AS (
         -- ORDER BY truncates ts to µs so the tie-break matches Spark's
         -- µs-resolution timestamps even if a testdata regeneration brings
@@ -247,7 +248,7 @@ def tpch_q21_sole_late_shipper(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT event_type,
            count(dwell_s) AS n_dwells,
            CAST(sum(dwell_s) AS BIGINT) AS total_dwell_s,
-           CAST(floor(avg(dwell_s) * 10000 + 0.5 + 1e-9) AS BIGINT) AS avg_dwell_e4
+           {floor_eps_sql("avg(dwell_s)", 10000)} AS avg_dwell_e4
     FROM nexted WHERE dwell_s IS NOT NULL
     GROUP BY event_type ORDER BY event_type
     """,
@@ -269,9 +270,7 @@ def event_dwell_time(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count("*").alias("n_dwells"),
             F.sum("dwell_s").cast("long").alias("total_dwell_s"),
-            # floor-eps e4 integer, not round(,4): .xxx5 repr-tie class
-            # (llm_ops13 flesch recipe).
-            F.floor(F.avg("dwell_s") * 10000 + F.lit(0.5 + 1e-9)).cast("long").alias("avg_dwell_e4"),
+            floor_eps(F.avg("dwell_s"), 10000).cast("long").alias("avg_dwell_e4"),
         )
         .orderBy("event_type")
     )

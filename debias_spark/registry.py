@@ -83,17 +83,7 @@ def load_all_queries() -> dict[str, QuerySpec]:
 # block" pattern), so they defer BEHIND the failed/changed keys whose
 # re-proof the window must cover first, while still preceding every
 # evidenced green.  Drain entries once their first CORRECTNESS row lands.
-DEFERRED_NEW_KEYS: list[str] = [
-    # round-8 wave 2+: built after the r8 window filled (39 carried-over
-    # r7 keys + 9 changed + Y62/Z65); these lead round 9's window
-    "diag_skew_salt_autotune",
-    "orders_temporal_split_leakage",
-    "join_cbo_reorder_stats",
-    "docs_importance_resample",
-    "events_decayed_engagement",
-    "source_max_partition_bytes_scan",
-    "docs_dup_crosssource_matrix",
-]
+DEFERRED_NEW_KEYS: list[str] = []
 
 # Keys whose implementation or oracle changed AFTER their latest green
 # driver check, mapped to the FIRST round whose green check counts as
@@ -104,115 +94,59 @@ DEFERRED_NEW_KEYS: list[str] = [
 # staleness class, closed mechanically like the other two).  Dict order
 # is re-proof priority.
 CHANGED_SINCE_CHECK: dict[str, int] = {
-    # --- r8 entries below all drained green in CORRECTNESS_r08 (kept
-    # for the audit trail; changed_pending skips them mechanically) ---
-    # r7 two-pass equal-width rewrite (2ab17f2); last driver check r4
-    "lineitem_weighted_median_price": 8,
-    # r8: operators/prefixsum NULL-safe bucket id + pmod window const
-    "orders_pareto_share": 8,
-    "orders_gini_revenue": 8,
-    "stats_spearman_corr": 8,
-    # r7 jsonl-sink orphan-.tmp sweep on commit (09a522a); checked r7 pre-fix
-    "sink_python_datasource": 8,
-    # r8 ADVICE: floor-eps oracle respelling (+ 0.500000001e0 single-add)
-    "semdedup_cluster_cosine": 8,
-    "embedding_mmr_rerank": 8,
-    "embedding_matryoshka_rerank": 8,
-    "bpe_encode_corpus": 8,
-    # --- r9: floor-eps respell batch 2 (the r8-advice transcendental
-    # sites: llm_ops8/13/17/21/25, relational_ext20/36) ---
-    "text_bigram_lm_score": 9,
-    "text_readability_flesch": 9,
-    "text_zipf_slope": 9,
-    "text_kl_divergence_lang": 9,
-    "text_trigram_diversity": 9,
-    "docs_trigram_renyi_entropy": 9,
-    "geo_grid_radius_join": 9,
-    "timeseries_linear_interp": 9,
-    "graph_neighbor_jaccard": 9,
-    # r9: Z65 state key widened to full md5 (r8 advice) + state write
-    # parallelized off the merge partitioning instead of coalesce(1)
-    # (r8 verdict #2)
-    "pipeline_incremental_refresh": 9,
-    # r9: gram build factored into operators.text.word_ngrams_frame so
-    # Y72's bloom prefilter provably screens the identical gram set
-    # (value-identical; re-proven at 3 SFs + equality test vs Y72)
-    "docs_contamination_ngram_audit": 9,
-    # --- r10: the five r9 ADVICE fixes (all value-identical on the
-    # current NULL-free / non-empty-source fixtures, re-proven anyway) ---
-    # X167: NULL filter before the distinct count (cross-engine parity)
-    "diag_encoding_advisor": 10,
-    # Y69: nullif(toks, 0) on the epochs_e4 divisor, both engines
-    "corpus_repeat_epoch_plan": 10,
-    # Z68/Z71: prune prefix built from known stem + sf tag, not by
-    # splitting the appId-suffixed dir name (r10, drained green);
-    # Z68 bumped to 11 below for the compaction threshold gate
-    "pipeline_checkpoint_resume": 10,
-    # Z70/X164/X166: in-key proof guards assert -> raise (python -O safe)
-    "source_gzip_unsplittable_scan": 10,
-    "diag_join_strategy_autotune": 10,
-    "diag_reused_exchange_proof": 10,
-    # r10: stage logic factored into shared operators so the corpus-build
-    # capstone (Z75) provably chains the IDENTICAL implementations —
-    # X53 -> operators/text.quality_verdict, Y55 -> operators/packing,
-    # Y72 -> llm_ops34.bloom_bits_literal/bloom_member (value-identical;
-    # re-proven at 3 SFs locally)
-    "docs_quality_filterchain": 10,
-    "docs_pack_nextfit_decreasing": 10,
-    "docs_decontam_bloom_prefilter": 10,
-    # r10 sweep of the X167 latent class across every .distinct()+count
-    # site: H13 was the one other instance (NULL user_id would count in
-    # Spark's distinct-pairs count but not the oracle's count(DISTINCT));
-    # Z51 checked consistent (both engines count the NULL row), the
-    # pagerank/bloom-bucket distincts feed joins, not counts
-    "agg_approx_distinct": 10,
-    # --- r11: verdict-item closes (all re-proven green at sf0.01
-    # locally via the full driver-sim sweep; queued for the driver's
-    # own re-stamp) ---
-    # Z20/H9e (+Y61, which embeds the H9e oracle): verified/edges CTEs
-    # materialized so the WITH RECURSIVE closure stops re-evaluating the
-    # minhash chain per iteration (2.1s -> 0.2s; values identical)
-    "dedup_pipeline_survivors": 11,
-    "dedup_clusters": 11,
-    "dedup_keep_best_quality": 11,
-    # Y5b: per-centroid scores rounded to 6 decimals before the argmax
-    # in BOTH engines (r11, drained green in CORRECTNESS_r11); bumped to
-    # 12 below for the assign_cell literal-node respell
-    # Z68: in-loop compaction gated on a per-partition file-count
-    # threshold (r11, drained green in CORRECTNESS_r11); r12 relaxed the
-    # guard to raise only on after > before (== is a legal no-op) — see
-    # the r12 block below for the bump to 12
-    # (Z75's oracle moved to the shared CORPUS_BUILD_ORACLE constant —
-    # byte-identical string, function untouched; no re-proof needed)
-    # --- r12: verdict-item closes ---
-    # Y74: checkpoint narrowed to the (vec_id, nrm, cell, codes) index
-    # row + every rerank join pinned with F.broadcast (r11 advice);
-    # Z68: compaction guard relaxed to raise only on after > before
-    # (after == before is a legal no-op on already-compact state; the
-    # oracle-visible dataflow is untouched)
-    "pipeline_incremental_neardup": 12,
-    # Z75/Z76: static eval-gram artifacts memoized per corpus (built once
-    # per process, keyed by documents-file signature; order-insensitive
-    # consumers) + Z76 builds eval_df once per run, not per drop
-    "pipeline_corpus_build": 12,
-    "pipeline_corpus_build_incremental": 12,
-    # r13: the r12 "Literal node" respell was a no-op (F.lit(list) IS
-    # CreateArray on PySpark classic); now genuinely single Literal
-    # nodes via 1-D ndarray lits (assign_cell centroids, flat PQ
-    # codebook + slice arithmetic).  Same values — pq_index_frame
-    # re-proven row-identical at sf0.001 — cold-compile cost only.
-    "similarity_ann_ivfpq": 13,
-    "similarity_ann_ivf_pinned": 13,
-    "similarity_ann_ivfpq_incremental": 13,
-    "similarity_ann_ivfpq_tombstone": 13,
-    # r13 verdict item 1: pipeline-capstone drop counts cut to the
-    # minimum their contracts need (Z76/Y75 2 drops, Z68 3, Z71 2+1,
-    # Z73 2 appends) — semantics are count-free by each key's declared
-    # batching-independence argument; oracles unchanged
-    "pipeline_corpus_build_incremental": 13,
-    "pipeline_incremental_neardup": 13,
-    "pipeline_checkpoint_resume": 13,
-    "pipeline_state_compaction": 13,
+    # floor-eps rule moved behind debias_spark/numeric.py.  Spark SQL
+    # templates whose two-add nudge became the single-add helper
+    # fragment (Spark plan changed; both engines together):
+    "text_naive_bayes_lang": 15,
+    "text_pmi_cooccurrence": 15,
+    "abtest_ks_statistic": 15,
+    "orders_theilsen_trend": 15,
+    "window_ignore_nulls_pack": 15,
+    # oracle-only two-add -> single-add respell (Spark plan unchanged):
+    "embedding_pq_codebook": 15,
+    "docs_vocab_drift_logratio": 15,
+    "embedding_kmeans_update": 15,
+    "diag_key_skew_profile": 15,
+    "events_autocorr_lag": 15,
+    "abtest_chi2_independence": 15,
+    "bpe_encode_corpus": 15,
+    "stats_spearman_corr": 15,
+    "orders_holt_linear_forecast": 15,
+    "embedding_centroid_drift": 15,
+    "stats_kendall_tau": 15,
+    "events_hourly_ohlc": 15,
+    "corpus_mixture_temperature": 15,
+    "embedding_decontamination_screen": 15,
+    "embedding_cluster_ari": 15,
+    "text_gopher_rules": 15,
+    "agg_stats_pack": 15,
+    "profile_table_stats": 15,
+    "embedding_norm_stats": 15,
+    "text_unigram_logprob": 15,
+    "event_dwell_time": 15,
+    "tpch_q1_pricing_summary": 15,
+    # oracle text re-spelled through the helper (parens / CAST /
+    # whitespace only; same rounding, Spark plan unchanged):
+    "similarity_ann_ivfpq": 15,
+    "similarity_ann_ivfpq_incremental": 15,
+    "similarity_ann_ivfpq_tombstone": 15,
+    "similarity_ann_ivfpq_compacted": 15,
+    "text_readability_flesch": 15,
+    "semdedup_cluster_cosine": 15,
+    "embedding_matryoshka_rerank": 15,
+    "text_zipf_slope": 15,
+    "embedding_mmr_rerank": 15,
+    "text_kl_divergence_lang": 15,
+    "text_trigram_diversity": 15,
+    "docs_trigram_renyi_entropy": 15,
+    "graph_neighbor_jaccard": 15,
+    "lineitem_anova_f": 15,
+    "geo_grid_radius_join": 15,
+    "timeseries_linear_interp": 15,
+    "text_bigram_lm_score": 15,
+    "docs_train_split_decontaminated": 15,
+    "diag_skew_salt_autotune": 15,
+    "join_cbo_reorder_stats": 15,
 }
 
 

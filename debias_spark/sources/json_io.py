@@ -27,13 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, StringType, StructField, StructType
 
-TAG_SCHEMA = StructType(
-    [
-        StructField("literal", StringType()),
-        StructField("issue", StringType()),
-        StructField("source", StringType()),
-    ]
-)
+from debias_spark.annotate.annotator import TAG_SCHEMA
 
 # SURVEY §1.2 — the canonical nested response document
 RESPONSE_SCHEMA = StructType(

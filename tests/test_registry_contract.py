@@ -137,14 +137,37 @@ def test_no_oracle_returns_hugeint_or_decimal():
     assert not bad, f"oracles emitting driver-hash-unsafe types: {bad}"
 
 
+def test_floor_eps_rule_lives_in_one_module():
+    """The floor-eps constant is spelled once, in debias_spark/numeric.py.
+    Any other module under debias_spark/ that spells `0.5 + 1e-9`,
+    `0.500000001` or binds a local eps constant has re-copied the rule
+    instead of calling `floor_eps` / `floor_eps_sql`.  (Tiebreak keys
+    such as `l_quantity + l_orderkey * 1e-9` are not rounding and do not
+    match.)"""
+    import pathlib
+    import re
+
+    copy = re.compile(r"0\.5\s*\+\s*1e-9|0\.500000001|\b_?eps\s*=(?!=)", re.I)
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "debias_spark"
+    hits = [
+        f"{path.relative_to(pkg)}:{i}: {line.strip()}"
+        for path in sorted(pkg.rglob("*.py"))
+        if path.name != "numeric.py"
+        for i, line in enumerate(path.read_text().splitlines(), 1)
+        if copy.search(line)
+    ]
+    assert not hits, "floor-eps rule re-copied outside numeric.py:\n" + "\n".join(hits)
+
+
 def test_no_oracle_rounds_a_double_mean():
     """Regression guard for the rounding-tie class (round-5 Y33): Spark's
     round() HALF_UPs the shortest-decimal repr while DuckDB rounds the
     binary double, so `round(avg(<double>))` oracle pairs diverge whenever
     the mean lands on an exact .xx5 decimal tie.  The sanctioned emission
-    is the floor-eps integer recipe `floor(x*scale + 0.5 + 1e-9)`
-    (llm_ops13.py flesch) — assert no declared oracle still carries the
-    fragile form (stddev/var share the same many-term-double risk)."""
+    is the floor-eps integer rule of debias_spark/numeric.py
+    (`floor_eps` / `floor_eps_sql`) — assert no declared oracle still
+    carries the fragile form (stddev/var share the same many-term-double
+    risk)."""
     import re
 
     fragile = re.compile(r"round\s*\(\s*(avg|mean|stddev|var_samp|var_pop)\s*\(", re.I)
@@ -190,22 +213,31 @@ def test_no_oracle_exceeds_runtime_ceiling():
     assert not slow, f"oracles over the 5s ceiling at sf0.01 (after retry): {slow}"
 
 
-def test_floor_eps_oracles_keep_boundary_margin():
+def test_floor_eps_oracles_keep_boundary_margin(sf_dir):
     """The Y33 rounding-tie regression gate, generalized: no oracle that
-    emits integers via floor(x*scale + 0.5 + 1e-9) may have a
-    TRANSCENDENTAL-math value within 2e-9 of a floor boundary on the
+    emits integers via `floor_eps_sql` (debias_spark/numeric.py) may have
+    a TRANSCENDENTAL-math value within 2e-9 of a floor boundary on the
     current testdata (Java Math.log and C libm can disagree in the last
     ulp, so a near-boundary log-derived value could floor differently
     per engine).  Rational near-boundary hits are the benign exact-tie
     class — both engines evaluate them bit-identically and the eps
     breaks the tie consistently — and are reported, not failed, by
-    tools/float_margin_audit.py."""
+    tools/float_margin_audit.py.  The audit must cover every oracle that
+    carries the helper's fragment, so it can never pass vacuously."""
+    import os
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    from debias_spark.numeric import floor_eps_sql
+
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from tools.float_margin_audit import audit
 
-    fragile, _ties = audit("/root/testdata/sf0.001")
+    tail = floor_eps_sql("x").split("(x)", 1)[1]  # " + <eps>) AS BIGINT)"
+    n_floor_eps = sum(
+        1 for s in load_all_queries().values() if s.oracle and tail in s.oracle
+    )
+    fragile, _ties, n_audited = audit(sf_dir)
+    assert n_audited == n_floor_eps > 0, (n_audited, n_floor_eps)
     assert not fragile, (
         f"transcendental floor-eps oracles within 2e-9 of a boundary: "
         f"{fragile} — widen the emission scale or restate the formula "
