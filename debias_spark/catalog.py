@@ -67,10 +67,12 @@ def ensure_runtime_confs(spark: SparkSession) -> None:
 # from the metastore (external catalog tables, TESTDATA.md's 100 TB
 # posture); this cache is that metastore behavior for the path-based
 # fixtures.  Keyed by (path, mtime_ns, size) so a regenerated testdata
-# file invalidates its entry; non-plain-file paths (directories, remote
-# URIs) fall back to normal inference.  The cache holds SCHEMAS ONLY —
-# each call still builds a fresh DataFrame over a fresh scan, so no plan
-# or data is ever reused across queries or runs.
+# file invalidates its entry, plus the nanosAsLong conf the inferred type
+# of a TIMESTAMP(NANOS) column depends on, so a schema inferred under one
+# value is never served under the other; non-plain-file paths
+# (directories, remote URIs) fall back to normal inference.  The cache
+# holds SCHEMAS ONLY — each call still builds a fresh DataFrame over a
+# fresh scan, so no plan or data is ever reused across queries or runs.
 _SCHEMA_CACHE: dict[tuple, object] = {}
 
 
@@ -79,7 +81,12 @@ def _cached_schema(spark: SparkSession, path: str):
         st = os.stat(path)
         if not os.path.isfile(path):
             return None
-        key = (path, st.st_mtime_ns, st.st_size)
+        key = (
+            path,
+            st.st_mtime_ns,
+            st.st_size,
+            spark.conf.get("spark.sql.legacy.parquet.nanosAsLong"),
+        )
     except OSError:
         return None
     sch = _SCHEMA_CACHE.get(key)

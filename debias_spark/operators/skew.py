@@ -73,16 +73,39 @@ def key_skew_profile(df: DataFrame, key: str, top: int = 10) -> DataFrame:
 # at worst an extra full exchange, so the helper no-ops (fan_out belongs
 # at SCAN-SHAPED sites; r13 measured the deep-frame probe + exchange as
 # a net loss everywhere it was tried)
-_SHUFFLE_NODES = (
-    "Repartition",
-    "Join",
-    "Aggregate",
-    "Window",
-    "Sort",
-    "Deduplicate",
-    "Intersect",
-    "Except",
+_SHUFFLE_NODES = frozenset(
+    {
+        "Repartition",
+        "RepartitionByExpression",
+        "Join",
+        "LateralJoin",
+        "AsOfJoin",
+        "Aggregate",
+        "Window",
+        "Sort",
+        "Deduplicate",
+        "DeduplicateWithinWatermark",
+        "Intersect",
+        "Except",
+    }
 )
+
+
+def _has_shuffle_node(plan) -> bool:
+    """Walk a JVM logical plan (children and subquery plans) and report
+    whether any node's ``nodeName()`` is in ``_SHUFFLE_NODES``.  Node
+    names, not plan text: a column alias or literal such as 'Sorted'
+    must not read as a Sort."""
+    stack = [plan]
+    while stack:
+        node = stack.pop()
+        if node.nodeName() in _SHUFFLE_NODES:
+            return True
+        for seq in (node.children(), node.innerChildren()):
+            it = seq.iterator()
+            while it.hasNext():
+                stack.append(it.next())
+    return False
 
 
 def _bytes_conf(spark, key: str, default: int) -> int:
@@ -136,8 +159,7 @@ def fan_out(df: DataFrame) -> DataFrame:
     spark = df.sparkSession
     target = spark.sparkContext.defaultParallelism
     try:
-        analyzed = df._jdf.queryExecution().analyzed().toString()
-        if any(node in analyzed for node in _SHUFFLE_NODES):
+        if _has_shuffle_node(df._jdf.queryExecution().analyzed()):
             return df
     except Exception:
         pass  # probe is best-effort; fall through to the file estimate

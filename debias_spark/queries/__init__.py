@@ -11,6 +11,7 @@ already have green CORRECTNESS_r01 rows, never on unproven ones.
 
 import debias_spark.queries.llm_ops36  # noqa: F401  Y5b pinned-centroid IVF, Y73 substring scrubber (round 10)
 import debias_spark.queries.llm_ops37  # noqa: F401  Y74 composed IVF-PQ ANN search (round 11)
+import debias_spark.queries.io_roundtrip  # noqa: F401  Z25-Z26/Z28-Z29 ORC/CSV/bucketed sinks (round 4)
 import debias_spark.queries.llm_ops38  # noqa: F401  Y75 incremental IVF-PQ index maintenance (round 12)
 import debias_spark.queries.llm_ops39  # noqa: F401  Y78 post-tombstone index compaction (round 13)
 import debias_spark.queries.pipeline_e2e6  # noqa: F401  Z76 incremental corpus build (round 11)
@@ -30,7 +31,6 @@ import debias_spark.queries.llm_ops35  # noqa: F401  MM11 shot boundaries (round
 import debias_spark.queries.relational_ext12  # noqa: F401  X86-X87 skyline, interval overlap (round 4)
 import debias_spark.queries.relational_ext13  # noqa: F401  X91-X92 k-core, EWMA forecast (round 4)
 import debias_spark.queries.llm_ops9  # noqa: F401  Y19 block dedup (round 4)
-import debias_spark.queries.io_roundtrip  # noqa: F401  Z25-Z26/Z28-Z29 ORC/CSV/bucketed sinks (round 4)
 import debias_spark.queries.streaming_ext2  # noqa: F401  Z27 foreachBatch upsert (round 4)
 import debias_spark.queries.source_ext  # noqa: F401  Z30 Python DataSource (round 4)
 import debias_spark.queries.llm_ops10  # noqa: F401  Y20 winnowing fingerprints (round 4)

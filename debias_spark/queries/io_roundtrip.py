@@ -22,25 +22,7 @@ from pyspark.sql import functions as F
 
 from debias_spark.catalog import table
 from debias_spark.registry import register
-from debias_spark.warehouse import prune_stale_siblings
-
-from debias_spark.warehouse import warehouse_root
-
-_WAREHOUSE = os.path.join(warehouse_root(), "io_roundtrip")
-
-
-def _sink_dir(spark: SparkSession, sf_dir: str, name: str) -> str:
-    # Suffix with the Spark applicationId: two concurrent runs of the same
-    # key+sf (e.g. bench alongside a correctness sweep) would otherwise race
-    # overwrite-vs-read-back on a shared fixed path and could read partial
-    # or doubled data.  Per-session dirs make the write/read pair private.
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    app = spark.sparkContext.applicationId
-    # Prune prior sessions' dirs for the same key+sf (the appId suffix
-    # means nothing overwrites in place, so the warehouse would otherwise
-    # grow without bound across bench+correctness runs).
-    prune_stale_siblings(_WAREHOUSE, f"{name}_{tag}_", f"{name}_{tag}_{app}")
-    return os.path.join(_WAREHOUSE, f"{name}_{tag}_{app}")
+from debias_spark.warehouse import prune_stale_siblings, scratch_dir, scratch_root
 
 
 _CENTS = "CAST(round(o_totalprice * 100) AS BIGINT)"
@@ -78,7 +60,7 @@ def sink_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderpriority",
         F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
     )
-    out = _sink_dir(spark, sf_dir, "orc_orders")
+    out = scratch_dir(spark, sf_dir, "orc_orders")
     src.write.mode("overwrite").orc(out)
     back = spark.read.orc(out)
     return (
@@ -127,7 +109,7 @@ def sink_partitioned_parquet_prune(spark: SparkSession, sf_dir: str) -> DataFram
         "l_linestatus",
         F.col("l_quantity").cast("long").alias("qty"),
     )
-    out = _sink_dir(spark, sf_dir, "part_lineitem")
+    out = scratch_dir(spark, sf_dir, "part_lineitem")
     src.write.mode("overwrite").partitionBy("l_returnflag").parquet(out)
     back = spark.read.parquet(out)
     return (
@@ -173,7 +155,7 @@ def sink_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
         F.col("o_orderdate").cast("date").alias("odate"),
     )
-    out = _sink_dir(spark, sf_dir, "csv_orders")
+    out = scratch_dir(spark, sf_dir, "csv_orders")
     src.write.mode("overwrite").option("header", True).csv(out)
     back = (
         spark.read.schema("o_orderkey long, o_orderstatus string, cents long, odate date")
@@ -216,12 +198,12 @@ def sink_bucketed_join_noshuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     removes the join exchange, not the rollup's; the oracle proves the
     bucketed layout returns exactly the rows a plain join returns."""
     db = "io_bucket"
-    # per-session table names/dirs (same concurrency discipline as
-    # _sink_dir): bench and a correctness sweep may run this key at the
-    # same sf simultaneously
+    # per-session table names (the warehouse.scratch_dir rule applied to
+    # catalog tables): bench and a correctness sweep may run this key at
+    # the same sf simultaneously
     app = spark.sparkContext.applicationId.replace("-", "_").replace(".", "_")
     tag = (os.path.basename(sf_dir.rstrip("/")) or "sf").replace(".", "_") + "_" + app
-    loc = os.path.join(_WAREHOUSE, "bucket_db")
+    loc = os.path.join(scratch_root(), "bucket_db")
     spark.sql(f"CREATE DATABASE IF NOT EXISTS {db} LOCATION '{loc}'")
     names = {}
     for name, key, cols in (
@@ -232,8 +214,7 @@ def sink_bucketed_join_noshuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the session catalog is ephemeral (in-memory metastore) but the
         # managed-table LOCATION persists on disk — a fresh session's
         # overwrite cannot see the orphaned dir, so drop both explicitly,
-        # and prune prior sessions' orphaned table dirs (per-appId names
-        # never overwrite in place, so they'd accumulate forever)
+        # and prune prior sessions' orphaned table dirs
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
         shutil.rmtree(os.path.join(loc, f"{name}_{tag}"), ignore_errors=True)
         prune_stale_siblings(loc, f"{name}_", f"{name}_{tag}")
@@ -290,7 +271,7 @@ def sink_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "n_chars"
     )
-    out = _sink_dir(spark, sf_dir, "json_docs")
+    out = scratch_dir(spark, sf_dir, "json_docs")
     src.write.mode("overwrite").json(out)
     back = spark.read.schema("doc_id bigint, lang string, n_chars bigint").json(out)
     return (
@@ -335,7 +316,7 @@ def join_dpp_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle computes the same join on the unpartitioned source —
     a hash match proves pruning dropped no rows."""
     docs = table(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
-    out = _sink_dir(spark, sf_dir, "dpp_docs")
+    out = scratch_dir(spark, sf_dir, "dpp_docs")
     docs.write.mode("overwrite").partitionBy("lang").parquet(out)
     fact = spark.read.parquet(out)
     dim = (

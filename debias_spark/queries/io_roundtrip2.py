@@ -11,7 +11,6 @@ north-star extensions per SURVEY §2.A rationale.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -24,8 +23,8 @@ from pyspark.sql.types import (
 )
 
 from debias_spark.catalog import table
-from debias_spark.queries.io_roundtrip import _sink_dir
 from debias_spark.registry import register
+from debias_spark.warehouse import fresh_scratch_dirs, scratch_dir
 
 _CENTS = "CAST(round(o_totalprice * 100) AS BIGINT)"
 
@@ -57,8 +56,7 @@ def source_parquet_schema_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly how a 100 TB lake absorbs schema drift without rewriting
     history."""
     orders = table(spark, sf_dir, "orders")
-    out = _sink_dir(spark, sf_dir, "schema_merge")
-    shutil.rmtree(out, ignore_errors=True)
+    (out,) = fresh_scratch_dirs(spark, sf_dir, "schema_merge")
     v1 = orders.filter(F.col("o_orderkey") % 2 == 0).select(
         "o_orderkey",
         F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
@@ -102,8 +100,7 @@ def source_csv_permissive_badrecords(spark: SparkSession, sf_dir: str) -> DataFr
     inferSchema second pass); the corrupt channel is a per-row projection
     with zero shuffle."""
     orders = table(spark, sf_dir, "orders")
-    out = _sink_dir(spark, sf_dir, "csv_permissive")
-    shutil.rmtree(out, ignore_errors=True)
+    (out,) = fresh_scratch_dirs(spark, sf_dir, "csv_permissive")
     lines = orders.select(
         F.concat_ws(
             ",",
@@ -183,7 +180,7 @@ def sink_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
         F.date_format("o_orderdate", "yyyy-MM-dd").alias("order_day"),
     )
-    out = _sink_dir(spark, sf_dir, "xml_orders")
+    out = scratch_dir(spark, sf_dir, "xml_orders")
     (
         src.write.mode("overwrite")
         .format("xml")

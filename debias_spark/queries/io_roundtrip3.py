@@ -20,9 +20,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from debias_spark.catalog import table
-from debias_spark.queries.io_roundtrip import _sink_dir
 from debias_spark.registry import register
-from debias_spark.warehouse import prune_stale_siblings
+from debias_spark.warehouse import prune_stale_siblings, scratch_dir
 
 
 @register(
@@ -68,7 +67,7 @@ def source_json_permissive_badrecords(spark: SparkSession, sf_dir: str) -> DataF
         )
         .alias("value")
     )
-    out = _sink_dir(spark, sf_dir, "jsonl_docs")
+    out = scratch_dir(spark, sf_dir, "jsonl_docs")
     lines.write.mode("overwrite").text(out)
     schema = StructType(
         [
@@ -118,8 +117,9 @@ def sink_managed_table_insert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Table names are applicationId-suffixed (two concurrent sessions
     share ./spark-warehouse on disk, so a fixed name would race
-    overwrite-vs-read exactly like the path sinks — same discipline as
-    _sink_dir) and prior sessions' table dirs are best-effort pruned.
+    overwrite-vs-read exactly like the path sinks — the
+    warehouse.scratch_dir rule) and prior sessions' table dirs are
+    best-effort pruned.
 
     Plan shape: two parallel writes (one task per input partition), then
     a catalog-resolved scan + one aggregate.  The table outlives the
@@ -200,7 +200,7 @@ def source_binaryfile_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     import pandas as pd
 
-    out = _sink_dir(spark, sf_dir, "bmp_files")
+    out = scratch_dir(spark, sf_dir, "bmp_files")
     os.makedirs(out, exist_ok=True)
 
     def write_files(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -13,8 +13,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from debias_spark.catalog import table
-from debias_spark.queries.io_roundtrip import _sink_dir
 from debias_spark.registry import register
+from debias_spark.warehouse import scratch_dir
 
 # tricky = first 20 chars + newline + quoted lang + comma + next 20 chars:
 # one field containing all three CSV hazards (record separator, quote
@@ -65,7 +65,7 @@ def source_csv_multiline_quotes(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents").select(
         "doc_id", "lang", F.expr(_TRICKY_SQL).alias("tricky")
     )
-    path = _sink_dir(spark, sf_dir, "z45_csv")
+    path = scratch_dir(spark, sf_dir, "z45_csv")
     (
         docs.write.mode("overwrite")
         .option("header", True)
@@ -140,7 +140,7 @@ def sink_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    path = _sink_dir(spark, sf_dir, "z46_pyds")
+    path = scratch_dir(spark, sf_dir, "z46_pyds")
     # mode("overwrite") reaches the source's writer() hook, which clears
     # the target driver-side before any task runs (no manual rmtree)
     agg.repartition(4).write.format("jsonl_sink").mode("overwrite").save(path)

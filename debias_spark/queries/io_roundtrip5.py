@@ -19,8 +19,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from debias_spark.catalog import table
-from debias_spark.queries.io_roundtrip import _sink_dir
 from debias_spark.registry import register
+from debias_spark.warehouse import scratch_dir
 
 _CENTS = "CAST(round(o_totalprice * 100) AS BIGINT)"
 
@@ -32,7 +32,7 @@ def write_rowgroup_sink(spark: SparkSession, sf_dir: str) -> str:
     diagnostic test (tests/test_round7_wave.py reads the parquet footers
     via pyarrow and asserts the 1997 predicate overlaps only a small
     fraction of row groups)."""
-    out = _sink_dir(spark, sf_dir, "z52_rowgroup")
+    out = scratch_dir(spark, sf_dir, "z52_rowgroup")
     o = table(spark, sf_dir, "orders")
     (
         o.repartitionByRange(4, "o_orderdate")
@@ -88,7 +88,7 @@ def write_typed_partitions(spark: SparkSession, sf_dir: str) -> str:
     """orders written as year=<int>/month=<int> Hive-style directories.
     Exposed for the plan test (asserts PartitionFilters prune the
     listing and the discovered partition columns come back as ints)."""
-    out = _sink_dir(spark, sf_dir, "z55_typedpart")
+    out = scratch_dir(spark, sf_dir, "z55_typedpart")
     o = table(spark, sf_dir, "orders")
     (
         o.withColumn("year", F.year("o_orderdate"))
@@ -170,7 +170,7 @@ def sink_compression_codecs(spark: SparkSession, sf_dir: str) -> DataFrame:
     proj = o.select("o_orderkey", "o_totalprice", "o_orderstatus")
     frames = []
     for codec in _CODECS:
-        out = _sink_dir(spark, sf_dir, f"z56_{codec}")
+        out = scratch_dir(spark, sf_dir, f"z56_{codec}")
         proj.write.mode("overwrite").option("compression", codec).parquet(out)
         rb = spark.read.parquet(out)
         frames.append(
@@ -214,7 +214,7 @@ def source_csv_schema_infer(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract at 100 TB is 'infer once, then pin the schema', which is
     exactly what the explicit-schema twins demonstrate."""
     o = table(spark, sf_dir, "orders")
-    out = _sink_dir(spark, sf_dir, "z57_csv")
+    out = scratch_dir(spark, sf_dir, "z57_csv")
     (
         o.select(
             "o_orderkey",

@@ -11,14 +11,13 @@ file-granular read; recursiveFileLookup generalizes its fixed
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from debias_spark.catalog import table
-from debias_spark.queries.io_roundtrip import _sink_dir
 from debias_spark.registry import register
+from debias_spark.warehouse import fresh_scratch_dirs
 
 _N_FILES = 40  # docs per file = docs bucketed by doc_id % _N_FILES
 
@@ -54,8 +53,7 @@ def source_wholetext_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     input_file_name parsing — the same path-derived-attribute trick as
     the reference's <lang>/ directory convention."""
     docs = table(spark, sf_dir, "documents")
-    out = _sink_dir(spark, sf_dir, "z59_wholetext")
-    shutil.rmtree(out, ignore_errors=True)
+    (out,) = fresh_scratch_dirs(spark, sf_dir, "z59_wholetext")
     os.makedirs(out, exist_ok=True)
     parts = (
         docs.groupBy((F.col("doc_id") % _N_FILES).alias("bucket"))
@@ -115,8 +113,7 @@ def source_recursive_dir_glob(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB the contract is bounded fan-out per level (or a manifest);
     the scan itself is ordinary parquet."""
     o = table(spark, sf_dir, "orders")
-    out = _sink_dir(spark, sf_dir, "z60_nested")
-    shutil.rmtree(out, ignore_errors=True)
+    (out,) = fresh_scratch_dirs(spark, sf_dir, "z60_nested")
     for grp in range(3):
         sub = os.path.join(out, f"level1_{grp}", f"level2_{grp % 2}")
         (

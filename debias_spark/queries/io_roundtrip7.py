@@ -8,15 +8,12 @@ the partitions a batch touches.
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from debias_spark.catalog import table
-from debias_spark.queries.io_roundtrip import _sink_dir
 from debias_spark.registry import register
+from debias_spark.warehouse import fresh_scratch_dirs
 
 _CENTS = "CAST(round(o_totalprice * 100) AS BIGINT)"
 
@@ -58,8 +55,7 @@ def sink_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFr
     o = table(spark, sf_dir, "orders").withColumn(
         "year", F.year("o_orderdate")
     )
-    out = _sink_dir(spark, sf_dir, "z61_dynpart")
-    shutil.rmtree(out, ignore_errors=True)
+    (out,) = fresh_scratch_dirs(spark, sf_dir, "z61_dynpart")
     o.write.mode("overwrite").partitionBy("year").parquet(out)
 
     conf = spark.conf

@@ -8,17 +8,15 @@ reads back; Z64 is the small-files control its naive writer lacks.
 
 from __future__ import annotations
 
-import glob
 import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from debias_spark.catalog import table
-from debias_spark.queries.io_roundtrip import _sink_dir
 from debias_spark.registry import register
+from debias_spark.warehouse import fresh_scratch_dirs, scratch_dir
 
 _CENTS = "CAST(round(o_totalprice * 100) AS BIGINT)"
 
@@ -55,8 +53,7 @@ def source_json_multiline_array(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("o_orderstatus") == "O")
         .filter(F.col("o_orderkey") < 1200)
     )
-    out = _sink_dir(spark, sf_dir, "z63_mljson")
-    shutil.rmtree(out, ignore_errors=True)
+    (out,) = fresh_scratch_dirs(spark, sf_dir, "z63_mljson")
     os.makedirs(out, exist_ok=True)
     # 8 pretty-printed array files, bucketed by custkey (driver-side
     # test scaffolding; bounded rows per bucket at these SFs)
@@ -120,7 +117,7 @@ def sink_max_records_per_file(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic itself is pinned by the wave test on a tiny frame with a
     3-row cap, decoupling the proof from the benched cost."""
     o = table(spark, sf_dir, "orders").select("o_orderstatus", "o_totalprice")
-    out = _sink_dir(spark, sf_dir, "z64_maxrec")
+    out = scratch_dir(spark, sf_dir, "z64_maxrec")
     (
         o.coalesce(1)  # deliberately ONE partition: the option must split it
         .write.mode("overwrite")
@@ -166,7 +163,7 @@ def source_max_partition_bytes_scan(spark: SparkSession, sf_dir: str) -> DataFra
     arithmetic picks the value, this key proves the knob.  Confs are
     restored in a finally (never-set -> unset, rule 20)."""
     o = table(spark, sf_dir, "orders").select("o_orderstatus", "o_totalprice")
-    out = _sink_dir(spark, sf_dir, "z67_mpb")
+    out = scratch_dir(spark, sf_dir, "z67_mpb")
     o.coalesce(1).write.mode("overwrite").parquet(out)
     _MPB = "spark.sql.files.maxPartitionBytes"
     _OC = "spark.sql.files.openCostInBytes"

@@ -12,14 +12,12 @@ data fidelity of both roundtrips via one value-oracled rollup.
 
 from __future__ import annotations
 
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from debias_spark.catalog import table
-from debias_spark.queries.io_roundtrip import _sink_dir
 from debias_spark.registry import register
+from debias_spark.warehouse import fresh_scratch_dirs
 
 _MAX_SPLIT = 64 * 1024  # 64 KiB splits: the plain file must split, gz cannot
 
@@ -55,10 +53,7 @@ def source_gzip_unsplittable_scan(spark: SparkSession, sf_dir: str) -> DataFrame
     straggler no conf can fix.  Conf is restored in a finally
     (never-set -> unset, rule 20)."""
     docs = table(spark, sf_dir, "documents")
-    gz_dir = _sink_dir(spark, sf_dir, "z70_gz")
-    pl_dir = _sink_dir(spark, sf_dir, "z70_plain")
-    for d in (gz_dir, pl_dir):
-        shutil.rmtree(d, ignore_errors=True)
+    gz_dir, pl_dir = fresh_scratch_dirs(spark, sf_dir, "z70_gz", "z70_plain")
     one = docs.coalesce(1)
     one.write.option("compression", "gzip").json(gz_dir)
     one.write.json(pl_dir)

@@ -24,14 +24,12 @@ north-star extension per SURVEY §2.H.
 from __future__ import annotations
 
 import os
-import shutil
 import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from debias_spark.catalog import table
-from debias_spark.queries.io_roundtrip import _WAREHOUSE, _sink_dir
 from debias_spark.queries.llm_ops37 import (
     _PQ_CODES,
     IVFPQ_ORACLE,
@@ -39,8 +37,13 @@ from debias_spark.queries.llm_ops37 import (
     pq_codebook,
     pq_index_frame,
 )
-from debias_spark.streaming import narrow_shuffle
+from debias_spark.streaming import drain_file_drops, narrow_shuffle
 from debias_spark.registry import register
+from debias_spark.warehouse import (
+    fresh_scratch_dirs,
+    id_range_bounds,
+    stage_single_file_drop,
+)
 
 # TWO drops, not four (r12 verdict item 1): incremental maintenance
 # needs state to exist when a later drop appends (>= 2); each extra
@@ -79,26 +82,14 @@ def similarity_ann_ivfpq_incremental(spark: SparkSession, sf_dir: str) -> DataFr
     # static index artifacts, built once (bounded by their own contracts)
     book = pq_codebook(emb)
 
-    src_dir = _sink_dir(spark, sf_dir, "y75_src")
-    base = os.path.basename(src_dir)
-    idx_dir = os.path.join(_WAREHOUSE, base.replace("y75_src", "y75_index"))
-    ckpt_dir = os.path.join(_WAREHOUSE, base.replace("y75_src", "y75_ckpt"))
-    from debias_spark.warehouse import prune_stale_siblings, stage_single_file_drop
-
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    for stem, d in (("y75_index", idx_dir), ("y75_ckpt", ckpt_dir)):
-        prune_stale_siblings(_WAREHOUSE, f"{stem}_{tag}_", os.path.basename(d))
-        shutil.rmtree(d, ignore_errors=True)
-    shutil.rmtree(src_dir, ignore_errors=True)
+    src_dir, idx_dir, ckpt_dir = fresh_scratch_dirs(
+        spark, sf_dir, "y75_src", "y75_index", "y75_ckpt"
+    )
     os.makedirs(src_dir)
 
-    # stage _N_DROPS vec_id-ordered drops (bounds from the ID RANGE —
-    # sparse/offset-id safe, the Z68 staging doctrine); the codebook
-    # contract (vec_id < _PQ_CODES present) rides in the first drop
-    mm = emb.agg(F.min("vec_id").alias("lo"), F.max("vec_id").alias("hi")).first()
-    lo, hi = mm.lo, mm.hi + 1
-    bounds = [lo + ((hi - lo) * i) // _N_DROPS for i in range(_N_DROPS)] + [hi]
-    bounds = sorted(set(bounds))
+    # stage _N_DROPS vec_id-ordered drops; the codebook contract
+    # (vec_id < _PQ_CODES present) rides in the first drop
+    bounds = id_range_bounds(emb, "vec_id", _N_DROPS)
     t0 = time.time() - 3600
     for i in range(len(bounds) - 1):
         part = emb.filter(
@@ -111,12 +102,7 @@ def similarity_ann_ivfpq_incremental(spark: SparkSession, sf_dir: str) -> DataFr
             "corpus is too small to exercise incremental index maintenance"
         )
 
-    batches: list[int] = []
-
     def refresh(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():  # availableNow's trailing empty commit batch
-            return
-        batches.append(batch_id)
         # the drop indexes itself: pure projection, no state read, no
         # shuffle; append lands under the cell's inverted-list partition
         pq_index_frame(batch, book).write.mode("append").partitionBy(
@@ -124,23 +110,7 @@ def similarity_ann_ivfpq_incremental(spark: SparkSession, sf_dir: str) -> DataFr
         ).parquet(idx_dir)
 
     with narrow_shuffle(spark, 8):
-        q = (
-            spark.readStream.schema(emb.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-            .writeStream.foreachBatch(refresh)
-            .option("checkpointLocation", ckpt_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            if not q.awaitTermination(300):
-                raise RuntimeError(
-                    "similarity_ann_ivfpq_incremental: availableNow drain "
-                    "did not finish within 300s"
-                )
-        finally:
-            q.stop()
+        batches = drain_file_drops(spark, emb.schema, src_dir, ckpt_dir, refresh)
     if len(batches) < 2:
         raise RuntimeError(
             f"similarity_ann_ivfpq_incremental drained in {len(batches)} "

@@ -29,14 +29,10 @@ north-star extension per SURVEY §2.H.
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from debias_spark.catalog import table
-from debias_spark.queries.io_roundtrip import _WAREHOUSE, _sink_dir
 from debias_spark.queries.llm_ops36 import _IVF_K
 from debias_spark.queries.llm_ops37 import (
     _PQ_CODES,
@@ -49,6 +45,7 @@ from debias_spark.queries.llm_ops38 import _TOMB_DUCK, _TOMB_MOD, _TOMB_REM
 from debias_spark.queries.pipeline_e2e4 import _count_parquet_files
 from debias_spark.streaming import narrow_shuffle
 from debias_spark.registry import register
+from debias_spark.warehouse import fresh_scratch_dirs, id_range_bounds
 
 # two drops (the r13 family-wide drop-count discipline): fragmentation
 # for the strictly-fewer-files proof needs >= 2 appends per cell (8
@@ -93,22 +90,11 @@ def similarity_ann_ivfpq_compacted(spark: SparkSession, sf_dir: str) -> DataFram
     emb = table(spark, sf_dir, "embeddings")
     book = pq_codebook(emb)
 
-    idx_dir = _sink_dir(spark, sf_dir, "y78_state")  # prunes stale y78_state_*
-    base = os.path.basename(idx_dir)
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    compact_dir = os.path.join(_WAREHOUSE, base.replace("y78_state", "y78_compact"))
-    from debias_spark.warehouse import prune_stale_siblings
+    idx_dir, compact_dir = fresh_scratch_dirs(spark, sf_dir, "y78_state", "y78_compact")
 
-    prune_stale_siblings(_WAREHOUSE, f"y78_compact_{tag}_", os.path.basename(compact_dir))
-    for d in (idx_dir, compact_dir):
-        shutil.rmtree(d, ignore_errors=True)
-
-    # fixture staging: _N_DROPS id-range batch appends (the Y75 drop
-    # bounds doctrine — ID-RANGE derived, sparse/offset-id safe), narrow
-    # shuffle width so each append leaves several files per cell
-    mm = emb.agg(F.min("vec_id").alias("lo"), F.max("vec_id").alias("hi")).first()
-    lo, hi = mm.lo, mm.hi + 1
-    bounds = sorted(set([lo + ((hi - lo) * i) // _N_DROPS for i in range(_N_DROPS)] + [hi]))
+    # fixture staging: _N_DROPS id-range batch appends, narrow shuffle
+    # width so each append leaves several files per cell
+    bounds = id_range_bounds(emb, "vec_id", _N_DROPS)
     if len(bounds) - 1 < 2:
         raise RuntimeError(
             f"vec_id-range staging produced {len(bounds) - 1} drop(s); the "

@@ -15,16 +15,15 @@ only they are annotated, and the survivor state/sink update in place
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from debias_spark.catalog import table
 from debias_spark.operators.text import NORMALIZE_STRICT_DUCK, normalize_strict
-from debias_spark.queries.io_roundtrip import _WAREHOUSE, _sink_dir
-from debias_spark.streaming import narrow_shuffle
+from debias_spark.streaming import drain_file_drops, narrow_shuffle
 from debias_spark.registry import register
+from debias_spark.warehouse import fresh_scratch_dirs, scratch_dir, swap_state_write
 
 _SHORT_LT = 100  # annotate: docs under this many chars flagged short
 
@@ -87,19 +86,11 @@ def pipeline_incremental_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     expression and the digest as the clustering key so only touched
     files rewrite); history is never re-read, and the sink is written
     once, partition-pruned by lang."""
-    from debias_spark.warehouse import prune_stale_siblings, swap_state_write
-
     docs = table(spark, sf_dir, "documents")
-    src_dir = _sink_dir(spark, sf_dir, "z65_src")  # prunes stale z65_src_*
-    base = os.path.basename(src_dir)
-    state_dir = os.path.join(_WAREHOUSE, base.replace("z65_src", "z65_state"))
-    sink_dir = os.path.join(_WAREHOUSE, base.replace("z65_src", "z65_sink"))
-    ckpt_dir = os.path.join(_WAREHOUSE, base.replace("z65_src", "z65_ckpt"))
-    for d in (state_dir, sink_dir, ckpt_dir):
-        prune_stale_siblings(
-            _WAREHOUSE, os.path.basename(d).rsplit("_", 1)[0] + "_", os.path.basename(d)
-        )
-        shutil.rmtree(d, ignore_errors=True)
+    src_dir = scratch_dir(spark, sf_dir, "z65_src")
+    state_dir, sink_dir, ckpt_dir = fresh_scratch_dirs(
+        spark, sf_dir, "z65_state", "z65_sink", "z65_ckpt"
+    )
 
     # stage the corpus as 4 files so availableNow(maxFilesPerTrigger=1)
     # genuinely iterates; in production this directory is the landing
@@ -107,12 +98,8 @@ def pipeline_incremental_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs.repartition(4).write.mode("overwrite").parquet(src_dir)
 
     norm = normalize_strict(F.col("text"))
-    batches: list[int] = []
 
     def refresh(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():  # availableNow's trailing empty commit batch
-            return
-        batches.append(batch_id)
         ann = batch.select(
             F.md5(norm).alias("digest"),
             F.struct(
@@ -140,26 +127,7 @@ def pipeline_incremental_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # plans pay pure task-launch overhead 4x over (rule-9 cousin); the
     # finally restores the never-set case with unset, not skip (rule 20)
     with narrow_shuffle(spark, 8):
-        q = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-            .writeStream.foreachBatch(refresh)
-            .option("checkpointLocation", ckpt_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            # awaitTermination returns False on timeout: fail LOUDLY then —
-            # stopping a half-drained stream would otherwise surface as a
-            # confusing value mismatch instead of a timeout
-            if not q.awaitTermination(300):
-                raise RuntimeError(
-                    "pipeline_incremental_refresh: availableNow drain did "
-                    "not finish within 300s"
-                )
-        finally:
-            q.stop()
+        batches = drain_file_drops(spark, docs.schema, src_dir, ckpt_dir, refresh)
     if len(batches) < 2:
         raise RuntimeError(
             f"pipeline_incremental_refresh drained in {len(batches)} "

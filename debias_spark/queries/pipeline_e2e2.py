@@ -12,7 +12,6 @@ near-duplicate screen a real corpus refresh runs on arrival.
 from __future__ import annotations
 
 import os
-import shutil
 import time
 
 from pyspark.sql import DataFrame, SparkSession
@@ -21,10 +20,16 @@ from pyspark.sql import functions as F
 from debias_spark.catalog import table
 from debias_spark.operators.text import NORMALIZE_STRICT_DUCK
 from debias_spark.operators.skew import fan_out
-from debias_spark.queries.io_roundtrip import _WAREHOUSE, _sink_dir
 from debias_spark.queries.llm_ops import _minhash_ctes
-from debias_spark.streaming import narrow_shuffle
+from debias_spark.streaming import drain_file_drops, narrow_shuffle
 from debias_spark.registry import register
+from debias_spark.warehouse import (
+    compact_partitioned_state,
+    fresh_scratch_dirs,
+    id_range_bounds,
+    stage_single_file_drop,
+    swap_state_write,
+)
 
 _NH, _NB = 32, 4  # minhash hashes / bands (the H9 family constants)
 # signature-estimated Jaccard >= 0.8  <=>  matching components >= 26
@@ -277,58 +282,29 @@ def pipeline_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         minhash_sig_wide,
         word_shingles,
     )
-    from debias_spark.warehouse import (
-        compact_partitioned_state,
-        prune_stale_siblings,
-        stage_single_file_drop,
-    )
-
     global LAST_COMPACTIONS
     LAST_COMPACTIONS = 0
     docs = table(spark, sf_dir, "documents")
-    src_dir = _sink_dir(spark, sf_dir, "z68_src")  # prunes stale z68_src_*
-    base = os.path.basename(src_dir)
-    # prune prefix = known stem + sf tag (exactly what _sink_dir uses):
-    # re-deriving it by splitting the full dir name assumed the appId has
-    # no underscore, which YARN appIds (application_<ts>_<n>) break —
-    # stale siblings would then never prune (r9 advice)
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    band_dir = os.path.join(_WAREHOUSE, base.replace("z68_src", "z68_bands"))
-    pay_dir = os.path.join(_WAREHOUSE, base.replace("z68_src", "z68_payload"))
-    ckpt_dir = os.path.join(_WAREHOUSE, base.replace("z68_src", "z68_ckpt"))
-    shutil.rmtree(src_dir, ignore_errors=True)
-    os.makedirs(src_dir)
     # z68_sigs is gone (r14): since r13 the band rows CARRY their full
     # signatures, so the standalone signature state was written every
-    # batch and read by nothing — one dead parquet write job per
-    # micro-batch.  The prune entry stays so dirs from older sessions
-    # still get cleaned up.
-    for stem, d in (
-        ("z68_bands", band_dir),
-        ("z68_sigs", os.path.join(_WAREHOUSE, base.replace("z68_src", "z68_sigs"))),
-        ("z68_payload", pay_dir),
-        ("z68_ckpt", ckpt_dir),
-    ):
-        prune_stale_siblings(_WAREHOUSE, f"{stem}_{tag}_", os.path.basename(d))
-        shutil.rmtree(d, ignore_errors=True)
+    # batch and read by nothing.  The stem stays so dirs from older
+    # sessions still get pruned.
+    src_dir, band_dir, _, pay_dir, ckpt_dir = fresh_scratch_dirs(
+        spark, sf_dir, "z68_src", "z68_bands", "z68_sigs", "z68_payload", "z68_ckpt"
+    )
+    os.makedirs(src_dir)
 
     # stage three doc_id-ordered drops with ascending mtimes so the file
     # stream replays the production arrival order (fixture prep: the
     # 1-row min/max only slices the staging files, it is not part of the
-    # query).  Bounds come from the ID RANGE, not the row count — a
-    # sparse/offset id space (the 4x stress replicas) would otherwise
-    # leave slices empty or drop ids beyond count+1 entirely.  THREE
-    # drops, not four (r12 verdict item 1): >= 2 exercises the state
-    # probe, and the third keeps a post-compaction probe batch alive for
-    # the low-threshold test (compaction fires from batch 2 onward, so
-    # batch 3 probes the rewritten dir); a fourth only re-paid the
-    # per-batch fixed cost
-    mm = docs.agg(F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi")).first()
-    lo, hi = mm.lo, mm.hi + 1
-    span = hi - lo
-    bounds = [lo, lo + span // 3, lo + (2 * span) // 3, hi]
+    # query).  THREE drops, not four (r12 verdict item 1): >= 2
+    # exercises the state probe, and the third keeps a post-compaction
+    # probe batch alive for the low-threshold test (compaction fires
+    # from batch 2 onward, so batch 3 probes the rewritten dir); a
+    # fourth only re-paid the per-batch fixed cost
+    bounds = id_range_bounds(docs, "doc_id", 3)
     t0 = time.time() - 3600
-    for i in range(3):
+    for i in range(len(bounds) - 1):
         stage_single_file_drop(
             docs.filter(
                 (F.col("doc_id") >= bounds[i]) & (F.col("doc_id") < bounds[i + 1])
@@ -338,12 +314,11 @@ def pipeline_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
             mtime=t0 + 60 * i,
         )
 
-    batches: list[int] = []
+    n_seen = 0
 
     def refresh(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():  # availableNow's trailing empty commit batch
-            return
-        batches.append(batch_id)
+        nonlocal n_seen
+        n_seen += 1
         ss = batch.sparkSession
         batch = fan_out(batch)  # a staged drop scans as ONE partition (r13)
         b_sh = batch.select(
@@ -394,7 +369,7 @@ def pipeline_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         # batch counts (r10 verdict item 5).
         threshold = int(os.environ.get(_COMPACT_ENV, _COMPACT_FILES_DEFAULT))
         if (
-            len(batches) >= 2
+            n_seen >= 2
             and os.path.isdir(band_dir)
             and _max_band_partition_files(band_dir) > threshold
         ):
@@ -412,23 +387,7 @@ def pipeline_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
             LAST_COMPACTIONS += 1
 
     with narrow_shuffle(spark, 8):
-        q = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-            .writeStream.foreachBatch(refresh)
-            .option("checkpointLocation", ckpt_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            if not q.awaitTermination(300):
-                raise RuntimeError(
-                    "pipeline_incremental_neardup: availableNow drain did "
-                    "not finish within 300s"
-                )
-        finally:
-            q.stop()
+        batches = drain_file_drops(spark, docs.schema, src_dir, ckpt_dir, refresh)
     if len(batches) < 2:
         raise RuntimeError(
             f"pipeline_incremental_neardup drained in {len(batches)} "
@@ -492,34 +451,19 @@ def pipeline_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     the second drain's work — at 100 TB re-listing means re-reading a
     corpus, so checkpoint continuity IS the cost model of a refresh."""
     from debias_spark.operators.text import normalize_strict
-    from debias_spark.warehouse import (
-        prune_stale_siblings,
-        stage_single_file_drop,
-        swap_state_write,
-    )
 
     docs = table(spark, sf_dir, "documents")
-    src_dir = _sink_dir(spark, sf_dir, "z71_src")
-    base = os.path.basename(src_dir)
-    # known-stem prune prefix (see Z68 above — the appId may contain '_')
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    state_dir = os.path.join(_WAREHOUSE, base.replace("z71_src", "z71_state"))
-    ckpt_dir = os.path.join(_WAREHOUSE, base.replace("z71_src", "z71_ckpt"))
-    shutil.rmtree(src_dir, ignore_errors=True)
+    src_dir, state_dir, ckpt_dir = fresh_scratch_dirs(
+        spark, sf_dir, "z71_src", "z71_state", "z71_ckpt"
+    )
     os.makedirs(src_dir)
-    for stem, d in (("z71_state", state_dir), ("z71_ckpt", ckpt_dir)):
-        prune_stale_siblings(_WAREHOUSE, f"{stem}_{tag}_", os.path.basename(d))
-        shutil.rmtree(d, ignore_errors=True)
 
-    # fixture staging only: id-RANGE thirds (robust to sparse ids).
-    # 2+1 drops, not 3+1 (r12 verdict item 1): the first drain needs
-    # >= 2 batches to prove a real checkpoint sequence, the second needs
-    # exactly the one late file — a third first-drain drop re-paid the
-    # per-batch fixed cost without strengthening either half
-    mm = docs.agg(F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi")).first()
-    lo, hi = mm.lo, mm.hi + 1
-    span = hi - lo
-    bounds = [lo, lo + span // 3, lo + (2 * span) // 3, hi]
+    # fixture staging only: id-range thirds.  2+1 drops, not 3+1 (r12
+    # verdict item 1): the first drain needs >= 2 batches to prove a
+    # real checkpoint sequence, the second needs exactly the one late
+    # file — a third first-drain drop re-paid the per-batch fixed cost
+    # without strengthening either half
+    bounds = id_range_bounds(docs, "doc_id", 3)
 
     def stage(i: int) -> None:
         stage_single_file_drop(
@@ -531,12 +475,10 @@ def pipeline_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     norm = normalize_strict(F.col("text"))
-    seen: list[tuple[int, int]] = []  # (batch_id, row_count)
+    rows: dict[int, int] = {}  # batch_id -> row count
 
     def refresh(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        seen.append((batch_id, batch.count()))
+        rows[batch_id] = batch.count()
         ann = batch.select(
             F.md5(norm).alias("digest"),
             F.struct(
@@ -551,50 +493,33 @@ def pipeline_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
             surv = prev.unionByName(surv).groupBy("digest").agg(F.max("b").alias("b"))
         swap_state_write(surv, state_dir)
 
-    def drain() -> None:
-        q = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-            .writeStream.foreachBatch(refresh)
-            .option("checkpointLocation", ckpt_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            if not q.awaitTermination(300):
-                raise RuntimeError(
-                    "pipeline_checkpoint_resume: drain did not finish in 300s"
-                )
-        finally:
-            q.stop()
+    def drain() -> list[int]:
+        return drain_file_drops(spark, docs.schema, src_dir, ckpt_dir, refresh)
 
     with narrow_shuffle(spark, 8):
         for i in range(2):
             stage(i)
-        drain()
-        first = list(seen)
+        first = drain()
         if len(first) < 2:
             raise RuntimeError(
                 f"first drain took {len(first)} non-empty batches; need >= 2"
             )
         stage(2)  # the late drop lands between refreshes
-        drain()
-        second = seen[len(first):]
+        second = drain()
 
     # exactly-once, both halves: ONE new batch, with exactly the new
     # file's rows, and its batch id CONTINUES the checkpoint's sequence
     if len(second) != 1:
         raise RuntimeError(
-            f"resume drain ran {len(second)} non-empty batches, expected 1: {seen}"
+            f"resume drain ran {len(second)} non-empty batches, expected 1: {rows}"
         )
     n_late = docs.filter(F.col("doc_id") >= bounds[2]).count()
-    if second[0][1] != n_late:
+    if rows[second[0]] != n_late:
         raise RuntimeError(
-            f"resume batch processed {second[0][1]} rows, expected {n_late}"
+            f"resume batch processed {rows[second[0]]} rows, expected {n_late}"
         )
-    if second[0][0] <= max(b for b, _ in first):
-        raise RuntimeError(f"batch ids reset across drains: {seen}")
+    if second[0] <= max(first):
+        raise RuntimeError(f"batch ids reset across drains: {rows}")
 
     state = spark.read.parquet(state_dir)
     return (

@@ -12,14 +12,12 @@ by reason.
 
 from __future__ import annotations
 
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from debias_spark.catalog import table
-from debias_spark.queries.io_roundtrip import _sink_dir
 from debias_spark.registry import register
+from debias_spark.warehouse import fresh_scratch_dirs
 
 _MIN_CHARS = 180  # gate 1: documents shorter than this quarantine as 'short'
 _WS_MAX_PCT = 20  # gate 2: whitespace above this percent -> 'ws_heavy'
@@ -68,10 +66,9 @@ def pipeline_quarantine_dead_letter(spark: SparkSession, sf_dir: str) -> DataFra
     usual compliance requirement).  Reasons are data, not logs — the
     triage rollup is a groupBy away, as here."""
     docs = table(spark, sf_dir, "documents")
-    keep_dir = _sink_dir(spark, sf_dir, "z72_kept")
-    dlq_dir = _sink_dir(spark, sf_dir, "z72_quarantine")
-    for d in (keep_dir, dlq_dir):
-        shutil.rmtree(d, ignore_errors=True)
+    keep_dir, dlq_dir = fresh_scratch_dirs(
+        spark, sf_dir, "z72_kept", "z72_quarantine"
+    )
 
     # checkpoint A/B (interleaved, sf0.1, min-of-3): WITH 0.68-0.85s vs
     # recompute 0.76-1.0s — the narrow 4-column cache beats re-scanning

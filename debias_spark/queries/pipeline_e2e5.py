@@ -19,8 +19,6 @@ in one WITH RECURSIVE chain over the same parquet.
 
 from __future__ import annotations
 
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -32,7 +30,6 @@ from debias_spark.operators.text import (
     QUALITY_TOKENS_DUCK,
     QUALITY_VERDICT_DUCK,
 )
-from debias_spark.queries.io_roundtrip import _sink_dir
 from debias_spark.operators.skew import fan_out
 from debias_spark.queries.llm_ops import _minhash_ctes
 from debias_spark.queries.llm_ops7 import _DUCK_ALL_TOKENS, _EVAL_MAX_ID
@@ -44,6 +41,7 @@ from debias_spark.queries.pipeline_e2e2 import (
     band_dropped_ids,
 )
 from debias_spark.registry import register
+from debias_spark.warehouse import fresh_scratch_dirs
 
 _GRAM_N = 8  # decontamination gram width (the Y12/Y72 constant)
 _EVAL_CAP = 500_000  # hard bound on the collected eval gram set (Y72)
@@ -307,8 +305,7 @@ def pipeline_corpus_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("tok_bin").alias("sum_tokens"),
         F.min("mindoc_bin").alias("min_doc_id"),
     )
-    sink = _sink_dir(spark, sf_dir, "z75_manifest")
-    shutil.rmtree(sink, ignore_errors=True)
+    (sink,) = fresh_scratch_dirs(spark, sf_dir, "z75_manifest")
     manifest.write.parquet(sink)
     out = spark.read.parquet(sink)
     if out.isEmpty():

@@ -31,7 +31,6 @@ refresh loop it would need at any real scale.
 from __future__ import annotations
 
 import os
-import shutil
 import time
 
 from pyspark.sql import DataFrame, SparkSession
@@ -40,7 +39,6 @@ from pyspark.sql import functions as F
 from debias_spark.catalog import table
 from debias_spark.operators.packing import PACK_CAP, PACK_SHARD, nfd_pack
 from debias_spark.operators.skew import fan_out
-from debias_spark.queries.io_roundtrip import _WAREHOUSE, _sink_dir
 from debias_spark.queries.llm_ops7 import _EVAL_MAX_ID
 from debias_spark.queries.pipeline_e2e2 import (
     _NB,
@@ -51,7 +49,7 @@ from debias_spark.queries.pipeline_e2e5 import (
     _GRAM_N,
     CORPUS_BUILD_ORACLE,
 )
-from debias_spark.streaming import narrow_shuffle
+from debias_spark.streaming import drain_file_drops, narrow_shuffle
 from debias_spark.registry import register
 
 
@@ -110,7 +108,11 @@ def pipeline_corpus_build_incremental(spark: SparkSession, sf_dir: str) -> DataF
         word_ngrams_frame,
     )
     from debias_spark.queries.llm_ops34 import bloom_member
-    from debias_spark.warehouse import prune_stale_siblings, stage_single_file_drop
+    from debias_spark.warehouse import (
+        fresh_scratch_dirs,
+        id_range_bounds,
+        stage_single_file_drop,
+    )
 
     docs = table(spark, sf_dir, "documents")
     # staged drops keep the FULL documents schema (readStream binds
@@ -131,44 +133,32 @@ def pipeline_corpus_build_incremental(spark: SparkSession, sf_dir: str) -> DataF
     # would pay a collect job every batch (measured +3.5 s on the drain)
     eval_df = spark.createDataFrame([(g,) for g in eset], "gram string")
 
-    # state + sink directories (app-scoped, stale siblings pruned)
-    src_dir = _sink_dir(spark, sf_dir, "z76_src")
-    base = os.path.basename(src_dir)
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    dg_dir = os.path.join(_WAREHOUSE, base.replace("z76_src", "z76_digests"))
-    band_dir = os.path.join(_WAREHOUSE, base.replace("z76_src", "z76_bands"))
-    man_dir = os.path.join(_WAREHOUSE, base.replace("z76_src", "z76_manifest"))
-    ckpt_dir = os.path.join(_WAREHOUSE, base.replace("z76_src", "z76_ckpt"))
-    shutil.rmtree(src_dir, ignore_errors=True)
-    os.makedirs(src_dir)
     # z76_sigs is gone (r14): the sig-carrying band rows ARE the
-    # signature state since r13, so the standalone signature append was
-    # one dead parquet write job per micro-batch.  Prune entry retained
-    # for dirs left by older sessions.
-    for stem, d in (
-        ("z76_digests", dg_dir),
-        ("z76_bands", band_dir),
-        ("z76_sigs", os.path.join(_WAREHOUSE, base.replace("z76_src", "z76_sigs"))),
-        ("z76_manifest", man_dir),
-        ("z76_ckpt", ckpt_dir),
-    ):
-        prune_stale_siblings(_WAREHOUSE, f"{stem}_{tag}_", os.path.basename(d))
-        shutil.rmtree(d, ignore_errors=True)
+    # signature state since r13.  The stem stays so dirs from older
+    # sessions still get pruned.
+    src_dir, dg_dir, band_dir, _, man_dir, ckpt_dir = fresh_scratch_dirs(
+        spark,
+        sf_dir,
+        "z76_src",
+        "z76_digests",
+        "z76_bands",
+        "z76_sigs",
+        "z76_manifest",
+        "z76_ckpt",
+    )
+    os.makedirs(src_dir)
 
     # stage two doc_id-ordered drops whose INTERIOR boundary is a
     # PACK_SHARD multiple: every pack shard then lies wholly inside one
-    # drop (bounds from the ID RANGE, sparse/offset-id safe, the Z68
-    # staging doctrine).  TWO drops, not four (r12 verdict item 1): the
+    # drop.  TWO drops, not four (r12 verdict item 1): the
     # incremental semantics need >= 2 (state exists when the second drop
     # probes it) and every extra drop re-pays the per-batch fixed cost —
     # state re-list + union reads, five write jobs, micro-batch
     # scheduling — without proving anything four did not; the
     # batching-independence argument is count-free
-    mm = pool.agg(F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi")).first()
-    lo, hi = mm.lo, mm.hi + 1
-    span = hi - lo
-    raw = [lo + span // 2]
-    interior = sorted({(b // PACK_SHARD) * PACK_SHARD for b in raw})
+    raw = id_range_bounds(pool, "doc_id", 2)
+    lo, hi = raw[0], raw[-1]
+    interior = sorted({(b // PACK_SHARD) * PACK_SHARD for b in raw[1:-1]})
     bounds = [lo] + [b for b in interior if lo < b < hi] + [hi]
     t0 = time.time() - 3600
     staged = 0
@@ -184,12 +174,7 @@ def pipeline_corpus_build_incremental(spark: SparkSession, sf_dir: str) -> DataF
             "too small to exercise the incremental chain"
         )
 
-    batches: list[int] = []
-
     def refresh(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        batches.append(batch_id)
         ss = batch.sparkSession
         batch = fan_out(batch)  # a staged drop scans as ONE partition (r13)
 
@@ -287,23 +272,7 @@ def pipeline_corpus_build_incremental(spark: SparkSession, sf_dir: str) -> DataF
         manifest.write.mode("append").parquet(man_dir)
 
     with narrow_shuffle(spark, 8):
-        q = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-            .writeStream.foreachBatch(refresh)
-            .option("checkpointLocation", ckpt_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            if not q.awaitTermination(300):
-                raise RuntimeError(
-                    "pipeline_corpus_build_incremental: availableNow drain "
-                    "did not finish within 300s"
-                )
-        finally:
-            q.stop()
+        batches = drain_file_drops(spark, docs.schema, src_dir, ckpt_dir, refresh)
     if len(batches) < 2:
         raise RuntimeError(
             f"pipeline_corpus_build_incremental drained in {len(batches)} "

@@ -17,9 +17,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from debias_spark.registry import register
-from debias_spark.warehouse import prune_stale_siblings, warehouse_root
-
-_WAREHOUSE = os.path.join(warehouse_root(), "io_roundtrip")
+from debias_spark.streaming import drain_available_now, narrow_shuffle, stream_events
+from debias_spark.warehouse import fresh_scratch_dirs
 
 
 @register(
@@ -59,22 +58,7 @@ def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: state is keyed by event_type (bounded cardinality), the
     merge is a broadcast-sized full-outer join per batch, and each batch
     shuffles only its own partial aggregate — history is never re-read."""
-    from debias_spark.streaming import stream_events
-
-    # per-session dirs (same concurrency discipline as io_roundtrip._sink_dir):
-    # concurrent runs of this key at the same sf must not share state
-    tag = (os.path.basename(sf_dir.rstrip("/")) or "sf") + "_" + spark.sparkContext.applicationId
-    state_dir = os.path.join(_WAREHOUSE, f"fb_state_{tag}")
-    ckpt_dir = os.path.join(_WAREHOUSE, f"fb_ckpt_{tag}")
-    # prune prior sessions' state/ckpt dirs — per-appId names never
-    # overwrite in place, so without this the warehouse grows unbounded
-    prune_stale_siblings(_WAREHOUSE, "fb_state_", f"fb_state_{tag}")
-    prune_stale_siblings(_WAREHOUSE, "fb_ckpt_", f"fb_ckpt_{tag}")
-    # a stale checkpoint marks the input already-processed and the drain
-    # would no-op against the freshly-cleared state: clear BOTH together
-    shutil.rmtree(state_dir, ignore_errors=True)
-    shutil.rmtree(ckpt_dir, ignore_errors=True)
-
+    state_dir, ckpt_dir = fresh_scratch_dirs(spark, sf_dir, "fb_state", "fb_ckpt")
     stream = stream_events(spark, sf_dir)
 
     def merge_batch(batch: DataFrame, batch_id: int) -> None:
@@ -128,19 +112,16 @@ def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         os.rename(tmp, state_dir)
         shutil.rmtree(old, ignore_errors=True)
 
-    # narrow drain (r14, the shared doctrine — see streaming.narrow_shuffle):
-    # the per-batch partial aggregate and state-merge join move a handful
-    # of event_type keys; 32-task batch plans were pure scheduling overhead
-    from debias_spark.streaming import narrow_shuffle
-
+    # narrow drain (r14): the per-batch partial aggregate and state-merge
+    # join move a handful of event_type keys; 32-task batch plans were
+    # pure scheduling overhead
     with narrow_shuffle(spark, 8):
-        q = (
-            stream.writeStream.foreachBatch(merge_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt_dir)
-            .start()
+        drain_available_now(
+            stream.writeStream.foreachBatch(merge_batch).option(
+                "checkpointLocation", ckpt_dir
+            ),
+            "stream_foreachbatch_upsert",
         )
-        q.awaitTermination()
     shutil.rmtree(ckpt_dir, ignore_errors=True)
     return spark.read.parquet(state_dir).select(
         "event_type", "n_events", "n_users_lb", "value_cents"

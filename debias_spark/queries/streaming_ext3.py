@@ -15,17 +15,14 @@ batch-only; Structured Streaming extension per SURVEY §2.H14-H16 rationale.
 
 from __future__ import annotations
 
-import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from debias_spark.streaming import narrow_shuffle
+from debias_spark.streaming import drain_available_now, narrow_shuffle
 from debias_spark.registry import register
-from debias_spark.warehouse import prune_stale_siblings, warehouse_root
-
-_WAREHOUSE = os.path.join(warehouse_root(), "io_roundtrip")
+from debias_spark.warehouse import fresh_scratch_dirs
 
 
 @register(
@@ -89,15 +86,7 @@ def stream_stream_join_attrib(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("value") * 100).cast("long").alias("value_cents"),
     )
 
-    tag = (os.path.basename(sf_dir.rstrip("/")) or "sf") + "_" + spark.sparkContext.applicationId
-    out_dir = os.path.join(_WAREHOUSE, f"ssj_pairs_{tag}")
-    ckpt_dir = os.path.join(_WAREHOUSE, f"ssj_ckpt_{tag}")
-    shutil.rmtree(out_dir, ignore_errors=True)
-    shutil.rmtree(ckpt_dir, ignore_errors=True)
-    # prune prior sessions' dirs — per-appId names never overwrite in
-    # place, so without this the warehouse grows unbounded across runs
-    prune_stale_siblings(_WAREHOUSE, "ssj_pairs_", f"ssj_pairs_{tag}")
-    prune_stale_siblings(_WAREHOUSE, "ssj_ckpt_", f"ssj_ckpt_{tag}")
+    out_dir, ckpt_dir = fresh_scratch_dirs(spark, sf_dir, "ssj_pairs", "ssj_ckpt")
 
     def capture(batch: DataFrame, batch_id: int) -> None:
         # availableNow runs a trailing empty micro-batch to commit the final
@@ -115,19 +104,18 @@ def stream_stream_join_attrib(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # state-store instances are one per shuffle partition PER JOIN SIDE;
     # this drain-and-stop snapshot dials partitions down for the run (the
-    # run_available_now discipline, incremental.py:114) — most of the
-    # wall-clock at small data is state-store setup (measured 7.9s at 32
-    # partitions vs 2.5s at 4; 2 is no better — the residual is engine
-    # fixed cost: batch scheduling, checkpoint fsyncs, capture IO); a
-    # long-lived production stream keeps the session default
+    # run_available_now discipline) — most of the wall-clock at small
+    # data is state-store setup (measured 7.9s at 32 partitions vs 2.5s
+    # at 4; 2 is no better — the residual is engine fixed cost: batch
+    # scheduling, checkpoint fsyncs, capture IO); a long-lived
+    # production stream keeps the session default
     with narrow_shuffle(spark, 4):
-        q = (
-            joined.writeStream.foreachBatch(capture)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt_dir)
-            .start()
+        drain_available_now(
+            joined.writeStream.foreachBatch(capture).option(
+                "checkpointLocation", ckpt_dir
+            ),
+            "stream_stream_join_attrib",
         )
-        q.awaitTermination()
     shutil.rmtree(ckpt_dir, ignore_errors=True)
     return spark.read.parquet(out_dir).select(
         "user_id", "purchase_time", "click_time", "value_cents"

@@ -17,17 +17,12 @@ custom-stateful contract; this key covers state INSPECTION.
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from debias_spark.streaming import narrow_shuffle
+from debias_spark.streaming import drain_available_now, narrow_shuffle, stream_events
 from debias_spark.registry import register
-from debias_spark.warehouse import prune_stale_siblings, warehouse_root
-
-_WAREHOUSE = os.path.join(warehouse_root(), "io_roundtrip")
+from debias_spark.warehouse import fresh_scratch_dirs
 
 
 @register(
@@ -56,19 +51,7 @@ def stream_state_store_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
     statestore reader plans one task per state partition reading that
     partition's files — the same parallelism the stream itself used,
     no shuffle until the final tiny sort."""
-    from debias_spark.streaming.incremental import stream_events
-
-    tag = (
-        (os.path.basename(sf_dir.rstrip("/")) or "sf")
-        + "_"
-        + spark.sparkContext.applicationId
-    )
-    ckpt = os.path.join(_WAREHOUSE, f"z43_ckpt_{tag}")
-    prune_stale_siblings(_WAREHOUSE, "z43_ckpt_", f"z43_ckpt_{tag}")
-    # a stale checkpoint would mark the input already-processed and leave
-    # old state: always start fresh so the state reflects exactly this run
-    shutil.rmtree(ckpt, ignore_errors=True)
-
+    (ckpt,) = fresh_scratch_dirs(spark, sf_dir, "z43_ckpt")
     counts = (
         stream_events(spark, sf_dir)
         .groupBy("event_type")
@@ -82,14 +65,12 @@ def stream_state_store_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the only material r12 floor regression on this key was drain-side
     # fixed cost; values are partition-count independent)
     with narrow_shuffle(spark, 8):
-        q = (
+        drain_available_now(
             counts.writeStream.outputMode("update")
             .format("noop")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
+            .option("checkpointLocation", ckpt),
+            "stream_state_store_reader",
         )
-        q.awaitTermination()
 
     state = spark.read.format("statestore").load(ckpt)
     return (

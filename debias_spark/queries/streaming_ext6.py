@@ -9,30 +9,17 @@ is batch-only; Structured Streaming extension per SURVEY §2.H14-H16.
 
 from __future__ import annotations
 
-import glob
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from debias_spark.catalog import table
 from debias_spark.registry import register
-from debias_spark.warehouse import prune_stale_siblings, warehouse_root
-
-_WAREHOUSE = os.path.join(warehouse_root(), "io_roundtrip")
+from debias_spark.streaming import run_available_now
+from debias_spark.warehouse import fresh_scratch_dirs, stage_single_file_drop
 
 _T0 = "2024-06-01 00:00:00"  # stream epoch; windows are 1h from here
-
-
-def _write_single_file(df: DataFrame, tmp_dir: str, dest: str, mtime: int) -> None:
-    """Write df as ONE parquet file at dest with a pinned mtime (the file
-    source takes oldest files first, which sequences the batches)."""
-    df.coalesce(1).write.mode("overwrite").parquet(tmp_dir)
-    part = glob.glob(os.path.join(tmp_dir, "part-*.parquet"))[0]
-    shutil.move(part, dest)
-    shutil.rmtree(tmp_dir, ignore_errors=True)
-    os.utime(dest, (mtime, mtime))
 
 
 @register(
@@ -105,22 +92,14 @@ def stream_watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(10800) + sp % 3000,
     )
 
-    tag = (
-        (os.path.basename(sf_dir.rstrip("/")) or "sf")
-        + "_"
-        + spark.sparkContext.applicationId
-    )
-    root = os.path.join(_WAREHOUSE, f"z54_stream_{tag}")
-    prune_stale_siblings(_WAREHOUSE, "z54_stream_", f"z54_stream_{tag}")
-    shutil.rmtree(root, ignore_errors=True)
-    os.makedirs(root, exist_ok=True)
-    _write_single_file(a, root + "_tmp", os.path.join(root, "f1_a.parquet"), 1_000_000)
-    _write_single_file(a2, root + "_tmp", os.path.join(root, "f2_a2.parquet"), 2_000_000)
-    _write_single_file(
-        b_late.unionByName(b_ontime),
-        root + "_tmp",
-        os.path.join(root, "f3_b.parquet"),
-        3_000_000,
+    # the file source takes oldest files first: pinned mtimes sequence
+    # the batches
+    (root,) = fresh_scratch_dirs(spark, sf_dir, "z54_stream")
+    os.makedirs(root)
+    stage_single_file_drop(a, root, "f1_a.parquet", mtime=1_000_000)
+    stage_single_file_drop(a2, root, "f2_a2.parquet", mtime=2_000_000)
+    stage_single_file_drop(
+        b_late.unionByName(b_ontime), root, "f3_b.parquet", mtime=3_000_000
     )
 
     stream = (
@@ -137,8 +116,6 @@ def stream_watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n",
         )
     )
-    from debias_spark.streaming.incremental import run_available_now
-
     return run_available_now(agg, spark, output_mode="append").orderBy(
         "window_start"
     )

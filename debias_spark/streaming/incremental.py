@@ -12,15 +12,30 @@ Event-time columns here are TimestampType (not NTZ): watermarks and
 session windows operate on event-time semantics, and the session timezone
 is pinned to UTC in session.py so wall-clock values agree with the NTZ
 batch tables.
+
+The drain rule, stated once here: every availableNow query runs through
+``drain_available_now``, which waits at most ``_DRAIN_TIMEOUT_S`` and
+fails LOUDLY on timeout (stopping a half-drained stream would otherwise
+surface as a confusing value mismatch), and always stops the query, so
+a failed drain never leaks a live stream into the shared session.
+``drain_file_drops`` is the landing-zone shape on top of it: one staged
+file per micro-batch, availableNow's trailing empty commit batch
+skipped, the non-empty batch ids returned for the caller's own batch
+count contract.
 """
 
 from __future__ import annotations
 
 import uuid
+from collections.abc import Callable
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
+from pyspark.sql.types import StructType
+
+_DRAIN_TIMEOUT_S = 300
 
 
 @contextmanager
@@ -48,6 +63,50 @@ def narrow_shuffle(spark: SparkSession, n: int = 8):
             spark.conf.unset(key)
         else:
             spark.conf.set(key, prev)
+
+
+def drain_available_now(writer: DataStreamWriter, what: str) -> None:
+    """Start ``writer`` with the availableNow trigger and wait for it to
+    drain; raises RuntimeError naming ``what`` if it has not finished
+    within ``_DRAIN_TIMEOUT_S``.  The query is stopped either way."""
+    q = writer.trigger(availableNow=True).start()
+    try:
+        if not q.awaitTermination(_DRAIN_TIMEOUT_S):
+            raise RuntimeError(
+                f"{what}: availableNow drain did not finish within "
+                f"{_DRAIN_TIMEOUT_S}s"
+            )
+    finally:
+        q.stop()
+
+
+def drain_file_drops(
+    spark: SparkSession,
+    schema: StructType,
+    src_dir: str,
+    ckpt_dir: str,
+    on_batch: Callable[[DataFrame, int], None],
+) -> list[int]:
+    """Drain the parquet drops staged in ``src_dir`` one file per
+    micro-batch, handing each non-empty batch to ``on_batch``; returns
+    the ids of those batches, in order."""
+    done: list[int] = []
+
+    def each(batch: DataFrame, batch_id: int) -> None:
+        if batch.isEmpty():  # availableNow's trailing empty commit batch
+            return
+        on_batch(batch, batch_id)
+        done.append(batch_id)
+
+    drain_available_now(
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src_dir)
+        .writeStream.foreachBatch(each)
+        .option("checkpointLocation", ckpt_dir),
+        f"file-drop drain of {src_dir}",
+    )
+    return done
 
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -124,13 +183,12 @@ def incremental_parquet_sink(
             out_dir
         )
 
-    q = (
-        stream_df.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    drain_available_now(
+        stream_df.writeStream.foreachBatch(write_batch).option(
+            "checkpointLocation", checkpoint_dir
+        ),
+        "incremental_parquet_sink",
     )
-    q.awaitTermination()
 
 
 def run_available_now(
@@ -153,14 +211,12 @@ def run_available_now(
     stream keeps the session default and an explicit checkpointLocation."""
     name = f"snap_{uuid.uuid4().hex[:12]}"
     with narrow_shuffle(spark, 4):
-        q = (
+        drain_available_now(
             stream_df.writeStream.format("memory")
             .queryName(name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
+            .outputMode(output_mode),
+            "run_available_now",
         )
-        q.awaitTermination()
     return spark.table(name)
 
 

@@ -1,17 +1,25 @@
 """Warehouse hygiene for per-session sink/state directories.
 
-Transient sink and streaming-state dirs are suffixed with the Spark
-applicationId so concurrent runs (bench alongside a correctness sweep)
-never share a write/read-back path.  The cost of that isolation is that
-nothing overwrites in place anymore — without a prune, spark-warehouse/
-grows without bound across runs.
+The scratch-dir rule, stated once here: a key's transient sink, state
+and checkpoint dirs are ``{stem}_{sf}_{appId}`` under
+``warehouse_root()/io_roundtrip`` (``scratch_dir``).  The Spark
+applicationId suffix means concurrent runs of one key at one sf (bench
+alongside a correctness sweep) never share a write/read-back path.  The
+cost of that isolation is that nothing overwrites in place anymore, so
+every ``scratch_dir`` call prunes the stem's stale siblings at the same
+sf (``prune_stale_siblings``); without the prune, spark-warehouse/ grows
+without bound across runs.  Dirs that must start empty (state and
+checkpoint dirs: a stale checkpoint marks the input already processed)
+come from ``fresh_scratch_dirs``.
 
-``prune_stale_siblings`` is the shared best-effort cleaner: before a
-session writes ``{prefix}{appId}``, it removes sibling dirs with the same
-prefix but a DIFFERENT appId that have been idle for ``max_age_s``.  The
-age gate keeps the prune from racing a live concurrent session, whose dir
-is a seconds-old transient intermediate (written then read back within a
-single key invocation).
+``prune_stale_siblings`` is best effort: before a session writes
+``{prefix}{appId}``, it removes sibling dirs with the same prefix but a
+DIFFERENT appId that have been idle for ``max_age_s``.  The age gate
+keeps the prune from racing a live concurrent session, whose dir is a
+seconds-old transient intermediate (written then read back within a
+single key invocation).  The prefix is the known ``{stem}_{sf}_``, never
+re-derived by splitting a dir name: YARN appIds
+(``application_<ts>_<n>``) contain underscores.
 """
 
 from __future__ import annotations
@@ -37,6 +45,42 @@ def warehouse_root() -> str:
         os.makedirs(env, exist_ok=True)
         return env
     return os.path.join(_REPO_ROOT, "spark-warehouse")
+
+
+def scratch_root() -> str:
+    """Parent of every per-session scratch dir (``scratch_dir``)."""
+    return os.path.join(warehouse_root(), "io_roundtrip")
+
+
+def scratch_dir(spark, sf_dir: str, stem: str) -> str:
+    """``{stem}_{sf}_{appId}`` under ``scratch_root()``, after pruning
+    the stem's stale siblings at the same sf.  Does not clear the dir."""
+    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
+    app = spark.sparkContext.applicationId
+    root = scratch_root()
+    prune_stale_siblings(root, f"{stem}_{tag}_", f"{stem}_{tag}_{app}")
+    return os.path.join(root, f"{stem}_{tag}_{app}")
+
+
+def fresh_scratch_dirs(spark, sf_dir: str, *stems: str) -> tuple[str, ...]:
+    """``scratch_dir`` for each stem, each removed so it starts empty."""
+    dirs = tuple(scratch_dir(spark, sf_dir, stem) for stem in stems)
+    for d in dirs:
+        shutil.rmtree(d, ignore_errors=True)
+    return dirs
+
+
+def id_range_bounds(df, col: str, n: int) -> list[int]:
+    """Bounds slicing ``df`` into ``n`` staged drops by the ID RANGE of
+    ``col``, not the row count: a sparse or offset id space would
+    otherwise leave slices empty or drop ids past count+1.  Drop ``i``
+    is ``bounds[i] <= col < bounds[i + 1]``; equal bounds collapse, so a
+    span shorter than ``n`` yields fewer drops.  One min/max job."""
+    from pyspark.sql import functions as F
+
+    mm = df.agg(F.min(col).alias("lo"), F.max(col).alias("hi")).first()
+    lo, hi = mm.lo, mm.hi + 1
+    return sorted({lo + ((hi - lo) * i) // n for i in range(n + 1)})
 
 
 def prune_stale_siblings(

@@ -159,6 +159,48 @@ def test_floor_eps_rule_lives_in_one_module():
     assert not hits, "floor-eps rule re-copied outside numeric.py:\n" + "\n".join(hits)
 
 
+def test_scratch_dir_and_drain_rules_live_in_one_module_each():
+    """The per-session scratch-dir rule is spelled once, in
+    debias_spark/warehouse.py, and the availableNow drain once, in
+    debias_spark/streaming/incremental.py (``drain_available_now``).  A
+    ``trigger(availableNow=True)`` anywhere else is a drain without the
+    timeout and always-stop; a ``_WAREHOUSE`` / ``_sink_dir`` /
+    ``_write_single_file`` or an ``.applicationId`` read re-derives a
+    scratch dir by hand.  The four managed-table sites name catalog
+    tables, not dirs, and keep their own appId read."""
+    import pathlib
+    import re
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "debias_spark"
+    drain = re.compile(r"availableNow\s*=\s*True")
+    private = re.compile(r"\b(_WAREHOUSE|_sink_dir|_write_single_file)\b")
+    app_id = re.compile(r"\.applicationId\b")
+    table_name_sites = {
+        "queries/io_roundtrip.py",
+        "queries/io_roundtrip3.py",
+        "queries/relational_ext34.py",
+        "queries/relational_ext41.py",
+    }
+    hits, drains, app_reads = [], [], {}
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        for i, line in enumerate(path.read_text().splitlines(), 1):
+            where = f"{rel}:{i}: {line.strip()}"
+            if drain.search(line):
+                drains.append(where)
+                if rel != "streaming/incremental.py":
+                    hits.append(where)
+            if private.search(line):
+                hits.append(where)
+            if app_id.search(line):
+                app_reads[rel] = app_reads.get(rel, 0) + 1
+                if rel not in table_name_sites | {"warehouse.py"}:
+                    hits.append(where)
+    assert not hits, "scratch-dir or drain rule re-copied:\n" + "\n".join(hits)
+    assert len(drains) == 1, drains  # drain_available_now itself
+    assert all(app_reads.get(rel) == 1 for rel in table_name_sites), app_reads
+
+
 def test_no_oracle_rounds_a_double_mean():
     """Regression guard for the rounding-tie class (round-5 Y33): Spark's
     round() HALF_UPs the shortest-decimal repr while DuckDB rounds the

@@ -145,16 +145,15 @@ def test_incremental_corpus_build_equals_batch(spark, specs):
 
 
 def test_incremental_corpus_build_state_layout(spark, specs):
-    from debias_spark.queries.io_roundtrip import _WAREHOUSE
+    from debias_spark.warehouse import scratch_dir
 
     out = specs["pipeline_corpus_build_incremental"].fn(spark, SF).collect()
     assert out, "empty manifest"
     # one manifest row per pack shard: shard-aligned drops never split one
     shards = [r.shard for r in out]
     assert len(shards) == len(set(shards))
-    tag = os.path.basename(SF) + "_" + spark.sparkContext.applicationId
-    band_dir = os.path.join(_WAREHOUSE, f"z76_bands_{tag}")
-    dg_dir = os.path.join(_WAREHOUSE, f"z76_digests_{tag}")
+    band_dir = scratch_dir(spark, SF, "z76_bands")
+    dg_dir = scratch_dir(spark, SF, "z76_digests")
     # band state is hive-partitioned by band_id (probe reads prune)
     bands = {os.path.basename(p) for p in glob.glob(band_dir + "/band_id=*")}
     assert bands == {f"band_id={b}" for b in range(4)}
@@ -166,7 +165,7 @@ def test_incremental_corpus_build_state_layout(spark, specs):
     # write, removed in r14
     band_rows = spark.read.parquet(band_dir)
     assert "h0" in band_rows.columns and band_rows.count() > 0
-    assert not os.path.isdir(os.path.join(_WAREHOUSE, f"z76_sigs_{tag}"))
+    assert not os.path.isdir(scratch_dir(spark, SF, "z76_sigs"))
 
 
 def test_incremental_corpus_build_shares_batch_oracle(specs):

@@ -42,10 +42,9 @@ def test_incremental_ivfpq_state_is_inverted_lists(spark, specs, incr_rows):
     """The persisted state is hive-partitioned by cell (the inverted-list
     layout) and accumulated across >= 2 drops within at least one cell —
     proof the index was appended to, not rewritten."""
-    from debias_spark.queries.io_roundtrip import _WAREHOUSE
+    from debias_spark.warehouse import scratch_dir
 
-    app = spark.sparkContext.applicationId
-    dirs = glob.glob(os.path.join(_WAREHOUSE, f"y75_index_sf0.001_{app}"))
+    dirs = glob.glob(scratch_dir(spark, SF, "y75_index"))
     assert len(dirs) == 1, dirs
     cells = [d for d in os.listdir(dirs[0]) if d.startswith("cell=")]
     assert cells, os.listdir(dirs[0])

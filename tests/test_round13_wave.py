@@ -44,13 +44,11 @@ def test_compacted_state_layout_and_deletion(spark, specs, compacted_rows):
     """The compacted dir (left on disk by the key) must hold at most one
     parquet file per cell partition and zero tombstoned vec_ids — the
     physical claims behind 'the deletion vector can be retired'."""
-    from debias_spark.queries.io_roundtrip import _WAREHOUSE
     from debias_spark.queries.llm_ops37 import _PQ_CODES
     from debias_spark.queries.llm_ops38 import _TOMB_MOD, _TOMB_REM
+    from debias_spark.warehouse import scratch_dir
 
-    app = spark.sparkContext.applicationId
-    tag = os.path.basename(SF.rstrip("/"))
-    compact_dir = os.path.join(_WAREHOUSE, f"y78_compact_{tag}_{app}")
+    compact_dir = scratch_dir(spark, SF, "y78_compact")
     assert os.path.isdir(compact_dir), compact_dir
     cell_dirs = glob.glob(os.path.join(compact_dir, "cell=*"))
     assert cell_dirs
@@ -235,3 +233,23 @@ def test_fan_out_spreads_and_noops(spark):
     assert sorted(map(tuple, fanned.collect())) == sorted(map(tuple, docs.collect()))
     wide = docs.repartition(dp + 3)
     assert fan_out(wide) is wide  # no-op: the same frame, no new exchange
+
+
+def test_fan_out_gate_reads_plan_nodes_not_plan_text(spark):
+    """The shuffle gate walks the analyzed plan's node names: a column
+    aliased `Join` or a literal 'Sorted' is plan TEXT, not a shuffle
+    node, and must not switch the fan-out off; a real join still does."""
+    from debias_spark.catalog import table
+    from debias_spark.operators.skew import fan_out
+
+    docs = table(spark, SF, "documents").select("doc_id", "lang")
+    for frame in (
+        docs.select(F.col("doc_id").alias("Join"), "lang"),
+        docs.withColumn("tag", F.lit("Sorted")),
+    ):
+        fanned = fan_out(frame)
+        assert fanned is not frame
+        plan = fanned._jdf.queryExecution().executedPlan().toString()
+        assert "RoundRobinPartitioning" in plan, plan
+    joined = docs.join(docs.select("doc_id"), "doc_id")
+    assert fan_out(joined) is joined

@@ -300,17 +300,11 @@ def test_udtf_table_arg_one_row_per_lang_tie_break(spark, sf_dir):
 def test_state_store_reader_metadata_names_the_operator(spark, sf_dir):
     """The state-metadata companion format must name the aggregation
     operator whose state the key reads."""
-    import os
-
-    from debias_spark.queries.streaming_ext4 import _WAREHOUSE, state_metadata
+    from debias_spark.queries.streaming_ext4 import state_metadata
+    from debias_spark.warehouse import scratch_dir
 
     SPECS["stream_state_store_reader"].fn(spark, sf_dir).collect()
-    tag = (
-        (os.path.basename(sf_dir.rstrip("/")) or "sf")
-        + "_"
-        + spark.sparkContext.applicationId
-    )
-    ckpt = os.path.join(_WAREHOUSE, f"z43_ckpt_{tag}")
+    ckpt = scratch_dir(spark, sf_dir, "z43_ckpt")
     meta = state_metadata(spark, ckpt).collect()
     assert len(meta) == 1
     assert meta[0].operatorName == "stateStoreSave"
@@ -524,14 +518,10 @@ def test_centroid_drift_matches_python_replay(spark, sf_dir):
 def test_csv_multiline_roundtrip_restores_exact_strings(spark, sf_dir):
     """Byte-for-byte: the set of restored tricky strings equals the set
     of source strings (newline, quote and comma all embedded)."""
-    import os
-
-    from debias_spark.queries.io_roundtrip import _WAREHOUSE
+    from debias_spark.warehouse import scratch_dir
 
     SPECS["source_csv_multiline_quotes"].fn(spark, sf_dir).collect()
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    app = spark.sparkContext.applicationId
-    path = os.path.join(_WAREHOUSE, f"z45_csv_{tag}_{app}")
+    path = scratch_dir(spark, sf_dir, "z45_csv")
     back = (
         spark.read.schema("doc_id long, lang string, tricky string")
         .option("header", True)
@@ -606,12 +596,10 @@ def test_python_datasource_sink_manifest_contract(spark, sf_dir):
     import json
     import os
 
-    from debias_spark.queries.io_roundtrip import _WAREHOUSE
+    from debias_spark.warehouse import scratch_dir
 
     rows = SPECS["sink_python_datasource"].fn(spark, sf_dir).collect()
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    app = spark.sparkContext.applicationId
-    path = os.path.join(_WAREHOUSE, f"z46_pyds_{tag}_{app}")
+    path = scratch_dir(spark, sf_dir, "z46_pyds")
     manifest = json.load(open(os.path.join(path, "_MANIFEST.json")))
     assert manifest["total_rows"] == len(rows)
     assert not [f for f in os.listdir(path) if f.endswith(".tmp")]

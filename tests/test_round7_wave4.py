@@ -68,11 +68,11 @@ def test_abc_xyz_partitions_everything(spark, specs):
 def test_codec_sizes_ordered(spark, specs):
     # run the key first so all four sinks exist for THIS session
     specs["sink_compression_codecs"].fn(spark, SF).collect()
-    from debias_spark.queries.io_roundtrip import _sink_dir
+    from debias_spark.warehouse import scratch_dir
 
     sizes = {}
     for codec in ("snappy", "zstd", "gzip", "none"):
-        d = _sink_dir(spark, SF, f"z56_{codec}")
+        d = scratch_dir(spark, SF, f"z56_{codec}")
         sizes[codec] = sum(
             os.path.getsize(p) for p in glob.glob(os.path.join(d, "part-*"))
         )
@@ -82,10 +82,10 @@ def test_codec_sizes_ordered(spark, specs):
 
 
 def test_csv_inference_types(spark, specs):
-    from debias_spark.queries.io_roundtrip import _sink_dir
+    from debias_spark.warehouse import scratch_dir
 
     specs["source_csv_schema_infer"].fn(spark, SF).collect()
-    d = _sink_dir(spark, SF, "z57_csv")
+    d = scratch_dir(spark, SF, "z57_csv")
     rb = (
         spark.read.option("header", "true")
         .option("inferSchema", "true")

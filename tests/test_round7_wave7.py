@@ -55,11 +55,11 @@ def test_cumulative_distinct_identity(spark, specs):
 
 
 def test_wholetext_one_row_per_file(spark, specs):
-    from debias_spark.queries.io_roundtrip import _sink_dir
+    from debias_spark.warehouse import scratch_dir
 
     df = specs["source_wholetext_files"].fn(spark, SF)
     rows = df.collect()
-    out = _sink_dir(spark, SF, "z59_wholetext")
+    out = scratch_dir(spark, SF, "z59_wholetext")
     n_files = len(glob.glob(os.path.join(out, "bucket-*.txt")))
     assert len(rows) == n_files > 0
     # whole-file mode: byte counts include the embedded newlines a
@@ -69,12 +69,12 @@ def test_wholetext_one_row_per_file(spark, specs):
 
 def test_recursive_glob_reads_every_depth(spark, specs):
     from debias_spark.catalog import table
-    from debias_spark.queries.io_roundtrip import _sink_dir
+    from debias_spark.warehouse import scratch_dir
 
     got = specs["source_recursive_dir_glob"].fn(spark, SF).collect()
     total = sum(r.n for r in got)
     assert total == table(spark, SF, "orders").count()
-    out = _sink_dir(spark, SF, "z60_nested")
+    out = scratch_dir(spark, SF, "z60_nested")
     # non-recursive read of the same tree must NOT see the nested files
     with pytest.raises(Exception):
         spark.read.parquet(out).count()
@@ -118,10 +118,10 @@ def test_max_records_per_file_splits(spark, specs):
     import math
 
     from debias_spark.catalog import table
-    from debias_spark.queries.io_roundtrip import _sink_dir
+    from debias_spark.warehouse import scratch_dir
 
     specs["sink_max_records_per_file"].fn(spark, SF).collect()
-    out = _sink_dir(spark, SF, "z64_maxrec")
+    out = scratch_dir(spark, SF, "z64_maxrec")
     files = _glob.glob(out + "/part-*.parquet")
     n_rows = table(spark, SF, "orders").count()
     # one input partition split into ceil(rows/2000) files (== 1 at
@@ -130,7 +130,7 @@ def test_max_records_per_file_splits(spark, specs):
     assert len(files) == math.ceil(n_rows / 2000) >= 1
     # deterministic ceil-split proof, independent of SF: 10 rows at a
     # 3-row cap through ONE partition must land in exactly 4 files
-    tiny_out = _sink_dir(spark, SF, "z64_maxrec_tiny")
+    tiny_out = scratch_dir(spark, SF, "z64_maxrec_tiny")
     (
         spark.range(10)
         .coalesce(1)
@@ -144,10 +144,10 @@ def test_max_records_per_file_splits(spark, specs):
 
 
 def test_multiline_json_rejected_by_default_reader(spark, specs):
-    from debias_spark.queries.io_roundtrip import _sink_dir
+    from debias_spark.warehouse import scratch_dir
 
     specs["source_json_multiline_array"].fn(spark, SF).collect()
-    out = _sink_dir(spark, SF, "z63_mljson")
+    out = scratch_dir(spark, SF, "z63_mljson")
     # the default line-delimited reader sees pretty-printed arrays as
     # corrupt records, not rows — the contract that makes multiLine real
     df = spark.read.json(out)

@@ -46,13 +46,12 @@ def test_split_decon_is_deterministic(spark, specs):
 
 
 def test_incremental_refresh_sink_layout_and_state(spark, specs):
-    from debias_spark.queries.io_roundtrip import _WAREHOUSE
+    from debias_spark.warehouse import scratch_dir
 
     out = specs["pipeline_incremental_refresh"].fn(spark, SF).collect()
     assert out, "empty rollup"
-    tag = os.path.basename(SF) + "_" + spark.sparkContext.applicationId
-    sink = os.path.join(_WAREHOUSE, f"z65_sink_{tag}")
-    state = os.path.join(_WAREHOUSE, f"z65_state_{tag}")
+    sink = scratch_dir(spark, SF, "z65_sink")
+    state = scratch_dir(spark, SF, "z65_state")
     # partitioned sink: one lang=<x> directory per emitted lang row
     langs = {os.path.basename(p).split("=", 1)[1] for p in glob.glob(sink + "/lang=*")}
     assert langs == {r.lang for r in out}
@@ -196,10 +195,10 @@ def test_max_partition_bytes_split_arithmetic(spark, specs):
     import math
     import os
 
-    from debias_spark.queries.io_roundtrip import _sink_dir
+    from debias_spark.warehouse import scratch_dir
 
     base = specs["source_max_partition_bytes_scan"].fn(spark, SF).collect()
-    out = _sink_dir(spark, SF, "z67_mpb")
+    out = scratch_dir(spark, SF, "z67_mpb")
     files = [f for f in os.listdir(out) if f.endswith(".parquet")]
     assert len(files) == 1  # the staged input really is ONE file
     nbytes = os.path.getsize(os.path.join(out, files[0]))

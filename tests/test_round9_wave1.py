@@ -105,13 +105,12 @@ def test_join_autotune_branches_and_plan(spark, specs):
 
 
 def test_incremental_neardup_state_layout(spark, specs):
-    from debias_spark.queries.io_roundtrip import _WAREHOUSE
+    from debias_spark.warehouse import scratch_dir
 
     out = specs["pipeline_incremental_neardup"].fn(spark, SF).collect()
     assert out, "empty rollup"
-    tag = os.path.basename(SF) + "_" + spark.sparkContext.applicationId
-    band_dir = os.path.join(_WAREHOUSE, f"z68_bands_{tag}")
-    pay_dir = os.path.join(_WAREHOUSE, f"z68_payload_{tag}")
+    band_dir = scratch_dir(spark, SF, "z68_bands")
+    pay_dir = scratch_dir(spark, SF, "z68_payload")
     # band state is hive-partitioned by band_id, all 4 bands present
     bands = {os.path.basename(p) for p in glob.glob(band_dir + "/band_id=*")}
     assert bands == {f"band_id={b}" for b in range(4)}
@@ -135,7 +134,7 @@ def test_incremental_neardup_state_layout(spark, specs):
     sig_ids = {r.id for r in sig_ids_df.collect()}
     assert dropped_ids <= sig_ids
     # and the dead standalone signature dir is no longer written
-    assert not os.path.isdir(os.path.join(_WAREHOUSE, f"z68_sigs_{tag}"))
+    assert not os.path.isdir(scratch_dir(spark, SF, "z68_sigs"))
 
 
 def test_incremental_neardup_restores_shuffle_conf(spark, specs):

@@ -47,3 +47,37 @@ def test_drift_sensitive_key(name, spark, drift_dir):
         assert df.count() > 0
     else:
         compare_to_oracle(df, spec.oracle, drift_dir)
+
+
+def test_schema_cache_key_carries_the_nanos_conf(spark, tmp_path):
+    """The schema inferred for a TIMESTAMP(NANOS) column depends on
+    spark.sql.legacy.parquet.nanosAsLong: a long under `true`, and no
+    type at all under `false` (inference raises).  The schema cache keys
+    on the conf, so the `true` entry is never served under `false`, in
+    either call order."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.errors import AnalysisException
+    from pyspark.sql.types import LongType
+
+    from debias_spark import catalog
+
+    path = str(tmp_path / "events.parquet")
+    ts = pa.array([1_700_000_000_000_000_123], pa.timestamp("ns"))
+    pq.write_table(pa.table({"ts": ts}), path, store_schema=False)
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    prev = spark.conf.get(key)
+    catalog._SCHEMA_CACHE.clear()
+    try:
+        spark.conf.set(key, "false")
+        with pytest.raises(AnalysisException, match="TIMESTAMP\\(NANOS"):
+            catalog._cached_schema(spark, path)
+        spark.conf.set(key, "true")
+        on = catalog._cached_schema(spark, path)["ts"].dataType
+        spark.conf.set(key, "false")
+        with pytest.raises(AnalysisException, match="TIMESTAMP\\(NANOS"):
+            catalog._cached_schema(spark, path)
+    finally:
+        spark.conf.set(key, prev)
+        catalog._SCHEMA_CACHE.clear()
+    assert isinstance(on, LongType), on

@@ -4,6 +4,7 @@ the availableNow trigger."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from debias_spark.catalog import table
@@ -191,3 +192,130 @@ def test_stream_stream_join_rows_verify_against_batch(spark, sf_dir):
         p = datetime.strptime(r.purchase_time, fmt)
         c = datetime.strptime(r.click_time, fmt)
         assert p - timedelta(hours=1) <= c <= p, (r.user_id, r.click_time, r.purchase_time)
+
+
+def test_drain_times_out_loudly_and_stops(spark, sf_dir, tmp_path, monkeypatch):
+    """A drain that outlives the drain timeout raises instead of hanging,
+    and the query is stopped either way: no live stream leaks into the
+    shared session."""
+    import time
+
+    from debias_spark.streaming import incremental
+
+    monkeypatch.setattr(incremental, "_DRAIN_TIMEOUT_S", 1)
+
+    def slow(batch, batch_id):
+        time.sleep(4)
+
+    writer = (
+        stream_events(spark, sf_dir)
+        .writeStream.foreachBatch(slow)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+    )
+    with pytest.raises(RuntimeError, match="slow drain: .* within 1s"):
+        incremental.drain_available_now(writer, "slow drain")
+    assert spark.streams.active == []
+
+
+def test_run_available_now_is_bounded_by_the_drain_timeout(spark, sf_dir, monkeypatch):
+    """run_available_now (the memory-sink drain most stream_* keys use)
+    goes through the same timeout and always-stop."""
+    import time
+
+    from debias_spark.streaming import incremental
+
+    monkeypatch.setattr(incremental, "_DRAIN_TIMEOUT_S", 1)
+
+    def slow(frames):
+        time.sleep(4)
+        yield from frames
+
+    stream = (
+        stream_events(spark, sf_dir)
+        .select("event_id")
+        .mapInPandas(slow, "event_id long")
+    )
+    with pytest.raises(RuntimeError, match="run_available_now: .* within 1s"):
+        run_available_now(stream, spark)
+    assert spark.streams.active == []
+
+
+@pytest.mark.parametrize(
+    "module, key",
+    [
+        ("pipeline_e2e", "pipeline_incremental_refresh"),
+        ("pipeline_e2e2", "pipeline_incremental_neardup"),
+        ("pipeline_e2e6", "pipeline_corpus_build_incremental"),
+        ("llm_ops38", "similarity_ann_ivfpq_incremental"),
+    ],
+)
+def test_file_drop_keys_require_two_batches(spark, sf_dir, monkeypatch, module, key):
+    """The ">= 2 non-empty batches" contract of the file-drop pipelines
+    reads what drain_file_drops returns: a drain that reports a single
+    batch fails the key instead of passing on a degenerate drain."""
+    import importlib
+
+    from debias_spark.registry import load_all_queries
+
+    mod = importlib.import_module(f"debias_spark.queries.{module}")
+    monkeypatch.setattr(mod, "drain_file_drops", lambda *args: [0])
+    with pytest.raises(RuntimeError, match="drained in 1 micro-batch"):
+        load_all_queries()[key].fn(spark, sf_dir)
+
+
+def test_checkpoint_resume_requires_exactly_one_resume_batch(spark, sf_dir, monkeypatch):
+    """Z71's second drain must process exactly the late drop: a resume
+    drain that reports no batch fails the key."""
+    from debias_spark.queries import pipeline_e2e2
+    from debias_spark.registry import load_all_queries
+
+    drains = iter([[0, 1], []])
+    monkeypatch.setattr(pipeline_e2e2, "drain_file_drops", lambda *args: next(drains))
+    with pytest.raises(RuntimeError, match="ran 0 non-empty batches, expected 1"):
+        load_all_queries()["pipeline_checkpoint_resume"].fn(spark, sf_dir)
+
+
+def _two_batch_events(tmp_path):
+    """A stream_events stand-in whose source is two staged drops (the
+    earliest event, then the rest), drained one file per micro-batch:
+    the second batch carries rows, and none of them is late."""
+    from debias_spark.warehouse import stage_single_file_drop
+
+    def two_batches(spark, sf_dir):
+        ev = table(spark, sf_dir, "events").withColumn("ts", F.col("ts").cast("timestamp"))
+        first = ev.orderBy("ts", "event_id").limit(1)
+        rest = ev.join(first.select("event_id"), "event_id", "left_anti")
+        tmp_path.mkdir()
+        src = str(tmp_path)
+        stage_single_file_drop(first, src, "a.parquet", mtime=1_000_000)
+        stage_single_file_drop(rest, src, "b.parquet", mtime=2_000_000)
+        return (
+            spark.readStream.schema(ev.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+        )
+
+    return two_batches
+
+
+def test_single_batch_stream_keys_reject_a_second_batch(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """stream_foreachbatch_upsert and stream_stream_join_attrib are
+    oracle-exact only for a single-batch drain; fed a two-file source
+    they fail loudly, and the drain leaves no live stream behind."""
+    import debias_spark.streaming
+    from debias_spark.queries import streaming_ext2
+    from debias_spark.registry import load_all_queries
+
+    specs = load_all_queries()
+    monkeypatch.setattr(streaming_ext2, "stream_events", _two_batch_events(tmp_path / "a"))
+    with pytest.raises(Exception, match="stream_foreachbatch_upsert drained in >1"):
+        specs["stream_foreachbatch_upsert"].fn(spark, sf_dir)
+    assert spark.streams.active == []
+    monkeypatch.setattr(
+        debias_spark.streaming, "stream_events", _two_batch_events(tmp_path / "b")
+    )
+    with pytest.raises(Exception, match="stream_stream_join_attrib drained in >1"):
+        specs["stream_stream_join_attrib"].fn(spark, sf_dir)
+    assert spark.streams.active == []
