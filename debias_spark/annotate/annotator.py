@@ -187,27 +187,33 @@ def analytics_frame(df: DataFrame, record_col: str = "literal") -> DataFrame:
     per tag — UNION ALL, *not* explode_outer: an N-tag record yields N+1 rows
     (analytics/parser.py:29-46).  The record-level row is load-bearing: it
     guarantees 0-tag records appear in the record-distribution chart.
+
+    Every input column other than ``tags`` is kept in place, with
+    ``record_col`` renamed to ``record_literal``; ``issue_literal`` and
+    ``tag_count_per_record`` follow them.
     """
+    keep = [
+        F.col(c).alias("record_literal") if c == record_col else F.col(c)
+        for c in df.columns
+        if c != "tags"
+    ]
     base = df.select(
-        F.col("language"),
-        F.col(record_col).alias("record_literal"),
+        *keep,
         F.coalesce(F.size("tags"), F.lit(0)).alias("tag_count_per_record"),
         F.col("tags"),
     )
+    cols = [c for c in base.columns if c not in ("tag_count_per_record", "tags")]
     record_rows = base.select(
-        "language",
-        "record_literal",
+        *cols,
         F.lit(None).cast("string").alias("issue_literal"),
         "tag_count_per_record",
     )
     tag_rows = base.select(
-        "language",
-        "record_literal",
+        *cols,
         F.explode("tags").alias("tag"),
         "tag_count_per_record",
     ).select(
-        "language",
-        "record_literal",
+        *cols,
         F.col("tag.literal").alias("issue_literal"),
         "tag_count_per_record",
     )

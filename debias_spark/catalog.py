@@ -14,6 +14,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from debias_spark.session import ensure_runtime_confs
+
 TABLES = [
     "region",
     "nation",
@@ -29,35 +31,6 @@ TABLES = [
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 SMOKE_SF_DIR = "/root/testdata/sf0.001"
-
-
-# Confs the engine depends on that are safely settable at RUNTIME — applied
-# on first catalog access so the engine behaves correctly even under a
-# SparkSession we didn't build (the driver harness constructs its own).
-_RUNTIME_CONFS = {
-    "spark.sql.legacy.parquet.nanosAsLong": "true",  # events.ts is TIMESTAMP(NANOS)
-    "spark.sql.session.timeZone": "UTC",  # oracle comparison contract
-    "spark.sql.constraintPropagation.enabled": "false",  # see session.py
-    "spark.sql.execution.arrow.pyspark.enabled": "true",
-    "spark.sql.adaptive.enabled": "true",
-    "spark.sql.adaptive.coalescePartitions.enabled": "true",
-    # The driver harness builds its own session (Spark default: 200 shuffle
-    # partitions).  At correctness-gate scale (sf0.01) 200-task shuffles are
-    # pure scheduling overhead across ~116 queries; 32 matches local[32].
-    # On a real cluster this would come from the session, not here.
-    "spark.sql.shuffle.partitions": "32",
-    "spark.sql.optimizer.nestedSchemaPruning.enabled": "true",
-    "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
-}
-
-
-def ensure_runtime_confs(spark: SparkSession) -> None:
-    for k, v in _RUNTIME_CONFS.items():
-        try:
-            if spark.conf.get(k, None) != v:
-                spark.conf.set(k, v)
-        except Exception:
-            pass  # non-settable in this deployment: keep going
 
 
 # Metadata-only schema cache (r14, guide §6): every spark.read.parquet()

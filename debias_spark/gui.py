@@ -5,7 +5,8 @@ config.ini, (b) a Start button that runs the batch in a worker thread, and
 (c) a live log tail (reference gui.py:90-260).  This module provides the
 same three capabilities wired to the Spark pipeline:
 
-  * settings editor  <-> ``PipelineConfig.from_ini`` / ``to_ini``
+  * settings editor  <-> ``PipelineConfig.fields`` / ``from_fields``,
+                         saved through ``to_ini``
   * Start            ->  ``python -m debias_spark.cli --config ...`` in a
                          QProcess (same process boundary the reference uses,
                          gui.py:66-76 — the GUI stays live while Spark runs)
@@ -46,29 +47,6 @@ def run_command(config_path: str, reports: str = "none") -> list[str]:
     return cmd
 
 
-def settings_fields(cfg: PipelineConfig) -> dict[str, str]:
-    """Editor-field mapping, reference key names (gui.py:116-158)."""
-    return {
-        "INPUT_FOLDER": cfg.input_folder,
-        "OUTPUT_FOLDER": cfg.output_folder,
-        "USE_NER": str(cfg.use_ner),
-        "USE_LLM": str(cfg.use_llm),
-        "MAX_RETRIES": str(cfg.max_retries),
-    }
-
-
-def apply_fields(fields: dict[str, str]) -> PipelineConfig:
-    """Inverse of settings_fields: editor values -> config object."""
-    truthy = ("1", "true", "yes", "on")
-    return PipelineConfig(
-        input_folder=fields["INPUT_FOLDER"],
-        output_folder=fields["OUTPUT_FOLDER"],
-        use_ner=fields.get("USE_NER", "true").strip().lower() in truthy,
-        use_llm=fields.get("USE_LLM", "false").strip().lower() in truthy,
-        max_retries=int(fields.get("MAX_RETRIES", "5")),
-    )
-
-
 def launch(config_path: str = "config.ini") -> int:  # pragma: no cover - needs a display
     """Open the settings/run/log window.  Raises GuiUnavailableError when
     PyQt6 (or a display) is absent."""
@@ -95,7 +73,7 @@ def launch(config_path: str = "config.ini") -> int:  # pragma: no cover - needs 
             self.setWindowTitle("debias-spark")
             cfg = PipelineConfig.from_ini(config_path)
             self.edits = {
-                k: QLineEdit(v) for k, v in settings_fields(cfg).items()
+                k: QLineEdit(v) for k, v in cfg.fields().items()
             }
             form = QFormLayout()
             for k, e in self.edits.items():
@@ -119,10 +97,10 @@ def launch(config_path: str = "config.ini") -> int:  # pragma: no cover - needs 
             # unhandled exceptions in Qt slots abort the process; surface
             # bad field values (e.g. non-numeric MAX_RETRIES) in the log
             try:
-                apply_fields(
+                PipelineConfig.from_fields(
                     {k: e.text() for k, e in self.edits.items()}
                 ).to_ini(config_path)
-            except (ValueError, KeyError, OSError) as exc:
+            except (ValueError, OSError) as exc:
                 self.log.append(f"error: {exc}")
                 return
             self.log.append(f"saved {config_path}")

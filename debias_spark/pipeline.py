@@ -13,6 +13,7 @@ registered E-series queries over the re-read outputs.
 from __future__ import annotations
 
 import configparser
+from collections.abc import Mapping
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -43,33 +44,58 @@ class PipelineConfig:
     use_llm: bool = False
     max_retries: int = 5
 
-    @classmethod
-    def from_ini(cls, path: str) -> "PipelineConfig":
-        cp = configparser.ConfigParser()
-        cp.read(path)
-        s = cp["settings"]
-        if not s.get("INPUT_FOLDER") or not s.get("OUTPUT_FOLDER"):
-            raise ValueError(
-                f"config {path}: [settings] must define INPUT_FOLDER and "
-                "OUTPUT_FOLDER (reference key names, readme.md usage)"
-            )
-        return cls(
-            input_folder=s.get("INPUT_FOLDER"),
-            output_folder=s.get("OUTPUT_FOLDER"),
-            use_ner=s.getboolean("USE_NER", fallback=True),
-            use_llm=s.getboolean("USE_LLM", fallback=False),
-            max_retries=s.getint("MAX_RETRIES", fallback=5),
-        )
-
-    def to_ini(self, path: str) -> None:
-        cp = configparser.ConfigParser()
-        cp["settings"] = {
+    def fields(self) -> dict[str, str]:
+        """The ``[settings]`` mapping under the reference key names: what
+        ``to_ini`` writes and the GUI's settings editor shows
+        (gui.py:116-158)."""
+        return {
             "INPUT_FOLDER": self.input_folder,
             "OUTPUT_FOLDER": self.output_folder,
             "USE_NER": str(self.use_ner),
             "USE_LLM": str(self.use_llm),
             "MAX_RETRIES": str(self.max_retries),
         }
+
+    @classmethod
+    def from_fields(cls, fields: Mapping[str, str]) -> "PipelineConfig":
+        """Inverse of ``fields``, for a config.ini section or the GUI's
+        editor values.  Booleans parse as configparser parses them; a
+        missing folder or an unparseable value raises ValueError."""
+        if not fields.get("INPUT_FOLDER") or not fields.get("OUTPUT_FOLDER"):
+            raise ValueError(
+                "[settings] must define INPUT_FOLDER and OUTPUT_FOLDER "
+                "(reference key names, readme.md usage)"
+            )
+
+        def flag(key: str, default: bool) -> bool:
+            raw = fields.get(key)
+            if raw is None:
+                return default
+            try:
+                return configparser.ConfigParser.BOOLEAN_STATES[raw.strip().lower()]
+            except KeyError:
+                raise ValueError(f"{key}: not a boolean: {raw!r}") from None
+
+        return cls(
+            input_folder=fields["INPUT_FOLDER"],
+            output_folder=fields["OUTPUT_FOLDER"],
+            use_ner=flag("USE_NER", True),
+            use_llm=flag("USE_LLM", False),
+            max_retries=int(fields.get("MAX_RETRIES", "5")),
+        )
+
+    @classmethod
+    def from_ini(cls, path: str) -> "PipelineConfig":
+        cp = configparser.ConfigParser()
+        cp.read(path)
+        try:
+            return cls.from_fields(cp["settings"])
+        except ValueError as exc:
+            raise ValueError(f"config {path}: {exc}") from None
+
+    def to_ini(self, path: str) -> None:
+        cp = configparser.ConfigParser()
+        cp["settings"] = self.fields()
         with open(path, "w") as fh:
             cp.write(fh)
 
@@ -146,31 +172,10 @@ def analytics_view(spark: SparkSession, output_dir: str) -> DataFrame:
     rec = docs.select("file", F.explode("results").alias("r")).select(
         "file",
         F.col("r.language").alias("language"),
-        F.col("r.literal").alias("record_literal"),
-        F.coalesce(F.size("r.tags"), F.lit(0)).alias("tag_count_per_record"),
+        F.col("r.literal").alias("literal"),
         F.col("r.tags").alias("tags"),
     )
-    record_rows = rec.select(
-        "file",
-        "language",
-        "record_literal",
-        F.lit(None).cast("string").alias("issue_literal"),
-        "tag_count_per_record",
-    )
-    tag_rows = rec.select(
-        "file",
-        "language",
-        "record_literal",
-        F.explode("tags").alias("tag"),
-        "tag_count_per_record",
-    ).select(
-        "file",
-        "language",
-        "record_literal",
-        F.col("tag.literal").alias("issue_literal"),
-        "tag_count_per_record",
-    )
-    return record_rows.unionAll(tag_rows)
+    return analytics_frame(rec)
 
 
 def issue_distribution(frame: DataFrame, language: str | None = None) -> DataFrame:

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from debias_spark.catalog import table
 from debias_spark.registry import register
+from debias_spark.session import pinned_confs
 from debias_spark.warehouse import fresh_scratch_dirs
 
 _CENTS = "CAST(round(o_totalprice * 100) AS BIGINT)"
@@ -48,21 +49,15 @@ def sink_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFr
     replay, which is only possible if exactly one partition was
     rewritten and six-plus others survived untouched.  At 100 TB this is
     THE idempotent daily-reload primitive: re-running a day's batch
-    replaces that day, never the table.
-
-    The conf is restored in a finally (never-set -> unset), and the
-    result is materialized inside the conf scope."""
+    replaces that day, never the table.  The result is materialized
+    inside the conf scope."""
     o = table(spark, sf_dir, "orders").withColumn(
         "year", F.year("o_orderdate")
     )
     (out,) = fresh_scratch_dirs(spark, sf_dir, "z61_dynpart")
     o.write.mode("overwrite").partitionBy("year").parquet(out)
 
-    conf = spark.conf
-    key = "spark.sql.sources.partitionOverwriteMode"
-    prev = conf.get(key, None)
-    try:
-        conf.set(key, "dynamic")
+    with pinned_confs(spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}):
         y97 = o.filter(F.col("year") == 1997)
         y97.unionByName(y97).write.mode("overwrite").partitionBy(
             "year"
@@ -79,9 +74,4 @@ def sink_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFr
             .orderBy("year")
             .localCheckpoint(eager=True)
         )
-    finally:
-        if prev is None:
-            conf.unset(key)
-        else:
-            conf.set(key, prev)
     return result

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from debias_spark.catalog import table
 from debias_spark.registry import register
+from debias_spark.session import pinned_confs
 from debias_spark.warehouse import fresh_scratch_dirs, scratch_dir
 
 _CENTS = "CAST(round(o_totalprice * 100) AS BIGINT)"
@@ -160,21 +161,22 @@ def source_max_partition_bytes_scan(spark: SparkSession, sf_dir: str) -> DataFra
     At 100 TB this is THE scan-parallelism lever the brief calls out:
     partitions sized so each task's input fits executor memory — too
     big spills, too small drowns in task launch; the Z58 advisor's
-    arithmetic picks the value, this key proves the knob.  Confs are
-    restored in a finally (never-set -> unset, rule 20)."""
+    arithmetic picks the value, this key proves the knob."""
     o = table(spark, sf_dir, "orders").select("o_orderstatus", "o_totalprice")
     out = scratch_dir(spark, sf_dir, "z67_mpb")
     o.coalesce(1).write.mode("overwrite").parquet(out)
-    _MPB = "spark.sql.files.maxPartitionBytes"
-    _OC = "spark.sql.files.openCostInBytes"
-    prev = {k: spark.conf.get(k, None) for k in (_MPB, _OC)}
-    try:
-        # openCost is raised WITH the split size: the effective split is
-        # min(mpb, max(openCost, bytes/parallelism)), so leaving openCost
-        # at default would let the parallelism term shrink splits below
-        # the demonstrated knob on small inputs
-        spark.conf.set(_MPB, str(_SPLIT_BYTES))
-        spark.conf.set(_OC, str(_SPLIT_BYTES))
+    # openCost is raised WITH the split size: the effective split is
+    # min(mpb, max(openCost, bytes/parallelism)), so leaving openCost at
+    # default would let the parallelism term shrink splits below the
+    # demonstrated knob on small inputs
+    split = str(_SPLIT_BYTES)
+    with pinned_confs(
+        spark,
+        {
+            "spark.sql.files.maxPartitionBytes": split,
+            "spark.sql.files.openCostInBytes": split,
+        },
+    ):
         rb = spark.read.parquet(out)
         rows = (
             rb.groupBy("o_orderstatus")
@@ -190,9 +192,3 @@ def source_max_partition_bytes_scan(spark: SparkSession, sf_dir: str) -> DataFra
         # materialized under the live confs; the tiny (<=3-row) result is
         # re-framed so the returned plan doesn't depend on restored confs
         return spark.createDataFrame(rows, "o_orderstatus string, n bigint, rev_cents bigint")
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from debias_spark.catalog import table
 from debias_spark.registry import register
+from debias_spark.session import pinned_confs
 from debias_spark.warehouse import fresh_scratch_dirs
 
 _MAX_SPLIT = 64 * 1024  # 64 KiB splits: the plain file must split, gz cannot
@@ -50,18 +51,14 @@ def source_gzip_unsplittable_scan(spark: SparkSession, sf_dir: str) -> DataFrame
     The 100 TB lesson this pins: compressed text landing zones must use
     a splittable container (parquet/orc with internal compression) or
     many small-enough files — one 10 GB .gz file is a one-task scan, a
-    straggler no conf can fix.  Conf is restored in a finally
-    (never-set -> unset, rule 20)."""
+    straggler no conf can fix."""
     docs = table(spark, sf_dir, "documents")
     gz_dir, pl_dir = fresh_scratch_dirs(spark, sf_dir, "z70_gz", "z70_plain")
     one = docs.coalesce(1)
     one.write.option("compression", "gzip").json(gz_dir)
     one.write.json(pl_dir)
 
-    key = "spark.sql.files.maxPartitionBytes"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, str(_MAX_SPLIT))
-    try:
+    with pinned_confs(spark, {"spark.sql.files.maxPartitionBytes": str(_MAX_SPLIT)}):
         gz = spark.read.schema(docs.schema).json(gz_dir)
         pl = spark.read.schema(docs.schema).json(pl_dir)
         n_gz = gz.rdd.getNumPartitions()
@@ -93,9 +90,4 @@ def source_gzip_unsplittable_scan(spark: SparkSession, sf_dir: str) -> DataFrame
             # part of the proof, not something later consumers inherit
             .localCheckpoint(eager=True)
         )
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
     return out

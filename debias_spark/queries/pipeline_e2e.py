@@ -124,8 +124,7 @@ def pipeline_incremental_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # dial shuffle width down for the drain: each micro-batch shuffles a
     # FRACTION of an already-small state frame, and 200-partition batch
-    # plans pay pure task-launch overhead 4x over (rule-9 cousin); the
-    # finally restores the never-set case with unset, not skip (rule 20)
+    # plans pay pure task-launch overhead 4x over (rule-9 cousin)
     with narrow_shuffle(spark, 8):
         batches = drain_file_drops(spark, docs.schema, src_dir, ckpt_dir, refresh)
     if len(batches) < 2:

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from debias_spark.catalog import table
 from debias_spark.registry import register
+from debias_spark.session import pinned_confs
 
 
 @register(
@@ -53,10 +54,10 @@ def sql_scripting_budget_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB the procedural layer iterates over aggregate state, not
     data.  The loop's string accumulator is driver-side scripting
     state, exploded back to rows only at the final SELECT."""
-    prev = spark.conf.get("spark.sql.scripting.enabled", None)
-    spark.conf.set("spark.sql.scripting.enabled", "true")
-    table(spark, sf_dir, "orders").createOrReplaceTempView("_x136_orders")
-    try:
+    # the script executes eagerly inside spark.sql(), so the pin ends
+    # with it and later keys run under driver-plain confs
+    with pinned_confs(spark, {"spark.sql.scripting.enabled": "true"}):
+        table(spark, sf_dir, "orders").createOrReplaceTempView("_x136_orders")
         return spark.sql(
         """
         BEGIN
@@ -90,13 +91,6 @@ def sql_scripting_budget_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
         END
         """
         )
-    finally:
-        # the script executes eagerly inside spark.sql(); restore the
-        # session default so later keys run under driver-plain confs
-        if prev is None:
-            spark.conf.unset("spark.sql.scripting.enabled")
-        else:
-            spark.conf.set("spark.sql.scripting.enabled", prev)
 
 
 @register(

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from debias_spark.catalog import table
 from debias_spark.registry import register
+from debias_spark.session import pinned_confs
 
 
 @register(
@@ -170,17 +171,12 @@ def join_aqe_skew_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream-static variant, Z50).
 
     The skew thresholds are tuned down so sf0.1 partitions register as
-    skewed; every conf is restored in a finally (never-set confs are
-    unset, not skipped — session-conf hygiene rule), and the result is
-    eagerly materialized INSIDE the conf scope via localCheckpoint so
-    the driver's later collect replays nothing under restored confs.
+    skewed, and the result is eagerly materialized INSIDE the conf scope
+    via localCheckpoint so the driver's later collect replays nothing
+    under restored confs.
     Plan evidence (skew=true in the final adaptive plan) is asserted in
     tests/test_round7_wave.py over skewed_join_frame."""
-    conf = spark.conf
-    old = {k: conf.get(k, None) for k in _SKEW_CONFS}
-    try:
-        for k, v in _SKEW_CONFS.items():
-            conf.set(k, v)
+    with pinned_confs(spark, _SKEW_CONFS):
         joined = skewed_join_frame(spark, sf_dir)
         out = (
             joined.groupBy("category")
@@ -191,10 +187,4 @@ def join_aqe_skew_split(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("category")
             .localCheckpoint(eager=True)
         )
-    finally:
-        for k, prev in old.items():
-            if prev is None:
-                conf.unset(k)
-            else:
-                conf.set(k, prev)
     return out

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from debias_spark.catalog import table
 from debias_spark.registry import register
+from debias_spark.session import pinned_confs
 
 _BLOOM_CONFS = {
     "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
@@ -65,15 +66,11 @@ def join_bloom_runtime_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     difference between shuffling the whole fact table and shuffling the
     ~selectivity fraction that survives the filter.
 
-    Confs are restored in a finally (never-set -> unset), and the result
-    is materialized inside the conf scope via localCheckpoint.  Plan
-    evidence (bloom_filter_agg in the optimized plan, might_contain on
-    the fact side) is asserted in tests/test_round7_wave5.py."""
-    conf = spark.conf
-    old = {k: conf.get(k, None) for k in _BLOOM_CONFS}
-    try:
-        for k, v in _BLOOM_CONFS.items():
-            conf.set(k, v)
+    The result is materialized inside the conf scope via
+    localCheckpoint.  Plan evidence (bloom_filter_agg in the optimized
+    plan, might_contain on the fact side) is asserted in
+    tests/test_round7_wave5.py."""
+    with pinned_confs(spark, _BLOOM_CONFS):
         out = (
             bloom_filtered_join(spark, sf_dir)
             .groupBy("p_type")
@@ -86,12 +83,6 @@ def join_bloom_runtime_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("p_type")
             .localCheckpoint(eager=True)
         )
-    finally:
-        for k, prev in old.items():
-            if prev is None:
-                conf.unset(k)
-            else:
-                conf.set(k, prev)
     return out
 
 

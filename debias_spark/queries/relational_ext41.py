@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from debias_spark.catalog import table
 from debias_spark.numeric import floor_eps, floor_eps_sql
 from debias_spark.registry import register
+from debias_spark.session import pinned_confs
 
 # per-reducer row budget: a key whose row count exceeds this gets split
 # across ceil(rows/budget) salt shards, capped at the shuffle width.
@@ -159,39 +160,31 @@ def join_cbo_reorder_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     and it only exists if ANALYZE ran, which is the operational point.
 
     Scale: ANALYZE = one scan per table with mergeable sketches; the
-    query itself is the H5 star shape.  Session confs are restored in a
-    finally (never-set -> unset, rule 20); tables are applicationId-
+    query itself is the H5 star shape.  Tables are applicationId-
     suffixed and dropped in the finally."""
-    prev = {k: spark.conf.get(k, None) for k in CBO_CONFS}
     names: dict[str, str] = {}
     try:
         names = build_cbo_star_tables(spark, sf_dir, "x161")
-        for k in CBO_CONFS:
-            spark.conf.set(k, "true")
-        cents = floor_eps_sql("l_extendedprice * (1 - l_discount)", 100)
-        out = spark.sql(
-            f"""
-            SELECT c_mktsegment AS segment,
-                   count(*) AS n_lines,
-                   CAST(sum({cents}) AS BIGINT) AS rev_cents
-            FROM {names['lineitem']} l
-            JOIN {names['orders']} o ON o.o_orderkey = l.l_orderkey
-            JOIN {names['customer']} c ON c.c_custkey = o.o_custkey
-            GROUP BY 1 ORDER BY 1
-            """
-        )
-        # materialize WHILE the stats/confs are live; the returned frame
-        # must not depend on tables the finally drops
-        rows = out.collect()
-        return spark.createDataFrame(
-            rows, "segment string, n_lines bigint, rev_cents bigint"
-        )
+        with pinned_confs(spark, dict.fromkeys(CBO_CONFS, "true")):
+            cents = floor_eps_sql("l_extendedprice * (1 - l_discount)", 100)
+            out = spark.sql(
+                f"""
+                SELECT c_mktsegment AS segment,
+                       count(*) AS n_lines,
+                       CAST(sum({cents}) AS BIGINT) AS rev_cents
+                FROM {names['lineitem']} l
+                JOIN {names['orders']} o ON o.o_orderkey = l.l_orderkey
+                JOIN {names['customer']} c ON c.c_custkey = o.o_custkey
+                GROUP BY 1 ORDER BY 1
+                """
+            )
+            # materialize WHILE the stats/confs are live; the returned frame
+            # must not depend on tables the finally drops
+            rows = out.collect()
+            return spark.createDataFrame(
+                rows, "segment string, n_lines bigint, rev_cents bigint"
+            )
     finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
         for t in names.values():
             spark.sql(f"DROP TABLE IF EXISTS {t}")
 

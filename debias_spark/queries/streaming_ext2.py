@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 
 from debias_spark.registry import register
 from debias_spark.streaming import drain_available_now, narrow_shuffle, stream_events
-from debias_spark.warehouse import fresh_scratch_dirs
+from debias_spark.warehouse import fresh_scratch_dirs, swap_state_write
 
 
 @register(
@@ -35,29 +35,27 @@ from debias_spark.warehouse import fresh_scratch_dirs
     """,
 )
 def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """foreachBatch incremental upsert: each micro-batch's per-type
-    partial aggregate MERGES into a persistent parquet state table
-    (full-outer on the key, mergeable-state addition), availableNow
-    drain, final state returned — the incremental_agg_maintenance (X90)
-    contract executed by the streaming engine instead of a manual
-    base/delta split, and the pattern every production Spark pipeline
-    uses to keep a serving table fresh without re-scanning history.
+    """foreachBatch state-table write: the availableNow drain's
+    micro-batch computes a per-type partial aggregate and writes it as
+    the keyed parquet state table through warehouse.swap_state_write
+    (parallel staging write, then rename swap, so a reader never sees a
+    half-written state); the state is returned.  This is the
+    incremental_agg_maintenance (X90) contract's write side executed by
+    the streaming engine, the sink pattern production pipelines use to
+    keep a serving table fresh.
 
-    Mergeability discipline: count and sum merge by addition;
-    count(DISTINCT user_id) is NOT mergeable from partials, so the state
-    carries approx-mergeable evidence instead — a per-batch distinct is
-    a LOWER BOUND merged by max().  Here the whole input drains in ONE
-    availableNow micro-batch (a single parquet file source), making the
-    bound exact and the oracle a plain COUNT(DISTINCT); a multi-batch
-    deployment would carry an HLL sketch column (hll_sketch_agg merges
-    exactly) — dropped here only because the driver hash needs a
-    batching-independent value.  The value sum converts to integer cents
-    PER ROW before any aggregation, so neither shuffle order nor batch
-    association order can drift the emitted value.
+    Single-batch contract: the whole input drains in ONE availableNow
+    micro-batch (a single parquet file source), and the batch guard
+    raises on a second batch or an existing state dir.  That is what
+    makes n_users_lb (a per-batch countDistinct) equal the oracle's
+    exact COUNT(DISTINCT); count(DISTINCT) does not merge from partials,
+    so a multi-batch deployment would carry an HLL sketch column
+    (hll_sketch_agg merges exactly) and a keyed merge against the prior
+    state.  The value sum converts to integer cents PER ROW before any
+    aggregation, so shuffle order cannot drift the emitted value.
 
-    Scale shape: state is keyed by event_type (bounded cardinality), the
-    merge is a broadcast-sized full-outer join per batch, and each batch
-    shuffles only its own partial aggregate — history is never re-read."""
+    Scale shape: state is keyed by event_type (bounded cardinality) and
+    the batch shuffles only its own partial aggregate."""
     state_dir, ckpt_dir = fresh_scratch_dirs(spark, sf_dir, "fb_state", "fb_ckpt")
     stream = stream_events(spark, sf_dir)
 
@@ -79,42 +77,11 @@ def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.countDistinct("user_id").alias("n_users_lb"),
             F.sum(F.round(F.col("value") * 100).cast("long")).alias("value_cents"),
         )
-        if os.path.isdir(state_dir):
-            prev = batch.sparkSession.read.parquet(state_dir)
-            merged = (
-                prev.select(
-                    "event_type",
-                    F.col("n_events").alias("pn"),
-                    F.col("n_users_lb").alias("pu"),
-                    F.col("value_cents").alias("pv"),
-                )
-                .join(part, "event_type", "full_outer")
-                .select(
-                    "event_type",
-                    (F.coalesce("pn", F.lit(0)) + F.coalesce("n_events", F.lit(0))).alias("n_events"),
-                    F.greatest(
-                        F.coalesce("pu", F.lit(0)), F.coalesce("n_users_lb", F.lit(0))
-                    ).alias("n_users_lb"),
-                    (F.coalesce("pv", F.lit(0)) + F.coalesce("value_cents", F.lit(0))).alias("value_cents"),
-                )
-            )
-        else:
-            merged = part
-        # state tables must never half-update: write the new state beside
-        # the old, then atomically swap (same discipline a real pipeline
-        # gets from Delta/Iceberg transactions)
-        tmp = state_dir + "_next"
-        merged.write.mode("overwrite").parquet(tmp)
-        old = state_dir + "_old"
-        shutil.rmtree(old, ignore_errors=True)
-        if os.path.isdir(state_dir):
-            os.rename(state_dir, old)
-        os.rename(tmp, state_dir)
-        shutil.rmtree(old, ignore_errors=True)
+        swap_state_write(part, state_dir)
 
-    # narrow drain (r14): the per-batch partial aggregate and state-merge
-    # join move a handful of event_type keys; 32-task batch plans were
-    # pure scheduling overhead
+    # narrow drain (r14): the per-batch partial aggregate moves a
+    # handful of event_type keys; 32-task batch plans were pure
+    # scheduling overhead
     with narrow_shuffle(spark, 8):
         drain_available_now(
             stream.writeStream.foreachBatch(merge_batch).option(

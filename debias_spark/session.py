@@ -10,6 +10,8 @@ Only the master URL and memory sizing are local-mode artifacts.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -21,6 +23,11 @@ APP_NAME = "debias-spark"
 # a larger initial value (e.g. 2000) with AQE is the production setting —
 # documented here rather than hard-coded because the driver pins local[32].
 _BASE_CONF = {
+    # The driver harness builds its own session (Spark default: 200 shuffle
+    # partitions), so ensure_runtime_confs re-applies this at first catalog
+    # access.  At correctness-gate scale (sf0.01) 200-task shuffles are pure
+    # scheduling overhead across ~116 queries; 32 matches local[32].  On a
+    # real cluster this would come from the session, not here.
     "spark.sql.shuffle.partitions": "32",
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
@@ -66,3 +73,47 @@ def get_spark(app_name: str = APP_NAME, extra_conf: dict | None = None) -> Spark
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def ensure_runtime_confs(spark: SparkSession) -> None:
+    """Apply the ``spark.sql.*`` entries of ``_BASE_CONF`` (the ones
+    settable at runtime) so the engine behaves the same under a session
+    it did not build, e.g. the driver harness's own.  Every
+    ``catalog.table`` read calls it; a key this deployment refuses is
+    skipped."""
+    for k, v in _BASE_CONF.items():
+        if not k.startswith("spark.sql."):
+            continue
+        try:
+            if spark.conf.get(k, None) != v:
+                spark.conf.set(k, v)
+        except Exception:
+            pass  # non-settable in this deployment: keep going
+
+
+@contextmanager
+def pinned_confs(spark: SparkSession, confs: dict[str, str]) -> Iterator[None]:
+    """Set ``confs`` on the session for the duration of the block, then
+    restore each key to its previous value, unsetting a key that was
+    unset before (never leaving it explicitly set to a default).  The
+    restore runs on error too.  This is the one rule for session-conf
+    writes in the engine: a key may change session confs only for the
+    duration of its own work, so a caller that needs its result to
+    reflect the pinned confs materializes it inside the block.
+
+    SERIAL-SESSION ASSUMPTION: mutating session conf is only safe
+    because the bench and the driver run keys SERIALLY in one session.
+    Any future concurrent execution of keys in a shared session must
+    replace this with per-query settings (per-write repartition(n),
+    hints, reader options), not share a session-level pin."""
+    prev = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

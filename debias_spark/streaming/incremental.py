@@ -28,41 +28,25 @@ from __future__ import annotations
 
 import uuid
 from collections.abc import Callable
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
 from pyspark.sql.types import StructType
 
+from debias_spark.session import ensure_runtime_confs, pinned_confs
+
 _DRAIN_TIMEOUT_S = 300
 
 
-@contextmanager
 def narrow_shuffle(spark: SparkSession, n: int = 8):
-    """Pin spark.sql.shuffle.partitions to ``n`` for the duration of a
-    drain-and-stop block, restoring the previous value (or unsetting)
-    on exit — the one shared spelling of the narrow-drain doctrine
-    (state-store instances are one per shuffle partition, fixed at the
-    first micro-batch; a 2-batch local drain pays per-partition state
-    setup that dwarfs its data work at the session's full width).
-
-    SERIAL-SESSION ASSUMPTION (r13 verdict item 7): mutating session
-    conf is only safe because the bench and the driver run keys
-    SERIALLY in one session.  Any future concurrent execution of keys
-    in a shared session must replace this with per-write repartition(n)
-    or per-query conf, not share the session-level pin.
-    """
-    key = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, str(n))
-    try:
-        yield
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
+    """Pin spark.sql.shuffle.partitions to ``n`` for a drain-and-stop
+    block (``session.pinned_confs``) — the one shared spelling of the
+    narrow-drain doctrine: state-store instances are one per shuffle
+    partition, fixed at the first micro-batch, so a 2-batch local drain
+    pays per-partition state setup that dwarfs its data work at the
+    session's full width."""
+    return pinned_confs(spark, {"spark.sql.shuffle.partitions": str(n)})
 
 
 def drain_available_now(writer: DataStreamWriter, what: str) -> None:
@@ -116,7 +100,7 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     timestamp, and is normalized to TimestampType either way)."""
     from pyspark.sql.types import LongType
 
-    from debias_spark.catalog import _cached_schema, ensure_runtime_confs
+    from debias_spark.catalog import _cached_schema
 
     ensure_runtime_confs(spark)  # nanosAsLong before touching events.parquet
     # r14: schema from the session cache (catalog._cached_schema) — the

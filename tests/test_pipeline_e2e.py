@@ -141,6 +141,21 @@ def test_config_ini_roundtrip(tmp_path):
     assert PipelineConfig.from_ini(str(path)) == cfg
 
 
+def test_bad_boolean_raises_on_ini_and_gui_paths(tmp_path):
+    """config.ini and the GUI editor parse through the same mapping, so an
+    unparseable flag raises on both instead of reading as False."""
+    fields = PipelineConfig("/in", "/out").fields()
+    fields["USE_NER"] = "maybe"
+    path = tmp_path / "config.ini"
+    path.write_text(
+        "[settings]\n" + "".join(f"{k} = {v}\n" for k, v in fields.items())
+    )
+    with pytest.raises(ValueError, match="USE_NER"):
+        PipelineConfig.from_ini(str(path))
+    with pytest.raises(ValueError, match="USE_NER"):
+        PipelineConfig.from_fields(fields)
+
+
 def test_results_order_is_input_line_order(pipeline_out):
     """Determinism contract: the results array inside each output document
     follows input-file line order (the reference appends results in request
@@ -209,17 +224,11 @@ def test_gui_headless_gating_and_logic():
     """gui.py: non-Qt logic round-trips and the headless raise is clear."""
     import pytest
 
-    from debias_spark.gui import (
-        GuiUnavailableError,
-        apply_fields,
-        launch,
-        run_command,
-        settings_fields,
-    )
+    from debias_spark.gui import GuiUnavailableError, launch, run_command
     from debias_spark.pipeline import PipelineConfig
 
     cfg = PipelineConfig("in", "out", use_ner=True, use_llm=False, max_retries=3)
-    assert apply_fields(settings_fields(cfg)) == cfg
+    assert PipelineConfig.from_fields(cfg.fields()) == cfg
     cmd = run_command("c.ini", reports="pdf")
     assert cmd[1:] == ["-m", "debias_spark.cli", "--config", "c.ini", "--reports", "pdf"]
     try:

@@ -201,6 +201,27 @@ def test_scratch_dir_and_drain_rules_live_in_one_module_each():
     assert all(app_reads.get(rel) == 1 for rel in table_name_sites), app_reads
 
 
+def test_session_conf_writes_live_in_one_module():
+    """Session confs are written only by debias_spark/session.py
+    (``pinned_confs`` and ``ensure_runtime_confs``); a ``conf.set(`` or
+    ``conf.unset(`` anywhere else under debias_spark/ is a hand-rolled
+    save/set/restore, and ``_RUNTIME_CONFS`` was the duplicate of
+    ``session._BASE_CONF``."""
+    import pathlib
+    import re
+
+    write = re.compile(r"conf\.(set|unset)\(")
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "debias_spark"
+    hits = [
+        f"{path.relative_to(pkg)}:{i}: {line.strip()}"
+        for path in sorted(pkg.rglob("*.py"))
+        for i, line in enumerate(path.read_text().splitlines(), 1)
+        if "_RUNTIME_CONFS" in line
+        or (write.search(line) and path.name != "session.py")
+    ]
+    assert not hits, "session conf written outside session.py:\n" + "\n".join(hits)
+
+
 def test_no_oracle_rounds_a_double_mean():
     """Regression guard for the rounding-tie class (round-5 Y33): Spark's
     round() HALF_UPs the shortest-decimal repr while DuckDB rounds the

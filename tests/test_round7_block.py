@@ -243,6 +243,25 @@ def test_scripting_trajectory_matches_python_fold(spark, sf_dir):
     assert [(r.month, r.bal) for r in rows] == expect
 
 
+def test_scripting_key_restores_conf_when_table_raises(spark, sf_dir, monkeypatch):
+    """The scripting conf is pinned around the table() read too: a read
+    that raises leaves spark.sql.scripting.enabled as it was."""
+    import pytest
+
+    from debias_spark.queries import relational_ext27
+
+    key = "spark.sql.scripting.enabled"
+    before = spark.conf.get(key, None)
+
+    def broken(*args):
+        raise OSError("orders unreadable")
+
+    monkeypatch.setattr(relational_ext27, "table", broken)
+    with pytest.raises(OSError, match="orders unreadable"):
+        SPECS["sql_scripting_budget_loop"].fn(spark, sf_dir)
+    assert spark.conf.get(key, None) == before
+
+
 def test_transpose_cells_match_groupby(spark, sf_dir):
     rows = {r.key: (r.F, r.O) for r in SPECS["sql_transpose_metrics"].fn(spark, sf_dir).collect()}
     agg = {

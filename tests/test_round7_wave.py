@@ -79,12 +79,9 @@ def test_aqe_skew_split_plan_marker(spark, specs):
     """The final adaptive plan of the skewed SMJ must carry the
     OptimizeSkewedJoin marker (skew=true) under the key's confs."""
     from debias_spark.queries.relational_ext30 import _SKEW_CONFS, skewed_join_frame
+    from debias_spark.session import pinned_confs
 
-    conf = spark.conf
-    old = {k: conf.get(k, None) for k in _SKEW_CONFS}
-    try:
-        for k, v in _SKEW_CONFS.items():
-            conf.set(k, v)
+    with pinned_confs(spark, _SKEW_CONFS):
         # collect through the SAME QueryExecution we inspect: a noop write
         # spawns its own execution, leaving df's plan isFinalPlan=false.
         # The aggregate keeps value/user_id so column pruning can't shrink
@@ -94,12 +91,6 @@ def test_aqe_skew_split_plan_marker(spark, specs):
         ).agg(F.count("*").alias("n"), F.sum("value"), F.sum("user_id"), F.sum("event_id"))
         agg.collect()
         plan = agg._jdf.queryExecution().executedPlan().toString()
-    finally:
-        for k, prev in old.items():
-            if prev is None:
-                conf.unset(k)
-            else:
-                conf.set(k, prev)
     assert "skew=true" in plan, plan[:2000]
 
 

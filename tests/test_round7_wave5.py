@@ -20,22 +20,13 @@ def specs():
 
 def test_bloom_runtime_filter_in_plan(spark):
     from debias_spark.queries.relational_ext34 import _BLOOM_CONFS, bloom_filtered_join
+    from debias_spark.session import pinned_confs
 
-    conf = spark.conf
-    old = {k: conf.get(k, None) for k in _BLOOM_CONFS}
-    try:
-        for k, v in _BLOOM_CONFS.items():
-            conf.set(k, v)
+    with pinned_confs(spark, _BLOOM_CONFS):
         df = bloom_filtered_join(spark, "/root/testdata/sf0.01").groupBy(
             "p_type"
         ).count()
         plan = df._jdf.queryExecution().optimizedPlan().toString()
-    finally:
-        for k, prev in old.items():
-            if prev is None:
-                conf.unset(k)
-            else:
-                conf.set(k, prev)
     low = plan.lower()
     assert "bloom_filter_agg" in low, plan[:1500]
     assert "might_contain" in low or "bloomfilter" in low

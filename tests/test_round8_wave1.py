@@ -111,8 +111,8 @@ def test_cbo_join_reorder_actually_fires(spark, specs):
 
     from debias_spark.queries.relational_ext41 import CBO_CONFS as confs
     from debias_spark.queries.relational_ext41 import build_cbo_star_tables
+    from debias_spark.session import pinned_confs
 
-    prev = {k: spark.conf.get(k, None) for k in confs}
     names = {}
     try:
         # the SAME scaffold the key executes — plan pin and oracle can
@@ -127,9 +127,8 @@ def test_cbo_join_reorder_actually_fires(spark, specs):
         """
         orders_seen = {}
         for cbo in ("false", "true"):
-            for k in confs:
-                spark.conf.set(k, cbo)
-            plan = spark.sql(q)._jdf.queryExecution().optimizedPlan().toString()
+            with pinned_confs(spark, dict.fromkeys(confs, cbo)):
+                plan = spark.sql(q)._jdf.queryExecution().optimizedPlan().toString()
             orders_seen[cbo] = re.findall(r"x161t_(lineitem|orders|customer)_", plan)
         # syntactic order without stats-based reordering
         assert orders_seen["false"] == ["lineitem", "orders", "customer"]
@@ -139,11 +138,6 @@ def test_cbo_join_reorder_actually_fires(spark, specs):
             "lineitem"
         )
     finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
         for t in names.values():
             spark.sql(f"DROP TABLE IF EXISTS {t}")
 
@@ -195,6 +189,7 @@ def test_max_partition_bytes_split_arithmetic(spark, specs):
     import math
     import os
 
+    from debias_spark.session import pinned_confs
     from debias_spark.warehouse import scratch_dir
 
     base = specs["source_max_partition_bytes_scan"].fn(spark, SF).collect()
@@ -203,11 +198,8 @@ def test_max_partition_bytes_split_arithmetic(spark, specs):
     assert len(files) == 1  # the staged input really is ONE file
     nbytes = os.path.getsize(os.path.join(out, files[0]))
     confs = ("spark.sql.files.maxPartitionBytes", "spark.sql.files.openCostInBytes")
-    prev = {k: spark.conf.get(k, None) for k in confs}
-    try:
-        split = 4096
-        for k in confs:
-            spark.conf.set(k, str(split))
+    split = 4096
+    with pinned_confs(spark, dict.fromkeys(confs, str(split))):
         rb = spark.read.parquet(out)
         expect = math.ceil(nbytes / split)
         assert rb.rdd.getNumPartitions() == expect > 1
@@ -218,12 +210,6 @@ def test_max_partition_bytes_split_arithmetic(spark, specs):
         assert [(r.o_orderstatus, r["count"]) for r in redone] == [
             (r.o_orderstatus, r.n) for r in base
         ]
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 def test_crosssource_matrix_conserves_pairs(spark, specs):

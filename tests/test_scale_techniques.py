@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from debias_spark.catalog import table
 from debias_spark.operators.skew import key_skew_profile, salted_join
+from debias_spark.session import pinned_confs
 
 
 def _agg(df):
@@ -40,37 +41,35 @@ def test_bucketed_join_has_no_shuffle(spark, sf_dir, tmp_path):
     physical plan contains no Exchange above the scans — the 100 TB upgrade
     for the H2 fact-fact join."""
     spark.sql(f"CREATE DATABASE IF NOT EXISTS bdemo LOCATION '{tmp_path}/bdemo'")
-    prev_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    # disable autoBroadcast: at test scale everything is broadcastable, which
-    # would mask the no-shuffle SMJ this test demonstrates
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        for name, key in (("orders", "o_orderkey"), ("lineitem", "l_orderkey")):
-            (
-                table(spark, sf_dir, name)
-                .write.bucketBy(8, key)
-                .sortBy(key)
-                .mode("overwrite")
-                .saveAsTable(f"bdemo.{name}_b")
+        # disable autoBroadcast: at test scale everything is broadcastable,
+        # which would mask the no-shuffle SMJ this test demonstrates
+        with pinned_confs(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
+            for name, key in (("orders", "o_orderkey"), ("lineitem", "l_orderkey")):
+                (
+                    table(spark, sf_dir, name)
+                    .write.bucketBy(8, key)
+                    .sortBy(key)
+                    .mode("overwrite")
+                    .saveAsTable(f"bdemo.{name}_b")
+                )
+            o = spark.table("bdemo.orders_b")
+            li = spark.table("bdemo.lineitem_b")
+            joined = o.join(li, o.o_orderkey == li.l_orderkey)
+            plan = joined._jdf.queryExecution().executedPlan().toString()
+            assert "SortMergeJoin" in plan
+            assert "Exchange" not in plan, "bucketed join must not shuffle"
+            # an aggregate keyed on the bucket column reuses the layout too:
+            # no Exchange before the final aggregate
+            agg = li.groupBy("l_orderkey").agg(F.sum("l_quantity"))
+            aplan = agg._jdf.queryExecution().executedPlan().toString()
+            assert "Exchange" not in aplan, "bucketed groupBy must not shuffle"
+            # and it is still correct
+            n = joined.count()
+            plain = table(spark, sf_dir, "orders").join(
+                table(spark, sf_dir, "lineitem"),
+                F.col("o_orderkey") == F.col("l_orderkey"),
             )
-        o = spark.table("bdemo.orders_b")
-        li = spark.table("bdemo.lineitem_b")
-        joined = o.join(li, o.o_orderkey == li.l_orderkey)
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan, "bucketed join must not shuffle"
-        # an aggregate keyed on the bucket column reuses the layout too:
-        # no Exchange before the final aggregate
-        agg = li.groupBy("l_orderkey").agg(F.sum("l_quantity"))
-        aplan = agg._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in aplan, "bucketed groupBy must not shuffle"
-        # and it is still correct
-        n = joined.count()
-        plain = table(spark, sf_dir, "orders").join(
-            table(spark, sf_dir, "lineitem"),
-            F.col("o_orderkey") == F.col("l_orderkey"),
-        )
-        assert n == plain.count()
+            assert n == plain.count()
     finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_thresh)
         spark.sql("DROP DATABASE IF EXISTS bdemo CASCADE")

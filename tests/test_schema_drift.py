@@ -61,23 +61,22 @@ def test_schema_cache_key_carries_the_nanos_conf(spark, tmp_path):
     from pyspark.sql.types import LongType
 
     from debias_spark import catalog
+    from debias_spark.session import pinned_confs
 
     path = str(tmp_path / "events.parquet")
     ts = pa.array([1_700_000_000_000_000_123], pa.timestamp("ns"))
     pq.write_table(pa.table({"ts": ts}), path, store_schema=False)
     key = "spark.sql.legacy.parquet.nanosAsLong"
-    prev = spark.conf.get(key)
     catalog._SCHEMA_CACHE.clear()
     try:
-        spark.conf.set(key, "false")
-        with pytest.raises(AnalysisException, match="TIMESTAMP\\(NANOS"):
-            catalog._cached_schema(spark, path)
-        spark.conf.set(key, "true")
-        on = catalog._cached_schema(spark, path)["ts"].dataType
-        spark.conf.set(key, "false")
-        with pytest.raises(AnalysisException, match="TIMESTAMP\\(NANOS"):
-            catalog._cached_schema(spark, path)
+        with pinned_confs(spark, {key: "false"}):
+            with pytest.raises(AnalysisException, match="TIMESTAMP\\(NANOS"):
+                catalog._cached_schema(spark, path)
+        with pinned_confs(spark, {key: "true"}):
+            on = catalog._cached_schema(spark, path)["ts"].dataType
+        with pinned_confs(spark, {key: "false"}):
+            with pytest.raises(AnalysisException, match="TIMESTAMP\\(NANOS"):
+                catalog._cached_schema(spark, path)
     finally:
-        spark.conf.set(key, prev)
         catalog._SCHEMA_CACHE.clear()
     assert isinstance(on, LongType), on
