@@ -79,11 +79,7 @@ def load_prev_bench() -> dict[str, float]:
 
 def run_query(spec, spark, sf_dir: str) -> float:
     start = time.perf_counter()
-    df = spec.fn(spark, sf_dir)
-    if df.isStreaming:  # streaming specs execute inside fn; just materialize
-        df.count()
-    else:
-        df.write.format("noop").mode("overwrite").save()
+    spec.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
     return time.perf_counter() - start
 
 
@@ -102,9 +98,7 @@ def main() -> None:
     # 35-68s purely on page-cache state.)
     for spec in bench_specs.values():
         try:
-            wdf = spec.fn(spark, SF_DIR)
-            if not wdf.isStreaming:
-                wdf.write.format("noop").mode("overwrite").save()
+            spec.fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
         except Exception:
             pass
 

@@ -124,10 +124,6 @@ def _normalize_events_ts(df: DataFrame) -> DataFrame:
     return df.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: table(spark, sf_dir, t) for t in TABLES}
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every table as a temp view for spark.sql access."""
     for t in TABLES:

@@ -37,11 +37,9 @@ def _run_query_mode(args) -> int:
         print(f"{len(specs)} keys")
         return 0
     if args.sql:
-        from debias_spark.catalog import register_views
+        from debias_spark.sql import run_sql
 
-        spark = get_spark("debias-spark-sql")
-        register_views(spark, args.sf_dir)
-        df = spark.sql(args.sql)
+        df = run_sql(get_spark("debias-spark-sql"), args.sf_dir, args.sql)
     elif args.query not in specs:
         import difflib
 

@@ -180,69 +180,3 @@ def bucketed_cumsum_with_rank(
         .withColumn("rnk", (F.col("_coffset") + F.col("_wrn")).cast("long"))
         .drop("_b", "_within", "_offset", "_wrn", "_coffset")
     )
-
-
-def grouped_bucketed_cumsum(
-    df: DataFrame,
-    group_col: str,
-    value_col: str,
-    order_col: str,
-    tiebreak_col: str,
-    n_buckets: int = 16,
-) -> DataFrame:
-    """Per-GROUP running totals (ascending order), scale-safe when groups
-    are few and huge: a plain ``Window.partitionBy(group)`` funnels each
-    group through ONE task (3 return-flags over 6 B lineitems = 3 tasks),
-    so the window here partitions on (group, range-bucket) instead —
-    per-group percentile cutoffs assign the bucket, per-(group, bucket)
-    windows run in parallel, and a (groups x buckets)-row offsets frame
-    broadcast-joins the prefix back.  Adds ``cum`` and ``total``.
-
-    Cutoffs come from ``approx_percentile``: boundaries only need to be
-    MONOTONE for correctness (ties always share a bucket), and this
-    variant sits directly on fact tables where the exact count-map
-    percentile is the dominant cost on near-unique order columns
-    (measured 1.56 s of a 2.9 s query at sf0.1)."""
-    qs = [i / n_buckets for i in range(1, n_buckets)]
-    cuts = df.groupBy(group_col).agg(
-        F.approx_percentile(order_col, qs, 1000).alias("cuts")
-    )
-    withb = df.join(F.broadcast(cuts), group_col)
-    b = sum(
-        (F.col(order_col) >= F.get("cuts", k)).cast("int")
-        for k in range(n_buckets - 1)
-    )
-    # materialize the bucketed projection once: the window branch and the
-    # per-bucket-sums branch both consume it, and unlike the global
-    # variants (whose input is usually an already-aggregated small frame)
-    # this one typically sits directly on a fact-table scan — without the
-    # checkpoint each branch re-runs scan + cutoff join + bucket assign
-    # (measured 3.6 s -> 2.6 s on the weighted-median key at sf0.1).
-    withb = withb.withColumn("_b", b).drop("cuts").localCheckpoint(eager=False)
-    order = [F.asc(order_col), F.asc(tiebreak_col)]
-    wb = (
-        Window.partitionBy(group_col, "_b")
-        .orderBy(*order)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    within = withb.withColumn("_within", F.sum(value_col).over(wb))
-    bsums = withb.groupBy(group_col, "_b").agg(F.sum(value_col).alias("_bsum"))
-    wo = (
-        Window.partitionBy(group_col)
-        .orderBy("_b")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    wg = Window.partitionBy(group_col).rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    offsets = bsums.select(
-        group_col,
-        "_b",
-        F.coalesce(F.sum("_bsum").over(wo), F.lit(0)).alias("_offset"),
-        F.sum("_bsum").over(wg).alias("total"),
-    )
-    return (
-        within.join(F.broadcast(offsets), [group_col, "_b"])
-        .withColumn("cum", F.col("_offset") + F.col("_within"))
-        .drop("_b", "_within", "_offset")
-    )

@@ -164,27 +164,6 @@ def cosine_scores_arrow(
     )
 
 
-def cosine_topk_arrow(
-    emb: DataFrame,
-    probe_filter: Column,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    decimals: int = 4,
-) -> DataFrame:
-    """Arrow-vectorized exact cosine top-k (same result contract as
-    cosine_topk; ~20x faster scoring at 64 dims)."""
-    scored = cosine_scores_arrow(emb, probe_filter, id_col, vec_col, decimals).filter(
-        F.col("query_id") != F.col("cand_id")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("cand_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("query_id", "cand_id", "sim")
-    )
-
-
 def cosine_pairs_above_arrow(
     emb: DataFrame,
     probe_filter: Column,

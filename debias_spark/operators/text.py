@@ -9,6 +9,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from debias_spark.operators.dedup import word_tokens
+
 # Small per-language function-word lists for the overlap heuristic.  Order
 # matters: ties resolve in list order (en > de > es > fr), deterministically.
 LANG_STOPWORDS: list[tuple[str, list[str]]] = [
@@ -24,7 +26,7 @@ BPE_ISH_PATTERN = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 
 
 def distinct_tokens(text: Column) -> Column:
-    return F.array_distinct(F.filter(F.split(F.lower(text), r"\s+"), lambda t: t != ""))
+    return F.array_distinct(word_tokens(text))
 
 
 def lang_scores(text: Column) -> dict[str, Column]:
@@ -67,7 +69,7 @@ def punct_ratio(text: Column) -> Column:
 
 def stopword_ratio(text: Column) -> Column:
     """Share of tokens that are (any-language) function words."""
-    toks = F.filter(F.split(F.lower(text), r"\s+"), lambda t: t != "")
+    toks = word_tokens(text)
     all_sw = sorted({w for _, words in LANG_STOPWORDS for w in words})
     sw = F.array(*[F.lit(w) for w in all_sw])
     hits = F.size(F.filter(toks, lambda t: F.array_contains(sw, t)))
@@ -130,7 +132,7 @@ NORMALIZE_STRICT_DUCK = (
 def quality_features(text: Column) -> tuple[Column, Column]:
     """(n_tokens, n_punct) — the two measured features of the X53 quality
     rule chain (n_chars comes from the table column)."""
-    n_tokens = F.size(F.filter(F.split(F.lower(text), r"\s+"), lambda t: t != ""))
+    n_tokens = F.size(word_tokens(text))
     n_punct = F.length(F.regexp_replace(text, r"[^.,!?;:]", ""))
     return n_tokens, n_punct
 
@@ -179,10 +181,6 @@ def word_ngrams_frame(docs, n: int, id_col: str = "doc_id", text_col: str = "tex
     distinct shuffle over the full gram stream.  Values identical:
     windows are consecutive tokens of the same array, and per-doc
     distinct IS global distinct because the doc id is part of the key."""
-    from pyspark.sql import functions as F
-
-    from debias_spark.operators.dedup import word_tokens
-
     # the token array is projected ONCE per row before the window
     # transform: a lambda that captured the tokenization expression
     # would re-tokenize the document per window position (measured 5x

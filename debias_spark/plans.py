@@ -17,10 +17,6 @@ def executed_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def optimized_plan(df: DataFrame) -> str:
-    return df._jdf.queryExecution().optimizedPlan().toString()
-
-
 def scan_pushed_filters(df: DataFrame) -> list[str]:
     """DataFilters / PushedFilters entries of every parquet scan node."""
     out = []

@@ -142,10 +142,10 @@ def sink_managed_table_insert(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     spark.sql(f"DROP TABLE IF EXISTS {tname}")
     src.filter(F.col("o_orderstatus") == "F").write.saveAsTable(tname)
-    src.filter(F.col("o_orderstatus") == "O").createOrReplaceTempView(
-        "_z40_open"
+    spark.sql(
+        f"INSERT INTO {tname} SELECT * FROM {{open_orders}}",
+        open_orders=src.filter(F.col("o_orderstatus") == "O"),
     )
-    spark.sql(f"INSERT INTO {tname} SELECT * FROM _z40_open")
     return (
         spark.table(tname)
         .groupBy("o_orderstatus")

@@ -17,7 +17,7 @@ from pyspark.sql.window import Window
 from debias_spark.catalog import table
 from debias_spark.operators.skew import fan_out
 from debias_spark.operators import multimodal, similarity
-from debias_spark.operators.dedup import minhash_dedup, simhash_pairs
+from debias_spark.operators.dedup import minhash_dedup, simhash_pairs, word_tokens
 from debias_spark.operators.text import (
     BPE_ISH_PATTERN,
     bpe_ish_token_count,
@@ -400,7 +400,7 @@ def text_tokenize_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenize + global term frequencies, top-20 with deterministic
     tiebreak.  explode stays JVM-side; the agg combines map-side."""
     docs = table(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower("text"), r"\s+"), lambda t: t != "")
+    toks = word_tokens(F.col("text"))
     return (
         docs.select(F.explode(toks).alias("token"))
         .groupBy("token")

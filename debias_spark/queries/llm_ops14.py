@@ -70,12 +70,12 @@ def udtf_text_bigram_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     spark.udtf.register("_bigram_emit", BigramEmit)
     docs = table(spark, sf_dir, "documents").filter(F.col("doc_id") % 20 == 0)
-    docs.createOrReplaceTempView("_udtf_docs")
     expanded = spark.sql(
         """
         SELECT d.doc_id, b.bigram
-        FROM _udtf_docs d, LATERAL _bigram_emit(d.doc_id, d.text) b
-        """
+        FROM {docs} d, LATERAL _bigram_emit(d.doc_id, d.text) b
+        """,
+        docs=docs,
     )
     counts = expanded.groupBy(expanded["doc_id"]).agg(
         F.count("*").alias("n_bigrams"),

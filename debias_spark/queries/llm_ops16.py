@@ -18,6 +18,7 @@ from pyspark.sql.window import Window
 
 from debias_spark.catalog import table
 from debias_spark.numeric import floor_eps, floor_eps_sql
+from debias_spark.operators.dedup import word_tokens
 from debias_spark.registry import register
 
 _PQ_SUBSPACES = 8
@@ -162,7 +163,7 @@ def docs_vocab_drift_logratio(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("doc_id") % 2).alias("half"),
         F.explode(
             F.array_distinct(
-                F.filter(F.split(F.lower("text"), r"\s+"), lambda t: t != "")
+                word_tokens(F.col("text"))
             )
         ).alias("term"),
     )

@@ -15,6 +15,7 @@ from pyspark.sql.window import Window
 
 from debias_spark.catalog import table
 from debias_spark.numeric import floor_eps, floor_eps_sql
+from debias_spark.operators.dedup import word_tokens
 from debias_spark.registry import register
 
 _HAM_PROBES = 10
@@ -150,7 +151,7 @@ def text_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
     toks = docs.select(
         F.explode(
-            F.filter(F.split(F.lower("text"), r"\s+"), lambda t: t != "")
+            word_tokens(F.col("text"))
         ).alias("term")
     )
     freq = toks.groupBy("term").agg(F.count("*").alias("f"))

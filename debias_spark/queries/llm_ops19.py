@@ -111,9 +111,9 @@ def text_naive_bayes_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan shape: two generator+aggregate legs -> broadcast-joined scoring
     -> per-doc window argmax -> tiny confusion aggregate."""
-    table(spark, sf_dir, "documents").createOrReplaceTempView("_y45_docs")
     return spark.sql(
-        _NB_SQL.format(explode=_SPARK_EXPLODE, docs="_y45_docs", mat="")
+        _NB_SQL.format(explode=_SPARK_EXPLODE, docs="{docs}", mat=""),
+        docs=table(spark, sf_dir, "documents"),
     )
 
 
@@ -207,13 +207,15 @@ def text_pmi_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan shape: generator -> distinct (doc,token) -> df aggregate ->
     broadcast vocab semi-join -> co-located self-join on doc_id ->
     bounded pair aggregate -> global top-20 window over <=19900 rows."""
-    table(spark, sf_dir, "documents").createOrReplaceTempView("_y46_docs")
+    docs = table(spark, sf_dir, "documents")
     dt = spark.sql(
-        _PMI_DT_SQL.format(explode=_SPARK_EXPLODE, docs="_y46_docs", mat="")
+        _PMI_DT_SQL.format(explode=_SPARK_EXPLODE, docs="{docs}", mat=""),
+        docs=docs,
     ).localCheckpoint(eager=True)
-    dt.createOrReplaceTempView("_y46_dt")
     return spark.sql(
-        _PMI_TAIL_SQL.format(dt_cte="", dt="_y46_dt", docs="_y46_docs")
+        _PMI_TAIL_SQL.format(dt_cte="", dt="{dt}", docs="{docs}"),
+        dt=dt,
+        docs=docs,
     )
 
 
@@ -265,7 +267,6 @@ def docs_shard_token_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan shape: scan -> project (md5 + tokenize-count) -> 16-key hash
     aggregate with map-side partials -> 16-row window."""
-    table(spark, sf_dir, "documents").createOrReplaceTempView("_y47_docs")
     return spark.sql(
         """
         WITH per_doc AS (
@@ -273,7 +274,7 @@ def docs_shard_token_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
                    CAST(CASE WHEN trim(text) = '' THEN 0 ELSE
                         size(split(trim(text), '\\\\s+')) END AS BIGINT)
                        AS n_tokens
-            FROM _y47_docs
+            FROM {documents}
         ), shards AS (
             SELECT shard, count(*) AS n_docs, sum(n_tokens) AS tok
             FROM per_doc GROUP BY shard
@@ -285,5 +286,6 @@ def docs_shard_token_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
                    AS tokens_permille
         FROM shards
         ORDER BY shard
-        """
+        """,
+        documents=table(spark, sf_dir, "documents"),
     )

@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 from debias_spark.catalog import table
 from debias_spark.numeric import floor_eps, floor_eps_sql
 from debias_spark.operators.skew import fan_out
-from debias_spark.operators.dedup import bind_once
+from debias_spark.operators.dedup import bind_once, word_tokens
 from debias_spark.registry import register
 
 _TOKS = r"list_filter(string_split_regex(lower(text), '\s+'), t -> t <> '')"
@@ -46,7 +46,7 @@ def text_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     the shape of every rule-based corpus filter at 100 TB (one scan, no
     shuffle, fully pushed)."""
     docs = table(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower("text"), r"\s+"), lambda t: t != "")
+    toks = word_tokens(F.col("text"))
     n_tokens = F.size(toks).cast("long")
     n_distinct = F.size(F.array_distinct(toks)).cast("long")
     sum_len = F.aggregate(
@@ -101,7 +101,7 @@ def text_repetition_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     because per-doc in-array counting is O(distinct x n) interpreted,
     measured 5x slower; the shuffle key (doc_id, gram) scales linearly."""
     docs = fan_out(table(spark, sf_dir, "documents"))
-    w = F.filter(F.split(F.lower("text"), r"\s+"), lambda t: t != "")
+    w = word_tokens(F.col("text"))
     d = docs.select("doc_id", w.alias("w"))
 
     # Bigram spelling doctrine (operators/dedup.py word_shingles, minus the
@@ -263,7 +263,7 @@ def text_rolling_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     codes and the modular fold are chosen to be exactly computable in both
     engines (no 64-bit overflow under ANSI: acc < 1e9, step < 1.4e11)."""
     docs = table(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower("text"), r"\s+"), lambda t: t != "")
+    toks = word_tokens(F.col("text"))
     codes = F.transform(
         toks,
         lambda t: (F.length(t) * 31 + F.ascii(F.substring(t, 1, 1))).cast("long"),
@@ -335,7 +335,7 @@ def text_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     the pretokenization fan-out stage of every LLM data pipeline, linear
     and shuffle-free."""
     docs = table(spark, sf_dir, "documents")
-    w = F.filter(F.split(F.lower("text"), r"\s+"), lambda t: t != "")
+    w = word_tokens(F.col("text"))
     d = docs.select("doc_id", w.alias("w")).filter(F.size("w") > 0)
     CHUNK, STRIDE = 48, 32
     # chunk starts = every stride multiple strictly below the token count
@@ -377,7 +377,7 @@ def text_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     docs = table(spark, sf_dir, "documents")
-    n_tok = F.size(F.filter(F.split(F.lower("text"), r"\s+"), lambda t: t != "")).cast("long")
+    n_tok = F.size(word_tokens(F.col("text"))).cast("long")
     shard = F.floor(F.col("doc_id") / 100)
     t = docs.select("doc_id", n_tok.alias("n_tokens"), shard.alias("shard"))
     w = (
@@ -477,7 +477,7 @@ def dedup_minhash_mllib(spark: SparkSession, sf_dir: str) -> DataFrame:
     # two signature joins broadcast.
     sig = F.array_join(
         F.array_sort(
-            F.array_distinct(F.filter(F.split(F.lower("text"), r"\s+"), lambda t: t != ""))
+            F.array_distinct(word_tokens(F.col("text")))
         ),
         "\x1f",
     )

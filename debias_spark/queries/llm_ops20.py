@@ -147,7 +147,6 @@ def embedding_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("cand_id", "sim")
         .localCheckpoint(eager=True)
     )
-    rel.createOrReplaceTempView("_y48_rel")
 
     vecs = emb.select(
         F.col("vec_id").alias("cand_id"), F.col("embedding").alias("v")
@@ -178,11 +177,10 @@ def embedding_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint(eager=True)
     )
-    pairs.createOrReplaceTempView("_y48_pairs")
     return spark.sql(
-        _MMR_TAIL_SQL.format(
-            cte="", rel="_y48_rel", pairs="_y48_pairs", lam=_LAMBDA
-        )
+        _MMR_TAIL_SQL.format(cte="", rel="{rel}", pairs="{pairs}", lam=_LAMBDA),
+        rel=rel,
+        pairs=pairs,
     )
 
 
@@ -232,8 +230,10 @@ def docs_lang_balanced_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan shape: scan -> lang-partitioned window -> broadcast 1-row K ->
     filter -> 5-group aggregate."""
-    table(spark, sf_dir, "documents").createOrReplaceTempView("_y49_docs")
-    return spark.sql(_BALANCED_SQL.format(strty="STRING", docs="_y49_docs"))
+    return spark.sql(
+        _BALANCED_SQL.format(strty="STRING", docs="{docs}"),
+        docs=table(spark, sf_dir, "documents"),
+    )
 
 
 @register(

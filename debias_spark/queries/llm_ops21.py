@@ -14,6 +14,7 @@ from pyspark.sql.window import Window
 
 from debias_spark.catalog import table
 from debias_spark.numeric import floor_eps, floor_eps_sql
+from debias_spark.operators.dedup import word_tokens
 from debias_spark.registry import register
 
 
@@ -68,7 +69,7 @@ def text_kl_divergence_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = docs.select(
         "lang",
         F.explode(
-            F.filter(F.split(F.lower("text"), r"\s+"), lambda t: t != "")
+            word_tokens(F.col("text"))
         ).alias("token"),
     )
     lt = (
@@ -149,7 +150,7 @@ def text_trigram_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lang",
         "doc_id",
         F.posexplode(
-            F.filter(F.split(F.lower("text"), r"\s+"), lambda t: t != "")
+            word_tokens(F.col("text"))
         ).alias("pos", "token"),
     )
     w = Window.partitionBy("doc_id").orderBy("pos")

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from debias_spark.catalog import table
 from debias_spark.numeric import floor_eps, floor_eps_sql
+from debias_spark.operators.dedup import word_tokens
 from debias_spark.registry import register
 
 _BUDGET = 100_000  # total sampled-doc budget the mixture distributes
@@ -135,7 +136,7 @@ def dedup_boilerplate_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     # no fan_out (r13): the chunk-hash exchange arrives early; the full
     # bench read 0.77 s plain vs 0.93 s fanned — reverted after measure
     docs = table(spark, sf_dir, "documents")
-    w = F.filter(F.split(F.lower("text"), r"\s+"), lambda t: t != "")
+    w = word_tokens(F.col("text"))
     d = docs.select("doc_id", w.alias("w")).filter(F.size("w") > 0)
     starts = F.sequence(F.lit(0), F.size("w") - 1, F.lit(_CHUNK))
     ch = d.select(

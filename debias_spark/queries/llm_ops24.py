@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from debias_spark.catalog import table
+from debias_spark.operators.dedup import word_tokens
 from debias_spark.operators.packing import PACK_CAP as _CAP
 from debias_spark.operators.packing import PACK_SHARD as _SHARD
 from debias_spark.operators.packing import nfd_pack, nfd_pack_duck_ctes
@@ -58,7 +59,7 @@ def docs_pack_nextfit_decreasing(spark: SparkSession, sf_dir: str) -> DataFrame:
     shard prefix — the same contract as Y7."""
     docs = table(spark, sf_dir, "documents")
     n_tok = F.size(
-        F.filter(F.split(F.lower("text"), r"\s+"), lambda t: t != "")
+        word_tokens(F.col("text"))
     ).cast("long")
     t = (
         docs.select(

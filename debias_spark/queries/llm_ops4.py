@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from debias_spark.catalog import table
+from debias_spark.operators.dedup import word_tokens
 from debias_spark.registry import register
 
 
@@ -700,7 +701,7 @@ def text_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id",
-        F.explode(F.filter(F.split(F.lower("text"), r"\s+"), lambda t: t != "")).alias(
+        F.explode(word_tokens(F.col("text"))).alias(
             "tok"
         ),
     )
@@ -1006,7 +1007,7 @@ def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_total = docs.count()
     toks = docs.select(
         "doc_id",
-        F.explode(F.filter(F.split(F.lower("text"), r"\s+"), lambda t: t != "")).alias(
+        F.explode(word_tokens(F.col("text"))).alias(
             "tok"
         ),
     )

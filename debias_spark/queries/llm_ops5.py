@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from debias_spark.catalog import table
 from debias_spark.numeric import floor_eps, floor_eps_sql
+from debias_spark.operators.dedup import word_tokens
 from debias_spark.registry import register
 
 VOCAB_TOP = 1000  # unigram-LM vocabulary cap (bounded broadcast at any corpus size)
@@ -65,7 +66,7 @@ def text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = docs.select(
         "doc_id",
         F.explode(
-            F.filter(F.split(F.lower("text"), r"\s+"), lambda t: t != "")
+            word_tokens(F.col("text"))
         ).alias("token"),
     )
     vocab = (

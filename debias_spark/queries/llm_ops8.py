@@ -15,12 +15,9 @@ from pyspark.sql import functions as F
 
 from debias_spark.catalog import table
 from debias_spark.numeric import floor_eps, floor_eps_sql
+from debias_spark.operators.dedup import word_tokens
 from debias_spark.operators.skew import fan_out
 from debias_spark.registry import register
-
-
-def _tokens(col: str = "text"):
-    return F.filter(F.split(F.lower(col), r"\s+"), lambda t: t != "")
 
 
 @register(
@@ -69,7 +66,7 @@ def text_bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle joins since a corpus vocabulary outgrows a broadcast; AQE
     handles stop-bigram skew) and one per-doc aggregation.  No Python."""
     docs = table(spark, sf_dir, "documents")
-    toks = docs.select("doc_id", _tokens().alias("toks"))
+    toks = docs.select("doc_id", word_tokens(F.col("text")).alias("toks"))
     bg = toks.select(
         "doc_id",
         F.explode(

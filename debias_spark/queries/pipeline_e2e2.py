@@ -48,9 +48,8 @@ _CTES, _ = _minhash_ctes(_NH, _NB)
 # that production batch counts amortize).  The default is above what 4
 # local micro-batches can produce (<= 8 shuffle partitions x 4 batches =
 # 32 files/band), so the bench drain never pays it; a long-running
-# production drain (or a test setting the env var low) still does.
-_COMPACT_ENV = "DEBIAS_Z68_COMPACT_FILES"
-_COMPACT_FILES_DEFAULT = 64
+# production drain (or a test lowering the constant) still does.
+_COMPACT_FILES = 64
 # observability for tests: compactions performed by the LAST run of
 # pipeline_incremental_neardup in this process
 LAST_COMPACTIONS = 0
@@ -84,8 +83,7 @@ def _max_band_partition_files(band_dir: str) -> int:
 # once (in id's shard), so the candidate set is bit-identical and the hot
 # bucket's work spreads over r tasks.  Budget 0 disables the guard (and
 # its one diagnose aggregation) entirely.
-_SALT_ENV = "DEBIAS_BAND_SALT_BUDGET"
-_SALT_BUDGET_DEFAULT = 4096  # bucket rows one task should carry un-salted
+_SALT_BUDGET = 4096  # bucket rows one task should carry un-salted
 _SALT_CAP = 32  # matches Z66's shuffle-width cap
 # observability for tests: salt factor derived by the LAST call
 LAST_SALT_R = 0
@@ -98,9 +96,8 @@ def _salt_factor(idx: DataFrame) -> int:
     bucket, apply the quadratic work model, floor at the shuffle width
     when triggered, cap at _SALT_CAP.  Sets LAST_SALT_R."""
     global LAST_SALT_R
-    budget = int(os.environ.get(_SALT_ENV, _SALT_BUDGET_DEFAULT))
     r = 1
-    if budget > 0:
+    if _SALT_BUDGET > 0:
         mx_row = (
             idx.groupBy("j_band", "j_hash")
             .count()
@@ -113,7 +110,7 @@ def _salt_factor(idx: DataFrame) -> int:
         # just COLLIDES hot shards onto the same few partitions with no
         # spread (fixture A/B: r=2/r=4 were no better or worse than
         # plain; r=16 halved the wall on 8 shuffle partitions)
-        est = -(-(mx * mx) // (budget * budget))
+        est = -(-(mx * mx) // (_SALT_BUDGET * _SALT_BUDGET))
         if est >= 2:
             sp = int(
                 idx.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
@@ -176,7 +173,7 @@ def band_dropped_ids(b_banded: DataFrame, idx: DataFrame) -> DataFrame:
     trade is wider state rows (the signature replicated across a doc's
     4 band rows); the win is shuffles LINEAR in band rows regardless of
     bucket skew.  The autotuned salt guard is shared with
-    band_candidates (same diagnose, same env budget, same LAST_SALT_R
+    band_candidates (same diagnose, same budget, same LAST_SALT_R
     observability): probe rows salt by hash(id), index rows explode
     across the r shards, so every (probe row, index row) pair still
     meets exactly once and EXISTS is preserved bit-for-bit."""
@@ -270,7 +267,7 @@ def pipeline_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-batch appends never accumulate small files without bound; when
     it fires, the post-compaction batches probing the rewritten dir and
     still hash-matching the oracle IS the results-unchanged proof
-    (exercised by the low-threshold test via DEBIAS_Z68_COMPACT_FILES;
+    (exercised by the low-threshold test via _COMPACT_FILES;
     the short
     local drain stays under the default threshold and skips the
     rewrite, r10 verdict item 5).  At 100 TB the band state becomes a
@@ -367,14 +364,13 @@ def pipeline_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         # survives python -O).  The threshold keeps the short local
         # drain from paying a rewrite that only amortizes at production
         # batch counts (r10 verdict item 5).
-        threshold = int(os.environ.get(_COMPACT_ENV, _COMPACT_FILES_DEFAULT))
         if (
             n_seen >= 2
             and os.path.isdir(band_dir)
-            and _max_band_partition_files(band_dir) > threshold
+            and _max_band_partition_files(band_dir) > _COMPACT_FILES
         ):
             before, after = compact_partitioned_state(ss, band_dir, "band_id", _NB)
-            # `after == before` is a legitimate no-op (an env-lowered
+            # `after == before` is a legitimate no-op (a lowered
             # threshold can fire on an already-one-file-per-band state
             # when a micro-batch appended nothing — r11 advice); only a
             # compaction that GREW the file count is corrupt

@@ -290,20 +290,20 @@ def sql_lateral_topn_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
     cyclic transitive closure is NOT yet expressible natively — which is
     why dedup_clusters keeps its driver-iterated pointer-jumping loop
     with the recursion living in the DuckDB oracle instead."""
-    table(spark, sf_dir, "region").createOrReplaceTempView("region")
-    table(spark, sf_dir, "nation").createOrReplaceTempView("nation")
-    table(spark, sf_dir, "customer").createOrReplaceTempView("customer")
     return spark.sql(
         """
         SELECT r.r_name, l.n_name, l.n_customers
-        FROM region r, LATERAL (
+        FROM {region} r, LATERAL (
             SELECT n.n_name, count(*) AS n_customers
-            FROM nation n JOIN customer c ON c.c_nationkey = n.n_nationkey
+            FROM {nation} n JOIN {customer} c ON c.c_nationkey = n.n_nationkey
             WHERE n.n_regionkey = r.r_regionkey
             GROUP BY n.n_name
             ORDER BY n_customers DESC, n_name LIMIT 2
         ) l
-        """
+        """,
+        region=table(spark, sf_dir, "region"),
+        nation=table(spark, sf_dir, "nation"),
+        customer=table(spark, sf_dir, "customer"),
     )
 
 

@@ -76,8 +76,6 @@ def sql_session_variables(spark: SparkSession, sf_dir: str) -> DataFrame:
     pushdown and partition pruning see a constant — the plan is identical
     to the hand-written literal query (the oracle states the literals
     directly, proving exactly that)."""
-    ev = table(spark, sf_dir, "orders")
-    ev.createOrReplaceTempView("_sv_orders")
     spark.sql("DECLARE OR REPLACE VARIABLE min_price DOUBLE DEFAULT 0.0")
     spark.sql("DECLARE OR REPLACE VARIABLE want_status STRING DEFAULT 'F'")
     spark.sql("SET VARIABLE min_price = 150000.0")
@@ -87,10 +85,11 @@ def sql_session_variables(spark: SparkSession, sf_dir: str) -> DataFrame:
                count(*) AS n_orders,
                CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
                    AS revenue_cents
-        FROM _sv_orders
+        FROM {orders}
         WHERE o_totalprice >= min_price AND o_orderstatus = want_status
         GROUP BY o_orderpriority
-        """
+        """,
+        orders=table(spark, sf_dir, "orders"),
     )
 
 
@@ -116,18 +115,18 @@ def sql_parameterized_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The query itself is a broadcast dim join (customer per segment) over
     a pushed-down orders filter — one shuffle for the aggregate."""
-    table(spark, sf_dir, "orders").createOrReplaceTempView("_pq_orders")
-    table(spark, sf_dir, "customer").createOrReplaceTempView("_pq_customer")
     return spark.sql(
         """
         SELECT c.c_mktsegment,
                count(*) AS n_orders,
                CAST(sum(CAST(round(o.o_totalprice * 100) AS BIGINT)) AS BIGINT)
                    AS revenue_cents
-        FROM _pq_orders o JOIN _pq_customer c ON c.c_custkey = o.o_custkey
+        FROM {orders} o JOIN {customer} c ON c.c_custkey = o.o_custkey
         WHERE o.o_orderpriority LIKE :prio_pattern
           AND o.o_totalprice >= :min_price
         GROUP BY c.c_mktsegment
         """,
         args={"prio_pattern": "1%", "min_price": 50000.0},
+        orders=table(spark, sf_dir, "orders"),
+        customer=table(spark, sf_dir, "customer"),
     )

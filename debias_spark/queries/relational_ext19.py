@@ -94,13 +94,13 @@ _BOM_SQL = """
 WITH RECURSIVE bom AS (
     SELECT p_partkey AS pk, 0 AS depth,
            CAST(round(p_retailprice * 100) AS BIGINT) AS cents
-    FROM part WHERE p_partkey = 1
+    FROM {part} WHERE p_partkey = 1
     UNION ALL
     SELECT c.p_partkey AS pk, b.depth + 1 AS depth,
            CAST(round(c.p_retailprice * 100) AS BIGINT) AS cents
     FROM bom b
     CROSS JOIN (VALUES (0), (1)) AS x(i)
-    JOIN part c ON c.p_partkey = b.pk * 2 + x.i
+    JOIN {part} c ON c.p_partkey = b.pk * 2 + x.i
 )
 SELECT CAST(depth AS INTEGER) AS depth, count(*) AS n_parts,
        CAST(sum(cents) AS BIGINT) AS cents_total
@@ -108,13 +108,14 @@ FROM bom GROUP BY depth
 """
 
 
-@register("sql_recursive_bom_rollup", "X109", oracle=_BOM_SQL)
+@register("sql_recursive_bom_rollup", "X109", oracle=_BOM_SQL.format(part="part"))
 def sql_recursive_bom_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NATIVE recursive CTE (Spark 4 WITH RECURSIVE): a BOM-style
     hierarchy walk — part keys form an implicit binary tree (children
     2k, 2k+1), the recursion explodes the assembly from root 1 and rolls
-    up per-depth component counts and cost.  The ONE SQL string runs
-    verbatim in BOTH engines (oracle == query text): dialect-portable
+    up per-depth component counts and cost.  The ONE SQL template runs
+    in BOTH engines, only the part relation substituted (the oracle
+    names the table, Spark passes the frame): dialect-portable
     recursion, no DataFrame-loop translation at all.
 
     Spark executes the recursion as iterated joins against the
@@ -134,5 +135,4 @@ def sql_recursive_bom_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB a per-level dimension re-scan would be fatal).  Residual cost
     is per-level iteration overhead, same profile as the manual BFS;
     depth is bounded at log2(|part|)."""
-    table(spark, sf_dir, "part").createOrReplaceTempView("part")
-    return spark.sql(_BOM_SQL)
+    return spark.sql(_BOM_SQL, part=table(spark, sf_dir, "part"))

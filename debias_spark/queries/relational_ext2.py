@@ -290,13 +290,13 @@ def subquery_above_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scalar subquery: customers above the global average balance.
     Expressed via spark.sql so the subquery planning path is exercised
     (broadcast of the 1-row subquery result)."""
-    table(spark, sf_dir, "customer").createOrReplaceTempView("customer_v")
     return spark.sql(
         """
         SELECT c_custkey, round(c_acctbal, 2) AS bal
-        FROM customer_v
-        WHERE c_acctbal > (SELECT avg(c_acctbal) FROM customer_v)
-        """
+        FROM {customer}
+        WHERE c_acctbal > (SELECT avg(c_acctbal) FROM {customer})
+        """,
+        customer=table(spark, sf_dir, "customer"),
     )
 
 

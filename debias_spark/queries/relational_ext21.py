@@ -53,18 +53,16 @@ def sql_listagg_ordered(spark: SparkSession, sf_dir: str) -> DataFrame:
     (3 x 5 values), so both aggregation states are tiny regardless of
     fact rows — map-side combine does all the work."""
     orders = table(spark, sf_dir, "orders")
-    orders.select("o_orderstatus", "o_orderpriority").distinct().createOrReplaceTempView(
-        "_x111_pairs"
-    )
     return spark.sql(
         """
         SELECT o_orderstatus,
                listagg(o_orderpriority, '|')
                    WITHIN GROUP (ORDER BY o_orderpriority) AS priorities,
                count(*) AS n_priorities
-        FROM _x111_pairs
+        FROM {pairs}
         GROUP BY o_orderstatus ORDER BY o_orderstatus
-        """
+        """,
+        pairs=orders.select("o_orderstatus", "o_orderpriority").distinct(),
     )
 
 
@@ -92,8 +90,6 @@ def sql_filtered_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Cents convert per row via floor(x*100+0.5) before summing (the
     repo's cross-engine rounding doctrine)."""
-    orders = table(spark, sf_dir, "orders")
-    orders.createOrReplaceTempView("_x112_orders")
     return spark.sql(
         """
         SELECT o_orderpriority,
@@ -102,9 +98,10 @@ def sql_filtered_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
                count(*) FILTER (WHERE o_orderstatus = 'O') AS n_open,
                sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))
                    FILTER (WHERE o_orderstatus = 'F') AS fulfilled_cents
-        FROM _x112_orders
+        FROM {orders}
         GROUP BY o_orderpriority ORDER BY o_orderpriority
-        """
+        """,
+        orders=table(spark, sf_dir, "orders"),
     )
 
 
@@ -127,17 +124,18 @@ def sql_group_order_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     the analyst-ergonomics surface, resolved at analysis time into the
     identical plan the explicit spelling produces (same broadcast dim
     joins + one fact shuffle; nothing dynamic survives into execution)."""
-    for name in ("orders", "customer", "nation"):
-        table(spark, sf_dir, name).createOrReplaceTempView(f"_x113_{name}")
     return spark.sql(
         """
         SELECT n_name, o_orderpriority, count(*) AS n,
                sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)) AS cents
-        FROM _x113_orders
-        JOIN _x113_customer ON c_custkey = o_custkey
-        JOIN _x113_nation ON n_nationkey = c_nationkey
+        FROM {orders}
+        JOIN {customer} ON c_custkey = o_custkey
+        JOIN {nation} ON n_nationkey = c_nationkey
         GROUP BY ALL ORDER BY ALL
-        """
+        """,
+        orders=table(spark, sf_dir, "orders"),
+        customer=table(spark, sf_dir, "customer"),
+        nation=table(spark, sf_dir, "nation"),
     )
 
 
@@ -173,9 +171,6 @@ def agg_percentile_disc(spark: SparkSession, sf_dir: str) -> DataFrame:
     belong to the bucketed prefix-sum machinery (X78) or the sketch
     (X4c), not percentile_disc."""
     li = table(spark, sf_dir, "lineitem")
-    li.select(
-        "l_returnflag", F.col("l_quantity").cast("long").alias("qty")
-    ).createOrReplaceTempView("_x114_c")
     return spark.sql(
         """
         SELECT l_returnflag,
@@ -186,8 +181,9 @@ def agg_percentile_disc(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(percentile_disc(0.75) WITHIN GROUP (ORDER BY qty) AS BIGINT)
                    AS p75_qty,
                count(*) AS n
-        FROM _x114_c GROUP BY l_returnflag ORDER BY l_returnflag
-        """
+        FROM {c} GROUP BY l_returnflag ORDER BY l_returnflag
+        """,
+        c=li.select("l_returnflag", F.col("l_quantity").cast("long").alias("qty")),
     )
 
 

@@ -88,8 +88,6 @@ def sql_grouping_sets_explicit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: Catalyst plans one Expand (3 replicas, one per set)
     into a single hash aggregate — one shuffle for the whole lattice
     instead of one scan per margin UNION ALL'd together."""
-    li = table(spark, sf_dir, "lineitem")
-    li.createOrReplaceTempView("_x118_li")
     return spark.sql(
         """
         SELECT l_returnflag, l_linestatus,
@@ -97,11 +95,12 @@ def sql_grouping_sets_explicit(spark: SparkSession, sf_dir: str) -> DataFrame:
                GROUPING(l_linestatus) AS g_status,
                count(*) AS n,
                sum(CAST(l_quantity AS BIGINT)) AS total_qty
-        FROM _x118_li
+        FROM {li}
         GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_linestatus), ())
         ORDER BY g_flag, g_status, l_returnflag NULLS FIRST,
                  l_linestatus NULLS FIRST
-        """
+        """,
+        li=table(spark, sf_dir, "lineitem"),
     )
 
 

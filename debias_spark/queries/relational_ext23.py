@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from debias_spark.catalog import table
 from debias_spark.registry import register
+from debias_spark.session import temp_views
 
 
 @register(
@@ -87,16 +88,17 @@ def sql_identifier_dynamic_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     that route one query template over many tables.  The identifier is
     resolved at analysis time, so the executed plan is identical to the
     static spelling (same scan, same pushdowns) — only the SQL TEXT is
-    dynamic, never the plan."""
-    table(spark, sf_dir, "documents").createOrReplaceTempView("_x121_docs")
-    return spark.sql(
-        """
-        SELECT lang, count(*) AS n_docs,
-               sum(n_chars) AS total_chars
-        FROM IDENTIFIER(:t) GROUP BY lang ORDER BY lang
-        """,
-        args={"t": "_x121_docs"},
-    )
+    dynamic, never the plan.  The bound name must resolve in the
+    catalog, so the frame is a scoped ``temp_views`` view."""
+    with temp_views(spark, _x121_docs=table(spark, sf_dir, "documents")):
+        return spark.sql(
+            """
+            SELECT lang, count(*) AS n_docs,
+                   sum(n_chars) AS total_chars
+            FROM IDENTIFIER(:t) GROUP BY lang ORDER BY lang
+            """,
+            args={"t": "_x121_docs"},
+        )
 
 
 @register(

@@ -41,7 +41,6 @@ def agg_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan shape: GROUP BY (event_type, bucket) hash aggregate with
     map-side partials, then a tiny rollup per type — two shuffles of
     bucket-sized rows, never the raw ids twice."""
-    table(spark, sf_dir, "events").createOrReplaceTempView("_x123_events")
     return spark.sql(
         """
         SELECT event_type,
@@ -53,11 +52,12 @@ def agg_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
                    bitmap_count(bitmap_construct_agg(
                        bitmap_bit_position(user_id))) AS cnt,
                    count(*) AS n
-            FROM _x123_events
+            FROM {events}
             GROUP BY event_type, bkt
         )
         GROUP BY event_type ORDER BY event_type
-        """
+        """,
+        events=table(spark, sf_dir, "events"),
     )
 
 
@@ -86,7 +86,6 @@ def sql_timestamp_arith_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan shape: pure projection over a pushed sampling filter — one
     scan, no shuffle, whole-stage codegen end to end."""
-    table(spark, sf_dir, "events").createOrReplaceTempView("_x124_events")
     return spark.sql(
         """
         SELECT event_id,
@@ -97,6 +96,7 @@ def sql_timestamp_arith_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(last_day(CAST(ts AS DATE)) AS STRING) AS month_end,
                CAST(quarter(ts) AS INT) AS q,
                CAST(weekofyear(ts) AS INT) AS iso_week
-        FROM _x124_events WHERE event_id % 25 = 0
-        """
+        FROM {events} WHERE event_id % 25 = 0
+        """,
+        events=table(spark, sf_dir, "events"),
     )

@@ -79,14 +79,10 @@ def abtest_ks_statistic(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan shape: scan -> hash aggregate (shuffle on ~bounded bins) ->
     one-task window over bins -> broadcast 1-row total -> 1-row result."""
-    table(spark, sf_dir, "orders").createOrReplaceTempView("_x125_orders")
     bins = spark.sql(
-        _KS_BINS_SQL.format(orders="_x125_orders")
+        _KS_BINS_SQL, orders=table(spark, sf_dir, "orders")
     ).localCheckpoint(eager=True)
-    bins.createOrReplaceTempView("_x125_bins")
-    return spark.sql(
-        _KS_TAIL_SQL.format(bins_cte="", bins="_x125_bins")
-    )
+    return spark.sql(_KS_TAIL_SQL.format(bins_cte="", bins="{bins}"), bins=bins)
 
 
 @register(
@@ -138,13 +134,12 @@ def orders_mannwhitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan shape: pushed IN filter -> hash aggregate on bins -> one-task
     window over bins -> single-row reduction."""
-    table(spark, sf_dir, "events").createOrReplaceTempView("_x126_events")
     return spark.sql(
         """
         WITH s AS (
             SELECT CAST(floor(value * 100) AS BIGINT) AS x,
                    CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS g
-            FROM _x126_events
+            FROM {events}
             WHERE event_type IN ('purchase', 'click') AND value IS NOT NULL
         ), per_x AS (
             SELECT x, sum(g) AS c1, count(*) AS cnt FROM s GROUP BY x
@@ -165,7 +160,8 @@ def orders_mannwhitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(r1_x2 - n1 * (n1 + 1) AS BIGINT) AS u1_x2,
                CAST(n1 * n2 AS BIGINT) AS eu1_x2
         FROM agg
-        """
+        """,
+        events=table(spark, sf_dir, "events"),
     )
 
 
@@ -230,15 +226,15 @@ def orders_theilsen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded ~80-row frame (localCheckpointed once, self-joined
     broadcast-style), so 100x more orders changes only the scan, never
     the O(months^2) = ~3.2k-row pair stage."""
-    table(spark, sf_dir, "orders").createOrReplaceTempView("_x127_orders")
     monthly = spark.sql(
         _THEILSEN_MONTHLY_SQL.format(
             year="year(o_orderdate)",
             month="month(o_orderdate)",
-            orders="_x127_orders",
-        )
+            orders="{orders}",
+        ),
+        orders=table(spark, sf_dir, "orders"),
     ).localCheckpoint(eager=True)
-    monthly.createOrReplaceTempView("_x127_monthly")
     return spark.sql(
-        _THEILSEN_TAIL_SQL.format(monthly_cte="", monthly="_x127_monthly")
+        _THEILSEN_TAIL_SQL.format(monthly_cte="", monthly="{monthly}"),
+        monthly=monthly,
     )

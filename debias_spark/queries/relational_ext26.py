@@ -47,7 +47,6 @@ def sql_pivot_multi_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     are the flag-conditional pairs — single shuffle on l_linestatus, no
     join, no second pass; at 100 TB this is the same partial+final
     aggregate as any groupBy."""
-    table(spark, sf_dir, "lineitem").createOrReplaceTempView("_x128_lineitem")
     return spark.sql(
         """
         SELECT l_linestatus, a_qty,
@@ -57,14 +56,15 @@ def sql_pivot_multi_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM (
             SELECT l_linestatus, l_returnflag,
                    CAST(l_quantity AS BIGINT) AS q
-            FROM _x128_lineitem
+            FROM {lineitem}
         )
         PIVOT (
             sum(q) AS qty, count(q) AS n
             FOR l_returnflag IN ('A' AS a, 'N' AS n, 'R' AS r)
         )
         ORDER BY l_linestatus
-        """
+        """,
+        lineitem=table(spark, sf_dir, "lineitem"),
     )
 
 
@@ -101,17 +101,17 @@ def sql_scalar_udf_create(spark: SparkSession, sf_dir: str) -> DataFrame:
         RETURN CAST(round(p * (1 - 0.04) * 100) AS BIGINT)
         """
     )
-    table(spark, sf_dir, "orders").createOrReplaceTempView("_x129_orders")
     return spark.sql(
         """
         SELECT o_orderpriority,
                CAST(sum(disc_cents_x129(o_totalprice)) AS BIGINT) AS disc_cents,
                count(*) AS n
-        FROM _x129_orders
+        FROM {orders}
         WHERE o_orderstatus = 'O'
         GROUP BY o_orderpriority
         ORDER BY o_orderpriority
-        """
+        """,
+        orders=table(spark, sf_dir, "orders"),
     )
 
 
@@ -189,7 +189,6 @@ def window_interval_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a sliding pointer over the sorted run, no replication, no
     self-join; at 100 TB this is the canonical "velocity feature"
     plan."""
-    table(spark, sf_dir, "events").createOrReplaceTempView("_x131_events")
     return spark.sql(
         """
         SELECT event_id, user_id, n_24h, cents_24h
@@ -198,14 +197,15 @@ def window_interval_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
                    CAST(count(*) OVER w AS BIGINT) AS n_24h,
                    CAST(sum(CAST(floor(value * 100) AS BIGINT)) OVER w
                         AS BIGINT) AS cents_24h
-            FROM _x131_events
+            FROM {events}
             WINDOW w AS (PARTITION BY user_id ORDER BY ts
                          RANGE BETWEEN INTERVAL 24 HOURS PRECEDING
                                AND CURRENT ROW)
         )
         WHERE event_id % 20 = 0
         ORDER BY event_id
-        """
+        """,
+        events=table(spark, sf_dir, "events"),
     )
 
 
@@ -238,17 +238,17 @@ def sql_lateral_column_alias(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan shape: pure single-stage projection — alias resolution happens
     at analysis time, the physical plan is identical to the expanded
     spelling (one codegen stage over the pushed sampling filter)."""
-    table(spark, sf_dir, "orders").createOrReplaceTempView("_x132_orders")
     return spark.sql(
         """
         SELECT o_orderkey,
                CAST(round(o_totalprice * 100) AS BIGINT) AS cents,
                cents - cents % 100 AS whole,
                whole div 100 AS dollars
-        FROM _x132_orders
+        FROM {orders}
         WHERE o_orderkey % 50 = 0
         ORDER BY o_orderkey
-        """
+        """,
+        orders=table(spark, sf_dir, "orders"),
     )
 
 
@@ -284,21 +284,21 @@ def sql_multicol_in_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial+final aggregate; the NULL-tuple subtleties of IN (vs EXISTS)
     are engine-handled identically because neither join column is
     nullable in this data."""
-    table(spark, sf_dir, "orders").createOrReplaceTempView("_x133_orders")
-    table(spark, sf_dir, "customer").createOrReplaceTempView("_x133_customer")
     return spark.sql(
         """
         SELECT o_orderpriority,
                count(*) AS n_orders,
                CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
                    AS rev_cents
-        FROM _x133_orders
+        FROM {orders}
         WHERE (o_custkey, o_orderstatus) IN (
-            SELECT c_custkey, 'O' FROM _x133_customer WHERE c_acctbal > 5000
+            SELECT c_custkey, 'O' FROM {customer} WHERE c_acctbal > 5000
         )
         GROUP BY o_orderpriority
         ORDER BY o_orderpriority
-        """
+        """,
+        orders=table(spark, sf_dir, "orders"),
+        customer=table(spark, sf_dir, "customer"),
     )
 
 
@@ -327,7 +327,6 @@ def sql_xpath_extract_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan shape: single codegen projection stage over the pushed sampling
     filter — xpath functions evaluate per row JVM-side, no shuffle
     before the final ORDER BY."""
-    table(spark, sf_dir, "orders").createOrReplaceTempView("_x134_orders")
     return spark.sql(
         """
         WITH xml AS (
@@ -336,7 +335,7 @@ def sql_xpath_extract_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
                        '<order key="%d"><prio>%s</prio><cents>%d</cents><item/></order>',
                        o_orderkey, o_orderpriority,
                        CAST(round(o_totalprice * 100) AS BIGINT)) AS doc
-            FROM _x134_orders WHERE o_orderkey % 100 = 0
+            FROM {orders} WHERE o_orderkey % 100 = 0
         )
         SELECT o_orderkey,
                xpath_string(doc, '/order/prio') AS prio,
@@ -345,7 +344,8 @@ def sql_xpath_extract_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
                     AS BIGINT) AS n_items
         FROM xml
         ORDER BY o_orderkey
-        """
+        """,
+        orders=table(spark, sf_dir, "orders"),
     )
 
 
@@ -371,7 +371,6 @@ def sql_url_parse_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan shape: one codegen projection over the pushed sampling filter;
     parse_url is JVM-side (java.net.URI), no Python boundary."""
-    table(spark, sf_dir, "orders").createOrReplaceTempView("_x135_orders")
     return spark.sql(
         """
         WITH u AS (
@@ -379,7 +378,7 @@ def sql_url_parse_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
                    format_string(
                        'https://shop.example.com/%s/checkout?cust=%d&state=x',
                        lower(o_orderstatus), o_custkey) AS url
-            FROM _x135_orders WHERE o_orderkey % 100 = 0
+            FROM {orders} WHERE o_orderkey % 100 = 0
         )
         SELECT o_orderkey,
                parse_url(url, 'HOST') AS host,
@@ -387,5 +386,6 @@ def sql_url_parse_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
                parse_url(url, 'QUERY', 'cust') AS cust_param
         FROM u
         ORDER BY o_orderkey
-        """
+        """,
+        orders=table(spark, sf_dir, "orders"),
     )

@@ -57,7 +57,6 @@ def sql_scripting_budget_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the script executes eagerly inside spark.sql(), so the pin ends
     # with it and later keys run under driver-plain confs
     with pinned_confs(spark, {"spark.sql.scripting.enabled": "true"}):
-        table(spark, sf_dir, "orders").createOrReplaceTempView("_x136_orders")
         return spark.sql(
         """
         BEGIN
@@ -66,7 +65,7 @@ def sql_scripting_budget_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
           DECLARE acc STRING DEFAULT '';
           CREATE OR REPLACE TEMPORARY VIEW _x136_monthly AS
             SELECT month(o_orderdate) AS mth, count(*) AS c
-            FROM _x136_orders WHERE year(o_orderdate) = 1997 GROUP BY 1;
+            FROM {orders} WHERE year(o_orderdate) = 1997 GROUP BY 1;
           -- temp views are lazy plans: without this, every iteration's
           -- scalar subquery would re-scan orders; the cache pins the
           -- 12-row aggregate after the first materialization
@@ -84,12 +83,14 @@ def sql_scripting_budget_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
             SET m = m + 1;
           END WHILE;
           UNCACHE TABLE _x136_monthly;
+          DROP VIEW _x136_monthly;
           SELECT CAST(split(pair, ':')[0] AS INT) AS month,
                  CAST(split(pair, ':')[1] AS BIGINT) AS bal
           FROM (SELECT explode(filter(split(acc, ','), x -> x != '')) AS pair)
           ORDER BY month;
         END
-        """
+        """,
+            orders=table(spark, sf_dir, "orders"),
         )
 
 

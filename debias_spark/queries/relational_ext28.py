@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from debias_spark.catalog import table
 from debias_spark.numeric import floor_eps, floor_eps_sql
 from debias_spark.registry import register
+from debias_spark.session import temp_views
 
 _CENTS_SQL = "CAST(round(l_extendedprice * 100) AS BIGINT)"
 
@@ -149,17 +150,17 @@ def sql_pipe_syntax_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan shape: identical to the classic form — pushed filter into the
     scan, map-side-combined two-key aggregate, 4-row sort."""
-    table(spark, sf_dir, "lineitem").createOrReplaceTempView("_x140_li")
     return spark.sql(
         f"""
-        FROM _x140_li
+        FROM {{li}}
         |> WHERE l_shipdate >= TIMESTAMP '1996-01-01'
         |> EXTEND {_CENTS_SQL} AS cents
         |> AGGREGATE count(*) AS n_items, sum(cents) AS rev_cents
            GROUP BY l_returnflag, l_linestatus
         |> WHERE n_items > 10
         |> ORDER BY l_returnflag, l_linestatus
-        """
+        """,
+        li=table(spark, sf_dir, "lineitem"),
     )
 
 
@@ -240,18 +241,16 @@ def sql_recursive_cte_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .localCheckpoint()
     )
-    edges.createOrReplaceTempView("_x141_edges")
-    li.createOrReplaceTempView("_x141_li")
     return spark.sql(
         """
         WITH RECURSIVE seed AS (
-            SELECT min(l_partkey) AS p FROM _x141_li
+            SELECT min(l_partkey) AS p FROM {li}
         ),
         reach AS (
             SELECT p AS node, 0 AS hop FROM seed
             UNION ALL
             SELECT e.dst, r.hop + 1
-            FROM reach r JOIN _x141_edges e ON e.src = r.node
+            FROM reach r JOIN {edges} e ON e.src = r.node
             WHERE r.hop < 2
         )
         SELECT CAST(hop AS INT) AS hop,
@@ -261,7 +260,9 @@ def sql_recursive_cte_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
                sum(DISTINCT node) AS sum_nodes
         FROM (SELECT node, min(hop) AS hop FROM reach GROUP BY node)
         GROUP BY 1 ORDER BY 1
-        """
+        """,
+        li=li,
+        edges=edges,
     )
 
 
@@ -294,27 +295,32 @@ def sql_table_function_lateral(spark: SparkSession, sf_dir: str) -> DataFrame:
     lateral join into one aggregate over a year-filtered scan — the
     function boundary is free at runtime; N report invocations do NOT
     plan N scans."""
-    table(spark, sf_dir, "orders").createOrReplaceTempView("_x142_orders")
-    spark.sql(
-        """
-        CREATE OR REPLACE TEMPORARY FUNCTION monthly_report_x142(yr INT)
-        RETURNS TABLE(mth INT, n_orders BIGINT, rev_cents BIGINT)
-        RETURN SELECT CAST(month(o_orderdate) AS INT),
-                      count(*),
-                      sum(CAST(round(o_totalprice * 100) AS BIGINT))
-               FROM _x142_orders
-               WHERE year(o_orderdate) = yr
-               GROUP BY 1
-        """
-    )
-    return spark.sql(
-        """
-        SELECT y.yr, f.mth, f.n_orders, f.rev_cents
-        FROM (VALUES (1996), (1997), (1998)) AS y(yr),
-             LATERAL monthly_report_x142(y.yr) f
-        ORDER BY y.yr, f.mth
-        """
-    )
+    # the function body names the view, so the view outlives the
+    # CREATE; the function goes with it, so it never names a dropped view
+    with temp_views(spark, _x142_orders=table(spark, sf_dir, "orders")):
+        try:
+            spark.sql(
+                """
+                CREATE OR REPLACE TEMPORARY FUNCTION monthly_report_x142(yr INT)
+                RETURNS TABLE(mth INT, n_orders BIGINT, rev_cents BIGINT)
+                RETURN SELECT CAST(month(o_orderdate) AS INT),
+                              count(*),
+                              sum(CAST(round(o_totalprice * 100) AS BIGINT))
+                       FROM _x142_orders
+                       WHERE year(o_orderdate) = yr
+                       GROUP BY 1
+                """
+            )
+            return spark.sql(
+                """
+                SELECT y.yr, f.mth, f.n_orders, f.rev_cents
+                FROM (VALUES (1996), (1997), (1998)) AS y(yr),
+                     LATERAL monthly_report_x142(y.yr) f
+                ORDER BY y.yr, f.mth
+                """
+            )
+        finally:
+            spark.sql("DROP TEMPORARY FUNCTION IF EXISTS monthly_report_x142")
 
 
 @register(

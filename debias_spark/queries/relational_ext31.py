@@ -62,13 +62,12 @@ def window_ignore_nulls_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one window pass partitioned by user (parallel), then a
     grouped aggregate — no unpartitioned window, no second scan."""
-    table(spark, sf_dir, "events").createOrReplaceTempView("_x144_ev")
     return spark.sql(
         f"""
     WITH m AS (
         SELECT user_id, ts, event_id,
                CASE WHEN event_type = 'error' THEN NULL ELSE value END AS m
-        FROM _x144_ev
+        FROM {{ev}}
     ), w AS (
         SELECT user_id, m,
                last_value(m) IGNORE NULLS OVER (
@@ -84,7 +83,8 @@ def window_ignore_nulls_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(sum({floor_eps_sql("coalesce(ff, 0)", 1000000)}) AS BIGINT) AS ff_checksum_e6,
            CAST(sum({floor_eps_sql("coalesce(prev, 0)", 1000000)}) AS BIGINT) AS prev_checksum_e6
     FROM w GROUP BY user_id ORDER BY user_id
-    """
+    """,
+        ev=table(spark, sf_dir, "events"),
     )
 
 

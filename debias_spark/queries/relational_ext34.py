@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 from debias_spark.catalog import table
 from debias_spark.registry import register
-from debias_spark.session import pinned_confs
+from debias_spark.session import pinned_confs, temp_views
 
 _BLOOM_CONFS = {
     "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
@@ -238,23 +238,25 @@ def sql_cache_table_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: caching materializes the projection once per executor in
     columnar form; at 100 TB you cache AGGREGATES, never raw facts —
     which is exactly what the docstring contract of X136 does."""
-    table(spark, sf_dir, "orders").createOrReplaceTempView("_x150_orders")
-    spark.sql(
-        "CACHE TABLE _x150_cached AS "
-        "SELECT o_orderstatus, o_totalprice FROM _x150_orders"
-    )
-    try:
-        out = spark.sql(
-            """
-            SELECT o_orderstatus,
-                   count(*) AS n,
-                   CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-                       AS rev_cents
-            FROM _x150_cached GROUP BY 1 ORDER BY 1
-            """
-        ).localCheckpoint(eager=True)
-    finally:
-        spark.sql("UNCACHE TABLE IF EXISTS _x150_cached")
-        # UNCACHE drops the cache, not the temp view CACHE TABLE AS created
-        spark.catalog.dropTempView("_x150_cached")
+    # the cached view reads its source on every scan, so the source view
+    # must outlive the statement that creates it
+    with temp_views(spark, _x150_orders=table(spark, sf_dir, "orders")):
+        spark.sql(
+            "CACHE TABLE _x150_cached AS "
+            "SELECT o_orderstatus, o_totalprice FROM _x150_orders"
+        )
+        try:
+            out = spark.sql(
+                """
+                SELECT o_orderstatus,
+                       count(*) AS n,
+                       CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+                           AS rev_cents
+                FROM _x150_cached GROUP BY 1 ORDER BY 1
+                """
+            ).localCheckpoint(eager=True)
+        finally:
+            spark.sql("UNCACHE TABLE IF EXISTS _x150_cached")
+            # UNCACHE drops the cache, not the temp view CACHE TABLE AS created
+            spark.catalog.dropTempView("_x150_cached")
     return out

@@ -45,13 +45,14 @@ def sql_partitioning_hints_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     REBALANCE before a wide write is the standard small-files fix.
     Exchange node evidence (hashpartitioning(16) / REBALANCE round-robin
     / Coalesce) is asserted in tests/test_round7_wave6.py."""
-    table(spark, sf_dir, "orders").createOrReplaceTempView("_x152_orders")
+    orders = table(spark, sf_dir, "orders")
     frames = [
         spark.sql(
             _AGG_SQL.format(
                 tag=tag,
-                rel=f"(SELECT /*+ {hint} */ * FROM _x152_orders)",
-            )
+                rel=f"(SELECT /*+ {hint} */ * FROM {{orders}})",
+            ),
+            orders=orders,
         )
         for tag, hint in (
             ("coalesce", "COALESCE(4)"),

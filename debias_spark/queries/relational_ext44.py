@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from debias_spark.catalog import table
 from debias_spark.registry import register
+from debias_spark.session import temp_views
 
 # ---------------------------------------------------------------------------
 # X168: referential-integrity / constraint audit
@@ -147,19 +148,20 @@ def sql_execute_immediate_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Catalyst plans the executed text like any static query (the filter
     reaches the scan), so the oracle simply states the equivalent static
-    SQL with a scalar subquery for the captured variable."""
-    orders = table(spark, sf_dir, "orders")
-    orders.createOrReplaceTempView("_ei_orders")
-    spark.sql("DECLARE OR REPLACE VARIABLE ei_max DOUBLE")
-    spark.sql("EXECUTE IMMEDIATE 'SELECT max(o_totalprice) FROM _ei_orders' INTO ei_max")
-    spark.sql("DECLARE OR REPLACE VARIABLE ei_query STRING")
-    spark.sql(
-        """SET VARIABLE ei_query =
-           'SELECT o_orderpriority,
-                   count(*) AS n_orders,
-                   CAST(round(max(o_totalprice) * 100) AS BIGINT) AS max_cents
-            FROM _ei_orders
-            WHERE o_totalprice >= ? AND o_orderpriority <> ?
-            GROUP BY o_orderpriority ORDER BY o_orderpriority'"""
-    )
-    return spark.sql("EXECUTE IMMEDIATE ei_query USING (ei_max / 2, '5-LOW')")
+    SQL with a scalar subquery for the captured variable.  The text held
+    in ``ei_query`` names a catalog view, so the frame is a scoped
+    ``temp_views`` view."""
+    with temp_views(spark, _ei_orders=table(spark, sf_dir, "orders")):
+        spark.sql("DECLARE OR REPLACE VARIABLE ei_max DOUBLE")
+        spark.sql("EXECUTE IMMEDIATE 'SELECT max(o_totalprice) FROM _ei_orders' INTO ei_max")
+        spark.sql("DECLARE OR REPLACE VARIABLE ei_query STRING")
+        spark.sql(
+            """SET VARIABLE ei_query =
+               'SELECT o_orderpriority,
+                       count(*) AS n_orders,
+                       CAST(round(max(o_totalprice) * 100) AS BIGINT) AS max_cents
+                FROM _ei_orders
+                WHERE o_totalprice >= ? AND o_orderpriority <> ?
+                GROUP BY o_orderpriority ORDER BY o_orderpriority'"""
+        )
+        return spark.sql("EXECUTE IMMEDIATE ei_query USING (ei_max / 2, '5-LOW')")

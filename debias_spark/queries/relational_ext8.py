@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from debias_spark.catalog import table
+from debias_spark.operators.dedup import word_tokens
 from debias_spark.registry import register
 
 
@@ -155,7 +156,7 @@ def text_crossdoc_ngram_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     d = table(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower("text"), r"\s+"), lambda t: t != "")
+    toks = word_tokens(F.col("text"))
     ex = d.select("doc_id", F.posexplode(toks).alias("pos", "t"))
     w = Window.partitionBy("doc_id").orderBy("pos")
     parts = [F.col("t")] + [F.lead("t", i).over(w) for i in range(1, 8)]

@@ -152,28 +152,32 @@ def source_python_datasource_stream(spark: SparkSession, sf_dir: str) -> DataFra
         .option("seed", str(_S_SEED))
         .load()
     )
-    # fixed sink name: each run's memory query replaces the view instead
-    # of accumulating one leaked uuid-named table per invocation
+    # the memory sink registers its rows as a temp view named after the
+    # query; the frame read from it holds the sink itself, so the view is
+    # dropped before returning
     name = "z42_stream_sink"
     q = None
-    with narrow_shuffle(spark, 4):
-        try:
-            q = (
-                stream.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("append")
-                .start()
-            )
-            q.processAllAvailable()
-        finally:
-            # stop INSIDE the finally so an interrupted drain can't leak a
-            # live background stream into the shared session
-            if q is not None:
-                q.stop()
-                q.awaitTermination()
+    try:
+        with narrow_shuffle(spark, 4):
+            try:
+                q = (
+                    stream.writeStream.format("memory")
+                    .queryName(name)
+                    .outputMode("append")
+                    .start()
+                )
+                q.processAllAvailable()
+            finally:
+                # stop INSIDE the finally so an interrupted drain can't leak
+                # a live background stream into the shared session
+                if q is not None:
+                    q.stop()
+                    q.awaitTermination()
+        rows = spark.table(name)
+    finally:
+        spark.catalog.dropTempView(name)
     return (
-        spark.table(name)
-        .groupBy("batch", "lang")
+        rows.groupBy("batch", "lang")
         .agg(
             F.count("*").alias("n_docs"),
             F.sum("doc_id").alias("id_sum"),

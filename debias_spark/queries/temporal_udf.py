@@ -205,12 +205,12 @@ def udtf_tokenize_positions(spark: SparkSession, sf_dir: str) -> DataFrame:
                 yield t, i
 
     spark.udtf.register("tokenize_udtf", Tokenize)
-    table(spark, sf_dir, "documents").createOrReplaceTempView("documents_udtf_v")
     return spark.sql(
         """
         SELECT d.doc_id, t.token, t.pos
-        FROM documents_udtf_v d, LATERAL tokenize_udtf(d.text) t
-        """
+        FROM {documents} d, LATERAL tokenize_udtf(d.text) t
+        """,
+        documents=table(spark, sf_dir, "documents"),
     )
 
 
@@ -422,15 +422,15 @@ def udtf_dynamic_schema_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield (len(toks),) + grams
 
     spark.udtf.register("prefix_ngrams_t9", PrefixNgrams)
-    table(spark, sf_dir, "documents").createOrReplaceTempView("_t9_docs")
     return spark.sql(
         """
         SELECT d.doc_id, g.n_tokens, g.g1, g.g2, g.g3
-        FROM _t9_docs d,
+        FROM {documents} d,
              LATERAL prefix_ngrams_t9(lower(d.text), 3) g
         WHERE d.doc_id % 20 = 0
         ORDER BY d.doc_id
-        """
+        """,
+        documents=table(spark, sf_dir, "documents"),
     )
 
 
@@ -500,14 +500,12 @@ def udtf_table_argument_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # through a Python UDTF's table arg, so an unprojected view would
     # ship the full document text through the hash exchange and Arrow
     # encode it per row for nothing
-    table(spark, sf_dir, "documents").select(
-        "lang", "doc_id", "n_chars"
-    ).createOrReplaceTempView("_t10_docs")
     return spark.sql(
         """
-        SELECT * FROM lang_stats_t10(TABLE(_t10_docs) PARTITION BY lang)
+        SELECT * FROM lang_stats_t10(TABLE({docs}) PARTITION BY lang)
         ORDER BY lang
-        """
+        """,
+        docs=table(spark, sf_dir, "documents").select("lang", "doc_id", "n_chars"),
     )
 
 

@@ -13,7 +13,7 @@ import os
 from collections.abc import Iterator
 from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 APP_NAME = "debias-spark"
 
@@ -117,3 +117,24 @@ def pinned_confs(spark: SparkSession, confs: dict[str, str]) -> Iterator[None]:
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
+
+
+@contextmanager
+def temp_views(spark: SparkSession, **frames: DataFrame) -> Iterator[None]:
+    """Register each frame as a temp view under its keyword name for the
+    duration of the block, then drop it; the drop runs on error too.
+    This is the one rule for session-catalog writes in the engine: a key
+    hands frames to SQL as arguments, ``spark.sql(text, **frames)``,
+    whose formatter names each frame freshly and drops it once the
+    statement is analyzed.  Only a view that must outlive one statement
+    (a bound ``IDENTIFIER(:t)`` name, a SQL function body, ``CACHE
+    TABLE ... AS``, query text held in a variable) comes through here,
+    and it is gone when the block ends; the bare catalog names belong to
+    ``catalog.register_views`` alone."""
+    try:
+        for name, df in frames.items():
+            df.createOrReplaceTempView(name)
+        yield
+    finally:
+        for name in frames:
+            spark.catalog.dropTempView(name)

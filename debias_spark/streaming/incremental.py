@@ -192,16 +192,23 @@ def run_available_now(
     dirs instead of 32 — most of availableNow wall-clock at small data is
     state-store setup; measured 8 -> 4 -> 3 gives identical rows with
     monotonically less setup) and restored after.  A long-lived production
-    stream keeps the session default and an explicit checkpointLocation."""
+    stream keeps the session default and an explicit checkpointLocation.
+
+    The memory sink registers its rows as a temp view named after the
+    query; the returned frame holds the sink itself, so the view is
+    dropped before returning, on error too."""
     name = f"snap_{uuid.uuid4().hex[:12]}"
-    with narrow_shuffle(spark, 4):
-        drain_available_now(
-            stream_df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode),
-            "run_available_now",
-        )
-    return spark.table(name)
+    try:
+        with narrow_shuffle(spark, 4):
+            drain_available_now(
+                stream_df.writeStream.format("memory")
+                .queryName(name)
+                .outputMode(output_mode),
+                "run_available_now",
+            )
+        return spark.table(name)
+    finally:
+        spark.catalog.dropTempView(name)
 
 
 def rate_alerts(events: DataFrame, thresholds: DataFrame) -> DataFrame:

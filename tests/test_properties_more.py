@@ -187,44 +187,6 @@ def test_bpe_fit_invariants(spark, sf_dir):
     assert later_refs >= 1, merges
 
 
-def test_grouped_bucketed_cumsum_equals_naive_window(spark):
-    """grouped_bucketed_cumsum must match the per-group ORDER BY window on
-    an adversarial frame: ties across cutoff boundaries, skewed groups,
-    a single-row group."""
-    import random
-
-    from pyspark.sql.window import Window
-
-    from debias_spark.operators.prefixsum import grouped_bucketed_cumsum
-
-    rng = random.Random(11)
-    rows = [
-        (rng.choice(["a", "a", "a", "b"]), i, rng.choice([1, 1, 1, 7, 7, 40]))
-        for i in range(800)
-    ] + [("solo", 9999, 5)]
-    df = spark.createDataFrame(rows, "g string, k long, v long")
-    got = {
-        (r["g"], r["k"]): (r["cum"], r["total"])
-        for r in grouped_bucketed_cumsum(
-            df, group_col="g", value_col="v", order_col="v",
-            tiebreak_col="k", n_buckets=8,
-        ).collect()
-    }
-    w = Window.partitionBy("g").orderBy("v", "k").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    wt = Window.partitionBy("g").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    naive = {
-        (r["g"], r["k"]): (r["cum"], r["total"])
-        for r in df.withColumn("cum", F.sum("v").over(w))
-        .withColumn("total", F.sum("v").over(wt))
-        .collect()
-    }
-    assert got == naive
-
-
 def test_recall_report_bounds_and_consistency(spark, sf_dir):
     """recall_bp in [0, 10000]; n_recovered <= k_exact; and the report's
     per-probe recall agrees with recomputing overlap from the two member

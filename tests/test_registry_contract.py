@@ -222,6 +222,47 @@ def test_session_conf_writes_live_in_one_module():
     assert not hits, "session conf written outside session.py:\n" + "\n".join(hits)
 
 
+def test_temp_views_and_tokenizer_live_in_one_place_each():
+    """Keys hand frames to Spark SQL as arguments (``spark.sql(text,
+    **frames)``), so a temp view is registered only by
+    ``catalog.register_views`` (the bare table names user SQL reads) and
+    ``session.temp_views`` (a view that must outlive one statement).  The
+    Spark word tokenizer is spelled once, as ``dedup.word_tokens``; the
+    one other ``F.split(F.lower(`` is text_ngram_counts, which trims
+    first and so plans differently."""
+    import ast
+    import pathlib
+
+    views = {"createOrReplaceTempView", "createTempView", "createGlobalTempView",
+             "createOrReplaceGlobalTempView", "registerTempTable"}
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "debias_spark"
+    view_sites, split_sites = [], []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = str(path.relative_to(pkg))
+        src = path.read_text()
+        for fn in ast.walk(ast.parse(src)):
+            if not isinstance(fn, ast.FunctionDef):
+                continue
+            for node in ast.walk(fn):
+                if isinstance(node, ast.Attribute) and node.attr in views:
+                    view_sites.append((rel, fn.name))
+        split_sites += [
+            (rel, line.strip())
+            for line in src.splitlines()
+            if "F.split(F.lower(" in line
+        ]
+    assert sorted(view_sites) == [
+        ("catalog.py", "register_views"),
+        ("session.py", "temp_views"),
+    ], view_sites
+    assert split_sites == [
+        ("operators/dedup.py",
+         'return F.filter(F.split(F.lower(text), r"\\s+"), lambda t: t != "")'),
+        ("queries/llm_ops3.py",
+         'F.split(F.lower(F.trim(F.col("text"))), r"\\s+"), lambda t: t != ""'),
+    ], split_sites
+
+
 def test_no_oracle_rounds_a_double_mean():
     """Regression guard for the rounding-tie class (round-5 Y33): Spark's
     round() HALF_UPs the shortest-decimal repr while DuckDB rounds the

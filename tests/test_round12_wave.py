@@ -79,14 +79,14 @@ def test_incremental_ivfpq_search_plan_broadcast_only(spark, specs, incr_rows):
 
 
 def test_compaction_noop_on_already_compact_state(spark, specs, monkeypatch):
-    """The Z68 drain with an env-lowered threshold must survive a
+    """The Z68 drain with a lowered threshold must survive a
     compaction firing on an already-compact state (after == before is a
     no-op, not a failure — r11 advice)."""
     import debias_spark.queries.pipeline_e2e2 as mod
 
     # threshold 0: every post-2nd-batch compaction fires, including ones
     # where the state is already one file per band
-    monkeypatch.setenv("DEBIAS_Z68_COMPACT_FILES", "0")
+    monkeypatch.setattr(mod, "_COMPACT_FILES", 0)
     rows = specs["pipeline_incremental_neardup"].fn(spark, SF).collect()
     assert rows and mod.LAST_COMPACTIONS >= 2
 
@@ -124,12 +124,11 @@ def test_band_salt_guard_identical_results(spark, specs, monkeypatch):
     by running the whole Z68 key both ways (r11 verdict item 4)."""
     import debias_spark.queries.pipeline_e2e2 as mod
 
-    monkeypatch.delenv("DEBIAS_BAND_SALT_BUDGET", raising=False)
     plain = sorted(
         map(tuple, specs["pipeline_incremental_neardup"].fn(spark, SF).collect())
     )
     assert mod.LAST_SALT_R == 1  # normal corpus: no hot bucket, no salt
-    monkeypatch.setenv("DEBIAS_BAND_SALT_BUDGET", "1")
+    monkeypatch.setattr(mod, "_SALT_BUDGET", 1)
     salted = sorted(
         map(tuple, specs["pipeline_incremental_neardup"].fn(spark, SF).collect())
     )
@@ -159,7 +158,6 @@ def test_band_salt_guard_autotune_on_skewed_fixture(spark, tmp_path, monkeypatch
         F.col("band_hash").alias("j_hash"),
     )
     probe = banded.filter(F.col("id") >= 4000)  # a "drop" probing the rest
-    monkeypatch.delenv("DEBIAS_BAND_SALT_BUDGET", raising=False)
     salted = mod.band_candidates(probe, idx)
     assert mod.LAST_SALT_R >= 2, mod.LAST_SALT_R  # autotuned, default budget
     # plan assertion: the remedy is IN the plan — probe side salted
@@ -167,7 +165,7 @@ def test_band_salt_guard_autotune_on_skewed_fixture(spark, tmp_path, monkeypatch
     plan = salted._jdf.queryExecution().toString()
     assert "pmod" in plan and ("explode" in plan or "Generate" in plan), plan[:1500]
     n_salted = salted.count()
-    monkeypatch.setenv("DEBIAS_BAND_SALT_BUDGET", "0")  # guard off -> plain join
+    monkeypatch.setattr(mod, "_SALT_BUDGET", 0)  # guard off -> plain join
     plain = mod.band_candidates(probe, idx)
     assert mod.LAST_SALT_R == 1
     assert n_salted == plain.count()

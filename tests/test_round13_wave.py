@@ -201,10 +201,9 @@ def test_band_dropped_ids_salted_identical(spark, monkeypatch):
     kb = bands_from_sig_keep_sig(
         minhash_sig_wide(sh, mod._NH), mod._NH, mod._NB
     ).localCheckpoint(eager=True)
-    monkeypatch.delenv("DEBIAS_BAND_SALT_BUDGET", raising=False)
     plain = {r.id for r in mod.band_dropped_ids(kb, kb).collect()}
     assert mod.LAST_SALT_R == 1
-    monkeypatch.setenv("DEBIAS_BAND_SALT_BUDGET", "1")
+    monkeypatch.setattr(mod, "_SALT_BUDGET", 1)
     salted = {r.id for r in mod.band_dropped_ids(kb, kb).collect()}
     assert mod.LAST_SALT_R >= 2
     assert salted == plain

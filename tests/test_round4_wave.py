@@ -124,9 +124,9 @@ def test_bigram_score_orders_repeated_text_below_shuffled(spark):
         ],
         ["doc_id", "text", "lang", "source", "n_chars"],
     )
-    import debias_spark.queries.llm_ops8 as m
+    from debias_spark.operators.dedup import word_tokens
 
-    toks = docs.select("doc_id", m._tokens().alias("toks"))
+    toks = docs.select("doc_id", word_tokens(F.col("text")).alias("toks"))
     # reuse the registered pipeline on a temp view path: easiest is to call
     # the scoring logic through the public key with a monkeypatched table
     # loader — instead just recompute with the same expressions inline

@@ -267,7 +267,7 @@ def test_shot_boundaries_invariants(spark, specs):
 def test_incremental_neardup_compaction_gate(spark, specs, monkeypatch):
     """The in-loop band-state compaction is threshold-gated (r10 verdict
     item 5): under the default threshold the short 4-batch local drain
-    never pays the rewrite; with the env threshold forced to 0 it fires
+    never pays the rewrite; with the threshold forced to 0 it fires
     mid-drain, and the post-compaction batches probing the REWRITTEN dir
     still produce the identical rollup (results-unchanged proof)."""
     from debias_spark.queries import pipeline_e2e2 as mod
@@ -277,7 +277,7 @@ def test_incremental_neardup_compaction_gate(spark, specs, monkeypatch):
     )
     assert mod.LAST_COMPACTIONS == 0  # default threshold: local drain skips it
 
-    monkeypatch.setenv(mod._COMPACT_ENV, "0")
+    monkeypatch.setattr(mod, "_COMPACT_FILES", 0)
     compacted = sorted(
         map(tuple, specs["pipeline_incremental_neardup"].fn(spark, SF).collect())
     )

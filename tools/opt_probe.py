@@ -41,23 +41,15 @@ def main() -> None:
         for i in range(reps + 1):  # rep 0 = warmup (codegen + page cache)
             t0 = time.perf_counter()
             df = spec.fn(spark, sf)
-            if df.isStreaming:
-                df.count()
-            else:
-                df.write.format("noop").mode("overwrite").save()
+            df.write.format("noop").mode("overwrite").save()
             dt = time.perf_counter() - t0
             if i > 0:
                 times.append(dt)
-        if tag and not df.isStreaming:
+        if tag:
             plan = df._sc._jvm.PythonSQLUtils.explainString(
                 df._jdf.queryExecution(), "formatted"
             )
             (plan_dir / f"{key}_{tag}.txt").write_text(plan)
-        elif tag:
-            (plan_dir / f"{key}_{tag}.txt").write_text(
-                "(streaming/orchestrated key: executes inside fn(); "
-                "the returned frame is the sink readback)\n"
-            )
         print(
             f"{key}: min={min(times):.3f}s med={statistics.median(times):.3f}s "
             f"reps={times}",

@@ -7,8 +7,6 @@ bench keys, split warm per-key wall time into
            physical planning of the returned frame (pre-AQE)
   run      noop write — job execution including AQE re-planning
 
-Streaming/orchestrated keys (fn executes the work) report build only.
-
 Usage: python tools/tail_profile.py key1,key2,... [--reps 3] [--sf DIR]
 Prints one JSON line per key: {"key":..., "build":..., "compile":..., "run":...}
 (each = min over reps, seconds, after one warmup).
@@ -42,14 +40,10 @@ def main() -> None:
             t0 = time.perf_counter()
             df = spec.fn(spark, sf)
             t1 = time.perf_counter()
-            if df.isStreaming:  # fn executes the work: all of it is build
-                df.count()
-                t1 = t2 = t3 = time.perf_counter()
-            else:
-                df._jdf.queryExecution().executedPlan()
-                t2 = time.perf_counter()
-                df.write.format("noop").mode("overwrite").save()
-                t3 = time.perf_counter()
+            df._jdf.queryExecution().executedPlan()
+            t2 = time.perf_counter()
+            df.write.format("noop").mode("overwrite").save()
+            t3 = time.perf_counter()
             if i > 0:
                 builds.append(t1 - t0)
                 compiles.append(t2 - t1)
