@@ -184,9 +184,11 @@ def analytics_frame(df: DataFrame, record_col: str = "literal") -> DataFrame:
     """The reference's denormalized analytics frame (SURVEY §1.3).
 
     For each record: ONE record-level row (issue_literal null) plus one row
-    per tag — UNION ALL, *not* explode_outer: an N-tag record yields N+1 rows
+    per tag, *not* explode_outer: an N-tag record yields N+1 rows
     (analytics/parser.py:29-46).  The record-level row is load-bearing: it
-    guarantees 0-tag records appear in the record-distribution chart.
+    guarantees 0-tag records appear in the record-distribution chart.  One
+    pass builds both row families: the exploded array is a leading NULL
+    followed by the tag literals.
 
     Every input column other than ``tags`` is kept in place, with
     ``record_col`` renamed to ``record_literal``; ``issue_literal`` and
@@ -197,24 +199,12 @@ def analytics_frame(df: DataFrame, record_col: str = "literal") -> DataFrame:
         for c in df.columns
         if c != "tags"
     ]
-    base = df.select(
+    tags = F.coalesce(F.col("tags"), F.array())
+    issues = F.concat(
+        F.array(F.lit(None).cast("string")), F.transform(tags, lambda t: t["literal"])
+    )
+    return df.select(
         *keep,
-        F.coalesce(F.size("tags"), F.lit(0)).alias("tag_count_per_record"),
-        F.col("tags"),
+        F.explode(issues).alias("issue_literal"),
+        F.size(tags).alias("tag_count_per_record"),
     )
-    cols = [c for c in base.columns if c not in ("tag_count_per_record", "tags")]
-    record_rows = base.select(
-        *cols,
-        F.lit(None).cast("string").alias("issue_literal"),
-        "tag_count_per_record",
-    )
-    tag_rows = base.select(
-        *cols,
-        F.explode("tags").alias("tag"),
-        "tag_count_per_record",
-    ).select(
-        *cols,
-        F.col("tag.literal").alias("issue_literal"),
-        "tag_count_per_record",
-    )
-    return record_rows.unionAll(tag_rows)

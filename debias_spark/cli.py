@@ -15,10 +15,25 @@ import argparse
 import logging
 import sys
 
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from debias_spark.pipeline import PipelineConfig, run_pipeline
 from debias_spark.session import get_spark
+
+
+def summary_frame(annotated: DataFrame) -> DataFrame:
+    """The per-file summary the CLI prints: records, flagged records and
+    failed records per (src_file, language), ordered by src_file."""
+    return (
+        annotated.groupBy("src_file", "language")
+        .agg(
+            F.count("*").alias("records"),
+            F.sum((F.size("tags") > 0).cast("int")).alias("flagged"),
+            F.sum(F.when(F.col("_error").isNotNull(), 1).otherwise(0)).alias("errors"),
+        )
+        .orderBy("src_file")
+    )
 
 
 def _run_query_mode(args) -> int:
@@ -153,15 +168,7 @@ def main(argv: list[str] | None = None) -> int:
     spark = get_spark("debias-spark-cli")
     log.info("run start: input=%s output=%s", cfg.input_folder, cfg.output_folder)
     annotated = run_pipeline(spark, cfg, per_file_compat=not args.partitioned)
-    summary = (
-        annotated.groupBy("src_file", "language")
-        .agg(
-            F.count("*").alias("records"),
-            F.sum((F.size("tags") > 0).cast("int")).alias("flagged"),
-            F.sum(F.when(F.col("_error").isNotNull(), 1).otherwise(0)).alias("errors"),
-        )
-        .orderBy("src_file")
-    )
+    summary = summary_frame(annotated)
     # toLocalIterator + a line cap: driver memory and terminal output stay
     # bounded no matter how many input files the corpus has.
     shown = 0

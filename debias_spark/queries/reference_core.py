@@ -304,8 +304,8 @@ def explode_with_position(spark: SparkSession, sf_dir: str) -> DataFrame:
 def explode_outer_nullable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """explode_outer: null/empty arrays keep their parent row (one row with
     a null element) instead of vanishing — the OTHER explode semantics,
-    deliberately distinct from the analytics frame's UNION-ALL shape (D3)
-    and from plain explode (D1)."""
+    deliberately distinct from the analytics frame's N+1 shape (D3) and
+    from plain explode (D1)."""
     ev = table(spark, sf_dir, "events")
     arr = F.when(F.col("value") > 0, F.array(F.lit("a"), F.col("event_type")))
     return ev.select("event_id", arr.alias("arr")).select(
@@ -323,10 +323,11 @@ def explode_outer_nullable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def union_record_and_tag_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """UNION ALL of two row families — the analytics frame is record-rows
-    UNION ALL tag-rows, NOT explode_outer: N tags -> N+1 rows
-    (analytics/parser.py:29-46).  The full N+1 frame itself is
-    annotate.analytics_frame(); oracle-checked here on a pure projection."""
+    """Two row families stacked in one frame — the shape of the analytics
+    frame's one record row plus one row per tag, NOT explode_outer: N tags
+    -> N+1 rows (analytics/parser.py:29-46).  The full N+1 frame itself is
+    annotate.analytics_frame(), one explode over a leading NULL and the tag
+    literals; oracle-checked here on a pure projection."""
     docs = table(spark, sf_dir, "documents")
     a = docs.select("doc_id", F.col("lang").alias("attr"), F.lit("lang").alias("kind"))
     b = docs.select("doc_id", F.col("source").alias("attr"), F.lit("source").alias("kind"))

@@ -29,17 +29,19 @@ HEADER = ("Record #", "Literal", "Tag details")
 def render_reports(rows: DataFrame, output_dir: str, fmt: str = "text") -> list[str]:
     """Render one report per src_file from a report_rows frame.
 
-    Returns written filenames ('<stem>.txt' / '<stem>.pdf' — the reference
-    derives report names from input names with a suffix swap,
+    Returns the written filenames, sorted ('<stem>.txt' / '<stem>.pdf' —
+    the reference derives report names from input names with a suffix swap,
     call-debias.py:64).  Only files with >= 1 flagged record get a report
     (the frame is already flagged-only)."""
     out = pathlib.Path(output_dir)
     out.mkdir(parents=True, exist_ok=True)
-    # Stream the globally-sorted frame one partition at a time
-    # (toLocalIterator): driver memory is bounded by one file's rows, not the
-    # corpus.  Sort key is (src_file, seq, tag_pos) — input-file line order,
-    # the reference's report order (record_cell is blanked on tag rows and
-    # must never be a sort key).
+    # Hash-partition by src_file so each file's rows sit contiguously in one
+    # partition, sort within partitions, and stream one partition at a time
+    # (toLocalIterator): driver memory is bounded by one partition, not the
+    # corpus, and no range-bounds sampling job runs.  Sort key is
+    # (src_file, seq, tag_pos) — input-file line order, the reference's
+    # report order (record_cell is blanked on tag rows and must never be a
+    # sort key).
     order_cols = ["src_file", "seq", "tag_pos"] if "seq" in rows.columns else [
         "src_file", "tag_pos"
     ]
@@ -56,13 +58,14 @@ def render_reports(rows: DataFrame, output_dir: str, fmt: str = "text") -> list[
         else:
             written.append(_render_text(stem, buf, out))
 
-    for r in rows.orderBy(*order_cols).toLocalIterator():
+    ordered = rows.repartition("src_file").sortWithinPartitions(*order_cols)
+    for r in ordered.toLocalIterator():
         if r.src_file != cur_file:
             _flush()
             cur_file, buf = r.src_file, []
         buf.append(r)
     _flush()
-    return written
+    return sorted(written)
 
 
 def _render_text(stem: str, rows: list, out: pathlib.Path) -> str:

@@ -57,10 +57,22 @@ def _result_struct() -> F.Column:
 
 
 def write_outputs_partitioned(annotated: DataFrame, output_dir: str) -> None:
-    """Scale-path sink: one JSON line per record, partitioned by language."""
+    """Scale-path sink: one JSON line per record, partitioned by language.
+
+    Replaces only the sink's own ``language=*`` dirs: the output folder also
+    holds the run log and the staged corpus this write reads from, which a
+    whole-folder overwrite would delete.  Every ``language=*`` dir is
+    removed first, so a rerun whose corpus drops a language leaves none of
+    the earlier run's records behind."""
+    spark = annotated.sparkSession
+    hadoop_path = spark._jvm.org.apache.hadoop.fs.Path
+    root = hadoop_path(output_dir)
+    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
+    for status in fs.globStatus(hadoop_path(root, "language=*")) or []:
+        fs.delete(status.getPath(), True)
     (
         annotated.select("src_file", "language", _result_struct().alias("result"))
-        .write.mode("overwrite")
+        .write.mode("append")
         .partitionBy("language")
         .json(output_dir)
     )

@@ -46,7 +46,9 @@ def read_corpus(
 
 
 def with_line_seq(df: DataFrame) -> DataFrame:
-    """Append ``_seq``: the 1-based line position within each src_file.
+    """Append ``_seq``: the record's 1-based position among its src_file's
+    non-blank lines (``read_corpus`` drops blank lines before numbering, so
+    it is not the raw line number).
 
     The reference emits results in input-file line order (call-debias.py:141
     writes the response array in request order); Spark's collect_list after a

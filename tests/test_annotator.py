@@ -90,8 +90,8 @@ def test_partial_failure_isolated_per_language(spark):
 
 
 def test_analytics_frame_n_plus_one(spark):
-    """N-tag record -> N+1 rows (record row + tag rows), never explode_outer
-    (analytics/parser.py:29-46)."""
+    """N-tag record -> N+1 rows (one record row + one row per tag), never
+    explode_outer (analytics/parser.py:29-46)."""
     ann = annotate(_docs(spark))
     frame = analytics_frame(ann)
     n_records = ann.count()

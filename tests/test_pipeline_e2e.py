@@ -27,14 +27,23 @@ CORPUS = {
 }
 
 
-@pytest.fixture(scope="module")
-def pipeline_out(spark, tmp_path_factory):
-    root = tmp_path_factory.mktemp("pipeline")
-    inp, out = root / "input", root / "output"
-    for rel, content in CORPUS.items():
+def _write_corpus(inp, corpus=CORPUS):
+    """Write ``corpus`` ({'<lang>/<file>': text}) under ``inp``, replacing
+    whatever was there."""
+    import shutil
+
+    shutil.rmtree(inp, ignore_errors=True)
+    for rel, content in corpus.items():
         f = inp / rel
         f.parent.mkdir(parents=True, exist_ok=True)
         f.write_text(content)
+    return inp
+
+
+@pytest.fixture(scope="module")
+def pipeline_out(spark, tmp_path_factory):
+    root = tmp_path_factory.mktemp("pipeline")
+    inp, out = _write_corpus(root / "input"), root / "output"
     cfg = PipelineConfig(str(inp), str(out), max_retries=2)
     annotated = run_pipeline(spark, cfg)
     return annotated, out
@@ -82,8 +91,9 @@ def test_issue_distribution(spark, pipeline_out):
 
 def test_record_distribution_includes_zero_bucket(spark, pipeline_out):
     """0-tag records must appear in the 0 bucket — guaranteed by the
-    record-level rows, the exact reason the frame is a UNION not an
-    explode_outer (dashboard_widget.py:166-169)."""
+    record-level row every record gets on top of its tag rows, the exact
+    reason the frame is N+1 rows, not an explode_outer
+    (dashboard_widget.py:166-169)."""
     _, out = pipeline_out
     hist = {r.n_issues: r.n_records for r in record_distribution(analytics_view(spark, str(out))).collect()}
     assert hist == {0: 3, 1: 1, 2: 2}
@@ -197,11 +207,7 @@ def test_cli_end_to_end_with_log(tmp_path, capsys):
     debias.log (call-debias.py:16-22) appended in the output folder."""
     from debias_spark.cli import main
 
-    inp = tmp_path / "input"
-    for rel, content in CORPUS.items():
-        f = inp / rel
-        f.parent.mkdir(parents=True, exist_ok=True)
-        f.write_text(content)
+    inp = _write_corpus(tmp_path / "input")
     out = tmp_path / "out"
     rc = main(
         ["--input", str(inp), "--output", str(out), "--max-retries", "2",
@@ -218,6 +224,139 @@ def test_cli_end_to_end_with_log(tmp_path, capsys):
     assert pdfs and all(
         (out / n).read_bytes().startswith(b"%PDF-") for n in pdfs
     )
+
+
+def test_cli_partitioned_keeps_run_log(tmp_path):
+    """The partitioned sink replaces only its own language=* dirs: the
+    debias.log the CLI opened in the same folder survives the run."""
+    from debias_spark.cli import main
+
+    inp = _write_corpus(tmp_path / "input")
+    out = tmp_path / "out"
+    assert main(["--input", str(inp), "--output", str(out), "--partitioned"]) == 0
+    assert "run done" in (out / "debias.log").read_text()
+    assert {"language=en", "language=de", "_annotated"} <= {p.name for p in out.iterdir()}
+
+
+def test_partitioned_rerun_drops_stale_languages(spark, tmp_path):
+    """A rerun into the same folder whose corpus drops a language reads
+    back exactly the second run's records: no language dir of the first
+    run survives."""
+    inp, out = tmp_path / "input", tmp_path / "out"
+    cfg = PipelineConfig(str(inp), str(out), max_retries=2)
+    _write_corpus(inp)
+    run_pipeline(spark, cfg, per_file_compat=False)
+    second = {"en/alpha.csv": "1, big and slow\n7, all good\n"}
+    _write_corpus(inp, second)
+    run_pipeline(spark, cfg, per_file_compat=False)
+    back = spark.read.option("basePath", str(out)).json(f"{out}/language=*")
+    got = sorted(
+        (r.src_file, r.language, r.result.literal) for r in back.collect()
+    )
+    assert got == [
+        ("alpha.csv", "en", "1, big and slow"),
+        ("alpha.csv", "en", "7, all good"),
+    ]
+
+
+def test_annotator_runs_once_per_record(spark, tmp_path):
+    """run_pipeline stages the annotated corpus, so the sink, the CLI
+    summary, the report and any later action read one committed copy: the
+    client sees each input record exactly once."""
+    import functools
+
+    from debias_spark.annotate import LexiconClient
+    from debias_spark.cli import summary_frame
+    from debias_spark.report import render_reports
+    from debias_spark.sources import read_corpus
+
+    class Counting(LexiconClient):
+        def __init__(self, acc):
+            super().__init__()
+            self.acc = acc
+
+        def __call__(self, values, language):
+            self.acc.add(len(values))
+            return super().__call__(values, language)
+
+    acc = spark.sparkContext.accumulator(0)
+    inp, out = _write_corpus(tmp_path / "input"), tmp_path / "out"
+    cfg = PipelineConfig(str(inp), str(out), max_retries=2)
+    annotated = run_pipeline(
+        spark, cfg, client_factory=functools.partial(Counting, acc)
+    )
+    list(summary_frame(annotated).toLocalIterator())
+    render_reports(report_rows(annotated), str(out))
+    n = annotated.count()
+    assert n == read_corpus(spark, str(inp)).count() == 6
+    assert acc.value == n
+
+
+def test_outputs_agree_under_non_deterministic_client(spark, tmp_path):
+    """An API that answers the same line differently on each call: the
+    per-file flagged counts, the report rows and the written
+    <stem>-output.json tags still agree, because they all read the one
+    annotation run_pipeline staged."""
+    import functools
+    import os
+
+    from debias_spark.cli import summary_frame
+
+    class Drifting:
+        """Tags name the Python worker and its call count, and every other
+        record (shifted by the call count) is flagged: no two calls agree.
+        The count lives in a file per worker process, so it survives the
+        client being rebuilt for each task."""
+
+        def __init__(self, counter_dir):
+            self.counter_dir = counter_dir
+
+        def __call__(self, values, language):
+            path = os.path.join(self.counter_dir, f"calls-{os.getpid()}")
+            with open(path, "a") as fh:
+                fh.write(".")
+            n = os.path.getsize(path)
+            tag = {"literal": f"{os.getpid()}-{n}", "issue": "drift", "source": "test"}
+            return {
+                "results": [
+                    {"literal": v, "language": language,
+                     "tags": [tag] if (i + n) % 2 else []}
+                    for i, v in enumerate(values)
+                ]
+            }
+
+    inp, out = _write_corpus(tmp_path / "input"), tmp_path / "out"
+    cfg = PipelineConfig(str(inp), str(out), max_retries=2)
+    factory = functools.partial(Drifting, str(tmp_path))
+    annotated = run_pipeline(spark, cfg, client_factory=factory)
+    flagged = {r.src_file: r.flagged for r in summary_frame(annotated).collect()}
+    report = sorted(
+        (r.src_file, r.tag_details.split("\n")[0])
+        for r in report_rows(annotated).collect()
+    )
+    doc_flagged, doc_tags = {}, []
+    for name in ("alpha", "beta", "gamma"):
+        results = json.loads((out / f"{name}-output.json").read_text())["results"]
+        doc_flagged[f"{name}.csv"] = sum(1 for r in results if r["tags"])
+        doc_tags += [
+            (f"{name}.csv", f"Literal: {t['literal']}")
+            for r in results
+            for t in r["tags"]
+        ]
+    assert flagged == doc_flagged
+    assert report == sorted(doc_tags)
+
+
+def test_rerun_returns_fresh_annotations(spark, tmp_path):
+    """A second run into the same folder over a changed input returns the
+    new annotations, not rows from the first run."""
+    inp, out = tmp_path / "input", tmp_path / "out"
+    cfg = PipelineConfig(str(inp), str(out), max_retries=2)
+    for text, want in (("1, slow thing\n", ["slow"]), ("1, big thing\n", ["big"])):
+        _write_corpus(inp, {"en/alpha.csv": text})
+        annotated = run_pipeline(spark, cfg)
+        got = [(r.value, [t.literal for t in r.tags]) for r in annotated.collect()]
+        assert got == [(text.strip(), want)]
 
 
 def test_gui_headless_gating_and_logic():

@@ -222,6 +222,29 @@ def test_session_conf_writes_live_in_one_module():
     assert not hits, "session conf written outside session.py:\n" + "\n".join(hits)
 
 
+def test_pipeline_reuses_results_through_staged_writes_only():
+    """The annotated corpus is reused through one committed Parquet write
+    (``run_pipeline``'s ``_annotated/``), never through the cache manager
+    or executor-local blocks: a ``.cache(``, ``.persist(`` or
+    ``localCheckpoint(`` in pipeline.py, report.py, sources/ or annotate/
+    could serve an earlier run's rows for an identical plan, or lose them
+    with an executor."""
+    import pathlib
+    import re
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "debias_spark"
+    reuse = re.compile(r"\.cache\(|\.persist\(|localCheckpoint\(")
+    paths = [pkg / "pipeline.py", pkg / "report.py"]
+    paths += sorted((pkg / "sources").rglob("*.py")) + sorted((pkg / "annotate").rglob("*.py"))
+    hits = [
+        f"{path.relative_to(pkg)}:{i}: {line.strip()}"
+        for path in paths
+        for i, line in enumerate(path.read_text().splitlines(), 1)
+        if reuse.search(line)
+    ]
+    assert not hits, "pipeline result reused without a staged write:\n" + "\n".join(hits)
+
+
 def test_temp_views_and_tokenizer_live_in_one_place_each():
     """Keys hand frames to Spark SQL as arguments (``spark.sql(text,
     **frames)``), so a temp view is registered only by
