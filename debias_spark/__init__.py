@@ -12,7 +12,9 @@ columns, text analysis) mandated by the north star.
 Layout:
     session.py    SparkSession factory tuned for local testing + cluster scale
     catalog.py    testdata loaders / temp-view registration
-    registry.py   central query registry: name -> (spark_fn, duckdb_oracle)
+    registry.py   central query registry: name -> (spark_fn, duckdb_oracle);
+                  QUERIES/ORACLES fill on demand, as each key's module is
+                  imported on its first read through load_all_queries()
     annotate/     the deterministic batch annotator (reference call-debias.py)
     queries/      operator implementations grouped by SURVEY §2 sections
     pipeline.py   end-to-end scan->annotate->sink->analytics pipeline

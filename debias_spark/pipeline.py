@@ -30,7 +30,6 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from debias_spark.annotate import AnnotateConfig, analytics_frame, annotate, flagged
 from debias_spark.sources import (
@@ -142,7 +141,9 @@ def run_pipeline(
     # run's rows, and executor-local blocks do not survive executor loss.
     staged = f"{cfg.output_folder}/_annotated"
     annotated.write.mode("overwrite").parquet(staged)
-    annotated = spark.read.parquet(staged)
+    # Reading with the written schema skips Parquet's schema-inference job;
+    # the file source makes every field nullable, as inference would.
+    annotated = spark.read.schema(annotated.schema).parquet(staged)
     if per_file_compat:
         write_outputs_per_file(annotated, cfg.output_folder)
     else:

@@ -5,9 +5,9 @@ profiling — the remaining everyday steps of a training-data pipeline that
 the first two waves didn't cover.  All three are single-scan plans with
 DuckDB value oracles.
 
-Registration position matters: this module is imported after
-relational_ext3 and before reference_core so these keys sit inside the
-driver's first-50 correctness window (see queries/__init__.py).
+Registration position matters: these keys sit after relational_ext3's
+and before reference_core's in registry.KEY_MODULES, inside the driver's
+first-50 correctness window.
 """
 
 from __future__ import annotations

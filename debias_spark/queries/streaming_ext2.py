@@ -58,6 +58,7 @@ def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch shuffles only its own partial aggregate."""
     state_dir, ckpt_dir = fresh_scratch_dirs(spark, sf_dir, "fb_state", "fb_ckpt")
     stream = stream_events(spark, sf_dir)
+    written = []  # the state frame's schema, read back without inference
 
     def merge_batch(batch: DataFrame, batch_id: int) -> None:
         # n_users_lb merges per-batch countDistinct with max(), which equals
@@ -78,6 +79,7 @@ def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.round(F.col("value") * 100).cast("long")).alias("value_cents"),
         )
         swap_state_write(part, state_dir)
+        written.append(part.schema)
 
     # narrow drain (r14): the per-batch partial aggregate moves a
     # handful of event_type keys; 32-task batch plans were pure
@@ -90,6 +92,6 @@ def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             "stream_foreachbatch_upsert",
         )
     shutil.rmtree(ckpt_dir, ignore_errors=True)
-    return spark.read.parquet(state_dir).select(
+    return spark.read.schema(written[0]).parquet(state_dir).select(
         "event_type", "n_events", "n_users_lb", "value_cents"
     )

@@ -347,6 +347,49 @@ def test_outputs_agree_under_non_deterministic_client(spark, tmp_path):
     assert report == sorted(doc_tags)
 
 
+def test_staged_read_back_carries_the_written_schema(spark, tmp_path, monkeypatch):
+    """run_pipeline reads ``_annotated/`` back with the schema it wrote:
+    the frame equals Parquet's inferred read (file-source fields come back
+    nullable either way), and no job runs between the staging write and
+    the sink, where an inferring read runs one."""
+    from pyspark.sql import DataFrameWriter
+
+    import debias_spark.pipeline as pipeline
+
+    sc, group = spark.sparkContext, "staged-read-back"
+
+    def jobs():
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    marks = {}
+    write, sink = DataFrameWriter.parquet, pipeline.write_outputs_per_file
+
+    def spy_write(self, path, *args, **kwargs):
+        write(self, path, *args, **kwargs)
+        marks.setdefault(path, jobs())
+
+    def spy_sink(frame, out):
+        marks["sink"] = jobs()
+        return sink(frame, out)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy_write)
+    monkeypatch.setattr(pipeline, "write_outputs_per_file", spy_sink)
+    inp, out = _write_corpus(tmp_path / "input"), tmp_path / "out"
+    staged = f"{out}/_annotated"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        annotated = run_pipeline(spark, PipelineConfig(str(inp), str(out), max_retries=2))
+        assert marks["sink"] == marks[staged] > 0
+        before = jobs()
+        inferred = spark.read.parquet(staged)
+        assert jobs() == before + 1
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert annotated.schema == inferred.schema
+    order = ("src_file", "_seq")
+    assert annotated.orderBy(*order).collect() == inferred.orderBy(*order).collect()
+
+
 def test_rerun_returns_fresh_annotations(spark, tmp_path):
     """A second run into the same folder over a changed input returns the
     new annotations, not rows from the first run."""

@@ -245,6 +245,44 @@ def test_pipeline_reuses_results_through_staged_writes_only():
     assert not hits, "pipeline result reused without a staged write:\n" + "\n".join(hits)
 
 
+def test_key_order_lives_in_one_table():
+    """registry.KEY_MODULES is the one statement of the key order:
+    queries/__init__.py imports no module (an eager import list there
+    would be a second order), every ``@register(`` key under queries/
+    sits in the table exactly once under its own file's module, and a
+    full load in a fresh interpreter registers keys in table order."""
+    import ast
+    import pathlib
+    import subprocess
+    import sys
+
+    from debias_spark.registry import KEY_MODULES
+
+    root = pathlib.Path(__file__).resolve().parent.parent
+    pkg = root / "debias_spark" / "queries"
+    init = ast.parse((pkg / "__init__.py").read_text())
+    assert not [n for n in ast.walk(init) if isinstance(n, (ast.Import, ast.ImportFrom))]
+    found = []
+    for path in sorted(pkg.glob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.FunctionDef):
+                found += [
+                    (dec.args[0].value, path.stem)
+                    for dec in node.decorator_list
+                    if isinstance(dec, ast.Call) and getattr(dec.func, "id", None) == "register"
+                ]
+    assert len(found) == len({k for k, _ in found}), "a key is registered twice"
+    assert sorted(found) == sorted(KEY_MODULES.items())
+    load = (
+        "from debias_spark import registry\n"
+        "specs = registry.load_all_queries()\n"
+        "list(specs.values())\n"
+        "assert list(registry.QUERIES) == list(registry.KEY_MODULES)\n"
+        "assert list(registry.ORACLES) == [k for k, s in specs.items() if s.oracle]\n"
+    )
+    subprocess.run([sys.executable, "-c", load], cwd=root, check=True)
+
+
 def test_temp_views_and_tokenizer_live_in_one_place_each():
     """Keys hand frames to Spark SQL as arguments (``spark.sql(text,
     **frames)``), so a temp view is registered only by

@@ -319,3 +319,32 @@ def test_single_batch_stream_keys_reject_a_second_batch(
     with pytest.raises(Exception, match="stream_stream_join_attrib drained in >1"):
         specs["stream_stream_join_attrib"].fn(spark, sf_dir)
     assert spark.streams.active == []
+
+
+def test_foreachbatch_state_read_back_carries_the_written_schema(spark, sf_dir):
+    """stream_foreachbatch_upsert reads its state dir back with the schema
+    the batch wrote: the same frame as Parquet's inferred read, built
+    without the one-task inference job (the drain's own jobs run in the
+    stream's job group, not the caller's)."""
+    import os
+
+    from debias_spark.registry import load_all_queries
+
+    spec = load_all_queries()["stream_foreachbatch_upsert"]
+    sc, group = spark.sparkContext, "fb-state-read-back"
+    stream_events(spark, sf_dir)  # caches events.parquet's schema for the session
+
+    def jobs():
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        state = spec.fn(spark, sf_dir)
+        assert jobs() == 0
+        inferred = spark.read.parquet(os.path.dirname(state.inputFiles()[0]))
+        assert jobs() == 1
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    inferred = inferred.select(*state.columns)
+    assert state.schema == inferred.schema
+    assert state.orderBy("event_type").collect() == inferred.orderBy("event_type").collect()
