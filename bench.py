@@ -28,6 +28,26 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 SUSPECT_FACTOR = 1.3
 
 
+def _round_payloads(pattern: str):
+    """Parsed JSON of the round-anchored artifacts matching ``pattern``
+    next to this file, newest round first.  Ordered by the round number
+    in the name, not the filename: lexicographic order puts r9 after r12
+    and r99 after r100.  Unreadable files are skipped."""
+    import glob
+
+    def round_no(path: str) -> int:
+        m = re.search(r"_r(\d+)\.json$", path)
+        return int(m.group(1)) if m else -1
+
+    here = os.path.dirname(os.path.abspath(__file__))
+    for path in sorted(glob.glob(os.path.join(here, pattern)), key=round_no, reverse=True):
+        try:
+            with open(path) as fh:
+                yield json.load(fh)
+        except (OSError, ValueError):
+            continue
+
+
 def load_prev_bench() -> dict[str, float]:
     """Per-query tripwire BASELINE from the newest round-anchored bench
     artifact.  When the artifact carries a per-key variance band (round 8+:
@@ -37,43 +57,27 @@ def load_prev_bench() -> dict[str, float]:
     outside everything that round observed (r7 verdict item 5).  Older
     artifacts fall back to the single anchor value.  Missing/unparseable
     files mean no tripwire, not a failure."""
-    import glob
-
-    here = os.path.dirname(os.path.abspath(__file__))
     # Prefer the ROUND-ANCHORED full per-key artifacts (every key, no line
     # budget).  BENCH_full.json itself is deliberately excluded: every run
     # rewrites it, so using it would compare each run to the previous run
     # and let a slow drift ratchet in under the 1.3x factor unflagged —
     # the baseline must be the per-round snapshot, not the last run.
-    full = sorted(glob.glob(os.path.join(here, "BENCH_full_r*.json")))
-    for path in reversed(full):
-        try:
-            with open(path) as fh:
-                payload = json.load(fh)
-            queries = payload.get("queries") or {}
-            band = payload.get("band") or {}
-            if queries:
-                base = {k: float(v) for k, v in queries.items() if v and v > 0}
-                for k, mm in band.items():
-                    try:
-                        hi = float(mm[1])
-                    except (TypeError, ValueError, IndexError):
-                        continue
-                    if k in base and hi > base[k]:
-                        base[k] = hi
-                return base
-        except (OSError, ValueError):
-            continue
-    paths = sorted(glob.glob(os.path.join(here, "BENCH_r*.json")))
-    for path in reversed(paths):
-        try:
-            with open(path) as fh:
-                parsed = json.load(fh).get("parsed") or {}
-            queries = parsed.get("queries") or {}
-            if queries:
-                return {k: float(v) for k, v in queries.items() if v and v > 0}
-        except (OSError, ValueError):
-            continue
+    for payload in _round_payloads("BENCH_full_r*.json"):
+        queries = payload.get("queries") or {}
+        if queries:
+            base = {k: float(v) for k, v in queries.items() if v and v > 0}
+            for k, mm in (payload.get("band") or {}).items():
+                try:
+                    hi = float(mm[1])
+                except (TypeError, ValueError, IndexError):
+                    continue
+                if k in base and hi > base[k]:
+                    base[k] = hi
+            return base
+    for payload in _round_payloads("BENCH_r*.json"):
+        queries = (payload.get("parsed") or {}).get("queries") or {}
+        if queries:
+            return {k: float(v) for k, v in queries.items() if v and v > 0}
     return {}
 
 
@@ -178,22 +182,7 @@ def load_prev_floor() -> dict[str, float]:
     """Per-key band FLOOR (min across the previous round's closed-tree
     runs) from the newest round-anchored full artifact; single-value keys
     fall back to their anchor."""
-    import glob
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    # sort by parsed round number, not filename: lexicographic order puts
-    # r9 after r12 (and r99 after r100) across digit-count boundaries
-    def _round_no(p: str) -> int:
-        m = re.search(r"_r(\d+)\.json$", p)
-        return int(m.group(1)) if m else -1
-
-    candidates = sorted(glob.glob(os.path.join(here, "BENCH_full_r*.json")), key=_round_no)
-    for path in reversed(candidates):
-        try:
-            with open(path) as fh:
-                payload = json.load(fh)
-        except (OSError, ValueError):
-            continue
+    for payload in _round_payloads("BENCH_full_r*.json"):
         queries = payload.get("queries") or {}
         if not queries:
             continue

@@ -29,9 +29,6 @@ TABLES = [
     "embeddings",
 ]
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-SMOKE_SF_DIR = "/root/testdata/sf0.001"
-
 
 # Metadata-only schema cache (r14, guide §6): every spark.read.parquet()
 # without an explicit schema re-infers the schema by reading parquet

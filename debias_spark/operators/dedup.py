@@ -30,8 +30,7 @@ from pyspark.sql import functions as F
 
 def word_tokens(text: Column) -> Column:
     """Lowercased whitespace tokens (empty tokens dropped).  The one Spark
-    spelling of the tokenizer; the DuckDB oracles spell it
-    ``list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '')``.
+    spelling of the tokenizer; its DuckDB twin is ``WORD_TOKENS_DUCK``.
 
     Known divergence: Java's ``\\s`` includes the vertical tab ``\\x0B``
     and RE2's does not, so ``"a\\x0bb"`` is two tokens here and one in
@@ -39,6 +38,13 @@ def word_tokens(text: Column) -> Column:
     No fixture document contains ``\\x0B``; the fix waits for the
     adversarial fixtures of ROADMAP item 5."""
     return F.filter(F.split(F.lower(text), r"\s+"), lambda t: t != "")
+
+
+# DuckDB twins of word_tokens over a ``text`` column: every token (token
+# budgets and n-gram windows count repetitions) and the distinct set
+# (shingling, text.distinct_tokens)
+WORD_TOKENS_DUCK = "list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '')"
+DISTINCT_TOKENS_DUCK = f"list_distinct({WORD_TOKENS_DUCK})"
 
 
 def h60(x: Column) -> Column:
@@ -51,6 +57,12 @@ def h60(x: Column) -> Column:
 
 # SQL-text form of h60 for codegen-assembled expressions (Spark dialect)
 H60_SQL = "CAST(conv(substr(md5({x}), 1, 15), 16, 10) AS BIGINT)"
+
+
+def h60_duck(x: str) -> str:
+    """DuckDB spelling of h60 over the SQL expression ``x`` — the
+    identical value (verified bit-equal at sf0.001/0.01)."""
+    return f"(('0x' || substr(md5({x}), 1, 15))::BIGINT)"
 
 # MinHash permutation family: ONE md5-derived base hash per shingle, then
 # per-salt affine maps (a*base + b) mod P over the Mersenne prime P=2^31-1
@@ -271,6 +283,63 @@ def bands_from_sig_keep_sig(sig: DataFrame, num_hashes: int, bands: int) -> Data
     )
 
 
+def band_selects_duck(num_hashes: int, bands: int, from_cte: str = "sig") -> str:
+    """UNION ALL of per-band (id, band_id, band_hash) selects over a wide
+    signature CTE — the DuckDB twin of :func:`bands_from_sig`, factored
+    out so multi-band-config oracles (Y71) replay several band layouts
+    from ONE signature CTE."""
+    rpb = num_hashes // bands
+    return " UNION ALL ".join(
+        "SELECT id, {b} AS band_id, {bh} AS band_hash FROM {f}".format(
+            b=b,
+            f=from_cte,
+            bh=h60_duck(
+                "concat_ws(',', {}, '{}')".format(
+                    ", ".join(f"h{b * rpb + r}::VARCHAR" for r in range(rpb)),
+                    b,
+                )
+            ),
+        )
+        for b in range(bands)
+    )
+
+
+def minhash_ctes_duck(
+    num_hashes: int = 32, bands: int = 4, source: str = "documents"
+) -> tuple[str, str]:
+    """(cte_chain, jaccard_expr) for the DuckDB replay of
+    :func:`minhash_dedup`: same base-h60 + affine-permutation signatures,
+    band hashes, and bucket-representative window, as CTEs ``sh``, ``ex``,
+    ``sig``, ``banded`` and ``cand`` over ``source`` (documents, or an
+    upstream CTE such as the Z20/Z75 survivor sets)."""
+    sig_cols = ", ".join(
+        f"min(((({h60_duck('s')}) % {MINHASH_P}) * {a} + {b}) % {MINHASH_P})"
+        f" AS h{h}"
+        for h, (a, b) in enumerate(minhash_params(num_hashes))
+    )
+    band_selects = band_selects_duck(num_hashes, bands)
+    jac = (
+        "round(len(list_intersect(a.sh, b.sh))::DOUBLE"
+        " / len(list_distinct(a.sh || b.sh)), 4)"
+    )
+    ctes = f"""sh AS (
+        SELECT doc_id AS id, {DISTINCT_TOKENS_DUCK} AS sh FROM {source}
+        WHERE len({DISTINCT_TOKENS_DUCK}) > 0
+    ), ex AS (
+        SELECT id, unnest(sh) AS s FROM sh
+    ), sig AS (
+        SELECT id, {sig_cols} FROM ex GROUP BY id
+    ), banded AS (
+        {band_selects}
+    ), cand AS (
+        SELECT DISTINCT id, rep_id FROM (
+            SELECT id, min(id) OVER (PARTITION BY band_id, band_hash) AS rep_id
+            FROM banded
+        ) WHERE id > rep_id
+    )"""
+    return ctes, jac
+
+
 def minhash_dedup(
     df: DataFrame,
     id_col: str,
@@ -424,6 +493,39 @@ def duplicate_clusters(
     )
 
 
+def minhash_clusters_oracle(num_hashes: int = 32, bands: int = 4) -> str:
+    """DuckDB replay of :func:`duplicate_clusters` over the minhash pairs:
+    the pair CTEs feed a WITH RECURSIVE transitive closure (every node
+    collects all reachable ids; its cluster label is the minimum).
+    Recursion lives in the oracle, iteration (pointer-jumping min-label
+    propagation) in the engine; both compute the same fixpoint."""
+    ctes, jac = minhash_ctes_duck(num_hashes, bands)
+    return f"""
+    WITH RECURSIVE {ctes}, verified AS MATERIALIZED (
+        -- MATERIALIZED is load-bearing: without it DuckDB re-evaluates
+        -- the minhash chain on every ``reach`` recursion iteration
+        -- (measured 2.1 s -> 0.2 s at sf0.01, r10 verdict item 2)
+        SELECT c.id AS id, c.rep_id AS rep_id
+        FROM cand c JOIN sh a ON a.id = c.id JOIN sh b ON b.id = c.rep_id
+        WHERE {jac} >= 0.8
+    ), edges AS MATERIALIZED (
+        SELECT id AS src, rep_id AS dst FROM verified
+        UNION
+        SELECT rep_id AS src, id AS dst FROM verified
+    ), reach(node, r) AS (
+        SELECT doc_id AS node, doc_id AS r FROM documents
+        UNION
+        SELECT re.node, e.dst FROM reach re JOIN edges e ON e.src = re.r
+    ), labeled AS (
+        SELECT node AS id, min(r) AS cluster_id FROM reach GROUP BY node
+    ), sizes AS (
+        SELECT cluster_id, count(*) AS cluster_size FROM labeled GROUP BY cluster_id
+    )
+    SELECT l.id AS id, l.cluster_id AS cluster_id, s.cluster_size AS cluster_size
+    FROM labeled l JOIN sizes s USING (cluster_id)
+    """
+
+
 SIMHASH_BITS = 60  # h60 width; blocking shifts are relative to this
 
 
@@ -496,4 +598,158 @@ def simhash_pairs(
         .withColumn("hamming", F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))))
         .filter(F.col("hamming") <= max_hamming)
         .select("id_a", "id_b", "hamming")
+    )
+
+
+# --- incremental near-dup screen over sig-bearing band rows -----------------
+# The Z68 policy shared by the near-dup refresh (Z68) and both corpus
+# builds (Z75/Z76): a doc drops iff an EARLIER doc collides in >= 1 of
+# NEARDUP_BANDS bands with >= NEARDUP_MIN_MATCHES of NEARDUP_HASHES
+# matching signature components.
+NEARDUP_HASHES, NEARDUP_BANDS = 32, 4  # the H9 family constants
+# signature-estimated Jaccard >= 0.8  <=>  matching components >= 26
+# (ceil(0.8 * 32); the integer compare keeps the cut exact cross-engine)
+NEARDUP_MIN_MATCHES = 26
+# the same component count over the oracles' ``sig`` CTE pair (a, b)
+NEARDUP_MATCH_TERMS_DUCK = " + ".join(
+    f"(CASE WHEN a.h{k} = b.h{k} THEN 1 ELSE 0 END)" for k in range(NEARDUP_HASHES)
+)
+
+# Skew guard on the band-state candidate join (r11 verdict item 4):
+# boilerplate-heavy corpora concentrate docs in a few (band_id, band_hash)
+# buckets, and the probe-vs-state join then hands ONE task the whole hot
+# bucket's |state| x |probe| fan-out — AQE's skew split cannot help a
+# same-key fan-out, only oversized partitions of distinct keys.  The Z66
+# diagnose->remedy shape with a QUADRATIC work model: measure the hottest
+# bucket in the combined index; a bucket of mx rows does O(mx^2) pair
+# work, so the derived salt is r = ceil((mx / budget)^2) capped at the
+# shuffle width — the linear ceil(mx/budget) rule under-salts exactly when
+# it matters (fixture A/B: mx=8000, linear r=2 gave NO win over plain
+# because two shards collide on few shuffle partitions; r=16 halved the
+# wall).  When r >= 2 the PROBE side salts by hash(id) and the state side
+# EXPLODES across the r shards — every (id, j) pair still meets exactly
+# once (in id's shard), so the candidate set is bit-identical and the hot
+# bucket's work spreads over r tasks.  Budget 0 disables the guard (and
+# its one diagnose aggregation) entirely.
+_SALT_BUDGET = 4096  # bucket rows one task should carry un-salted
+_SALT_CAP = 32  # matches Z66's shuffle-width cap
+# observability for tests: salt factor derived by the LAST call
+LAST_SALT_R = 0
+
+
+def _salt_factor(idx: DataFrame) -> int:
+    """Autotuned salt factor for the band-state probe joins (the r11
+    diagnose->remedy shape shared by :func:`band_candidates` and
+    :func:`band_dropped_ids`): measure the hottest (j_band, j_hash)
+    bucket, apply the quadratic work model, floor at the shuffle width
+    when triggered, cap at _SALT_CAP.  Sets LAST_SALT_R."""
+    global LAST_SALT_R
+    r = 1
+    if _SALT_BUDGET > 0:
+        mx_row = (
+            idx.groupBy("j_band", "j_hash")
+            .count()
+            .agg(F.max("count").alias("mx"))
+            .first()
+        )
+        mx = int(mx_row.mx or 0)
+        # quadratic work model: r tasks of (mx/r) x probe work each; and
+        # once triggered, r floors at 2x the shuffle width — a small r
+        # just COLLIDES hot shards onto the same few partitions with no
+        # spread (fixture A/B: r=2/r=4 were no better or worse than
+        # plain; r=16 halved the wall on 8 shuffle partitions)
+        est = -(-(mx * mx) // (_SALT_BUDGET * _SALT_BUDGET))
+        if est >= 2:
+            sp = int(
+                idx.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
+            )
+            # the 2x-shuffle-width floor assumes NARROW shuffle widths
+            # (the Z68/Z76 drains run sp=8, floor 16 — the measured
+            # fixture); it is intentionally capped by _SALT_CAP, so at
+            # stock sp=200 any triggered guard yields r=_SALT_CAP: state
+            # replication costs r x, and spreading a hot bucket over 32
+            # of 200 partitions is already near-full task spread — a
+            # floor of 2*sp=400 would pay 12x more state for no extra
+            # parallelism on a 32-thread local runner (value unchanged:
+            # min(2*sp, cap) spelled explicitly instead of via the
+            # outer cap)
+            est = max(est, min(2 * sp, _SALT_CAP))
+        r = int(min(_SALT_CAP, max(1, est)))
+    LAST_SALT_R = r
+    return r
+
+
+def band_candidates(b_banded: DataFrame, idx: DataFrame) -> DataFrame:
+    """Distinct (id, j) candidate pairs from band-bucket collisions of the
+    drop's band rows against the combined index (state union in-drop),
+    with the autotuned salt guard above.  ``b_banded`` carries (id,
+    band_id, band_hash); ``idx`` carries (j, j_band, j_hash)."""
+    join_cond = (
+        (F.col("j_band") == F.col("band_id"))
+        & (F.col("j_hash") == F.col("band_hash"))
+        & (F.col("j") < F.col("id"))
+    )
+    r = _salt_factor(idx)
+    if r <= 1:
+        return b_banded.join(idx, join_cond).select("id", "j").distinct()
+    probe = b_banded.withColumn("salt", F.pmod(F.hash("id"), F.lit(r)))
+    state = idx.withColumn(
+        "salt", F.explode(F.sequence(F.lit(0), F.lit(r - 1)))
+    )
+    return (
+        probe.join(state, join_cond & (probe["salt"] == state["salt"]))
+        .select("id", "j")
+        .distinct()
+    )
+
+
+def band_dropped_ids(b_banded: DataFrame, idx: DataFrame) -> DataFrame:
+    """Distinct ids of probe docs with an EARLIER near-duplicate — the
+    r13 single-join respell of the band_candidates -> sig-join ->
+    pair-distinct chain.  Both inputs carry sig-bearing band rows
+    (id, h0..h{n-1}, band_id, band_hash; :func:`bands_from_sig_keep_sig`),
+    ``idx`` = state union in-drop.  Because each band row carries its own
+    full signature, the bucket collision AND the >= 26/32 component
+    agreement evaluate inside ONE LEFT SEMI join that stops at the first
+    qualifying earlier doc: candidate PAIRS are never materialized,
+    never distinct-shuffled (the old chain's O(candidate pairs)
+    exchange — 3M rows from one 2k-doc boilerplate bucket at sf0.1),
+    and never joined back to signature state.  Values are identical:
+    the 26-of-32 predicate reads the SAME full signatures, just carried
+    on the band row instead of re-joined, and "dropped iff EXISTS a
+    qualifying earlier doc" is exactly the declared predicate.  The
+    trade is wider state rows (the signature replicated across a doc's
+    4 band rows); the win is shuffles LINEAR in band rows regardless of
+    bucket skew.  The autotuned salt guard is shared with
+    band_candidates (same diagnose, same budget, same LAST_SALT_R
+    observability): probe rows salt by hash(id), index rows explode
+    across the r shards, so every (probe row, index row) pair still
+    meets exactly once and EXISTS is preserved bit-for-bit."""
+    num_hashes = sum(1 for c in b_banded.columns if c.startswith("h"))
+    match_terms = " + ".join(
+        f"(CASE WHEN h{k} = g{k} THEN 1 ELSE 0 END)" for k in range(num_hashes)
+    )
+    idx2 = idx.select(
+        F.col("id").alias("j"),
+        *[F.col(f"h{k}").alias(f"g{k}") for k in range(num_hashes)],
+        F.col("band_id").alias("j_band"),
+        F.col("band_hash").alias("j_hash"),
+    )
+    join_cond = (
+        (F.col("j_band") == F.col("band_id"))
+        & (F.col("j_hash") == F.col("band_hash"))
+        & (F.col("j") < F.col("id"))
+        & (F.expr(f"({match_terms}) >= {NEARDUP_MIN_MATCHES}"))
+    )
+    r = _salt_factor(idx2)
+    if r <= 1:
+        return b_banded.join(idx2, join_cond, "left_semi").select("id").distinct()
+    probe = b_banded.withColumn("salt", F.pmod(F.hash("id"), F.lit(r)))
+    state = idx2.withColumn(
+        "salt", F.explode(F.sequence(F.lit(0), F.lit(r - 1)))
+    )
+    return (
+        probe.join(state, join_cond & (probe["salt"] == state["salt"]), "left_semi")
+        .select("id")
+        .distinct()
     )

@@ -202,3 +202,20 @@ def synth_wav_payload(doc_id: int) -> bytes:
     n = 20 + doc_id % 17
     samples = [((doc_id * 31 + i * 17) % 65536) - 32768 for i in range(n)]
     return encode_wav(rate, samples)
+
+
+def synth_payload_frame(docs, synth):
+    """``(doc_id long, payload binary)``: ``synth(doc_id)`` bytes for each
+    row of ``docs`` (``synth_bmp_payload`` or ``synth_wav_payload``), in
+    one mapInPandas stage — REAL encoded bytes, so the decoder downstream
+    sees only the payload column.  pandas is imported inside the stage;
+    this module stays pure stdlib for executor-side decode."""
+
+    def gen(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            payloads = [synth(int(d)) for d in pdf["doc_id"]]
+            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+
+    return docs.select("doc_id").mapInPandas(gen, schema="doc_id long, payload binary")

@@ -9,7 +9,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from debias_spark.operators.dedup import word_tokens
+from debias_spark.operators.dedup import H60_SQL, WORD_TOKENS_DUCK, word_tokens
 
 # Small per-language function-word lists for the overlap heuristic.  Order
 # matters: ties resolve in list order (en > de > es > fr), deterministically.
@@ -169,6 +169,26 @@ QUALITY_VERDICT_DUCK = """CASE
                END"""
 
 
+# Dead-letter routing gate (Z72, replayed by Z74): first matching reason
+# wins.  ONE template, instantiated per engine with only the integer-div
+# operator differing (a transcription error in a hand-maintained copy
+# would only surface at the SFs where that arm fires — sf0.1 for
+# ws_heavy)
+ROUTE_MIN_CHARS = 180  # documents shorter than this quarantine as 'short'
+ROUTE_WS_MAX_PCT = 20  # whitespace above this percent -> 'ws_heavy'
+_ROUTE_REASON_TPL = """CASE
+    WHEN CAST(n_chars AS BIGINT) < {min_chars} THEN 'short'
+    WHEN (length(text) - length(replace(text, ' ', ''))) * 100
+         {intdiv} greatest(length(text), 1) >= {ws_pct} THEN 'ws_heavy'
+    ELSE NULL END"""
+ROUTE_REASON_DUCK = _ROUTE_REASON_TPL.format(
+    min_chars=ROUTE_MIN_CHARS, ws_pct=ROUTE_WS_MAX_PCT, intdiv="//"
+)
+ROUTE_REASON_SPARK = _ROUTE_REASON_TPL.format(
+    min_chars=ROUTE_MIN_CHARS, ws_pct=ROUTE_WS_MAX_PCT, intdiv="div"
+)
+
+
 def word_ngrams_frame(docs, n: int, id_col: str = "doc_id", text_col: str = "text"):
     """DISTINCT (id, gram) rows of n-token windows per document — the
     contamination-audit gram build (Y12), factored out so the bloom
@@ -202,3 +222,72 @@ def word_ngrams_frame(docs, n: int, id_col: str = "doc_id", text_col: str = "tex
         ),
     ).otherwise(F.array().cast("array<string>"))
     return ex.select(id_col, F.explode(grams).alias("gram"))
+
+
+# --- decontamination against a held-out eval split (Y12/Y72/Z75/Z76) ------
+EVAL_MAX_ID = 20  # docs below this id play the held-out benchmark set
+DECONTAM_GRAM_N = 8  # decontamination gram width (token windows)
+EVAL_GRAM_CAP = 500_000  # hard bound on the collected eval gram set
+
+# Y12's oracle, shared verbatim by the bloom-prefilter variant Y72: the
+# prefilter must provably compute the IDENTICAL result, so both keys
+# hash against the same oracle text
+NGRAM_AUDIT_ORACLE = f"""
+    WITH toks AS (
+        SELECT doc_id,
+               {WORD_TOKENS_DUCK} AS t
+        FROM documents
+    ), grams AS (
+        SELECT DISTINCT doc_id, gram FROM (
+            SELECT doc_id,
+                   unnest([array_to_string(t[i:i+7], ' ')
+                           -- len-7 upper bound: the inclusive slice t[i:i+7]
+                           -- clamps at i=len-6 to a 7-token gram the Spark
+                           -- lead(t,7) build never emits
+                           FOR i IN range(1, greatest(len(t) - 7, 0) + 1)])
+                       AS gram
+            FROM toks
+        )
+    ), eval_grams AS (
+        SELECT DISTINCT gram FROM grams WHERE doc_id < {EVAL_MAX_ID}
+    )
+    SELECT g.doc_id, count(*) AS n_hits,
+           min(g.gram) AS sample_gram
+    FROM grams g JOIN eval_grams e ON e.gram = g.gram
+    WHERE g.doc_id >= {EVAL_MAX_ID}
+    GROUP BY g.doc_id
+    """
+
+BLOOM_BITS = 1 << 17  # bloom width: 131072 bits = 2048 longs (~16 KB)
+
+
+def bloom_bits_literal(grams: list[str], m_bits: int = BLOOM_BITS) -> str:
+    """Build the bloom bit array driver-side from a bounded gram set and
+    return it as a Spark ``array(...)`` literal of signed longs — the
+    ~16 KB replacement for a broadcast hash table.  Shared by Y72 and the
+    corpus builds (Z75/Z76) so all provably probe the same filter."""
+    import hashlib
+
+    words = [0] * (m_bits // 64)
+    for g in grams:
+        hx = hashlib.md5(g.encode("utf-8")).hexdigest()
+        for h in (int(hx[:15], 16) % m_bits, int(hx[15:30], 16) % m_bits):
+            words[h // 64] |= 1 << (h % 64)
+    # signed-long wrap: Spark array<bigint> literals are signed 64-bit
+    words = [w - (1 << 64) if w >= (1 << 63) else w for w in words]
+    return "array(" + ",".join(f"{w}L" for w in words) + ")"
+
+
+def bloom_member(bits: str, m_bits: int = BLOOM_BITS) -> Column:
+    """Pure-expression bloom probe over a ``gram`` column: two md5-derived
+    hashes test their bits in the literal array — no UDF, no broadcast
+    hash table, runs inside whole-stage codegen.  ONE bits literal in the
+    plan: both probes run inside a forall over the two hash expressions
+    (md5 evaluated twice, not four times)."""
+    h1 = H60_SQL.format(x="gram") + f" % {m_bits}"
+    h2 = f"CAST(conv(substr(md5(gram), 16, 15), 16, 10) AS BIGINT) % {m_bits}"
+    return F.expr(
+        f"forall(array({h1}, {h2}), h ->"
+        f" (shiftright(element_at({bits}, CAST(h div 64 AS INT) + 1),"
+        f" CAST(h % 64 AS INT)) & 1) = 1)"
+    )

@@ -17,7 +17,15 @@ from pyspark.sql.window import Window
 from debias_spark.catalog import table
 from debias_spark.operators.skew import fan_out
 from debias_spark.operators import multimodal, similarity
-from debias_spark.operators.dedup import minhash_dedup, simhash_pairs, word_tokens
+from debias_spark.operators.dedup import (
+    DISTINCT_TOKENS_DUCK,
+    h60_duck,
+    minhash_clusters_oracle,
+    minhash_ctes_duck,
+    minhash_dedup,
+    simhash_pairs,
+    word_tokens,
+)
 from debias_spark.operators.text import (
     BPE_ISH_PATTERN,
     bpe_ish_token_count,
@@ -53,124 +61,15 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("rep_id", "n_copies")
 
 
-# DuckDB h60 spelling: identical value to operators.dedup.h60 (verified
-# bit-equal at sf0.001/0.01)
-def _h60_duck(x: str) -> str:
-    return f"(('0x' || substr(md5({x}), 1, 15))::BIGINT)"
-
-
-_DUCK_TOKENS = (
-    "list_distinct(list_filter(string_split_regex(lower(text), '\\s+'),"
-    " x -> x <> ''))"
-)
-
-
-def _band_selects_duck(num_hashes: int, bands: int, from_cte: str = "sig") -> str:
-    """UNION ALL of per-band (id, band_id, band_hash) selects over a wide
-    signature CTE — the DuckDB twin of operators.dedup.bands_from_sig,
-    factored out so multi-band-config oracles (Y71) replay several band
-    layouts from ONE signature CTE.  Text identical to the pre-split
-    _minhash_ctes emission."""
-    rpb = num_hashes // bands
-    return " UNION ALL ".join(
-        "SELECT id, {b} AS band_id, {bh} AS band_hash FROM {f}".format(
-            b=b,
-            f=from_cte,
-            bh=
-            _h60_duck(
-                "concat_ws(',', {}, '{}')".format(
-                    ", ".join(
-                        f"h{b * rpb + r}::VARCHAR" for r in range(rpb)
-                    ),
-                    b,
-                )
-            )
-        )
-        for b in range(bands)
-    )
-
-
-def _minhash_ctes(
-    num_hashes: int = 32, bands: int = 4, source: str = "documents"
-) -> tuple[str, str]:
-    """(cte_chain, jaccard_expr) for the DuckDB replay of minhash_dedup:
-    same base-h60 + affine-permutation signatures, band hashes, and
-    bucket-representative window.  Shared by the pair oracle, the
-    recursive-closure cluster oracle, and (via ``source``) the Z20
-    full-pipeline oracle, which runs the same chain over the exact-dedup
-    representatives CTE instead of raw documents."""
-    from debias_spark.operators.dedup import MINHASH_P, minhash_params
-
-    sig_cols = ", ".join(
-        f"min(((({_h60_duck('s')}) % {MINHASH_P}) * {a} + {b}) % {MINHASH_P})"
-        f" AS h{h}"
-        for h, (a, b) in enumerate(minhash_params(num_hashes))
-    )
-    band_selects = _band_selects_duck(num_hashes, bands)
-    jac = (
-        "round(len(list_intersect(a.sh, b.sh))::DOUBLE"
-        " / len(list_distinct(a.sh || b.sh)), 4)"
-    )
-    ctes = f"""sh AS (
-        SELECT doc_id AS id, {_DUCK_TOKENS} AS sh FROM {source}
-        WHERE len({_DUCK_TOKENS}) > 0
-    ), ex AS (
-        SELECT id, unnest(sh) AS s FROM sh
-    ), sig AS (
-        SELECT id, {sig_cols} FROM ex GROUP BY id
-    ), banded AS (
-        {band_selects}
-    ), cand AS (
-        SELECT DISTINCT id, rep_id FROM (
-            SELECT id, min(id) OVER (PARTITION BY band_id, band_hash) AS rep_id
-            FROM banded
-        ) WHERE id > rep_id
-    )"""
-    return ctes, jac
-
-
 def _minhash_oracle(num_hashes: int = 32, bands: int = 4) -> str:
     """DuckDB replay of minhash_dedup, value-for-value: pair output with
     exact-Jaccard verification against the bucket representative."""
-    ctes, jac = _minhash_ctes(num_hashes, bands)
+    ctes, jac = minhash_ctes_duck(num_hashes, bands)
     return f"""
     WITH {ctes}
     SELECT c.id AS id, c.rep_id AS rep_id, {jac} AS jaccard
     FROM cand c JOIN sh a ON a.id = c.id JOIN sh b ON b.id = c.rep_id
     WHERE {jac} >= 0.8
-    """
-
-
-def _clusters_oracle(num_hashes: int = 32, bands: int = 4) -> str:
-    """DuckDB replay of duplicate_clusters: the minhash pair CTEs feed a
-    WITH RECURSIVE transitive closure (every node collects all reachable
-    ids; its cluster label is the minimum).  SQL-expressible after all —
-    recursion lives in the oracle, iteration (pointer-jumping min-label
-    propagation) in the engine; both compute the same fixpoint."""
-    ctes, jac = _minhash_ctes(num_hashes, bands)
-    return f"""
-    WITH RECURSIVE {ctes}, verified AS MATERIALIZED (
-        -- MATERIALIZED is load-bearing: without it DuckDB re-evaluates
-        -- the minhash chain on every ``reach`` recursion iteration
-        -- (measured 2.1 s -> 0.2 s at sf0.01, r10 verdict item 2)
-        SELECT c.id AS id, c.rep_id AS rep_id
-        FROM cand c JOIN sh a ON a.id = c.id JOIN sh b ON b.id = c.rep_id
-        WHERE {jac} >= 0.8
-    ), edges AS MATERIALIZED (
-        SELECT id AS src, rep_id AS dst FROM verified
-        UNION
-        SELECT rep_id AS src, id AS dst FROM verified
-    ), reach(node, r) AS (
-        SELECT doc_id AS node, doc_id AS r FROM documents
-        UNION
-        SELECT re.node, e.dst FROM reach re JOIN edges e ON e.src = re.r
-    ), labeled AS (
-        SELECT node AS id, min(r) AS cluster_id FROM reach GROUP BY node
-    ), sizes AS (
-        SELECT cluster_id, count(*) AS cluster_size FROM labeled GROUP BY cluster_id
-    )
-    SELECT l.id AS id, l.cluster_id AS cluster_id, s.cluster_size AS cluster_size
-    FROM labeled l JOIN sizes s USING (cluster_id)
     """
 
 
@@ -190,7 +89,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return minhash_dedup(docs, "doc_id", "text", shingle_n=1, num_hashes=32, bands=4, threshold=0.8)
 
 
-@register("dedup_clusters", "H9e", oracle=_clusters_oracle(), bench=False)
+@register("dedup_clusters", "H9e", oracle=minhash_clusters_oracle(), bench=False)
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate CLUSTERS: connected components over the MinHash near-dup
     pair graph (min-label propagation with pointer jumping,
@@ -218,9 +117,9 @@ def _simhash_oracle(max_hamming: int = 4, block_bits: int = 8) -> str:
     shift = 60 - block_bits
     return f"""
     WITH tok AS (
-        SELECT doc_id AS id, unnest({_DUCK_TOKENS}) AS t FROM documents
+        SELECT doc_id AS id, unnest({DISTINCT_TOKENS_DUCK}) AS t FROM documents
     ), th AS (
-        SELECT id, {_h60_duck("t")} AS h FROM tok
+        SELECT id, {h60_duck("t")} AS h FROM tok
     ), votes AS (
         SELECT id, count(*) AS n, {votes} FROM th GROUP BY id
     ), fp AS (

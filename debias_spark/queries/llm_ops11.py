@@ -16,41 +16,16 @@ north-star multimodal extension (SURVEY §2.H).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    BinaryType,
-    LongType,
-    StructField,
-    StructType,
-)
 
 from debias_spark.catalog import table
+from debias_spark.operators.media_codec import (
+    synth_bmp_payload,
+    synth_payload_frame,
+    synth_wav_payload,
+)
 from debias_spark.operators.multimodal import extract_features
 from debias_spark.registry import register
-
-_PAYLOAD_SCHEMA = StructType(
-    [StructField("doc_id", LongType()), StructField("payload", BinaryType())]
-)
-
-
-def _synth_bmp_frame(docs: DataFrame) -> DataFrame:
-    """Deterministic BMP payloads: width/height are small functions of
-    doc_id, pixel (x, y) gray-coded per channel.  REAL encoded bytes — the
-    decoder downstream sees only the payload column."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from debias_spark.operators.media_codec import synth_bmp_payload
-
-        for pdf in batches:
-            payloads = [synth_bmp_payload(int(d)) for d in pdf["doc_id"]]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    return docs.select("doc_id").mapInPandas(gen, schema=_PAYLOAD_SCHEMA)
-
 
 @register(
     "multimodal_decode_dims",
@@ -83,7 +58,7 @@ def multimodal_decode_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
     the decode stage is embarrassingly parallel and IO-bound exactly like
     a real image corpus scan."""
     docs = table(spark, sf_dir, "documents")
-    decoded = extract_features(_synth_bmp_frame(docs), decode=True)
+    decoded = extract_features(synth_payload_frame(docs, synth_bmp_payload), decode=True)
     return decoded.select("doc_id", "media_format", "width", "height", "sum_r")
 
 
@@ -107,14 +82,7 @@ def multimodal_decode_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: same embarrassingly-parallel mapInPandas pair as Y30."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from debias_spark.operators.media_codec import synth_wav_payload
-
-        for pdf in batches:
-            payloads = [synth_wav_payload(int(d)) for d in pdf["doc_id"]]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
     docs = table(spark, sf_dir, "documents")
-    payloads = docs.select("doc_id").mapInPandas(gen, schema=_PAYLOAD_SCHEMA)
+    payloads = synth_payload_frame(docs, synth_wav_payload)
     decoded = extract_features(payloads, decode=True)
     return decoded.select("doc_id", "media_format", "sample_rate", "n_samples")

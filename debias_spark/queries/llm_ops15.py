@@ -16,18 +16,14 @@ from pyspark.sql.window import Window
 from debias_spark.catalog import table
 from debias_spark.numeric import EPS, floor_eps, floor_eps_sql
 from debias_spark.operators.bpe import bpe_encode_oracle, bpe_fit, word_freqs
-from debias_spark.operators.similarity import dot, l2_norm
+from debias_spark.operators.dedup import WORD_TOKENS_DUCK
+from debias_spark.operators.similarity import SEM_ASSIGN_CTE_DUCK, SEM_K, dot, l2_norm
 from debias_spark.registry import register
-
-_DUCK_ALL_TOKENS = (
-    "list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '')"
-)
-
 
 @register(
     "bpe_encode_corpus",
     "Y37",
-    oracle=bpe_encode_oracle(10, _DUCK_ALL_TOKENS),
+    oracle=bpe_encode_oracle(10, WORD_TOKENS_DUCK),
     bench=False,  # shares bpe_vocab_fit's 10 driver-synchronized fit rounds
 )
 def bpe_encode_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -73,31 +69,13 @@ def bpe_encode_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_K = 8  # pinned centroids: first K vectors, shared with Y32/Y33
 _SEM_THRESH_E4 = 3500
-
-_SEM_ASSIGN_CTE = f"""
-    WITH e AS MATERIALIZED (
-        SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-    ), c AS MATERIALIZED (
-        SELECT vec_id AS cent_id, v AS cv FROM e WHERE vec_id < {_K}
-    ), a AS MATERIALIZED (
-        SELECT vec_id, cent_id FROM (
-            SELECT e.vec_id, c.cent_id,
-                   row_number() OVER (
-                       PARTITION BY e.vec_id
-                       ORDER BY {floor_eps_sql("list_cosine_similarity(e.v, c.cv)", 10000)}
-                                    DESC, c.cent_id) AS rn
-            FROM e CROSS JOIN c
-        ) WHERE rn = 1
-    )
-"""
 
 
 @register(
     "semdedup_cluster_cosine",
     "Y38",
-    oracle=_SEM_ASSIGN_CTE + f"""
+    oracle=SEM_ASSIGN_CTE_DUCK + f"""
     SELECT a1.cent_id,
            a1.vec_id AS id_a, a2.vec_id AS id_b,
            {floor_eps_sql("list_cosine_similarity(e1.v, e2.v)", 10000)} AS sim_e4
@@ -125,7 +103,7 @@ def semdedup_cluster_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     Sims emit as floor-eps e4 integers and the threshold compares the
     INTEGER, so no float tie can split the engines at the boundary."""
     emb = table(spark, sf_dir, "embeddings")
-    cents = emb.filter(F.col("vec_id") < _K).select(
+    cents = emb.filter(F.col("vec_id") < SEM_K).select(
         F.col("vec_id").alias("cent_id"),
         F.col("embedding").alias("cv"),
         l2_norm(F.col("embedding")).alias("cn"),

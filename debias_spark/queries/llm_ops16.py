@@ -13,16 +13,15 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import BinaryType, LongType, StructField, StructType
 from pyspark.sql.window import Window
 
 from debias_spark.catalog import table
 from debias_spark.numeric import floor_eps, floor_eps_sql
 from debias_spark.operators.dedup import word_tokens
+from debias_spark.operators.media_codec import synth_payload_frame, synth_wav_payload
+from debias_spark.operators.similarity import PQ_DIMS, PQ_SUBSPACES
 from debias_spark.registry import register
 
-_PQ_SUBSPACES = 8
-_PQ_DIMS = 8  # 64-dim vectors -> 8 subvectors of 8 dims
 _PQ_CODES = 4  # codebook entries per subspace: first 4 vectors' subvectors
 
 
@@ -34,14 +33,14 @@ _PQ_CODES = 4  # codebook entries per subspace: first 4 vectors' subvectors
         SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
     ), sub AS MATERIALIZED (
         SELECT vec_id, j,
-               v[j * {_PQ_DIMS} + 1 : (j + 1) * {_PQ_DIMS}] AS sv
-        FROM e CROSS JOIN range(0, {_PQ_SUBSPACES}) r(j)
+               v[j * {PQ_DIMS} + 1 : (j + 1) * {PQ_DIMS}] AS sv
+        FROM e CROSS JOIN range(0, {PQ_SUBSPACES}) r(j)
     ), cb AS MATERIALIZED (
         SELECT j, vec_id AS code, sv AS cv FROM sub WHERE vec_id < {_PQ_CODES}
     ), scored AS (
         SELECT s.vec_id, s.j, cb.code,
                {floor_eps_sql("list_sum([ (s.sv[i] - cb.cv[i]) * (s.sv[i] - cb.cv[i])"
-                              f" FOR i IN range(1, {_PQ_DIMS} + 1) ])", 10000)} AS d_e4
+                              f" FOR i IN range(1, {PQ_DIMS} + 1) ])", 10000)} AS d_e4
         FROM sub s JOIN cb ON cb.j = s.j
     )
     SELECT vec_id, CAST(j AS INTEGER) AS subspace,
@@ -75,12 +74,12 @@ def embedding_pq_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sub = e.select(
         "vec_id",
-        F.explode(F.sequence(F.lit(0), F.lit(_PQ_SUBSPACES - 1))).alias("j"),
+        F.explode(F.sequence(F.lit(0), F.lit(PQ_SUBSPACES - 1))).alias("j"),
         "v",
     ).select(
         "vec_id",
         "j",
-        F.expr(f"slice(v, j * {_PQ_DIMS} + 1, {_PQ_DIMS})").alias("sv"),
+        F.expr(f"slice(v, j * {PQ_DIMS} + 1, {PQ_DIMS})").alias("sv"),
     )
     cb = sub.filter(F.col("vec_id") < _PQ_CODES).select(
         F.col("j").alias("cj"),
@@ -199,10 +198,6 @@ docs_vocab_drift_logratio.__doc__ = docs_vocab_drift_logratio.__doc__.replace(
     "{_DRIFT_TOP}", str(_DRIFT_TOP)
 )
 
-_PAYLOAD_SCHEMA = StructType(
-    [StructField("doc_id", LongType()), StructField("payload", BinaryType())]
-)
-
 _WIN = 8  # samples per energy window
 
 
@@ -238,13 +233,6 @@ def multimodal_audio_energy_windows(spark: SparkSession, sf_dir: str) -> DataFra
     Arrow batches, 1 row in -> n_windows rows out, no shuffle until the
     final rollup — embarrassingly parallel like Y30/Y31."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from debias_spark.operators.media_codec import synth_wav_payload
-
-        for pdf in batches:
-            payloads = [synth_wav_payload(int(d)) for d in pdf["doc_id"]]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
     def energies(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from debias_spark.operators.media_codec import decode_wav
 
@@ -263,7 +251,7 @@ def multimodal_audio_energy_windows(spark: SparkSession, sf_dir: str) -> DataFra
             )
 
     docs = table(spark, sf_dir, "documents")
-    payloads = docs.select("doc_id").mapInPandas(gen, schema=_PAYLOAD_SCHEMA)
+    payloads = synth_payload_frame(docs, synth_wav_payload)
     return payloads.mapInPandas(
         energies,
         schema="doc_id long, win_idx int, n_in_win long, energy long",

@@ -12,15 +12,11 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import BinaryType, LongType, StructField, StructType
 from pyspark.sql.window import Window
 
 from debias_spark.catalog import table
+from debias_spark.operators.media_codec import synth_bmp_payload, synth_payload_frame
 from debias_spark.registry import register
-
-_PAYLOAD_SCHEMA = StructType(
-    [StructField("doc_id", LongType()), StructField("payload", BinaryType())]
-)
 
 # hash window: 4 wide x 3 tall — every synthesized image is >= 4x3
 _HW, _HH = 4, 3
@@ -79,13 +75,6 @@ def multimodal_image_avghash_buckets(spark: SparkSession, sf_dir: str) -> DataFr
     the (hash) shuffle — at corpus scale the same plan feeds the
     within-bucket verify join."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from debias_spark.operators.media_codec import synth_bmp_payload
-
-        for pdf in batches:
-            payloads = [synth_bmp_payload(int(d)) for d in pdf["doc_id"]]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
     def hash_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from debias_spark.operators.media_codec import decode_bmp
 
@@ -105,7 +94,7 @@ def multimodal_image_avghash_buckets(spark: SparkSession, sf_dir: str) -> DataFr
             yield pd.DataFrame({"doc_id": ids, "ahash": hashes})
 
     docs = table(spark, sf_dir, "documents")
-    payloads = docs.select("doc_id").mapInPandas(gen, schema=_PAYLOAD_SCHEMA)
+    payloads = synth_payload_frame(docs, synth_bmp_payload)
     hashed = payloads.mapInPandas(hash_batches, schema="doc_id long, ahash long")
     return hashed.select(
         "doc_id",
@@ -168,13 +157,6 @@ def multimodal_palette_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_id) stays exact because a doc's pixels never split across
     batches."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from debias_spark.operators.media_codec import synth_bmp_payload
-
-        for pdf in batches:
-            payloads = [synth_bmp_payload(int(d)) for d in pdf["doc_id"]]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
     def hist_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from debias_spark.operators.media_codec import decode_bmp
 
@@ -198,7 +180,7 @@ def multimodal_palette_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
     docs = table(spark, sf_dir, "documents")
-    payloads = docs.select("doc_id").mapInPandas(gen, schema=_PAYLOAD_SCHEMA)
+    payloads = synth_payload_frame(docs, synth_bmp_payload)
     per_doc = payloads.mapInPandas(
         hist_batches, schema="doc_id long, bucket int, n long"
     )

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from debias_spark.catalog import table
 from debias_spark.numeric import floor_eps, floor_eps_sql
 from debias_spark.operators import similarity
+from debias_spark.operators.media_codec import synth_payload_frame, synth_wav_payload
 from debias_spark.registry import register
 
 _K_CAND = 10  # relevance candidates fed to MMR
@@ -283,18 +284,6 @@ def multimodal_audio_rms_by_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from collections.abc import Iterator
 
     import pandas as pd
-    from pyspark.sql.types import BinaryType, LongType, StructField, StructType
-
-    schema = StructType(
-        [StructField("doc_id", LongType()), StructField("payload", BinaryType())]
-    )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from debias_spark.operators.media_codec import synth_wav_payload
-
-        for pdf in batches:
-            payloads = [synth_wav_payload(int(d)) for d in pdf["doc_id"]]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
 
     def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from debias_spark.operators.media_codec import decode_wav
@@ -309,7 +298,7 @@ def multimodal_audio_rms_by_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame({"rate": rates, "n": ns, "sq": sqs})
 
     docs = table(spark, sf_dir, "documents")
-    payloads = docs.select("doc_id").mapInPandas(gen, schema=schema)
+    payloads = synth_payload_frame(docs, synth_wav_payload)
     decoded = payloads.mapInPandas(stats, schema="rate int, n long, sq long")
     return (
         decoded.groupBy(F.col("rate").alias("sample_rate"))

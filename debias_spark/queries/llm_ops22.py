@@ -16,7 +16,7 @@ from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
 from debias_spark.catalog import table
 from debias_spark.numeric import floor_eps, floor_eps_sql
-from debias_spark.queries.llm_ops11 import _synth_bmp_frame
+from debias_spark.operators.media_codec import synth_bmp_payload, synth_payload_frame
 from debias_spark.registry import register
 
 _TILE_SCHEMA = StructType(
@@ -73,7 +73,7 @@ def multimodal_image_tile_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     is exactly 4 rows per image.  bench=False: the per-pixel Python loop
     prices the decode, not the engine (same posture as MM5)."""
     docs = table(spark, sf_dir, "documents")
-    payloads = _synth_bmp_frame(docs)
+    payloads = synth_payload_frame(docs, synth_bmp_payload)
 
     def tiles(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from debias_spark.operators.media_codec import decode_bmp

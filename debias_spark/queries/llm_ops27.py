@@ -14,17 +14,14 @@ from pyspark.sql.window import Window
 
 from debias_spark.catalog import table
 from debias_spark.numeric import floor_eps, floor_eps_sql
-from debias_spark.operators.similarity import dot, l2_norm
-from debias_spark.queries.llm_ops15 import _SEM_ASSIGN_CTE
+from debias_spark.operators.similarity import SEM_ASSIGN_CTE_DUCK, SEM_K, dot, l2_norm
 from debias_spark.registry import register
-
-_K = 8  # pinned centroids, shared with Y32/Y38
 
 
 @register(
     "embedding_cluster_ari",
     "Y59",
-    oracle=_SEM_ASSIGN_CTE + f"""
+    oracle=SEM_ASSIGN_CTE_DUCK + f"""
     , ct AS MATERIALIZED (
         SELECT a.cent_id, e.label, count(*) AS n
         FROM a JOIN embeddings e ON e.vec_id = a.vec_id
@@ -64,7 +61,7 @@ def embedding_cluster_ari(spark: SparkSession, sf_dir: str) -> DataFrame:
     a (K x labels) map-side-combined aggregate; everything after is
     arithmetic on a bounded frame."""
     emb = table(spark, sf_dir, "embeddings")
-    cents = emb.filter(F.col("vec_id") < _K).select(
+    cents = emb.filter(F.col("vec_id") < SEM_K).select(
         F.col("vec_id").alias("cent_id"),
         F.col("embedding").alias("cv"),
         l2_norm(F.col("embedding")).alias("cn"),

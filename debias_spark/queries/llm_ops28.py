@@ -12,8 +12,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from debias_spark.catalog import table
-from debias_spark.operators.dedup import duplicate_clusters, minhash_dedup
-from debias_spark.queries.llm_ops import _clusters_oracle
+from debias_spark.operators.dedup import (
+    duplicate_clusters,
+    minhash_clusters_oracle,
+    minhash_dedup,
+)
 from debias_spark.registry import register
 
 
@@ -38,7 +41,7 @@ from debias_spark.registry import register
                row_number() OVER (
                    PARTITION BY c.cluster_id
                    ORDER BY d.n_chars DESC, c.id) AS rn
-        FROM ({_clusters_oracle()}) c
+        FROM ({minhash_clusters_oracle()}) c
         JOIN documents d ON d.doc_id = c.id
         WHERE c.cluster_size > 1
     ) b

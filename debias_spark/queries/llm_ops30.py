@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from debias_spark.catalog import table
-from debias_spark.operators.dedup import h60
+from debias_spark.operators.dedup import h60, minhash_ctes_duck
 from debias_spark.registry import register
 
 _W_CAP = 1000  # weight = min(n_chars, cap); acceptance P = weight / cap
@@ -85,9 +85,7 @@ def docs_importance_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _crosssource_oracle(num_hashes: int = 32, bands: int = 4) -> str:
     """DuckDB replay: the H9 pair pipeline joined to document sources,
     rolled up as an unordered source x source duplication matrix."""
-    from debias_spark.queries.llm_ops import _minhash_ctes
-
-    ctes, jac = _minhash_ctes(num_hashes, bands)
+    ctes, jac = minhash_ctes_duck(num_hashes, bands)
     return f"""
     WITH {ctes}, pairs AS (
         SELECT c.id, c.rep_id

@@ -17,8 +17,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from debias_spark.catalog import table
-from debias_spark.operators.dedup import MINHASH_P, jaccard, minhash_params
-from debias_spark.queries.llm_ops import _band_selects_duck, _DUCK_TOKENS, _h60_duck
+from debias_spark.operators.dedup import (
+    DISTINCT_TOKENS_DUCK,
+    MINHASH_P,
+    band_selects_duck,
+    h60_duck,
+    jaccard,
+    minhash_params,
+)
 from debias_spark.registry import register
 
 _NH = 32
@@ -39,7 +45,7 @@ _JAC = (
 
 def _autotune_oracle() -> str:
     sig_cols = ", ".join(
-        f"min(((({_h60_duck('s')}) % {MINHASH_P}) * {a} + {b}) % {MINHASH_P})"
+        f"min(((({h60_duck('s')}) % {MINHASH_P}) * {a} + {b}) % {MINHASH_P})"
         f" AS h{h}"
         for h, (a, b) in enumerate(minhash_params(_NH))
     )
@@ -47,7 +53,7 @@ def _autotune_oracle() -> str:
     stats = []
     for nb in _BAND_CHOICES:
         per_band.append(f"""
-    banded{nb} AS ({_band_selects_duck(_NH, nb)}),
+    banded{nb} AS ({band_selects_duck(_NH, nb)}),
     cand{nb} AS (
         SELECT DISTINCT x.id AS i, y.id AS j
         FROM banded{nb} x JOIN banded{nb} y
@@ -68,8 +74,8 @@ def _autotune_oracle() -> str:
                    AS n_hit""")
     return f"""
     WITH sh AS MATERIALIZED (
-        SELECT doc_id AS id, {_DUCK_TOKENS} AS sh FROM documents
-        WHERE doc_id % {_PROBE_MOD} = 0 AND len({_DUCK_TOKENS}) > 0
+        SELECT doc_id AS id, {DISTINCT_TOKENS_DUCK} AS sh FROM documents
+        WHERE doc_id % {_PROBE_MOD} = 0 AND len({DISTINCT_TOKENS_DUCK}) > 0
     ), ex AS (
         SELECT id, unnest(sh) AS s FROM sh
     ), sig AS MATERIALIZED (

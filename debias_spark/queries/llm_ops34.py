@@ -17,44 +17,16 @@ from pyspark.sql import functions as F
 
 from debias_spark.catalog import table
 from debias_spark.operators.skew import fan_out
-from debias_spark.operators.dedup import H60_SQL
-from debias_spark.queries.llm_ops7 import _EVAL_MAX_ID, NGRAM_AUDIT_ORACLE
+from debias_spark.operators.text import (
+    DECONTAM_GRAM_N,
+    EVAL_GRAM_CAP,
+    EVAL_MAX_ID,
+    NGRAM_AUDIT_ORACLE,
+    bloom_bits_literal,
+    bloom_member,
+    word_ngrams_frame,
+)
 from debias_spark.registry import register
-
-_M_BITS = 1 << 17  # bloom width: 131072 bits = 2048 longs (~16 KB)
-_GRAM_N = 8
-_EVAL_CAP = 500_000  # hard bound on the collected eval gram set
-
-def bloom_bits_literal(grams: list[str], m_bits: int = _M_BITS) -> str:
-    """Build the bloom bit array driver-side from a bounded gram set and
-    return it as a Spark ``array(...)`` literal of signed longs — the
-    ~16 KB replacement for a broadcast hash table.  Shared by Y72 and the
-    corpus-build capstone (Z75) so both provably probe the same filter."""
-    import hashlib
-
-    words = [0] * (m_bits // 64)
-    for g in grams:
-        hx = hashlib.md5(g.encode("utf-8")).hexdigest()
-        for h in (int(hx[:15], 16) % m_bits, int(hx[15:30], 16) % m_bits):
-            words[h // 64] |= 1 << (h % 64)
-    # signed-long wrap: Spark array<bigint> literals are signed 64-bit
-    words = [w - (1 << 64) if w >= (1 << 63) else w for w in words]
-    return "array(" + ",".join(f"{w}L" for w in words) + ")"
-
-
-def bloom_member(bits: str, m_bits: int = _M_BITS) -> F.Column:
-    """Pure-expression bloom probe over a ``gram`` column: two md5-derived
-    hashes test their bits in the literal array — no UDF, no broadcast
-    hash table, runs inside whole-stage codegen.  ONE bits literal in the
-    plan: both probes run inside a forall over the two hash expressions
-    (md5 evaluated twice, not four times)."""
-    h1 = H60_SQL.format(x="gram") + f" % {m_bits}"
-    h2 = f"CAST(conv(substr(md5(gram), 16, 15), 16, 10) AS BIGINT) % {m_bits}"
-    return F.expr(
-        f"forall(array({h1}, {h2}), h ->"
-        f" (shiftright(element_at({bits}, CAST(h div 64 AS INT) + 1),"
-        f" CAST(h % 64 AS INT)) & 1) = 1)"
-    )
 
 
 @register("docs_decontam_bloom_prefilter", "Y72", oracle=NGRAM_AUDIT_ORACLE)
@@ -77,30 +49,28 @@ def docs_decontam_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame
     only the (tiny) candidate stream.  The in-code selectivity assert
     pins that the prefilter actually filtered (a bloom sized too small
     degrades to a pass-through, silently un-doing the plan)."""
-    from debias_spark.operators.text import word_ngrams_frame
-
     docs = table(spark, sf_dir, "documents")
     # NOT checkpointed (r13): the gram build is a zero-exchange array
     # expression now (word_ngrams_frame respell), so recomputing the
     # map-only explode per consumer beats materializing the full gram
     # string stream (interleaved A/B at sf0.1: ~3.0 s vs ~3.3 s)
-    grams = word_ngrams_frame(fan_out(docs), _GRAM_N)  # scan-level fan_out
+    grams = word_ngrams_frame(fan_out(docs), DECONTAM_GRAM_N)  # scan-level fan_out
     # bounded driver-side collect: the eval set DEFINES the filter (same
     # class as the BPE merge-table collects); capped loudly
     eset = [
         r.gram
-        for r in grams.filter(F.col("doc_id") < _EVAL_MAX_ID)
+        for r in grams.filter(F.col("doc_id") < EVAL_MAX_ID)
         .select("gram")
         .distinct()
         .collect()
     ]
-    if len(eset) > _EVAL_CAP:
+    if len(eset) > EVAL_GRAM_CAP:
         raise RuntimeError(
-            f"eval gram set {len(eset)} exceeds the {_EVAL_CAP} bloom cap"
+            f"eval gram set {len(eset)} exceeds the {EVAL_GRAM_CAP} bloom cap"
         )
-    bits = bloom_bits_literal(eset, _M_BITS)
-    member = bloom_member(bits, _M_BITS)
-    train = grams.filter(F.col("doc_id") >= _EVAL_MAX_ID)
+    bits = bloom_bits_literal(eset)
+    member = bloom_member(bits)
+    train = grams.filter(F.col("doc_id") >= EVAL_MAX_ID)
     # selectivity guard in ONE aggregate pass (not two count jobs); a
     # raise, not assert — the guard must survive python -O
     st = train.agg(

@@ -26,6 +26,16 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from debias_spark.catalog import table
+from debias_spark.operators.similarity import (
+    IVF_DIM,
+    IVF_K,
+    IVF_SCORE_ROUND,
+    assign_cell,
+    dot,
+    ivf_pinned_centroids,
+    ivf_scores_duck,
+    l2_norm,
+)
 from debias_spark.operators.skew import fan_out
 from debias_spark.registry import register
 
@@ -33,30 +43,15 @@ from debias_spark.registry import register
 # Y5b: IVF ANN with pinned literal centroids (value-oracled twin of Y5)
 # ---------------------------------------------------------------------------
 
-_IVF_K, _IVF_DIM, _IVF_TOPK = 8, 64, 3
-_SCORE_ROUND = 6  # decimals for the pre-argmax score rounding (both engines)
+_IVF_TOPK = 3
 
 
 def _ivf_pinned_oracle() -> str:
-    from debias_spark.operators.similarity import ivf_pinned_centroids
-
-    cents = ivf_pinned_centroids(_IVF_K, _IVF_DIM)
-    # per-centroid scores rounded to _SCORE_ROUND decimals BEFORE the
-    # argmax, mirroring assign_cell(score_round=...) exactly: a near-tie
-    # cell can then never diverge on accumulation order between engines
-    scores = ", ".join(
-        "round(list_dot_product(v, [{}]::DOUBLE[]) - {}, {})".format(
-            ",".join(repr(c) for c in cent),
-            repr(float(sum(c * c for c in cent) / 2.0)),
-            _SCORE_ROUND,
-        )
-        for cent in cents
-    )
     return f"""
     WITH e AS (
         SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
     ), a AS (
-        SELECT vec_id, v, [{scores}] AS s FROM e
+        SELECT vec_id, v, [{ivf_scores_duck()}] AS s FROM e
     ), c AS (
         -- argmax with lowest-index tie-break: list_position returns the
         -- FIRST occurrence of the max, matching assign_cell's struct-max
@@ -98,21 +93,14 @@ def similarity_ann_ivf_pinned(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape: centroid literals broadcast in the plan itself; the probe
     join is cell-equi (never all-pairs); one corpus scan assigns, the
     bounded probe side reuses it."""
-    from debias_spark.operators.similarity import (
-        assign_cell,
-        dot,
-        ivf_pinned_centroids,
-        l2_norm,
-    )
-
-    cents = ivf_pinned_centroids(_IVF_K, _IVF_DIM)
+    cents = ivf_pinned_centroids(IVF_K, IVF_DIM)
     emb = table(spark, sf_dir, "embeddings")
     # one scan assigns cells + norms; both join sides are views of it
     cells = emb.select(
         F.col("vec_id").alias("cand_id"),
         F.col("embedding").alias("v"),
         l2_norm(F.col("embedding")).alias("nrm"),
-        assign_cell(F.col("embedding"), cents, score_round=_SCORE_ROUND).alias(
+        assign_cell(F.col("embedding"), cents, score_round=IVF_SCORE_ROUND).alias(
             "cell"
         ),
     ).localCheckpoint(eager=True)

@@ -12,8 +12,8 @@ over the accumulated state.
 
 Because an index absorbs drops and is not rebuilt, static and
 incremental builds must agree bit-for-bit: this key registers the
-IDENTICAL oracle as Y74 (llm_ops37.IVFPQ_ORACLE) — the driver
-hash-proves that the per-drop state appends reproduce the one-shot
+IDENTICAL oracle as Y74 (operators.similarity.ivfpq_oracle()), whose
+hash proves that the per-drop state appends reproduce the one-shot
 search exactly.
 
 Reference parity: the reference re-runs its whole program per
@@ -30,12 +30,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from debias_spark.catalog import table
-from debias_spark.queries.llm_ops37 import (
-    _PQ_CODES,
-    IVFPQ_ORACLE,
+from debias_spark.operators.similarity import (
+    PQ_CODES,
+    TOMB_DUCK,
+    ivfpq_oracle,
     ivfpq_search,
     pq_codebook,
     pq_index_frame,
+    tombstoned,
 )
 from debias_spark.streaming import drain_file_drops, narrow_shuffle
 from debias_spark.registry import register
@@ -52,7 +54,7 @@ from debias_spark.warehouse import (
 _N_DROPS = 2
 
 
-@register("similarity_ann_ivfpq_incremental", "Y75", oracle=IVFPQ_ORACLE)
+@register("similarity_ann_ivfpq_incremental", "Y75", oracle=ivfpq_oracle())
 def similarity_ann_ivfpq_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ search over an INCREMENTALLY-MAINTAINED index: the corpus
     arrives as two vec_id-ordered drops (availableNow file stream, one
@@ -88,7 +90,7 @@ def similarity_ann_ivfpq_incremental(spark: SparkSession, sf_dir: str) -> DataFr
     os.makedirs(src_dir)
 
     # stage _N_DROPS vec_id-ordered drops; the codebook contract
-    # (vec_id < _PQ_CODES present) rides in the first drop
+    # (vec_id < PQ_CODES present) rides in the first drop
     bounds = id_range_bounds(emb, "vec_id", _N_DROPS)
     t0 = time.time() - 3600
     for i in range(len(bounds) - 1):
@@ -125,14 +127,14 @@ def similarity_ann_ivfpq_incremental(spark: SparkSession, sf_dir: str) -> DataFr
     g = index.agg(
         F.count("*").alias("n"),
         F.count_distinct("vec_id").alias("nd"),
-        F.sum((F.col("vec_id") < _PQ_CODES).cast("long")).alias("ncb"),
+        F.sum((F.col("vec_id") < PQ_CODES).cast("long")).alias("ncb"),
     ).first()
     if g.n == 0 or g.n != g.nd:
         raise RuntimeError(
             f"incremental IVF-PQ state is corrupt: {g.n} rows, {g.nd} "
             "distinct vec_ids (must be equal and non-zero)"
         )
-    if g.ncb < _PQ_CODES:
+    if g.ncb < PQ_CODES:
         raise RuntimeError(
             "incremental IVF-PQ state is missing codebook-contract vectors"
         )
@@ -143,19 +145,11 @@ def similarity_ann_ivfpq_incremental(spark: SparkSession, sf_dir: str) -> DataFr
 # Y77: tombstone deletes — the third leg of index maintenance
 # ---------------------------------------------------------------------------
 
-# pinned delete request: every 97th vector above the codebook range (the
-# codebook contract ids and the probe set are never delete targets — a
-# real index pins its quantizer artifacts the same way)
-_TOMB_MOD, _TOMB_REM = 97, 3
-_TOMB_DUCK = f" WHERE NOT (vec_id % {_TOMB_MOD} = {_TOMB_REM} AND vec_id >= {_PQ_CODES})"
-
-from debias_spark.queries.llm_ops37 import _ivfpq_oracle  # noqa: E402
-
 
 @register(
     "similarity_ann_ivfpq_tombstone",
     "Y77",
-    oracle=_ivfpq_oracle(where=_TOMB_DUCK),
+    oracle=ivfpq_oracle(where=TOMB_DUCK),
 )
 def similarity_ann_ivfpq_tombstone(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ search under TOMBSTONE DELETES — the removal half of index
@@ -181,8 +175,6 @@ def similarity_ann_ivfpq_tombstone(spark: SparkSession, sf_dir: str) -> DataFram
     emb = table(spark, sf_dir, "embeddings")
     book = pq_codebook(emb)
     index = pq_index_frame(emb, book).localCheckpoint(eager=True)
-    tombs = emb.select("vec_id").filter(
-        (F.col("vec_id") % _TOMB_MOD == _TOMB_REM) & (F.col("vec_id") >= _PQ_CODES)
-    )
+    tombs = emb.select("vec_id").filter(tombstoned(F.col("vec_id")))
     live = index.join(F.broadcast(tombs), "vec_id", "anti")
     return ivfpq_search(spark, emb, live, book)

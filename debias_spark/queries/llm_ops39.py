@@ -33,19 +33,19 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from debias_spark.catalog import table
-from debias_spark.queries.llm_ops36 import _IVF_K
-from debias_spark.queries.llm_ops37 import (
-    _PQ_CODES,
-    _ivfpq_oracle,
+from debias_spark.operators.dedup import minhash_ctes_duck
+from debias_spark.operators.similarity import (
+    IVF_K,
+    TOMB_DUCK,
+    ivfpq_oracle,
     ivfpq_search,
     pq_codebook,
     pq_index_frame,
+    tombstoned,
 )
-from debias_spark.queries.llm_ops38 import _TOMB_DUCK, _TOMB_MOD, _TOMB_REM
-from debias_spark.queries.pipeline_e2e4 import _count_parquet_files
 from debias_spark.streaming import narrow_shuffle
 from debias_spark.registry import register
-from debias_spark.warehouse import fresh_scratch_dirs, id_range_bounds
+from debias_spark.warehouse import count_parquet_files, fresh_scratch_dirs, id_range_bounds
 
 # two drops (the r13 family-wide drop-count discipline): fragmentation
 # for the strictly-fewer-files proof needs >= 2 appends per cell (8
@@ -56,7 +56,7 @@ _N_DROPS = 2
 @register(
     "similarity_ann_ivfpq_compacted",
     "Y78",
-    oracle=_ivfpq_oracle(where=_TOMB_DUCK),
+    oracle=ivfpq_oracle(where=TOMB_DUCK),
 )
 def similarity_ann_ivfpq_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ search over a POST-TOMBSTONE COMPACTED index: the state
@@ -110,18 +110,16 @@ def similarity_ann_ivfpq_compacted(spark: SparkSession, sf_dir: str) -> DataFram
                 "cell"
             ).parquet(idx_dir)
 
-    files_before = _count_parquet_files(idx_dir)
+    files_before = count_parquet_files(idx_dir)
     state = spark.read.parquet(idx_dir)
-    tombs = emb.select("vec_id").filter(
-        (F.col("vec_id") % _TOMB_MOD == _TOMB_REM) & (F.col("vec_id") >= _PQ_CODES)
-    )
+    tombs = emb.select("vec_id").filter(tombstoned(F.col("vec_id")))
     live = state.join(F.broadcast(tombs), "vec_id", "anti")
 
     # THE COMPACTION REWRITE: one shuffle on the inverted-list key, one
     # file per cell out; masked rows are dropped by the anti-join ABOVE
     # the write, so they never reach the new files
-    live.repartition(_IVF_K, "cell").write.partitionBy("cell").parquet(compact_dir)
-    files_after = _count_parquet_files(compact_dir)
+    live.repartition(IVF_K, "cell").write.partitionBy("cell").parquet(compact_dir)
+    files_after = count_parquet_files(compact_dir)
     if files_after >= files_before:
         raise RuntimeError(
             f"compaction did not shrink the file count: {files_before} -> "
@@ -133,12 +131,7 @@ def similarity_ann_ivfpq_compacted(spark: SparkSession, sf_dir: str) -> DataFram
     # deletion proof + preservation proof (one pass each way; narrow rows)
     g = comp.agg(
         F.count("*").alias("n"),
-        F.sum(
-            (
-                (F.col("vec_id") % _TOMB_MOD == _TOMB_REM)
-                & (F.col("vec_id") >= _PQ_CODES)
-            ).cast("long")
-        ).alias("ghosts"),
+        F.sum(tombstoned(F.col("vec_id")).cast("long")).alias("ghosts"),
     ).first()
     if g.ghosts:
         raise RuntimeError(
@@ -166,9 +159,7 @@ _TOK_DUCK = (
 
 
 def _cluster_token_mass_oracle() -> str:
-    from debias_spark.queries.llm_ops import _minhash_ctes
-
-    ctes, jac = _minhash_ctes(32, 4)
+    ctes, jac = minhash_ctes_duck(32, 4)
     return f"""
     WITH RECURSIVE {ctes}, verified AS MATERIALIZED (
         SELECT c.id AS id, c.rep_id AS rep_id

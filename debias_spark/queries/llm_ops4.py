@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from debias_spark.catalog import table
-from debias_spark.operators.dedup import word_tokens
+from debias_spark.operators.dedup import minhash_ctes_duck, word_tokens
 from debias_spark.registry import register
 
 
@@ -799,13 +799,11 @@ def _pipeline_survivors_oracle() -> str:
     """DuckDB replay of the ENTIRE dedup pipeline (upgraded from rows-only
     in round 5): normalize + digest-window exact dedup, the minhash CTE
     chain re-rooted at the representatives CTE (the ``source`` parameter
-    of _minhash_ctes), exact-Jaccard verification, WITH RECURSIVE
+    of minhash_ctes_duck), exact-Jaccard verification, WITH RECURSIVE
     transitive closure, and min-per-cluster survivor selection — the
     H9/H9e oracle machinery composed end to end.  Regex note: DuckDB
     regexp_replace needs the 'g' flag to match Spark's replace-all."""
-    from debias_spark.queries.llm_ops import _minhash_ctes
-
-    ctes, jac = _minhash_ctes(num_hashes=32, bands=4, source="reps")
+    ctes, jac = minhash_ctes_duck(num_hashes=32, bands=4, source="reps")
     return f"""
     WITH RECURSIVE grp AS MATERIALIZED (
         SELECT doc_id, text,

@@ -14,17 +14,19 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from debias_spark.catalog import table
-from debias_spark.operators.dedup import minhash_banded, word_shingles, word_tokens
-from debias_spark.queries.llm_ops import _minhash_ctes
+from debias_spark.operators.dedup import (
+    WORD_TOKENS_DUCK,
+    minhash_banded,
+    minhash_ctes_duck,
+    word_shingles,
+    word_tokens,
+)
 from debias_spark.registry import register
 
 _TOKEN_BUDGET = 4000  # tokens per source
 
-# ALL tokens, not the distinct set _DUCK_TOKENS uses for shingling —
-# token BUDGETS count repetitions.
-_DUCK_ALL_TOKENS = (
-    "list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '')"
-)
+# token BUDGETS count repetitions: WORD_TOKENS_DUCK is every token, not
+# the distinct set shingling uses
 
 
 @register(
@@ -33,9 +35,9 @@ _DUCK_ALL_TOKENS = (
     oracle=f"""
     WITH t AS (
         SELECT source, doc_id,
-               CAST(len({_DUCK_ALL_TOKENS}) AS BIGINT) AS n_tokens,
+               CAST(len({WORD_TOKENS_DUCK}) AS BIGINT) AS n_tokens,
                (n_chars * 1000)
-                   // greatest(CAST(len({_DUCK_ALL_TOKENS}) AS BIGINT), 1)
+                   // greatest(CAST(len({WORD_TOKENS_DUCK}) AS BIGINT), 1)
                    AS score_milli
         FROM documents
     ), c AS (
@@ -86,7 +88,7 @@ def docs_token_budget_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _lsh_bucket_stats_oracle() -> str:
-    ctes, _ = _minhash_ctes(num_hashes=32, bands=4)
+    ctes, _ = minhash_ctes_duck(num_hashes=32, bands=4)
     return f"""
     WITH {ctes}, sizes AS (
         SELECT band_id, count(*) AS bucket_size

@@ -9,17 +9,14 @@ from pyspark.sql import DataFrame, SparkSession
 
 from debias_spark.catalog import table
 from debias_spark.operators.bpe import bpe_fit, bpe_oracle, word_freqs
+from debias_spark.operators.dedup import WORD_TOKENS_DUCK, minhash_ctes_duck
+from debias_spark.operators.text import EVAL_MAX_ID, NGRAM_AUDIT_ORACLE
 from debias_spark.registry import register
-
-_DUCK_ALL_TOKENS = (
-    "list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '')"
-)
-
 
 @register(
     "bpe_vocab_fit",
     "Y11",
-    oracle=bpe_oracle(10, _DUCK_ALL_TOKENS),
+    oracle=bpe_oracle(10, WORD_TOKENS_DUCK),
     bench=False,  # 10 driver-synchronized rounds; excluded like dedup_clusters
 )
 def bpe_vocab_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -35,39 +32,6 @@ def bpe_vocab_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     doctrine as dedup_clusters' recursive-CTE closure)."""
     docs = table(spark, sf_dir, "documents")
     return bpe_fit(spark, word_freqs(docs), n_merges=10)
-
-
-_EVAL_MAX_ID = 20  # docs below this id play the held-out benchmark set
-
-
-# shared by Y12 and the bloom-prefilter variant Y72 (llm_ops34): the
-# prefilter must provably compute the IDENTICAL result, so both keys
-# hash against the same oracle text
-NGRAM_AUDIT_ORACLE = f"""
-    WITH toks AS (
-        SELECT doc_id,
-               {_DUCK_ALL_TOKENS} AS t
-        FROM documents
-    ), grams AS (
-        SELECT DISTINCT doc_id, gram FROM (
-            SELECT doc_id,
-                   unnest([array_to_string(t[i:i+7], ' ')
-                           -- len-7 upper bound: the inclusive slice t[i:i+7]
-                           -- clamps at i=len-6 to a 7-token gram the Spark
-                           -- lead(t,7) build never emits
-                           FOR i IN range(1, greatest(len(t) - 7, 0) + 1)])
-                       AS gram
-            FROM toks
-        )
-    ), eval_grams AS (
-        SELECT DISTINCT gram FROM grams WHERE doc_id < {_EVAL_MAX_ID}
-    )
-    SELECT g.doc_id, count(*) AS n_hits,
-           min(g.gram) AS sample_gram
-    FROM grams g JOIN eval_grams e ON e.gram = g.gram
-    WHERE g.doc_id >= {_EVAL_MAX_ID}
-    GROUP BY g.doc_id
-    """
 
 
 @register("docs_contamination_ngram_audit", "Y12", oracle=NGRAM_AUDIT_ORACLE)
@@ -91,10 +55,10 @@ def docs_contamination_ngram_audit(spark: SparkSession, sf_dir: str) -> DataFram
     d = _table(spark, sf_dir, "documents")
     grams = word_ngrams_frame(fan_out(d), 8)  # scan-level fan_out (r13)
     eval_grams = (
-        grams.filter(F.col("doc_id") < _EVAL_MAX_ID).select("gram").distinct()
+        grams.filter(F.col("doc_id") < EVAL_MAX_ID).select("gram").distinct()
     )
     return (
-        grams.filter(F.col("doc_id") >= _EVAL_MAX_ID)
+        grams.filter(F.col("doc_id") >= EVAL_MAX_ID)
         .join(F.broadcast(eval_grams), "gram")
         .groupBy("doc_id")
         .agg(F.count("*").alias("n_hits"), F.min("gram").alias("sample_gram"))
@@ -189,9 +153,7 @@ def similarity_lsh_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _jaccard_hist_oracle() -> str:
-    from debias_spark.queries.llm_ops import _minhash_ctes
-
-    ctes, jac = _minhash_ctes(num_hashes=32, bands=4)
+    ctes, jac = minhash_ctes_duck(num_hashes=32, bands=4)
     return f"""
     WITH {ctes}, verified AS (
         SELECT {jac} AS j
@@ -338,9 +300,7 @@ def docs_lang_confusion_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _minhash_incremental_oracle(num_hashes: int = 32, bands: int = 4) -> str:
-    from debias_spark.queries.llm_ops import _minhash_ctes
-
-    ctes, jac = _minhash_ctes(num_hashes, bands)
+    ctes, jac = minhash_ctes_duck(num_hashes, bands)
     # reuse the sh/ex/sig/banded CTE chain, then split banded by batch
     # membership instead of self-joining the whole corpus
     return f"""

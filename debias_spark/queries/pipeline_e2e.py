@@ -99,8 +99,8 @@ def pipeline_incremental_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     norm = normalize_strict(F.col("text"))
 
-    def refresh(batch: DataFrame, batch_id: int) -> None:
-        ann = batch.select(
+    def survivors_of(frame: DataFrame) -> DataFrame:
+        ann = frame.select(
             F.md5(norm).alias("digest"),
             F.struct(
                 F.col("n_chars").cast("long").alias("n_chars"),
@@ -108,9 +108,16 @@ def pipeline_incremental_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("lang").alias("lang"),
             ).alias("b"),
         )
-        surv = ann.groupBy("digest").agg(F.max("b").alias("b"))
+        return ann.groupBy("digest").agg(F.max("b").alias("b"))
+
+    # the state dir's schema, read back with every batch and at the end
+    # (an inferring read runs a one-task footer job each time)
+    state_schema = survivors_of(docs).schema
+
+    def refresh(batch: DataFrame, batch_id: int) -> None:
+        surv = survivors_of(batch)
         if os.path.isdir(state_dir):
-            prev = batch.sparkSession.read.parquet(state_dir)
+            prev = batch.sparkSession.read.schema(state_schema).parquet(state_dir)
             surv = prev.unionByName(surv).groupBy("digest").agg(F.max("b").alias("b"))
         # never half-update state: parallel multi-file write + atomic
         # swap (warehouse.swap_state_write).  The merge groupBy already
@@ -133,14 +140,14 @@ def pipeline_incremental_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
             "micro-batch(es); the incremental merge path was not exercised"
         )
 
-    state = spark.read.parquet(state_dir)
+    state = spark.read.schema(state_schema).parquet(state_dir)
     survivors = state.select(
         F.col("b.lang").alias("lang"),
         F.col("b.n_chars").alias("n_chars"),
         (-F.col("b.nid")).cast("long").alias("keeper_id"),
     )
     survivors.write.mode("overwrite").partitionBy("lang").parquet(sink_dir)
-    rb = spark.read.parquet(sink_dir)
+    rb = spark.read.schema(survivors.schema).parquet(sink_dir)
     return (
         rb.groupBy("lang")
         .agg(

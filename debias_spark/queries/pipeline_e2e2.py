@@ -18,29 +18,28 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from debias_spark.catalog import table
+from debias_spark.operators.dedup import (
+    NEARDUP_BANDS,
+    NEARDUP_HASHES,
+    NEARDUP_MATCH_TERMS_DUCK,
+    NEARDUP_MIN_MATCHES,
+    band_dropped_ids,
+    minhash_ctes_duck,
+)
 from debias_spark.operators.text import NORMALIZE_STRICT_DUCK
 from debias_spark.operators.skew import fan_out
-from debias_spark.queries.llm_ops import _minhash_ctes
 from debias_spark.streaming import drain_file_drops, narrow_shuffle
 from debias_spark.registry import register
 from debias_spark.warehouse import (
     compact_partitioned_state,
+    count_parquet_files,
     fresh_scratch_dirs,
     id_range_bounds,
     stage_single_file_drop,
     swap_state_write,
 )
 
-_NH, _NB = 32, 4  # minhash hashes / bands (the H9 family constants)
-# signature-estimated Jaccard >= 0.8  <=>  matching components >= 26
-# (ceil(0.8 * 32); the integer compare keeps the cut exact cross-engine)
-_EST_MIN_MATCHES = 26
-
-_MATCH_TERMS_DUCK = " + ".join(
-    f"(CASE WHEN a.h{k} = b.h{k} THEN 1 ELSE 0 END)" for k in range(_NH)
-)
-
-_CTES, _ = _minhash_ctes(_NH, _NB)
+_CTES, _ = minhash_ctes_duck(NEARDUP_HASHES, NEARDUP_BANDS)
 
 # In-loop band-state compaction triggers only when some band partition
 # accumulates more than this many parquet files (r10 verdict item 5: the
@@ -57,153 +56,13 @@ LAST_COMPACTIONS = 0
 
 def _max_band_partition_files(band_dir: str) -> int:
     """Max parquet-file count across the hive band_id=* partitions."""
-    worst = 0
-    for d in os.listdir(band_dir):
-        if not d.startswith("band_id="):
-            continue
-        p = os.path.join(band_dir, d)
-        n = sum(1 for f in os.listdir(p) if f.endswith(".parquet"))
-        worst = max(worst, n)
-    return worst
-
-
-# Skew guard on the band-state candidate join (r11 verdict item 4):
-# boilerplate-heavy corpora concentrate docs in a few (band_id, band_hash)
-# buckets, and the probe-vs-state join then hands ONE task the whole hot
-# bucket's |state| x |probe| fan-out — AQE's skew split cannot help a
-# same-key fan-out, only oversized partitions of distinct keys.  The Z66
-# diagnose->remedy shape with a QUADRATIC work model: measure the hottest
-# bucket in the combined index; a bucket of mx rows does O(mx^2) pair
-# work, so the derived salt is r = ceil((mx / budget)^2) capped at the
-# shuffle width — the linear ceil(mx/budget) rule under-salts exactly when
-# it matters (fixture A/B: mx=8000, linear r=2 gave NO win over plain
-# because two shards collide on few shuffle partitions; r=16 halved the
-# wall).  When r >= 2 the PROBE side salts by hash(id) and the state side
-# EXPLODES across the r shards — every (id, j) pair still meets exactly
-# once (in id's shard), so the candidate set is bit-identical and the hot
-# bucket's work spreads over r tasks.  Budget 0 disables the guard (and
-# its one diagnose aggregation) entirely.
-_SALT_BUDGET = 4096  # bucket rows one task should carry un-salted
-_SALT_CAP = 32  # matches Z66's shuffle-width cap
-# observability for tests: salt factor derived by the LAST call
-LAST_SALT_R = 0
-
-
-def _salt_factor(idx: DataFrame) -> int:
-    """Autotuned salt factor for the band-state probe joins (the r11
-    diagnose->remedy shape shared by :func:`band_candidates` and
-    :func:`band_dropped_ids`): measure the hottest (j_band, j_hash)
-    bucket, apply the quadratic work model, floor at the shuffle width
-    when triggered, cap at _SALT_CAP.  Sets LAST_SALT_R."""
-    global LAST_SALT_R
-    r = 1
-    if _SALT_BUDGET > 0:
-        mx_row = (
-            idx.groupBy("j_band", "j_hash")
-            .count()
-            .agg(F.max("count").alias("mx"))
-            .first()
-        )
-        mx = int(mx_row.mx or 0)
-        # quadratic work model: r tasks of (mx/r) x probe work each; and
-        # once triggered, r floors at 2x the shuffle width — a small r
-        # just COLLIDES hot shards onto the same few partitions with no
-        # spread (fixture A/B: r=2/r=4 were no better or worse than
-        # plain; r=16 halved the wall on 8 shuffle partitions)
-        est = -(-(mx * mx) // (_SALT_BUDGET * _SALT_BUDGET))
-        if est >= 2:
-            sp = int(
-                idx.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-            )
-            # the 2x-shuffle-width floor assumes NARROW shuffle widths
-            # (the Z68/Z76 drains run sp=8, floor 16 — the measured
-            # fixture); it is intentionally capped by _SALT_CAP, so at
-            # stock sp=200 any triggered guard yields r=_SALT_CAP: state
-            # replication costs r x, and spreading a hot bucket over 32
-            # of 200 partitions is already near-full task spread — a
-            # floor of 2*sp=400 would pay 12x more state for no extra
-            # parallelism on a 32-thread local runner (value unchanged:
-            # min(2*sp, cap) spelled explicitly instead of via the
-            # outer cap)
-            est = max(est, min(2 * sp, _SALT_CAP))
-        r = int(min(_SALT_CAP, max(1, est)))
-    LAST_SALT_R = r
-    return r
-
-
-def band_candidates(b_banded: DataFrame, idx: DataFrame) -> DataFrame:
-    """Distinct (id, j) candidate pairs from band-bucket collisions of the
-    drop's band rows against the combined index (state union in-drop),
-    with the autotuned salt guard above.  ``b_banded`` carries (id,
-    band_id, band_hash); ``idx`` carries (j, j_band, j_hash)."""
-    join_cond = (
-        (F.col("j_band") == F.col("band_id"))
-        & (F.col("j_hash") == F.col("band_hash"))
-        & (F.col("j") < F.col("id"))
-    )
-    r = _salt_factor(idx)
-    if r <= 1:
-        return b_banded.join(idx, join_cond).select("id", "j").distinct()
-    probe = b_banded.withColumn("salt", F.pmod(F.hash("id"), F.lit(r)))
-    state = idx.withColumn(
-        "salt", F.explode(F.sequence(F.lit(0), F.lit(r - 1)))
-    )
-    return (
-        probe.join(state, join_cond & (probe["salt"] == state["salt"]))
-        .select("id", "j")
-        .distinct()
-    )
-
-
-def band_dropped_ids(b_banded: DataFrame, idx: DataFrame) -> DataFrame:
-    """Distinct ids of probe docs with an EARLIER near-duplicate — the
-    r13 single-join respell of the band_candidates -> sig-join ->
-    pair-distinct chain.  Both inputs carry sig-bearing band rows
-    (id, h0..h{n-1}, band_id, band_hash; :func:`bands_from_sig_keep_sig`),
-    ``idx`` = state union in-drop.  Because each band row carries its own
-    full signature, the bucket collision AND the >= 26/32 component
-    agreement evaluate inside ONE LEFT SEMI join that stops at the first
-    qualifying earlier doc: candidate PAIRS are never materialized,
-    never distinct-shuffled (the old chain's O(candidate pairs)
-    exchange — 3M rows from one 2k-doc boilerplate bucket at sf0.1),
-    and never joined back to signature state.  Values are identical:
-    the 26-of-32 predicate reads the SAME full signatures, just carried
-    on the band row instead of re-joined, and "dropped iff EXISTS a
-    qualifying earlier doc" is exactly the declared predicate.  The
-    trade is wider state rows (the signature replicated across a doc's
-    4 band rows); the win is shuffles LINEAR in band rows regardless of
-    bucket skew.  The autotuned salt guard is shared with
-    band_candidates (same diagnose, same budget, same LAST_SALT_R
-    observability): probe rows salt by hash(id), index rows explode
-    across the r shards, so every (probe row, index row) pair still
-    meets exactly once and EXISTS is preserved bit-for-bit."""
-    num_hashes = sum(1 for c in b_banded.columns if c.startswith("h"))
-    match_terms = " + ".join(
-        f"(CASE WHEN h{k} = g{k} THEN 1 ELSE 0 END)" for k in range(num_hashes)
-    )
-    idx2 = idx.select(
-        F.col("id").alias("j"),
-        *[F.col(f"h{k}").alias(f"g{k}") for k in range(num_hashes)],
-        F.col("band_id").alias("j_band"),
-        F.col("band_hash").alias("j_hash"),
-    )
-    join_cond = (
-        (F.col("j_band") == F.col("band_id"))
-        & (F.col("j_hash") == F.col("band_hash"))
-        & (F.col("j") < F.col("id"))
-        & (F.expr(f"({match_terms}) >= {_EST_MIN_MATCHES}"))
-    )
-    r = _salt_factor(idx2)
-    if r <= 1:
-        return b_banded.join(idx2, join_cond, "left_semi").select("id").distinct()
-    probe = b_banded.withColumn("salt", F.pmod(F.hash("id"), F.lit(r)))
-    state = idx2.withColumn(
-        "salt", F.explode(F.sequence(F.lit(0), F.lit(r - 1)))
-    )
-    return (
-        probe.join(state, join_cond & (probe["salt"] == state["salt"]), "left_semi")
-        .select("id")
-        .distinct()
+    return max(
+        (
+            count_parquet_files(os.path.join(band_dir, d))
+            for d in os.listdir(band_dir)
+            if d.startswith("band_id=")
+        ),
+        default=0,
     )
 
 
@@ -219,7 +78,7 @@ def band_dropped_ids(b_banded: DataFrame, idx: DataFrame) -> DataFrame:
     ), dropped AS (
         SELECT DISTINCT c.id FROM cand2 c
         JOIN sig a ON a.id = c.id JOIN sig b ON b.id = c.j
-        WHERE ({_MATCH_TERMS_DUCK}) >= {_EST_MIN_MATCHES}
+        WHERE ({NEARDUP_MATCH_TERMS_DUCK}) >= {NEARDUP_MIN_MATCHES}
     )
     SELECT d.lang,
            CAST(sum(CASE WHEN x.id IS NULL THEN 1 ELSE 0 END) AS BIGINT)
@@ -312,9 +171,10 @@ def pipeline_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     n_seen = 0
+    pay_schema = None  # the payload schema the batches wrote
 
     def refresh(batch: DataFrame, batch_id: int) -> None:
-        nonlocal n_seen
+        nonlocal n_seen, pay_schema
         n_seen += 1
         ss = batch.sparkSession
         batch = fan_out(batch)  # a staged drop scans as ONE partition (r13)
@@ -324,17 +184,17 @@ def pipeline_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the signature frame feeds three consumers (bands, probe side,
         # state append) and sits above a shuffle + crypto-hash pipeline:
         # checkpoint once (memory rule: checkpoint by reuse count)
-        b_sig = minhash_sig_wide(b_sh, _NH).localCheckpoint(eager=True)
+        b_sig = minhash_sig_wide(b_sh, NEARDUP_HASHES).localCheckpoint(eager=True)
         # sig-bearing band rows (r13): the band state carries each row's
         # full signature so the near-dup screen is ONE left-semi EXISTS
         # (band_dropped_ids) instead of pair-materialize + sig re-join +
         # pair distinct — no O(candidate pairs) exchange, shuffles stay
         # linear in band rows under bucket skew
-        b_banded = bands_from_sig_keep_sig(b_sig, _NH, _NB)
+        b_banded = bands_from_sig_keep_sig(b_sig, NEARDUP_HASHES, NEARDUP_BANDS)
 
         idx = b_banded
         if os.path.isdir(band_dir):
-            idx = ss.read.parquet(band_dir).unionByName(idx)
+            idx = ss.read.schema(b_banded.schema).parquet(band_dir).unionByName(idx)
         dropped = band_dropped_ids(b_banded, idx)
         payload = (
             batch.select(
@@ -352,6 +212,7 @@ def pipeline_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         # payloads flat
         b_banded.write.mode("append").partitionBy("band_id").parquet(band_dir)
         payload.write.mode("append").parquet(pay_dir)
+        pay_schema = payload.schema
         # MID-STREAM COMPACTION (the r9 watch item: per-batch appends
         # accumulate small files per band partition without bound):
         # when any band partition exceeds the file-count threshold the
@@ -369,7 +230,7 @@ def pipeline_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
             and os.path.isdir(band_dir)
             and _max_band_partition_files(band_dir) > _COMPACT_FILES
         ):
-            before, after = compact_partitioned_state(ss, band_dir, "band_id", _NB)
+            before, after = compact_partitioned_state(ss, band_dir, "band_id", NEARDUP_BANDS)
             # `after == before` is a legitimate no-op (a lowered
             # threshold can fire on an already-one-file-per-band state
             # when a micro-batch appended nothing — r11 advice); only a
@@ -390,7 +251,7 @@ def pipeline_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
             "micro-batch(es); the incremental screen was not exercised"
         )
 
-    pay = spark.read.parquet(pay_dir)
+    pay = spark.read.schema(pay_schema).parquet(pay_dir)
     keep = ~F.col("dropped")
     return (
         pay.groupBy("lang")
@@ -473,9 +334,8 @@ def pipeline_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     norm = normalize_strict(F.col("text"))
     rows: dict[int, int] = {}  # batch_id -> row count
 
-    def refresh(batch: DataFrame, batch_id: int) -> None:
-        rows[batch_id] = batch.count()
-        ann = batch.select(
+    def survivors_of(frame: DataFrame) -> DataFrame:
+        ann = frame.select(
             F.md5(norm).alias("digest"),
             F.struct(
                 F.col("n_chars").cast("long").alias("n_chars"),
@@ -483,9 +343,15 @@ def pipeline_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("source").alias("source"),
             ).alias("b"),
         )
-        surv = ann.groupBy("digest").agg(F.max("b").alias("b"))
+        return ann.groupBy("digest").agg(F.max("b").alias("b"))
+
+    state_schema = survivors_of(docs).schema  # what every batch writes
+
+    def refresh(batch: DataFrame, batch_id: int) -> None:
+        rows[batch_id] = batch.count()
+        surv = survivors_of(batch)
         if os.path.isdir(state_dir):
-            prev = batch.sparkSession.read.parquet(state_dir)
+            prev = batch.sparkSession.read.schema(state_schema).parquet(state_dir)
             surv = prev.unionByName(surv).groupBy("digest").agg(F.max("b").alias("b"))
         swap_state_write(surv, state_dir)
 
@@ -517,7 +383,7 @@ def pipeline_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     if second[0] <= max(first):
         raise RuntimeError(f"batch ids reset across drains: {rows}")
 
-    state = spark.read.parquet(state_dir)
+    state = spark.read.schema(state_schema).parquet(state_dir)
     return (
         state.select(
             F.col("b.source").alias("source"),

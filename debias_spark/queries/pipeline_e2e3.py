@@ -16,23 +16,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from debias_spark.catalog import table
+from debias_spark.operators.text import ROUTE_REASON_DUCK, ROUTE_REASON_SPARK
 from debias_spark.registry import register
 from debias_spark.warehouse import fresh_scratch_dirs
-
-_MIN_CHARS = 180  # gate 1: documents shorter than this quarantine as 'short'
-_WS_MAX_PCT = 20  # gate 2: whitespace above this percent -> 'ws_heavy'
-
-# first-match-wins reason: ONE template, instantiated per engine with
-# only the integer-div operator differing (a transcription error in a
-# hand-maintained copy would only surface at the SFs where that arm
-# fires — sf0.1 for ws_heavy)
-_REASON_TPL = """CASE
-    WHEN CAST(n_chars AS BIGINT) < {min_chars} THEN 'short'
-    WHEN (length(text) - length(replace(text, ' ', ''))) * 100
-         {intdiv} greatest(length(text), 1) >= {ws_pct} THEN 'ws_heavy'
-    ELSE NULL END"""
-_REASON_DUCK = _REASON_TPL.format(min_chars=_MIN_CHARS, ws_pct=_WS_MAX_PCT, intdiv="//")
-_REASON_SPARK = _REASON_TPL.format(min_chars=_MIN_CHARS, ws_pct=_WS_MAX_PCT, intdiv="div")
 
 
 @register(
@@ -41,7 +27,7 @@ _REASON_SPARK = _REASON_TPL.format(min_chars=_MIN_CHARS, ws_pct=_WS_MAX_PCT, int
     oracle=f"""
     WITH routed AS (
         SELECT lang, CAST(n_chars AS BIGINT) AS n_chars,
-               coalesce('quarantined:' || ({_REASON_DUCK}), 'kept') AS route
+               coalesce('quarantined:' || ({ROUTE_REASON_DUCK}), 'kept') AS route
         FROM documents
     )
     SELECT route, lang,
@@ -78,7 +64,7 @@ def pipeline_quarantine_dead_letter(spark: SparkSession, sf_dir: str) -> DataFra
         "doc_id",
         "lang",
         F.col("n_chars").cast("long").alias("n_chars"),
-        F.expr(_REASON_SPARK).alias("reason"),
+        F.expr(ROUTE_REASON_SPARK).alias("reason"),
     ).localCheckpoint(eager=True)
     routed.filter(F.col("reason").isNull()).drop("reason").write.parquet(keep_dir)
     routed.filter(F.col("reason").isNotNull()).write.parquet(dlq_dir)

@@ -3,7 +3,7 @@ called out for the pipeline family.
 
 * Z73 ``pipeline_state_compaction`` — the missing ops story for every
   append-only state dir the incremental keys carry (Z68's band state
-  accumulates small files per batch, pipeline_e2e2.py:202): rewrite N
+  accumulates small files per batch, pipeline_incremental_neardup): rewrite N
   per-batch appends into a few files per band partition and PROVE the
   probe results are unchanged (exact frame equality both directions +
   the value-oracled probe rollup computed FROM the compacted state).
@@ -23,28 +23,21 @@ zone operations a 100 TB corpus pipeline cannot run without.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from debias_spark.catalog import table
-from debias_spark.queries.llm_ops import _minhash_ctes
-from debias_spark.queries.pipeline_e2e3 import _REASON_DUCK, _REASON_SPARK
+from debias_spark.operators.dedup import NEARDUP_BANDS, NEARDUP_HASHES, minhash_ctes_duck
+from debias_spark.operators.text import (
+    ROUTE_MIN_CHARS,
+    ROUTE_REASON_DUCK,
+    ROUTE_REASON_SPARK,
+)
 from debias_spark.streaming import narrow_shuffle
 from debias_spark.registry import register
-from debias_spark.warehouse import fresh_scratch_dirs, id_range_bounds
+from debias_spark.warehouse import count_parquet_files, fresh_scratch_dirs, id_range_bounds
 
-_NH, _NB = 32, 4  # the H9/Z68 minhash family constants
-
-_CTES, _ = _minhash_ctes(_NH, _NB)
-
-
-def _count_parquet_files(root: str) -> int:
-    n = 0
-    for _, _, files in os.walk(root):
-        n += sum(1 for f in files if f.endswith(".parquet"))
-    return n
+_CTES, _ = minhash_ctes_duck(NEARDUP_HASHES, NEARDUP_BANDS)
 
 
 @register(
@@ -115,17 +108,17 @@ def pipeline_state_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("doc_id").alias("id"),
                 word_shingles(F.col("text"), 1).alias("sh"),
             ).filter(F.size("sh") > 0)
-            minhash_banded(sh, _NH, _NB).write.mode("append").partitionBy(
+            minhash_banded(sh, NEARDUP_HASHES, NEARDUP_BANDS).write.mode("append").partitionBy(
                 "band_id"
             ).parquet(band_dir)
 
-    files_before = _count_parquet_files(band_dir)
+    files_before = count_parquet_files(band_dir)
     orig = spark.read.parquet(band_dir).select("id", "band_hash", "band_id")
     # THE COMPACTION: one shuffle on the partition key, few files out
-    orig.repartition(_NB, "band_id").write.partitionBy("band_id").parquet(
+    orig.repartition(NEARDUP_BANDS, "band_id").write.partitionBy("band_id").parquet(
         compact_dir
     )
-    files_after = _count_parquet_files(compact_dir)
+    files_after = count_parquet_files(compact_dir)
     if files_after >= files_before:
         raise RuntimeError(
             f"compaction did not shrink the file count: {files_before} -> "
@@ -183,8 +176,6 @@ def pipeline_state_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Z74: quarantine replay-after-fix, exactly-once
 # ---------------------------------------------------------------------------
 
-_MIN_CHARS = 180  # must match Z72's gate (imported template uses it)
-
 # per-reason remedy, ONE template instantiated per engine (the Z72
 # doctrine): short docs pad to the gate length with a non-space filler,
 # ws-heavy docs collapse space runs; the remedy may STILL fail the
@@ -192,10 +183,10 @@ _MIN_CHARS = 180  # must match Z72's gate (imported template uses it)
 _REMEDY_TPL = """CASE ({reason}) WHEN 'short' THEN rpad(text, {min_chars}, '.')
     ELSE regexp_replace(text, ' +', ' '{gflag}) END"""
 _REMEDY_DUCK = _REMEDY_TPL.format(
-    reason=_REASON_DUCK, min_chars=_MIN_CHARS, gflag=", 'g'"
+    reason=ROUTE_REASON_DUCK, min_chars=ROUTE_MIN_CHARS, gflag=", 'g'"
 )
 _REMEDY_SPARK = _REMEDY_TPL.format(
-    reason=_REASON_SPARK, min_chars=_MIN_CHARS, gflag=""
+    reason=ROUTE_REASON_SPARK, min_chars=ROUTE_MIN_CHARS, gflag=""
 )
 
 
@@ -205,7 +196,7 @@ _REMEDY_SPARK = _REMEDY_TPL.format(
     oracle=f"""
     WITH r1 AS (
         SELECT doc_id, lang, CAST(n_chars AS BIGINT) AS n_chars, text,
-               ({_REASON_DUCK}) AS reason
+               ({ROUTE_REASON_DUCK}) AS reason
         FROM documents
     ), fx AS (
         SELECT doc_id, lang, ({_REMEDY_DUCK}) AS text
@@ -214,7 +205,7 @@ _REMEDY_SPARK = _REMEDY_TPL.format(
         SELECT doc_id, lang, CAST(length(text) AS BIGINT) AS n_chars, text
         FROM fx
     ), regated AS (
-        SELECT doc_id, lang, n_chars, ({_REASON_DUCK}) AS reason2 FROM r2
+        SELECT doc_id, lang, n_chars, ({ROUTE_REASON_DUCK}) AS reason2 FROM r2
     )
     SELECT route, lang, CAST(count(*) AS BIGINT) AS n_docs,
            CAST(sum(n_chars) AS BIGINT) AS sum_chars
@@ -260,7 +251,7 @@ def pipeline_quarantine_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lang",
         F.col("n_chars").cast("long").alias("n_chars"),
         "text",
-        F.expr(_REASON_SPARK).alias("reason"),
+        F.expr(ROUTE_REASON_SPARK).alias("reason"),
     ).localCheckpoint(eager=True)
     routed.filter(F.col("reason").isNull()).select(
         "doc_id", "lang", "n_chars", F.lit(False).alias("replayed")
@@ -278,7 +269,7 @@ def pipeline_quarantine_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lang",
         F.length("text").cast("long").alias("n_chars"),
         "text",
-    ).withColumn("reason2", F.expr(_REASON_SPARK)).localCheckpoint(eager=True)
+    ).withColumn("reason2", F.expr(ROUTE_REASON_SPARK)).localCheckpoint(eager=True)
     regated.filter(F.col("reason2").isNull()).select(
         "doc_id", "lang", "n_chars", F.lit(True).alias("replayed")
     ).write.mode("append").parquet(kept_dir)

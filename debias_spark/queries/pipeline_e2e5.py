@@ -15,36 +15,56 @@ SHARED implementation its standalone key pins (imported, not respelled),
 and the DuckDB oracle replays the entire chain — gate expressions,
 digest policy, 32-hash banding, 8-gram screen, recursive bin packing —
 in one WITH RECURSIVE chain over the same parquet.
+
+Z76 ``pipeline_corpus_build_incremental`` runs the same chain the way a
+100 TB corpus is actually operated — incrementally, drop by drop, with
+the dedup stages probing persisted state (see its docstring).  Batch
+and incremental builds must agree bit-for-bit, so both keys register
+the one ``CORPUS_BUILD_ORACLE``.
 """
 
 from __future__ import annotations
+
+import os
+import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from debias_spark.catalog import table
+from debias_spark.operators.dedup import (
+    NEARDUP_BANDS,
+    NEARDUP_HASHES,
+    NEARDUP_MATCH_TERMS_DUCK,
+    NEARDUP_MIN_MATCHES,
+    WORD_TOKENS_DUCK,
+    band_dropped_ids,
+    bands_from_sig_keep_sig,
+    minhash_ctes_duck,
+    minhash_sig_wide,
+    word_shingles,
+    word_tokens,
+)
 from debias_spark.operators.packing import PACK_CAP, PACK_SHARD, nfd_pack, nfd_pack_duck_ctes
+from debias_spark.operators.skew import fan_out
 from debias_spark.operators.text import (
+    DECONTAM_GRAM_N,
+    EVAL_GRAM_CAP,
+    EVAL_MAX_ID,
     NORMALIZE_STRICT_DUCK,
     QUALITY_PUNCT_DUCK,
     QUALITY_TOKENS_DUCK,
     QUALITY_VERDICT_DUCK,
-)
-from debias_spark.operators.skew import fan_out
-from debias_spark.queries.llm_ops import _minhash_ctes
-from debias_spark.queries.llm_ops7 import _DUCK_ALL_TOKENS, _EVAL_MAX_ID
-from debias_spark.queries.pipeline_e2e2 import (
-    _EST_MIN_MATCHES,
-    _MATCH_TERMS_DUCK,
-    _NB,
-    _NH,
-    band_dropped_ids,
+    bloom_bits_literal,
+    bloom_member,
+    normalize_strict,
+    quality_features,
+    quality_verdict,
+    word_ngrams_frame,
 )
 from debias_spark.registry import register
-from debias_spark.warehouse import fresh_scratch_dirs
-
-_GRAM_N = 8  # decontamination gram width (the Y12/Y72 constant)
-_EVAL_CAP = 500_000  # hard bound on the collected eval gram set (Y72)
+from debias_spark.streaming import drain_file_drops, narrow_shuffle
+from debias_spark.warehouse import fresh_scratch_dirs, id_range_bounds, stage_single_file_drop
 
 # The eval set is STATIC BY CONTRACT (doc_id < eval cutoff of an immutable
 # table): its distinct-gram list and bloom bit literal are per-corpus
@@ -61,11 +81,6 @@ _EVAL_CACHE: dict[tuple, tuple[list[str], str]] = {}
 def eval_gram_artifacts(spark: SparkSession, sf_dir: str) -> tuple[list[str], str]:
     """(eset, bloom_bits_literal) for the static eval split, memoized per
     (sf_dir, documents-file mtime+size)."""
-    import os
-
-    from debias_spark.operators.text import word_ngrams_frame
-    from debias_spark.queries.llm_ops34 import bloom_bits_literal
-
     path = os.path.join(sf_dir, "documents.parquet")
     try:
         st = os.stat(path)
@@ -78,44 +93,45 @@ def eval_gram_artifacts(spark: SparkSession, sf_dir: str) -> tuple[list[str], st
     docs = table(spark, sf_dir, "documents")
     eval_grams = (
         word_ngrams_frame(
-            fan_out(docs.filter(F.col("doc_id") < _EVAL_MAX_ID)), _GRAM_N
+            fan_out(docs.filter(F.col("doc_id") < EVAL_MAX_ID)), DECONTAM_GRAM_N
         )
         .select("gram")
         .distinct()
     )
     eset = [r.gram for r in eval_grams.collect()]
-    if len(eset) > _EVAL_CAP:
+    if len(eset) > EVAL_GRAM_CAP:
         raise RuntimeError(
-            f"eval gram set {len(eset)} exceeds the {_EVAL_CAP} bloom cap"
+            f"eval gram set {len(eset)} exceeds the {EVAL_GRAM_CAP} bloom cap"
         )
     bits = bloom_bits_literal(eset)
     _EVAL_CACHE.clear()
     _EVAL_CACHE[key] = (eset, bits)
     return eset, bits
 
+
 _VERDICT_DUCK = QUALITY_VERDICT_DUCK.format(
     n_chars="n_chars", n_tokens="n_tokens", n_punct="n_punct"
 )
-_NEARDUP_CTES, _ = _minhash_ctes(_NH, _NB, source="s1")
+_NEARDUP_CTES, _ = minhash_ctes_duck(NEARDUP_HASHES, NEARDUP_BANDS, source="s1")
 
 # token 8-gram windows over a (doc_id, text) CTE — the Y12 oracle
-# spelling (llm_ops7.py), parameterized by source CTE
+# spelling (operators.text.NGRAM_AUDIT_ORACLE), parameterized by source CTE
 _GRAMS_DUCK = """SELECT DISTINCT doc_id, gram FROM (
         SELECT doc_id,
                unnest([array_to_string(t[i:i+{w}], ' ')
                        FOR i IN range(1, greatest(len(t) - {w}, 0) + 1)])
                    AS gram
         FROM (SELECT doc_id, {toks} AS t FROM {src})
-    )""".format(w=_GRAM_N - 1, toks=_DUCK_ALL_TOKENS, src="{src}")
+    )""".format(w=DECONTAM_GRAM_N - 1, toks=WORD_TOKENS_DUCK, src="{src}")
 
 
-# shared with the incremental twin (Z76, pipeline_e2e6.py): batch and
+# shared with the incremental twin (Z76, below): batch and
 # incremental corpus builds MUST produce the identical manifest, so they
 # carry the identical oracle
 CORPUS_BUILD_ORACLE = f"""
     WITH RECURSIVE pool AS MATERIALIZED (
         SELECT doc_id, text, CAST(n_chars AS BIGINT) AS n_chars
-        FROM documents WHERE doc_id >= {_EVAL_MAX_ID}
+        FROM documents WHERE doc_id >= {EVAL_MAX_ID}
     ), qf AS (
         SELECT doc_id, text, {_VERDICT_DUCK} AS verdict
         FROM (
@@ -141,13 +157,13 @@ CORPUS_BUILD_ORACLE = f"""
     ), dropped AS (
         SELECT DISTINCT c.id FROM cand2 c
         JOIN sig a ON a.id = c.id JOIN sig b ON b.id = c.j
-        WHERE ({_MATCH_TERMS_DUCK}) >= {_EST_MIN_MATCHES}
+        WHERE ({NEARDUP_MATCH_TERMS_DUCK}) >= {NEARDUP_MIN_MATCHES}
     ), s2 AS MATERIALIZED (
         SELECT s1.doc_id, s1.text FROM s1
         LEFT JOIN dropped d ON d.id = s1.doc_id WHERE d.id IS NULL
     ), g2 AS ({_GRAMS_DUCK.format(src="s2")}
     ), eg AS (
-        SELECT DISTINCT gram FROM ({_GRAMS_DUCK.format(src=f"(SELECT doc_id, text FROM documents WHERE doc_id < {_EVAL_MAX_ID})")})
+        SELECT DISTINCT gram FROM ({_GRAMS_DUCK.format(src=f"(SELECT doc_id, text FROM documents WHERE doc_id < {EVAL_MAX_ID})")})
     ), contam AS (
         SELECT DISTINCT g2.doc_id FROM g2 JOIN eg USING (gram)
     ), s3 AS MATERIALIZED (
@@ -172,6 +188,32 @@ CORPUS_BUILD_ORACLE = f"""
            CAST(min(mindoc_bin) AS BIGINT) AS min_doc_id
     FROM bins GROUP BY shard ORDER BY shard
     """
+
+
+def _shard_manifest(s3: DataFrame) -> DataFrame:
+    """Stages 5-6 of both builds: pack the survivors into 512-token NFD
+    bins per 100-doc shard, then roll the bins up into the per-shard
+    manifest (two-level agg: no countDistinct Expand; bins first, then
+    the shard rollup)."""
+    t2 = s3.select(
+        "doc_id",
+        F.expr(f"doc_id div {PACK_SHARD}").alias("shard"),
+        F.size(word_tokens(F.col("text"))).cast("long").alias("n_tokens"),
+    ).filter(F.col("n_tokens") > 0)
+    packed = nfd_pack(t2, PACK_CAP)
+    bins = packed.groupBy(
+        F.expr("pack_id div 10000").alias("shard"), "pack_id"
+    ).agg(
+        F.count("*").alias("n_docs_bin"),
+        F.sum("n_tokens").alias("tok_bin"),
+        F.min("doc_id").alias("mindoc_bin"),
+    )
+    return bins.groupBy("shard").agg(
+        F.count("*").alias("n_bins"),
+        F.sum("n_docs_bin").alias("n_docs"),
+        F.sum("tok_bin").alias("sum_tokens"),
+        F.min("mindoc_bin").alias("min_doc_id"),
+    )
 
 
 @register("pipeline_corpus_build", "Z75", oracle=CORPUS_BUILD_ORACLE)
@@ -206,22 +248,8 @@ def pipeline_corpus_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     collect-free otherwise.  This is the reference's scan -> transform
     -> sink program (call-debias.py:177-196) at training-corpus
     semantics."""
-    from debias_spark.operators.dedup import (
-        bands_from_sig_keep_sig,
-        minhash_sig_wide,
-        word_shingles,
-        word_tokens,
-    )
-    from debias_spark.operators.text import (
-        normalize_strict,
-        quality_features,
-        quality_verdict,
-        word_ngrams_frame,
-    )
-    from debias_spark.queries.llm_ops34 import bloom_member
-
     docs = table(spark, sf_dir, "documents")
-    pool = docs.filter(F.col("doc_id") >= _EVAL_MAX_ID).select(
+    pool = docs.filter(F.col("doc_id") >= EVAL_MAX_ID).select(
         "doc_id", "text", F.col("n_chars").cast("long").alias("n_chars")
     )
 
@@ -259,12 +287,12 @@ def pipeline_corpus_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = s1.select(
         F.col("doc_id").alias("id"), word_shingles(F.col("text"), 1).alias("sh")
     ).filter(F.size("sh") > 0)
-    sig = minhash_sig_wide(sh, _NH).localCheckpoint(eager=True)
+    sig = minhash_sig_wide(sh, NEARDUP_HASHES).localCheckpoint(eager=True)
     # sig-bearing band rows (r13): the whole screen is ONE left-semi
     # EXISTS against the sig-carrying band self-index
-    # (pipeline_e2e2.band_dropped_ids) — no pair materialization, no
+    # (operators.dedup.band_dropped_ids) — no pair materialization, no
     # O(pairs) distinct, no sig re-join; same autotuned salt guard
-    banded = bands_from_sig_keep_sig(sig, _NH, _NB)
+    banded = bands_from_sig_keep_sig(sig, NEARDUP_HASHES, NEARDUP_BANDS)
     dropped = band_dropped_ids(banded, banded)
     s2 = s1.join(dropped.withColumnRenamed("id", "doc_id"), "doc_id", "anti")
 
@@ -274,7 +302,7 @@ def pipeline_corpus_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     member = bloom_member(bits)
     eval_df = spark.createDataFrame([(g,) for g in eset], "gram string")
     contam = (
-        word_ngrams_frame(s2, _GRAM_N)
+        word_ngrams_frame(s2, DECONTAM_GRAM_N)
         .filter(member)
         .join(F.broadcast(eval_df), "gram")
         .select("doc_id")
@@ -282,34 +310,234 @@ def pipeline_corpus_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     s3 = s2.join(contam, "doc_id", "anti")
 
-    # 5. pack survivors into 512-token NFD bins per 100-doc shard
-    t2 = s3.select(
-        "doc_id",
-        F.expr(f"doc_id div {PACK_SHARD}").alias("shard"),
-        F.size(word_tokens(F.col("text"))).cast("long").alias("n_tokens"),
-    ).filter(F.col("n_tokens") > 0)
-    packed = nfd_pack(t2, PACK_CAP)
-
-    # 6. manifest -> sink -> readback (two-level agg: no countDistinct
-    # Expand; bins first, then the shard rollup)
-    bins = packed.groupBy(
-        F.expr("pack_id div 10000").alias("shard"), "pack_id"
-    ).agg(
-        F.count("*").alias("n_docs_bin"),
-        F.sum("n_tokens").alias("tok_bin"),
-        F.min("doc_id").alias("mindoc_bin"),
-    )
-    manifest = bins.groupBy("shard").agg(
-        F.count("*").alias("n_bins"),
-        F.sum("n_docs_bin").alias("n_docs"),
-        F.sum("tok_bin").alias("sum_tokens"),
-        F.min("mindoc_bin").alias("min_doc_id"),
-    )
+    # 5-6. pack, then the shard manifest -> sink -> readback
+    manifest = _shard_manifest(s3)
     (sink,) = fresh_scratch_dirs(spark, sf_dir, "z75_manifest")
     manifest.write.parquet(sink)
-    out = spark.read.parquet(sink)
+    out = spark.read.schema(manifest.schema).parquet(sink)
     if out.isEmpty():
         raise RuntimeError("corpus build produced an empty shard manifest")
+    return out.select(
+        "shard", "n_bins", "n_docs", "sum_tokens", "min_doc_id"
+    ).orderBy("shard")
+
+# ---------------------------------------------------------------------------
+# Z76: the corpus build, incrementally (r10 verdict item 6).  Each arriving
+# drop flows through the full Z75 chain, but the dedup stages consult
+# PERSISTED STATE instead of the whole corpus:
+#   exact dedup  new digests probe the accumulated digest state (history
+#                text is never re-read or re-hashed)
+#   near-dup     the drop's band rows join the accumulated band/sig state
+#                (the Z68 screen inside the build chain)
+#   decontam     the eval set is static, so its bloom bits + exact gram
+#                set are built ONCE and reused per drop
+#   packing      drop boundaries are ALIGNED to pack shards, so each shard
+#                packs exactly once, in its arrival drop
+#   manifest     per-shard rows APPEND to the manifest sink; the readback
+#                is the value-oracled result.
+# ---------------------------------------------------------------------------
+
+
+@register("pipeline_corpus_build_incremental", "Z76", oracle=CORPUS_BUILD_ORACLE)
+def pipeline_corpus_build_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Incremental corpus build: the training pool arrives as two
+    doc_id-ordered drops (availableNow file stream, one file per
+    micro-batch, oldest-first); every drop runs the FULL Z75 chain with
+    the dedup stages probing persisted state:
+
+    1. QUALITY (X53): pure projection on the drop.
+    2. EXACT DEDUP (Z7 policy, incremental): keep-first inside the drop
+       (min doc_id per digest), then an anti-join against the digest
+       STATE drops anything history already kept; the drop's NEW digests
+       append to state.  Equivalent to global keep-first because arrival
+       order follows doc_id (the drops are ascending id ranges).
+    3. NEAR-DUP (Z68's screen, verbatim semantics): the drop's exact
+       survivors band and probe the accumulated sig-carrying band state
+       UNION in-drop earlier ids; >= 26/32 matching components drops the
+       doc.  ALL of the drop's exact survivors append to the band state —
+       near-dup-dropped docs keep suppressing later copies, exactly the
+       pure predicate Z75 evaluates globally.
+    4. DECONTAMINATION (Y72+Y12): the eval set (doc_id < eval cutoff) is
+       static, so its bloom bit-array literal and exact gram set are
+       built ONCE before the drain (bounded collect, raise-capped) and
+       every drop reuses them.
+    5. PACK (Y55): drop boundaries are rounded to PACK_SHARD multiples,
+       so every pack shard lies wholly inside one drop and NFD-packs in
+       the drop that completes it — the incremental contract a packer
+       must hold (a shard is packed once, never re-opened).  The
+       readback asserts shard uniqueness to prove the alignment held.
+    6. MANIFEST: per-shard rows append per drop; the returned frame is
+       the sink readback, hash-checked against the SAME oracle as the
+       one-shot Z75 build.
+
+    Scale shape: per drop, text crosses a shuffle exactly twice (exact-
+    dedup semi-join, pack shard exchange) — the Z75 discipline — while
+    history moves only digests (16 bytes/doc), signatures (32 ints), and
+    sig-bearing band rows (the signature replicated per band row — the
+    r13 trade that makes the near-dup screen a single pair-free left-semi
+    join); the band state is hive-partitioned by band_id so probe reads
+    prune to colliding bands.  State appends are parquet
+    appends here; at 100 TB they become MERGE INTO a transactional table
+    keyed (band_id, band_hash) / digest, and the drop cadence amortizes
+    the eval-bloom build to zero."""
+
+    docs = table(spark, sf_dir, "documents")
+    # staged drops keep the FULL documents schema (readStream binds
+    # docs.schema); the refresh body projects what each stage needs
+    pool = docs.filter(F.col("doc_id") >= EVAL_MAX_ID)
+
+    # 4'. static decontamination inputs, built ONCE (the Z75 memoized
+    # artifacts — shared per corpus across executions AND with Z75)
+    eset, bits = eval_gram_artifacts(spark, sf_dir)
+    member = bloom_member(bits)
+    # the exact-confirm frame is as static as the bloom bits: build it
+    # ONCE here, not once per drop (createDataFrame re-serializes the
+    # whole gram list driver-side on every call — r11 verdict item 1b).
+    # Deliberately NOT checkpointed: as a LocalRelation its broadcast is
+    # a free driver-side send per batch, while a checkpointed RDD frame
+    # would pay a collect job every batch (measured +3.5 s on the drain)
+    eval_df = spark.createDataFrame([(g,) for g in eset], "gram string")
+
+    # z76_sigs is gone (r14): the sig-carrying band rows ARE the
+    # signature state since r13.  The stem stays so dirs from older
+    # sessions still get pruned.
+    src_dir, dg_dir, band_dir, _, man_dir, ckpt_dir = fresh_scratch_dirs(
+        spark,
+        sf_dir,
+        "z76_src",
+        "z76_digests",
+        "z76_bands",
+        "z76_sigs",
+        "z76_manifest",
+        "z76_ckpt",
+    )
+    os.makedirs(src_dir)
+
+    # stage two doc_id-ordered drops whose INTERIOR boundary is a
+    # PACK_SHARD multiple: every pack shard then lies wholly inside one
+    # drop.  TWO drops, not four (r12 verdict item 1): the
+    # incremental semantics need >= 2 (state exists when the second drop
+    # probes it) and every extra drop re-pays the per-batch fixed cost —
+    # state re-list + union reads, five write jobs, micro-batch
+    # scheduling — without proving anything four did not; the
+    # batching-independence argument is count-free
+    raw = id_range_bounds(pool, "doc_id", 2)
+    lo, hi = raw[0], raw[-1]
+    interior = sorted({(b // PACK_SHARD) * PACK_SHARD for b in raw[1:-1]})
+    bounds = [lo] + [b for b in interior if lo < b < hi] + [hi]
+    t0 = time.time() - 3600
+    staged = 0
+    for i in range(len(bounds) - 1):
+        part = pool.filter(
+            (F.col("doc_id") >= bounds[i]) & (F.col("doc_id") < bounds[i + 1])
+        )
+        stage_single_file_drop(part, src_dir, f"drop{i}.parquet", mtime=t0 + 60 * i)
+        staged += 1
+    if staged < 2:
+        raise RuntimeError(
+            f"shard-aligned staging produced {staged} drop(s); the corpus is "
+            "too small to exercise the incremental chain"
+        )
+
+    man_schema = None  # the manifest schema the drops wrote
+
+    def refresh(batch: DataFrame, batch_id: int) -> None:
+        nonlocal man_schema
+        ss = batch.sparkSession
+        batch = fan_out(batch)  # a staged drop scans as ONE partition (r13)
+
+        # 1. quality gate
+        n_tokens, n_punct = quality_features(F.col("text"))
+        q = (
+            batch.select(
+                "doc_id",
+                "text",
+                quality_verdict(
+                    F.col("n_chars").cast("long"), n_tokens, n_punct
+                ).alias("verdict"),
+            )
+            .filter(F.col("verdict") == "keep")
+            .select("doc_id", "text")
+        )
+
+        # 2. exact dedup vs state: keep-first inside the drop, then drop
+        # digests history already kept; new digests append to state
+        dg = q.select("doc_id", F.md5(normalize_strict(F.col("text"))).alias("dg"))
+        drop_reps = dg.groupBy("dg").agg(F.min("doc_id").alias("doc_id"))
+        if os.path.isdir(dg_dir):
+            seen = ss.read.schema(dg.select("dg").schema).parquet(dg_dir)
+            drop_reps = drop_reps.join(seen, "dg", "anti")
+        drop_reps = drop_reps.localCheckpoint(eager=True)
+        # checkpoint the drop's survivor text: UNLIKE Z75 (whole-corpus
+        # frames, where caching text measured worse than recompute), a
+        # drop is a bounded slice and s1 feeds three consumers (shingle
+        # explode, near-dup anti-join, and the s2 chain) each of which
+        # would otherwise replay scan + quality + digest + both state
+        # joins (measured 45 s -> ~30 s at sf0.1 for the whole drain)
+        s1 = q.join(drop_reps.select("doc_id"), "doc_id", "semi").localCheckpoint(
+            eager=True
+        )
+        drop_reps.select("dg").write.mode("append").parquet(dg_dir)
+
+        # 3. near-dup vs band/sig state (the Z68 refresh body)
+        b_sh = s1.select(
+            F.col("doc_id").alias("id"), word_shingles(F.col("text"), 1).alias("sh")
+        ).filter(F.size("sh") > 0)
+        b_sig = minhash_sig_wide(b_sh, NEARDUP_HASHES).localCheckpoint(eager=True)
+        # sig-bearing band rows (r13): the near-dup screen is ONE
+        # left-semi EXISTS against the sig-carrying band state
+        # (operators.dedup.band_dropped_ids — no pair materialization, no
+        # O(pairs) distinct, no sig-state re-join; same autotuned salt
+        # guard)
+        b_banded = bands_from_sig_keep_sig(b_sig, NEARDUP_HASHES, NEARDUP_BANDS)
+        idx = b_banded
+        if os.path.isdir(band_dir):
+            idx = ss.read.schema(b_banded.schema).parquet(band_dir).unionByName(idx)
+        dropped = band_dropped_ids(b_banded, idx)
+        # s2 feeds both the contamination ngrams and the s3 anti-join;
+        # without the checkpoint the banded near-dup screen (the semi
+        # EXISTS over sig-bearing band rows) replays once per consumer
+        s2 = s1.join(
+            dropped.withColumnRenamed("id", "doc_id"), "doc_id", "anti"
+        ).localCheckpoint(eager=True)
+        # ALL exact survivors enter state (dropped docs keep suppressing);
+        # the band rows carry the signatures — no standalone sig state
+        b_banded.write.mode("append").partitionBy("band_id").parquet(band_dir)
+
+        # 4. decontamination: static bloom prefilter + exact confirm
+        # (eval_df built once before the drain — static by contract)
+        contam = (
+            word_ngrams_frame(s2, DECONTAM_GRAM_N)
+            .filter(member)
+            .join(F.broadcast(eval_df), "gram")
+            .select("doc_id")
+            .distinct()
+        )
+        s3 = s2.join(contam, "doc_id", "anti")
+
+        # 5-6. pack the drop's (whole, by alignment) shards; the manifest
+        # delta appends to the sink
+        manifest = _shard_manifest(s3)
+        manifest.write.mode("append").parquet(man_dir)
+        man_schema = manifest.schema
+
+    with narrow_shuffle(spark, 8):
+        batches = drain_file_drops(spark, docs.schema, src_dir, ckpt_dir, refresh)
+    if len(batches) < 2:
+        raise RuntimeError(
+            f"pipeline_corpus_build_incremental drained in {len(batches)} "
+            "micro-batch(es); the incremental chain was not exercised"
+        )
+
+    out = spark.read.schema(man_schema).parquet(man_dir)
+    n, nd = out.count(), out.select("shard").distinct().count()
+    if n == 0:
+        raise RuntimeError("incremental corpus build produced an empty manifest")
+    if n != nd:
+        raise RuntimeError(
+            f"a pack shard straddled a drop boundary ({n} manifest rows, "
+            f"{nd} distinct shards) — the shard alignment is broken"
+        )
     return out.select(
         "shard", "n_bins", "n_docs", "sum_tokens", "min_doc_id"
     ).orderBy("shard")

@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from debias_spark.catalog import table
-from debias_spark.operators.dedup import word_tokens
+from debias_spark.operators.dedup import minhash_ctes_duck, word_tokens
 from debias_spark.registry import register
 
 
@@ -216,45 +216,12 @@ def _minhash_acc_oracle(num_hashes: int = 16, bands: int = 4) -> str:
     """DuckDB replay of dedup_minhash_est_vs_exact: same signatures and
     candidate buckets as _minhash_oracle, then per-pair |estimate - exact|
     integerized to micro-units before aggregation."""
-    from debias_spark.operators.dedup import MINHASH_P, minhash_params
-    from debias_spark.queries.llm_ops import _DUCK_TOKENS, _h60_duck
-
-    rpb = num_hashes // bands
-    sig_cols = ", ".join(
-        f"min(((({_h60_duck('s')}) % {MINHASH_P}) * {a} + {b}) % {MINHASH_P})"
-        f" AS h{h}"
-        for h, (a, b) in enumerate(minhash_params(num_hashes))
-    )
-    band_selects = " UNION ALL ".join(
-        "SELECT id, {b} AS band_id, {bh} AS band_hash FROM sig".format(
-            b=b,
-            bh=_h60_duck(
-                "concat_ws(',', {}, '{}')".format(
-                    ", ".join(f"h{b * rpb + r}::VARCHAR" for r in range(rpb)), b
-                )
-            ),
-        )
-        for b in range(bands)
-    )
+    ctes, _ = minhash_ctes_duck(num_hashes, bands)
     matches = " + ".join(
         f"CASE WHEN a.h{h} = b.h{h} THEN 1 ELSE 0 END" for h in range(num_hashes)
     )
     return f"""
-    WITH sh AS (
-        SELECT doc_id AS id, {_DUCK_TOKENS} AS sh FROM documents
-        WHERE len({_DUCK_TOKENS}) > 0
-    ), ex AS (
-        SELECT id, unnest(sh) AS s FROM sh
-    ), sig AS (
-        SELECT id, {sig_cols} FROM ex GROUP BY id
-    ), banded AS (
-        {band_selects}
-    ), cand AS (
-        SELECT DISTINCT id, rep_id FROM (
-            SELECT id, min(id) OVER (PARTITION BY band_id, band_hash) AS rep_id
-            FROM banded
-        ) WHERE id > rep_id
-    ), scored AS (
+    WITH {ctes}, scored AS (
         SELECT CAST(floor(abs(
                    ({matches}) * 1.0 / {num_hashes}
                    - len(list_intersect(x.sh, y.sh)) * 1.0

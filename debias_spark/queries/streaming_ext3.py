@@ -117,7 +117,7 @@ def stream_stream_join_attrib(spark: SparkSession, sf_dir: str) -> DataFrame:
             "stream_stream_join_attrib",
         )
     shutil.rmtree(ckpt_dir, ignore_errors=True)
-    return spark.read.parquet(out_dir).select(
+    return spark.read.schema(joined.schema).parquet(out_dir).select(
         "user_id", "purchase_time", "click_time", "value_cents"
     )
 

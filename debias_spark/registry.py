@@ -7,8 +7,10 @@ Every operator from SURVEY.md §2 registers itself here with:
 
 ``KEY_MODULES`` (the table at the end of this file) names every key's
 module in registration order; ``load_all_queries()`` returns a read-only
-view over it that imports a key's module the first time the key is read,
-so a process that runs one key compiles one query module, not all of
+view over it that imports a key's module the first time the key is read.
+Query modules are leaves — none imports another; what two of them share
+lives in ``debias_spark.operators`` or ``debias_spark.warehouse`` — so a
+process that runs one key compiles exactly one query module, not all of
 them.  ``__spark_entry__.py`` exposes this registry verbatim to the
 driver; tests iterate it to run the same oracle comparison locally at
 sf0.001 before the driver does at sf0.01.
@@ -289,9 +291,9 @@ def priority_ordered() -> dict[str, QuerySpec]:
 # from (priority_ordered() lists never-checked keys in this order).  Keys
 # whose modules lacked driver evidence when they were added come first, so
 # a per-round key cap or time cutoff lands on keys that already have green
-# CORRECTNESS_r01 rows.  A module's keys stay together, and a module that
-# imports another at its top registers after it (llm_ops16 before
-# llm_ops37), so importing modules in table order registers keys in
+# CORRECTNESS_r01 rows.  A module's keys stay together and no query
+# module imports another (shared code lives in operators/ and
+# warehouse.py), so importing modules in table order registers keys in
 # exactly this order.  A new key is added here, under its own module.
 KEY_MODULES: dict[str, str] = {
     # Y5b pinned-centroid IVF, Y73 substring scrubber (round 10)
@@ -350,7 +352,7 @@ KEY_MODULES: dict[str, str] = {
     # Z75 corpus-build capstone (round 10)
     "pipeline_corpus_build": "pipeline_e2e5",
     # Z76 incremental corpus build (round 11)
-    "pipeline_corpus_build_incremental": "pipeline_e2e6",
+    "pipeline_corpus_build_incremental": "pipeline_e2e5",
     # Y66/Y68/Y69/Y70 drift monitor, substring spans, epoch plan, rendezvous shards (round 9)
     "pipeline_survivor_drift_monitor": "llm_ops31",
     "docs_substring_dup_spans": "llm_ops31",

@@ -111,20 +111,22 @@ def prune_stale_siblings(
         pass
 
 
-def swap_state_write(frame, state_dir: str) -> None:
-    """Atomically replace a state directory: parallel multi-file write to
-    ``<state_dir>.staging`` (the frame keeps whatever partitioning its
-    producing plan left — never coalesce(1), the r8 verdict's
-    single-writer bottleneck), then rename-swap so readers never see a
-    half-written state.  Shared by the incremental-pipeline keys
-    (Z65/Z68/Z71); at 100 TB this becomes MERGE INTO a transactional
-    table (X73's contract) and the swap disappears."""
-    import os
-    import shutil
+def count_parquet_files(root: str) -> int:
+    """Number of ``*.parquet`` files anywhere under ``root``."""
+    return sum(
+        1 for _, _, files in os.walk(root) for f in files if f.endswith(".parquet")
+    )
 
-    staging = state_dir + ".staging"
-    shutil.rmtree(staging, ignore_errors=True)
-    frame.write.parquet(staging)
+
+def _swap_in(staging: str, state_dir: str) -> None:
+    """Rename the written ``staging`` dir over ``state_dir``: the old
+    state (if any) moves aside to ``<state_dir>.old``, staging takes its
+    name, then the old copy is removed.  Two renames, not one atomic
+    replace: between them the target briefly does not exist, so this
+    assumes a SINGLE writer and no concurrent reader (true for the
+    foreachBatch loops that call it — Spark serializes batches).  A
+    multi-reader deployment needs a transactional table format instead
+    of directory swaps."""
     old = state_dir + ".old"
     shutil.rmtree(old, ignore_errors=True)
     if os.path.isdir(state_dir):
@@ -133,43 +135,39 @@ def swap_state_write(frame, state_dir: str) -> None:
     shutil.rmtree(old, ignore_errors=True)
 
 
+def swap_state_write(frame, state_dir: str) -> None:
+    """Atomically replace a state directory: parallel multi-file write to
+    ``<state_dir>.staging`` (the frame keeps whatever partitioning its
+    producing plan left — never coalesce(1), the r8 verdict's
+    single-writer bottleneck), then rename-swap so readers never see a
+    half-written state.  Shared by the incremental-pipeline keys
+    (Z65/Z68/Z71); at 100 TB this becomes MERGE INTO a transactional
+    table (X73's contract) and the swap disappears."""
+    staging = state_dir + ".staging"
+    shutil.rmtree(staging, ignore_errors=True)
+    frame.write.parquet(staging)
+    _swap_in(staging, state_dir)
+
+
 def compact_partitioned_state(
     spark, state_dir: str, partition_col: str, n_partitions: int
 ) -> tuple[int, int]:
     """Rewrite an append-only hive-partitioned state dir into few files
     per partition (one shuffle on the partition key) via a staging +
-    rename swap, so readers never see a HALF-compacted state.  The swap
-    is two renames, not one atomic replace: between `state_dir -> .old`
-    and `.staging -> state_dir` the target briefly does not exist, so
-    this assumes a SINGLE writer and no concurrent reader (true for the
-    foreachBatch loops that call it — Spark serializes batches).  A
-    multi-reader deployment needs a transactional table format instead
-    of directory swaps.  Returns
-    (files_before, files_after) for the caller's proof guard.  This is
-    Z73's maintenance operation packaged for the streaming loops whose
-    state grows by per-batch appends (Z68); at 100 TB it runs as a
-    background job per partition range against a transactional table."""
-    import os
-    import shutil
-
-    def nfiles(root: str) -> int:
-        n = 0
-        for _, _, files in os.walk(root):
-            n += sum(1 for f in files if f.endswith(".parquet"))
-        return n
-
-    before = nfiles(state_dir)
+    rename swap (``_swap_in``), so readers never see a HALF-compacted
+    state.  Returns (files_before, files_after) for the caller's proof
+    guard.  This is Z73's maintenance operation packaged for the
+    streaming loops whose state grows by per-batch appends (Z68); at
+    100 TB it runs as a background job per partition range against a
+    transactional table."""
+    before = count_parquet_files(state_dir)
     staging = state_dir + ".compact"
     shutil.rmtree(staging, ignore_errors=True)
     spark.read.parquet(state_dir).repartition(
         n_partitions, partition_col
     ).write.partitionBy(partition_col).parquet(staging)
-    old = state_dir + ".old"
-    shutil.rmtree(old, ignore_errors=True)
-    os.rename(state_dir, old)
-    os.rename(staging, state_dir)
-    shutil.rmtree(old, ignore_errors=True)
-    return before, nfiles(state_dir)
+    _swap_in(staging, state_dir)
+    return before, count_parquet_files(state_dir)
 
 
 def stage_single_file_drop(df, src_dir: str, name: str, mtime: float | None = None) -> None:
@@ -177,9 +175,6 @@ def stage_single_file_drop(df, src_dir: str, name: str, mtime: float | None = No
     landing-zone drop for the file-stream pipeline keys), optionally
     pinning its mtime so FileStreamSource's oldest-first ordering
     replays a chosen arrival order."""
-    import os
-    import shutil
-
     tmp = os.path.join(src_dir + f".tmp_{name}")
     df.coalesce(1).write.mode("overwrite").parquet(tmp)
     part = next(

@@ -141,3 +141,18 @@ def test_load_prev_bench_uses_band_max(tmp_path, monkeypatch):
     base = bench.load_prev_bench()
     assert base["qa"] == 1.4  # band max, not anchor
     assert base["qb"] == 2.0  # no band entry -> anchor
+
+
+def test_prev_round_readers_order_by_round_number(tmp_path, monkeypatch):
+    """r100 is newer than r99 although it sorts before it by filename:
+    both the tripwire baseline and the floor read the r100 artifact."""
+    import bench
+
+    for rnd, val in ((99, 9.0), (100, 1.0)):
+        artifact = {"queries": {"qa": val}, "band": {"qa": [val / 2, val]}}
+        (tmp_path / f"BENCH_full_r{rnd}.json").write_text(json.dumps(artifact))
+    monkeypatch.setattr(
+        bench.os.path, "abspath", lambda _p: str(tmp_path / "bench.py")
+    )
+    assert bench.load_prev_bench() == {"qa": 1.0}
+    assert bench.load_prev_floor() == {"qa": 0.5}

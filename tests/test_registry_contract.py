@@ -283,6 +283,34 @@ def test_key_order_lives_in_one_table():
     subprocess.run([sys.executable, "-c", load], cwd=root, check=True)
 
 
+def test_query_modules_are_leaves():
+    """No file under queries/ imports from the queries package — not at
+    module top, not inside a function, not by a relative import — so
+    reading a key imports exactly one query module and KEY_MODULES' order
+    needs no import-order rule.  Code two keys share lives in operators/
+    or warehouse.py."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "debias_spark" / "queries"
+    bad = []
+    for path in sorted(pkg.glob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.ImportFrom):
+                names = [node.module or ""] + [
+                    f"{node.module}.{a.name}" for a in node.names
+                ]
+                if node.level or any(
+                    n == "debias_spark.queries" or n.startswith("debias_spark.queries.")
+                    for n in names
+                ):
+                    bad.append(f"{path.name}:{node.lineno}")
+            elif isinstance(node, ast.Import):
+                if any(a.name.startswith("debias_spark.queries") for a in node.names):
+                    bad.append(f"{path.name}:{node.lineno}")
+    assert bad == []
+
+
 def test_temp_views_and_tokenizer_live_in_one_place_each():
     """Keys hand frames to Spark SQL as arguments (``spark.sql(text,
     **frames)``), so a temp view is registered only by

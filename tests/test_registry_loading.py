@@ -151,6 +151,9 @@ def test_load_all_queries_imports_no_module():
 
 
 def test_cli_query_imports_only_its_module(sf_dir):
+    """The CLI runs one key with one query module imported; and reading
+    the keys whose modules used to import siblings (IVF-PQ helpers, the
+    corpus-build oracle) imports exactly their own module too."""
     assert _fresh_modules(
         f"""
         import json, sys
@@ -159,6 +162,19 @@ def test_cli_query_imports_only_its_module(sf_dir):
         print(json.dumps({_MODULES}))
         """
     ) == [f"{QUERY_PACKAGE}.{KEY_MODULES[KEY]}"]
+    for key in (
+        "similarity_ann_ivfpq_compacted",
+        "similarity_ann_ivfpq_tombstone",
+        "pipeline_corpus_build_incremental",
+    ):
+        assert _fresh_modules(
+            f"""
+            import json, sys
+            from debias_spark.registry import load_all_queries
+            assert load_all_queries()[{key!r}].oracle
+            print(json.dumps({_MODULES}))
+            """
+        ) == [f"{QUERY_PACKAGE}.{KEY_MODULES[key]}"], key
 
 
 def test_driver_entry_imports_only_its_module():

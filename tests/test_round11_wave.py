@@ -37,7 +37,7 @@ def ivfpq_rows(spark, specs):
 
 def test_ivfpq_structure(spark, specs, ivfpq_rows):
     from debias_spark.operators.similarity import assign_cell, ivf_pinned_centroids
-    from debias_spark.queries.llm_ops36 import _IVF_DIM, _IVF_K, _SCORE_ROUND
+    from debias_spark.operators.similarity import IVF_DIM, IVF_K, IVF_SCORE_ROUND
 
     per_q: dict[int, list[int]] = {}
     for r in ivfpq_rows:
@@ -51,13 +51,13 @@ def test_ivfpq_structure(spark, specs, ivfpq_rows):
     # every candidate shares the query's IVF cell (the coarse-probe law)
     from debias_spark.catalog import table
 
-    cents = ivf_pinned_centroids(_IVF_K, _IVF_DIM)
+    cents = ivf_pinned_centroids(IVF_K, IVF_DIM)
     cells = {
         r.vec_id: r.cell
         for r in table(spark, SF, "embeddings")
         .select(
             "vec_id",
-            assign_cell(F.col("embedding"), cents, score_round=_SCORE_ROUND).alias(
+            assign_cell(F.col("embedding"), cents, score_round=IVF_SCORE_ROUND).alias(
                 "cell"
             ),
         )

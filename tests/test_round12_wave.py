@@ -122,7 +122,7 @@ def test_band_salt_guard_identical_results(spark, specs, monkeypatch):
     """The salted candidate join must be BIT-IDENTICAL to the plain path
     (every (id, j) pair meets exactly once, in id's salt shard) — proven
     by running the whole Z68 key both ways (r11 verdict item 4)."""
-    import debias_spark.queries.pipeline_e2e2 as mod
+    import debias_spark.operators.dedup as mod
 
     plain = sorted(
         map(tuple, specs["pipeline_incremental_neardup"].fn(spark, SF).collect())
@@ -142,7 +142,7 @@ def test_band_salt_guard_autotune_on_skewed_fixture(spark, tmp_path, monkeypatch
     the salted candidate set must equal the plain-join candidate set."""
     from pyspark.sql import functions as F
 
-    import debias_spark.queries.pipeline_e2e2 as mod
+    import debias_spark.operators.dedup as mod
     from debias_spark.operators.dedup import bands_from_sig, minhash_sig_wide, word_shingles
 
     # 5000 docs sharing one boilerplate text -> one (band, hash) bucket of
@@ -176,14 +176,14 @@ def test_tombstone_search_excludes_deleted_and_matters(spark, specs):
     must be non-empty at test scale, and at least one query's results
     must actually differ from the undeleted search (the delete is real,
     not vacuous)."""
-    from debias_spark.queries.llm_ops38 import _TOMB_MOD, _TOMB_REM, _PQ_CODES
+    from debias_spark.operators.similarity import PQ_CODES, TOMB_MOD, TOMB_REM
 
     from debias_spark.catalog import table
-    from debias_spark.queries.llm_ops37 import pq_codebook, pq_index_frame
+    from debias_spark.operators.similarity import pq_codebook, pq_index_frame
 
     rows = specs["similarity_ann_ivfpq_tombstone"].fn(spark, SF).collect()
     assert rows
-    deleted = lambda i: i % _TOMB_MOD == _TOMB_REM and i >= _PQ_CODES
+    deleted = lambda i: i % TOMB_MOD == TOMB_REM and i >= PQ_CODES
     assert all(not deleted(r.cand_id) for r in rows)
     n_emb = spark.read.parquet(os.path.join(SF, "embeddings.parquet")).count()
     n_tomb = sum(1 for i in range(n_emb) if deleted(i))
@@ -196,7 +196,7 @@ def test_tombstone_search_excludes_deleted_and_matters(spark, specs):
     book = pq_codebook(emb)
     index = pq_index_frame(emb, book)
     tombs = emb.select("vec_id").filter(
-        (F.col("vec_id") % _TOMB_MOD == _TOMB_REM) & (F.col("vec_id") >= _PQ_CODES)
+        (F.col("vec_id") % TOMB_MOD == TOMB_REM) & (F.col("vec_id") >= PQ_CODES)
     )
     live_n = index.join(tombs, "vec_id", "anti").count()
     assert live_n == n_emb - n_tomb

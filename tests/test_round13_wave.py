@@ -44,8 +44,7 @@ def test_compacted_state_layout_and_deletion(spark, specs, compacted_rows):
     """The compacted dir (left on disk by the key) must hold at most one
     parquet file per cell partition and zero tombstoned vec_ids — the
     physical claims behind 'the deletion vector can be retired'."""
-    from debias_spark.queries.llm_ops37 import _PQ_CODES
-    from debias_spark.queries.llm_ops38 import _TOMB_MOD, _TOMB_REM
+    from debias_spark.operators.similarity import PQ_CODES, TOMB_MOD, TOMB_REM
     from debias_spark.warehouse import scratch_dir
 
     compact_dir = scratch_dir(spark, SF, "y78_compact")
@@ -57,7 +56,7 @@ def test_compacted_state_layout_and_deletion(spark, specs, compacted_rows):
         assert len(parts) == 1, (d, parts)
     comp = spark.read.parquet(compact_dir)
     ghosts = comp.filter(
-        (F.col("vec_id") % _TOMB_MOD == _TOMB_REM) & (F.col("vec_id") >= _PQ_CODES)
+        (F.col("vec_id") % TOMB_MOD == TOMB_REM) & (F.col("vec_id") >= PQ_CODES)
     ).count()
     assert ghosts == 0
     # the fixture really deleted something (otherwise the key proves nothing)
@@ -103,7 +102,7 @@ def test_pq_codes_vectorized_matches_expression_spec(spark):
     floor-e4 boundary behavior is bit-identical to the expression fold
     (and to the DuckDB oracle)."""
     from debias_spark.catalog import table
-    from debias_spark.queries.llm_ops37 import (
+    from debias_spark.operators.similarity import (
         pq_codebook,
         pq_codes_expr,
         pq_codes_vectorized,
@@ -139,10 +138,10 @@ def test_band_dropped_ids_matches_pair_join_chain(spark):
         minhash_sig_wide,
         word_shingles,
     )
-    from debias_spark.queries.pipeline_e2e2 import (
-        _EST_MIN_MATCHES,
-        _NB,
-        _NH,
+    from debias_spark.operators.dedup import (
+        NEARDUP_BANDS as _NB,
+        NEARDUP_HASHES as _NH,
+        NEARDUP_MIN_MATCHES as _EST_MIN_MATCHES,
         band_candidates,
         band_dropped_ids,
     )
@@ -186,7 +185,7 @@ def test_band_dropped_ids_salted_identical(spark, monkeypatch):
     semi path bit-for-bit: probe rows salt by hash(id), index rows
     explode across the shards, every (probe, index) row pair still meets
     exactly once so EXISTS is preserved."""
-    import debias_spark.queries.pipeline_e2e2 as mod
+    import debias_spark.operators.dedup as mod
     from debias_spark.catalog import table
     from debias_spark.operators.dedup import (
         bands_from_sig_keep_sig,
@@ -199,7 +198,7 @@ def test_band_dropped_ids_salted_identical(spark, monkeypatch):
         F.col("doc_id").alias("id"), word_shingles(F.col("text"), 1).alias("sh")
     ).filter(F.size("sh") > 0)
     kb = bands_from_sig_keep_sig(
-        minhash_sig_wide(sh, mod._NH), mod._NH, mod._NB
+        minhash_sig_wide(sh, mod.NEARDUP_HASHES), mod.NEARDUP_HASHES, mod.NEARDUP_BANDS
     ).localCheckpoint(eager=True)
     plain = {r.id for r in mod.band_dropped_ids(kb, kb).collect()}
     assert mod.LAST_SALT_R == 1

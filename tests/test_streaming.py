@@ -245,7 +245,7 @@ def test_run_available_now_is_bounded_by_the_drain_timeout(spark, sf_dir, monkey
     [
         ("pipeline_e2e", "pipeline_incremental_refresh"),
         ("pipeline_e2e2", "pipeline_incremental_neardup"),
-        ("pipeline_e2e6", "pipeline_corpus_build_incremental"),
+        ("pipeline_e2e5", "pipeline_corpus_build_incremental"),
         ("llm_ops38", "similarity_ann_ivfpq_incremental"),
     ],
 )
@@ -319,6 +319,46 @@ def test_single_batch_stream_keys_reject_a_second_batch(
     with pytest.raises(Exception, match="stream_stream_join_attrib drained in >1"):
         specs["stream_stream_join_attrib"].fn(spark, sf_dir)
     assert spark.streams.active == []
+
+
+@pytest.mark.parametrize(
+    "key",
+    [
+        "pipeline_incremental_refresh",
+        "pipeline_incremental_neardup",
+        "pipeline_checkpoint_resume",
+        "pipeline_corpus_build",
+        "pipeline_corpus_build_incremental",
+        "stream_stream_join_attrib",
+    ],
+)
+def test_staged_read_backs_carry_the_written_schema(spark, sf_dir, monkeypatch, key):
+    """Every read of a scratch dir the key itself wrote (per-batch state
+    inside foreachBatch, the final state, sink or manifest) is built with
+    the schema the key wrote, so none runs Parquet's one-task
+    schema-inference job.  Each read runs in its own job group, set on
+    the calling thread, so reads inside the stream's batches count too."""
+    from pyspark.sql import DataFrameReader
+
+    from debias_spark.registry import load_all_queries
+    from debias_spark.warehouse import scratch_root
+
+    sc, read, jobs = spark.sparkContext, DataFrameReader.parquet, []
+
+    def counted_read(self, *paths, **kwargs):
+        if not all(str(p).startswith(scratch_root()) for p in paths):
+            return read(self, *paths, **kwargs)
+        group, prev = f"read-back-{key}-{len(jobs)}", sc.getLocalProperty("spark.jobGroup.id")
+        sc.setLocalProperty("spark.jobGroup.id", group)
+        try:
+            return read(self, *paths, **kwargs)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", prev)
+            jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+
+    monkeypatch.setattr(DataFrameReader, "parquet", counted_read)
+    load_all_queries()[key].fn(spark, sf_dir)
+    assert jobs and set(jobs) == {0}, jobs
 
 
 def test_foreachbatch_state_read_back_carries_the_written_schema(spark, sf_dir):
