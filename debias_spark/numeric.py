@@ -1,11 +1,21 @@
-"""The cross-engine rounding rule: emit a float as an integer via
-``floor(x * scale + EPS)``.
+"""The two cross-engine rules for turning a double into an integer, each
+spelled once here so Spark and its DuckDB oracle agree bit for bit.
 
-Why not ``round(x, k)``: Spark rounds the shortest-decimal repr of a
-double HALF_UP while DuckDB rounds the binary double, so exact .x5 ties
-(common for integer-ratio formulas) diverge between the engines.  The
-floor of the identical double is bit-stable on both, and the 1e-9 nudge
-sends exact-tie doubles the same way on both sides.
+Money is exact integer cents, ``round(x * 100)`` cast to BIGINT
+(``cents`` / ``cents_sql``).  Bigint sums do not depend on aggregation
+order, so a Spark sum over any partitioning equals its DuckDB oracle
+bit for bit, where a double sum can differ in the last ulp and land on
+the other side of a half-cent.  Rounding to an integer is engine-stable,
+unlike ``round(x, k)``: a double whose shortest repr is ``k.5`` is
+exactly ``k.5``, and both engines round that half away from zero.
+
+Other scaled values use ``floor(x * scale + EPS)`` (``floor_eps`` /
+``floor_eps_sql``).  Why not ``round(x, k)``: Spark rounds the
+shortest-decimal repr of a double HALF_UP while DuckDB rounds the binary
+double, so exact .x5 ties (common for integer-ratio formulas) diverge
+between the engines.  The floor of the identical double is bit-stable on
+both, and the 1e-9 nudge sends exact-tie doubles the same way on both
+sides.
 
 Why one folded constant: Spark adds ``EPS`` (``0.5 + 1e-9`` folded in
 Python) in ONE IEEE addition.  The SQL spelling must be the identical
@@ -43,3 +53,16 @@ def floor_eps_sql(expr: str, scale: int = 1) -> str:
     cast to BIGINT (DuckDB's floor() of a DOUBLE is a DOUBLE)."""
     scaled = f"({expr})" if scale == 1 else f"({expr}) * {scale}"
     return f"CAST(floor({scaled} + {EPS_SQL}) AS BIGINT)"
+
+
+def cents(col: Column) -> Column:
+    """Money as exact integer cents: ``round(col * 100)`` as a long."""
+    return F.round(col * 100).cast("long")
+
+
+def cents_sql(expr: str) -> str:
+    """The same rule as a SQL fragment valid in DuckDB and Spark SQL.
+    Unlike ``floor_eps_sql`` it adds no parentheses, so a caller passing
+    an operator of lower precedence than ``*`` (a sum, ``a + b``) must
+    parenthesise it."""
+    return f"CAST(round({expr} * 100) AS BIGINT)"

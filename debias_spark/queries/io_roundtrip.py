@@ -21,11 +21,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from debias_spark.catalog import table
+from debias_spark.numeric import cents, cents_sql
 from debias_spark.registry import register
 from debias_spark.warehouse import prune_stale_siblings, scratch_dir, scratch_root
 
-
-_CENTS = "CAST(round(o_totalprice * 100) AS BIGINT)"
 
 
 @register(
@@ -34,7 +33,7 @@ _CENTS = "CAST(round(o_totalprice * 100) AS BIGINT)"
     oracle=f"""
     SELECT o_orderpriority,
            count(*) AS n_orders,
-           CAST(sum({_CENTS}) AS BIGINT) AS rev_cents
+           CAST(sum({cents_sql("o_totalprice")}) AS BIGINT) AS rev_cents
     FROM orders
     WHERE o_orderstatus = 'F'
     GROUP BY o_orderpriority
@@ -58,7 +57,7 @@ def sink_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey",
         "o_orderstatus",
         "o_orderpriority",
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
+        cents(F.col("o_totalprice")).alias("cents"),
     )
     out = scratch_dir(spark, sf_dir, "orc_orders")
     src.write.mode("overwrite").orc(out)
@@ -128,7 +127,7 @@ def sink_partitioned_parquet_prune(spark: SparkSession, sf_dir: str) -> DataFram
     oracle=f"""
     SELECT o_orderstatus,
            count(*) AS n_orders,
-           CAST(sum({_CENTS}) AS BIGINT) AS rev_cents,
+           CAST(sum({cents_sql("o_totalprice")}) AS BIGINT) AS rev_cents,
            CAST(min(CAST(o_orderdate AS DATE)) AS VARCHAR) AS first_day,
            CAST(max(CAST(o_orderdate AS DATE)) AS VARCHAR) AS last_day
     FROM orders
@@ -152,7 +151,7 @@ def sink_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = table(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_orderstatus",
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
+        cents(F.col("o_totalprice")).alias("cents"),
         F.col("o_orderdate").cast("date").alias("odate"),
     )
     out = scratch_dir(spark, sf_dir, "csv_orders")

@@ -23,10 +23,9 @@ from pyspark.sql.types import (
 )
 
 from debias_spark.catalog import table
+from debias_spark.numeric import cents, cents_sql
 from debias_spark.registry import register
 from debias_spark.warehouse import fresh_scratch_dirs, scratch_dir
-
-_CENTS = "CAST(round(o_totalprice * 100) AS BIGINT)"
 
 
 @register(
@@ -36,7 +35,7 @@ _CENTS = "CAST(round(o_totalprice * 100) AS BIGINT)"
     SELECT count(*) AS n_rows,
            count(CASE WHEN o_orderkey % 2 = 0 THEN 1 END) AS n_with_cents,
            count(CASE WHEN o_orderkey % 2 = 1 THEN 1 END) AS n_with_priority,
-           CAST(sum(CASE WHEN o_orderkey % 2 = 0 THEN {_CENTS} END) AS BIGINT)
+           CAST(sum(CASE WHEN o_orderkey % 2 = 0 THEN {cents_sql("o_totalprice")} END) AS BIGINT)
                AS cents_sum
     FROM orders
     """,
@@ -59,7 +58,7 @@ def source_parquet_schema_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     (out,) = fresh_scratch_dirs(spark, sf_dir, "schema_merge")
     v1 = orders.filter(F.col("o_orderkey") % 2 == 0).select(
         "o_orderkey",
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
+        cents(F.col("o_totalprice")).alias("cents"),
     )
     v2 = orders.filter(F.col("o_orderkey") % 2 == 1).select(
         "o_orderkey", "o_orderpriority"
@@ -81,7 +80,7 @@ def source_parquet_schema_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     SELECT count(*) AS n_rows,
            count(CASE WHEN o_orderkey % 7 = 0 THEN 1 END) AS n_corrupt,
-           CAST(sum(CASE WHEN o_orderkey % 7 <> 0 THEN {_CENTS} END) AS BIGINT)
+           CAST(sum(CASE WHEN o_orderkey % 7 <> 0 THEN {cents_sql("o_totalprice")} END) AS BIGINT)
                AS cents_good
     FROM orders
     """,
@@ -107,7 +106,7 @@ def source_csv_permissive_badrecords(spark: SparkSession, sf_dir: str) -> DataFr
             F.col("o_orderkey"),
             F.col("o_orderpriority"),
             F.when(F.col("o_orderkey") % 7 == 0, F.lit("notanumber")).otherwise(
-                F.round(F.col("o_totalprice") * 100).cast("long").cast("string")
+                cents(F.col("o_totalprice")).cast("string")
             ),
         ).alias("value")
     )
@@ -139,7 +138,7 @@ def source_csv_permissive_badrecords(spark: SparkSession, sf_dir: str) -> DataFr
     oracle=f"""
     SELECT o_orderpriority,
            count(*) AS n_orders,
-           CAST(sum({_CENTS}) AS BIGINT) AS rev_cents,
+           CAST(sum({cents_sql("o_totalprice")}) AS BIGINT) AS rev_cents,
            min(strftime(o_orderdate, '%Y-%m-%d')) AS first_day
     FROM orders
     GROUP BY o_orderpriority
@@ -177,7 +176,7 @@ def sink_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = fan_out(table(spark, sf_dir, "orders")).select(
         "o_orderkey",
         "o_orderpriority",
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
+        cents(F.col("o_totalprice")).alias("cents"),
         F.date_format("o_orderdate", "yyyy-MM-dd").alias("order_day"),
     )
     out = scratch_dir(spark, sf_dir, "xml_orders")

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from debias_spark.catalog import table
+from debias_spark.numeric import cents, cents_sql
 from debias_spark.registry import register
 from debias_spark.warehouse import prune_stale_siblings, scratch_dir
 
@@ -94,10 +95,10 @@ def source_json_permissive_badrecords(spark: SparkSession, sf_dir: str) -> DataF
 @register(
     "sink_managed_table_insert",
     "Z40",
-    oracle="""
+    oracle=f"""
     SELECT o_orderstatus,
            count(*) AS n_orders,
-           CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+           CAST(sum({cents_sql("o_totalprice")}) AS BIGINT)
                AS rev_cents
     FROM orders
     WHERE o_orderstatus IN ('F', 'O')
@@ -138,7 +139,7 @@ def sink_managed_table_insert(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = table(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_orderstatus",
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
+        cents(F.col("o_totalprice")).alias("cents"),
     )
     spark.sql(f"DROP TABLE IF EXISTS {tname}")
     src.filter(F.col("o_orderstatus") == "F").write.saveAsTable(tname)

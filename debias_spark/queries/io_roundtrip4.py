@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from debias_spark.catalog import table
+from debias_spark.numeric import cents, cents_sql
 from debias_spark.registry import register
 from debias_spark.warehouse import scratch_dir
 
@@ -96,11 +97,11 @@ def source_csv_multiline_quotes(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "sink_python_datasource",
     "Z46",
-    oracle="""
+    oracle=f"""
     SELECT o_orderpriority,
            CAST(month(o_orderdate) AS INT) AS mth,
            CAST(count(*) AS BIGINT) AS n_orders,
-           CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+           CAST(sum({cents_sql("o_totalprice")}) AS BIGINT)
                AS rev_cents
     FROM orders
     GROUP BY 1, 2
@@ -135,9 +136,7 @@ def sink_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(
             F.count("*").alias("n_orders"),
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias(
-                "rev_cents"
-            ),
+            F.sum(cents(F.col("o_totalprice"))).alias("rev_cents"),
         )
     )
     path = scratch_dir(spark, sf_dir, "z46_pyds")

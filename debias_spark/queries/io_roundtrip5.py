@@ -19,10 +19,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from debias_spark.catalog import table
+from debias_spark.numeric import cents, cents_sql
 from debias_spark.registry import register
 from debias_spark.warehouse import scratch_dir
-
-_CENTS = "CAST(round(o_totalprice * 100) AS BIGINT)"
 
 
 def write_rowgroup_sink(spark: SparkSession, sf_dir: str) -> str:
@@ -50,7 +49,7 @@ def write_rowgroup_sink(spark: SparkSession, sf_dir: str) -> str:
     oracle=f"""
     SELECT strftime(date_trunc('month', o_orderdate), '%Y-%m') AS month,
            count(*) AS n_orders,
-           CAST(sum({_CENTS}) AS BIGINT) AS rev_cents
+           CAST(sum({cents_sql("o_totalprice")}) AS BIGINT) AS rev_cents
     FROM orders
     WHERE o_orderdate >= TIMESTAMP '1997-01-01'
       AND o_orderdate <  TIMESTAMP '1998-01-01'
@@ -78,7 +77,7 @@ def sink_rowgroup_stats_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         rb.groupBy(F.date_format(F.date_trunc("month", "o_orderdate"), "yyyy-MM").alias("month"))
         .agg(
             F.count("*").alias("n_orders"),
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("rev_cents"),
+            F.sum(cents(F.col("o_totalprice"))).alias("rev_cents"),
         )
         .orderBy("month")
     )
@@ -106,7 +105,7 @@ def write_typed_partitions(spark: SparkSession, sf_dir: str) -> str:
     oracle=f"""
     SELECT CAST(month(o_orderdate) AS INT) AS month,
            count(*) AS n_orders,
-           CAST(sum({_CENTS}) AS BIGINT) AS rev_cents
+           CAST(sum({cents_sql("o_totalprice")}) AS BIGINT) AS rev_cents
     FROM orders
     WHERE year(o_orderdate) = 1997
     GROUP BY 1 ORDER BY 1
@@ -132,7 +131,7 @@ def source_partition_typed_discovery(spark: SparkSession, sf_dir: str) -> DataFr
         rb.groupBy(F.col("month").cast("int").alias("month"))
         .agg(
             F.count("*").alias("n_orders"),
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("rev_cents"),
+            F.sum(cents(F.col("o_totalprice"))).alias("rev_cents"),
         )
         .orderBy("month")
     )
@@ -147,7 +146,7 @@ _CODECS = ("snappy", "zstd", "gzip", "none")
     oracle=f"""
     SELECT c.codec,
            (SELECT count(*) FROM orders WHERE o_orderstatus = 'F') AS n_orders,
-           (SELECT CAST(sum({_CENTS}) AS BIGINT) FROM orders
+           (SELECT CAST(sum({cents_sql("o_totalprice")}) AS BIGINT) FROM orders
             WHERE o_orderstatus = 'F') AS rev_cents
     FROM (SELECT unnest(['gzip', 'none', 'snappy', 'zstd']) AS codec) c
     ORDER BY c.codec
@@ -176,9 +175,7 @@ def sink_compression_codecs(spark: SparkSession, sf_dir: str) -> DataFrame:
         frames.append(
             rb.agg(
                 F.count("*").alias("n_orders"),
-                F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias(
-                    "rev_cents"
-                ),
+                F.sum(cents(F.col("o_totalprice"))).alias("rev_cents"),
             ).select(F.lit(codec).alias("codec"), "n_orders", "rev_cents")
         )
     out = frames[0]
@@ -193,7 +190,7 @@ def sink_compression_codecs(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     SELECT o_orderpriority,
            count(*) AS n,
-           CAST(sum({_CENTS}) AS BIGINT) AS rev_cents,
+           CAST(sum({cents_sql("o_totalprice")}) AS BIGINT) AS rev_cents,
            strftime(min(o_orderdate), '%Y-%m-%d') AS first_day
     FROM orders
     GROUP BY 1 ORDER BY 1
@@ -236,7 +233,7 @@ def source_csv_schema_infer(spark: SparkSession, sf_dir: str) -> DataFrame:
         rb.groupBy("o_orderpriority")
         .agg(
             F.count("*").alias("n"),
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("rev_cents"),
+            F.sum(cents(F.col("o_totalprice"))).alias("rev_cents"),
             F.date_format(F.min("o_orderdate"), "yyyy-MM-dd").alias("first_day"),
         )
         .orderBy("o_orderpriority")

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from debias_spark.catalog import table
+from debias_spark.numeric import cents, cents_sql
 from debias_spark.registry import register
 from debias_spark.warehouse import fresh_scratch_dirs
 
@@ -92,10 +93,10 @@ def source_wholetext_files(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "source_recursive_dir_glob",
     "Z60",
-    oracle="""
+    oracle=f"""
     SELECT o_orderstatus,
            count(*) AS n,
-           CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+           CAST(sum({cents_sql("o_totalprice")}) AS BIGINT)
                AS rev_cents
     FROM orders GROUP BY 1 ORDER BY 1
     """,
@@ -130,7 +131,7 @@ def source_recursive_dir_glob(spark: SparkSession, sf_dir: str) -> DataFrame:
         rb.groupBy("o_orderstatus")
         .agg(
             F.count("*").alias("n"),
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("rev_cents"),
+            F.sum(cents(F.col("o_totalprice"))).alias("rev_cents"),
         )
         .orderBy("o_orderstatus")
     )

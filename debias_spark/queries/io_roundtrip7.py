@@ -12,11 +12,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from debias_spark.catalog import table
+from debias_spark.numeric import cents, cents_sql
 from debias_spark.registry import register
 from debias_spark.session import pinned_confs
 from debias_spark.warehouse import fresh_scratch_dirs
-
-_CENTS = "CAST(round(o_totalprice * 100) AS BIGINT)"
 
 
 @register(
@@ -35,7 +34,7 @@ _CENTS = "CAST(round(o_totalprice * 100) AS BIGINT)"
     )
     SELECT CAST(year AS INT) AS year,
            count(*) AS n_orders,
-           CAST(sum({_CENTS}) AS BIGINT) AS rev_cents
+           CAST(sum({cents_sql("o_totalprice")}) AS BIGINT) AS rev_cents
     FROM doubled GROUP BY year ORDER BY year
     """,
 )
@@ -67,9 +66,7 @@ def sink_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFr
             rb.groupBy(F.col("year").cast("int").alias("year"))
             .agg(
                 F.count("*").alias("n_orders"),
-                F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias(
-                    "rev_cents"
-                ),
+                F.sum(cents(F.col("o_totalprice"))).alias("rev_cents"),
             )
             .orderBy("year")
             .localCheckpoint(eager=True)

@@ -15,11 +15,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from debias_spark.catalog import table
+from debias_spark.numeric import cents, cents_sql
 from debias_spark.registry import register
 from debias_spark.session import pinned_confs
 from debias_spark.warehouse import fresh_scratch_dirs, scratch_dir
-
-_CENTS = "CAST(round(o_totalprice * 100) AS BIGINT)"
 
 
 @register(
@@ -96,7 +95,7 @@ _MAX_RECORDS = 2000
     oracle=f"""
     SELECT o_orderstatus,
            count(*) AS n,
-           CAST(sum({_CENTS}) AS BIGINT) AS rev_cents
+           CAST(sum({cents_sql("o_totalprice")}) AS BIGINT) AS rev_cents
     FROM orders GROUP BY 1 ORDER BY 1
     """,
 )
@@ -130,7 +129,7 @@ def sink_max_records_per_file(spark: SparkSession, sf_dir: str) -> DataFrame:
         rb.groupBy("o_orderstatus")
         .agg(
             F.count("*").alias("n"),
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("rev_cents"),
+            F.sum(cents(F.col("o_totalprice"))).alias("rev_cents"),
         )
         .orderBy("o_orderstatus")
     )
@@ -145,7 +144,7 @@ _SPLIT_BYTES = 64 * 1024
     oracle=f"""
     SELECT o_orderstatus,
            count(*) AS n,
-           CAST(sum({_CENTS}) AS BIGINT) AS rev_cents
+           CAST(sum({cents_sql("o_totalprice")}) AS BIGINT) AS rev_cents
     FROM orders GROUP BY 1 ORDER BY 1
     """,
 )
@@ -182,9 +181,7 @@ def source_max_partition_bytes_scan(spark: SparkSession, sf_dir: str) -> DataFra
             rb.groupBy("o_orderstatus")
             .agg(
                 F.count("*").alias("n"),
-                F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias(
-                    "rev_cents"
-                ),
+                F.sum(cents(F.col("o_totalprice"))).alias("rev_cents"),
             )
             .orderBy("o_orderstatus")
             .collect()

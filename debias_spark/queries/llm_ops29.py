@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from debias_spark.catalog import table
-from debias_spark.numeric import floor_eps, floor_eps_sql
+from debias_spark.numeric import cents, cents_sql, floor_eps, floor_eps_sql
 from debias_spark.operators.skew import fan_out
 from debias_spark.operators.similarity import dot, l2_norm
 from debias_spark.registry import register
@@ -152,7 +152,7 @@ _SPLIT_TS = "2000-01-01"
     oracle=f"""
     WITH o AS MATERIALIZED (
         SELECT o_custkey, o_orderkey,
-               CAST(round(o_totalprice * 100) AS BIGINT) AS cents,
+               {cents_sql("o_totalprice")} AS cents,
                CASE WHEN o_orderdate < TIMESTAMP '{_SPLIT_TS}'
                     THEN 'train' ELSE 'eval' END AS split
         FROM orders
@@ -194,7 +194,7 @@ def orders_temporal_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame
     exact integers."""
     o = table(spark, sf_dir, "orders").select(
         "o_custkey",
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
+        cents(F.col("o_totalprice")).alias("cents"),
         F.when(
             F.col("o_orderdate") < F.expr(f"TIMESTAMP_NTZ '{_SPLIT_TS} 00:00:00'"),
             "train",

@@ -230,7 +230,9 @@ def pipeline_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
             and os.path.isdir(band_dir)
             and _max_band_partition_files(band_dir) > _COMPACT_FILES
         ):
-            before, after = compact_partitioned_state(ss, band_dir, "band_id", NEARDUP_BANDS)
+            before, after = compact_partitioned_state(
+                ss, band_dir, b_banded.schema, "band_id", NEARDUP_BANDS
+            )
             # `after == before` is a legitimate no-op (a lowered
             # threshold can fire on an already-one-file-per-band state
             # when a micro-batch appended nothing — r11 advice); only a

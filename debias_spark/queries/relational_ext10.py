@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from debias_spark.catalog import table
+from debias_spark.numeric import cents, cents_sql
 from debias_spark.registry import register
 
 
@@ -80,9 +81,9 @@ def orders_copurchase_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "orders_equidepth_histogram",
     "X69",
-    oracle="""
+    oracle=f"""
     WITH c AS (
-        SELECT CAST(round(o_totalprice * 100) AS BIGINT) AS cents FROM orders
+        SELECT {cents_sql("o_totalprice")} AS cents FROM orders
     ), cuts AS (
         SELECT quantile_cont(cents,
                              [0.1,0.2,0.3,0.4,0.5,0.6,0.7,0.8,0.9]) AS q
@@ -111,7 +112,7 @@ def orders_equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     comparisons.  Equi-DEPTH beats equi-width under skew: every band
     carries ~10% of rows, so min/max per band localize the mass."""
     o = table(spark, sf_dir, "orders")
-    c = o.select(F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"))
+    c = o.select(cents(F.col("o_totalprice")).alias("cents"))
     cuts = c.agg(
         F.percentile("cents", [i / 10 for i in range(1, 10)]).alias("q")
     )
@@ -179,15 +180,15 @@ _MERGE_KEY_OFFSET = 100_000_000  # synthetic insert keys, collision-free
     oracle=f"""
     WITH base AS (
         SELECT o_orderkey AS k,
-               CAST(round(o_totalprice * 100) AS BIGINT) AS cents
+               {cents_sql("o_totalprice")} AS cents
         FROM orders
     ), changes AS (
         SELECT o_orderkey AS k,
-               CAST(round(o_totalprice * 100) AS BIGINT) + 500 AS cents
+               {cents_sql("o_totalprice")} + 500 AS cents
         FROM orders WHERE o_orderkey % 7 = 0
         UNION ALL
         SELECT o_orderkey + {_MERGE_KEY_OFFSET} AS k,
-               CAST(round(o_totalprice * 100) AS BIGINT) AS cents
+               {cents_sql("o_totalprice")} AS cents
         FROM orders WHERE o_orderkey % 13 = 0
     )
     SELECT coalesce(c.k, b.k) AS o_orderkey,
@@ -212,17 +213,17 @@ def merge_upsert_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     key, so MERGE is a co-partitioned join plus a projection; nothing
     driver-side.  All values are BIGINT cents."""
     o = table(spark, sf_dir, "orders")
-    cents = F.round(F.col("o_totalprice") * 100).cast("long")
-    base = o.select(F.col("o_orderkey").alias("k"), cents.alias("cents"))
+    c = cents(F.col("o_totalprice"))
+    base = o.select(F.col("o_orderkey").alias("k"), c.alias("cents"))
     updates = (
         o.filter(F.col("o_orderkey") % 7 == 0)
-        .select(F.col("o_orderkey").alias("ck"), (cents + 500).alias("ccents"))
+        .select(F.col("o_orderkey").alias("ck"), (c + 500).alias("ccents"))
     )
     inserts = (
         o.filter(F.col("o_orderkey") % 13 == 0)
         .select(
             (F.col("o_orderkey") + _MERGE_KEY_OFFSET).alias("ck"),
-            cents.alias("ccents"),
+            c.alias("ccents"),
         )
     )
     changes = updates.unionAll(inserts)

@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from debias_spark.catalog import table
+from debias_spark.numeric import cents, cents_sql
 from debias_spark.operators.prefixsum import bucketed_cumsum_with_rank
 from debias_spark.registry import register
 
@@ -19,10 +20,10 @@ from debias_spark.registry import register
 @register(
     "lineitem_weighted_median_price",
     "X78",
-    oracle="""
+    oracle=f"""
     WITH v AS (
         SELECT l_returnflag AS flag,
-               CAST(round(l_extendedprice * 100) AS BIGINT) AS cents,
+               {cents_sql("l_extendedprice")} AS cents,
                CAST(l_quantity AS BIGINT) AS w,
                l_orderkey * 8 + l_linenumber AS tb
         FROM lineitem
@@ -77,7 +78,7 @@ def lineitem_weighted_median_price(spark: SparkSession, sf_dir: str) -> DataFram
     li = table(spark, sf_dir, "lineitem")
     v = li.select(
         F.col("l_returnflag").alias("flag"),
-        F.round(F.col("l_extendedprice") * 100).cast("long").alias("cents"),
+        cents(F.col("l_extendedprice")).alias("cents"),
         F.col("l_quantity").cast("long").alias("w"),
         (F.col("l_orderkey") * 8 + F.col("l_linenumber")).alias("tb"),
     )
@@ -142,10 +143,10 @@ def lineitem_weighted_median_price(spark: SparkSession, sf_dir: str) -> DataFram
 @register(
     "orders_gini_revenue",
     "X79",
-    oracle="""
+    oracle=f"""
     WITH pc AS (
         SELECT o_custkey,
-               sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS rev
+               sum({cents_sql("o_totalprice")}) AS rev
         FROM orders GROUP BY o_custkey
     ), r AS (
         SELECT rev,
@@ -177,7 +178,7 @@ def orders_gini_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     mode the integer-cents doctrine exists to surface early."""
     o = table(spark, sf_dir, "orders")
     pc = o.groupBy("o_custkey").agg(
-        F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("rev")
+        F.sum(cents(F.col("o_totalprice"))).alias("rev")
     )
     r = bucketed_cumsum_with_rank(
         pc, value_col="rev", order_col="rev", tiebreak_col="o_custkey",
@@ -400,10 +401,10 @@ def events_hhi_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "events_latency_percentiles_hourly",
     "X84",
-    oracle="""
+    oracle=f"""
     WITH v AS (
         SELECT date_trunc('hour', ts) AS h, event_type,
-               CAST(round(value * 100) AS BIGINT) AS cents
+               {cents_sql("value")} AS cents
         FROM events WHERE value IS NOT NULL
     )
     SELECT strftime(h, '%Y-%m-%d %H:%M:%S') AS hour, event_type,
@@ -429,7 +430,7 @@ def events_latency_percentiles_hourly(spark: SparkSession, sf_dir: str) -> DataF
     v = ev.filter(F.col("value").isNotNull()).select(
         F.date_trunc("hour", "ts").alias("h"),
         "event_type",
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
+        cents(F.col("value")).alias("cents"),
     )
     return v.groupBy("h", "event_type").agg(
         F.count("*").alias("n"),
@@ -449,11 +450,11 @@ def events_latency_percentiles_hourly(spark: SparkSession, sf_dir: str) -> DataF
 @register(
     "orders_weekly_growth",
     "X85",
-    oracle="""
+    oracle=f"""
     WITH w AS (
         SELECT (date_diff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE))
                 + 3) // 7 AS week,
-               sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS rev
+               sum({cents_sql("o_totalprice")}) AS rev
         FROM orders GROUP BY week
     )
     SELECT week, CAST(rev AS BIGINT) AS rev_cents,
@@ -485,7 +486,7 @@ def orders_weekly_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(
             "(datediff(CAST(o_orderdate AS DATE), DATE '1970-01-01') + 3) div 7"
         ).alias("week")
-    ).agg(F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("rev"))
+    ).agg(F.sum(cents(F.col("o_totalprice"))).alias("rev"))
     lw = Window.orderBy("week")
     p = w.select("week", "rev", F.lag("rev").over(lw).alias("prev"))
     # Spark `div` already truncates toward zero; the oracle spells the

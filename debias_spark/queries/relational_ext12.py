@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from debias_spark.catalog import table
+from debias_spark.numeric import cents, cents_sql
 from debias_spark.registry import register
 
 
@@ -163,10 +164,10 @@ def _skyline_batches(
 @register(
     "part_skyline_pareto",
     "X86",
-    oracle="""
+    oracle=f"""
     WITH p AS (
         SELECT p_partkey,
-               CAST(round(p_retailprice * 100) AS BIGINT) AS price_cents,
+               {cents_sql("p_retailprice")} AS price_cents,
                p_size
         FROM part
     )
@@ -197,7 +198,7 @@ def part_skyline_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantics, not the plan."""
     part = table(spark, sf_dir, "part")
     vals = part.select(
-        F.round(F.col("p_retailprice") * 100).cast("long").alias("price_cents"),
+        cents(F.col("p_retailprice")).alias("price_cents"),
         F.col("p_size"),
     )
     schema = "price_cents long, p_size int"
@@ -211,7 +212,7 @@ def part_skyline_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return part.join(
         F.broadcast(frontier),
-        (F.round(F.col("p_retailprice") * 100).cast("long") == F.col("price_cents"))
+        (cents(F.col("p_retailprice")) == F.col("price_cents"))
         & (part["p_size"] == frontier["p_size"]),
     ).select("p_partkey", "price_cents", part["p_size"])
 
@@ -418,13 +419,13 @@ def lineitem_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "incremental_agg_maintenance",
     "X90",
-    oracle="""
+    oracle=f"""
     SELECT o_custkey % 100 AS cust_bucket,
            count(*) AS n_orders,
-           CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+           CAST(sum({cents_sql("o_totalprice")}) AS BIGINT)
                AS rev_cents,
-           max(CAST(round(o_totalprice * 100) AS BIGINT)) AS max_cents,
-           round(sum(CAST(round(o_totalprice * 100) AS BIGINT))::DOUBLE
+           max({cents_sql("o_totalprice")}) AS max_cents,
+           round(sum({cents_sql("o_totalprice")})::DOUBLE
                  / count(*), 4) AS avg_cents
     FROM orders GROUP BY o_custkey % 100
     """,
@@ -443,10 +444,9 @@ def incremental_agg_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     the merged (sum, count) pair.  The oracle aggregates the whole table
     flat; the hash match proves base+delta merge == full recompute."""
     o = table(spark, sf_dir, "orders")
-    cents = F.round(F.col("o_totalprice") * 100).cast("long")
     with_cols = o.select(
         (F.col("o_custkey") % 100).alias("cust_bucket"),
-        cents.alias("cents"),
+        cents(F.col("o_totalprice")).alias("cents"),
         F.col("o_orderdate"),
     )
     base = with_cols.filter(F.col("o_orderdate") < "2000-01-01")

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from debias_spark.catalog import table
+from debias_spark.numeric import cents, cents_sql
 from debias_spark.registry import register
 
 
@@ -101,10 +102,10 @@ def sql_offset_fetch_page(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "sample_hash_deterministic",
     "X95",
-    oracle="""
+    oracle=f"""
     SELECT o_orderpriority,
            count(*) AS n_sampled,
-           CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+           CAST(sum({cents_sql("o_totalprice")}) AS BIGINT)
                AS revenue_cents
     FROM orders
     WHERE substr(md5(CAST(o_orderkey AS VARCHAR)), 32, 1) IN ('0', '1', '2')
@@ -132,9 +133,7 @@ def sample_hash_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return sampled.groupBy("o_orderpriority").agg(
         F.count("*").alias("n_sampled"),
-        F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias(
-            "revenue_cents"
-        ),
+        F.sum(cents(F.col("o_totalprice"))).alias("revenue_cents"),
     )
 
 

@@ -12,18 +12,19 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from debias_spark.catalog import table
+from debias_spark.numeric import cents, cents_sql
 from debias_spark.registry import register
 
 
 @register(
     "sql_cube_grouping_id",
     "X99",
-    oracle="""
+    oracle=f"""
     SELECT coalesce(o_orderpriority, '(all)') AS priority,
            coalesce(o_orderstatus, '(all)') AS status,
            CAST(GROUPING(o_orderpriority, o_orderstatus) AS INTEGER) AS gid,
            count(*) AS n_orders,
-           CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+           CAST(sum({cents_sql("o_totalprice")}) AS BIGINT)
                AS revenue_cents
     FROM orders
     GROUP BY CUBE (o_orderpriority, o_orderstatus)
@@ -47,9 +48,7 @@ def sql_cube_grouping_id(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.grouping_id().cast("int").alias("gid"),
             F.count("*").alias("n_orders"),
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias(
-                "revenue_cents"
-            ),
+            F.sum(cents(F.col("o_totalprice"))).alias("revenue_cents"),
         )
         .select(
             F.coalesce("o_orderpriority", F.lit("(all)")).alias("priority"),

@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from debias_spark.catalog import table
+from debias_spark.numeric import cents_sql
 from debias_spark.registry import register
 
 
@@ -56,10 +57,10 @@ def sql_variant_json_path(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "sql_session_variables",
     "X102",
-    oracle="""
+    oracle=f"""
     SELECT o_orderpriority,
            count(*) AS n_orders,
-           CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+           CAST(sum({cents_sql("o_totalprice")}) AS BIGINT)
                AS revenue_cents
     FROM orders
     WHERE o_totalprice >= 150000.0 AND o_orderstatus = 'F'
@@ -80,12 +81,12 @@ def sql_session_variables(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.sql("DECLARE OR REPLACE VARIABLE want_status STRING DEFAULT 'F'")
     spark.sql("SET VARIABLE min_price = 150000.0")
     return spark.sql(
-        """
+        f"""
         SELECT o_orderpriority,
                count(*) AS n_orders,
-               CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+               CAST(sum({cents_sql("o_totalprice")}) AS BIGINT)
                    AS revenue_cents
-        FROM {orders}
+        FROM {{orders}}
         WHERE o_totalprice >= min_price AND o_orderstatus = want_status
         GROUP BY o_orderpriority
         """,
@@ -96,10 +97,10 @@ def sql_session_variables(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "sql_parameterized_query",
     "X103",
-    oracle="""
+    oracle=f"""
     SELECT c.c_mktsegment,
            count(*) AS n_orders,
-           CAST(sum(CAST(round(o.o_totalprice * 100) AS BIGINT)) AS BIGINT)
+           CAST(sum({cents_sql("o.o_totalprice")}) AS BIGINT)
                AS revenue_cents
     FROM orders o JOIN customer c ON c.c_custkey = o.o_custkey
     WHERE o.o_orderpriority LIKE '1%' AND o.o_totalprice >= 50000.0
@@ -116,12 +117,12 @@ def sql_parameterized_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     The query itself is a broadcast dim join (customer per segment) over
     a pushed-down orders filter — one shuffle for the aggregate."""
     return spark.sql(
-        """
+        f"""
         SELECT c.c_mktsegment,
                count(*) AS n_orders,
-               CAST(sum(CAST(round(o.o_totalprice * 100) AS BIGINT)) AS BIGINT)
+               CAST(sum({cents_sql("o.o_totalprice")}) AS BIGINT)
                    AS revenue_cents
-        FROM {orders} o JOIN {customer} c ON c.c_custkey = o.o_custkey
+        FROM {{orders}} o JOIN {{customer}} c ON c.c_custkey = o.o_custkey
         WHERE o.o_orderpriority LIKE :prio_pattern
           AND o.o_totalprice >= :min_price
         GROUP BY c.c_mktsegment

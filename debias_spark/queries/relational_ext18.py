@@ -13,17 +13,17 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from debias_spark.catalog import table
-from debias_spark.numeric import floor_eps_sql
+from debias_spark.numeric import cents, cents_sql, floor_eps_sql
 from debias_spark.registry import register
 
 
 @register(
     "join_salted_hotkey",
     "X104",
-    oracle="""
+    oracle=f"""
     SELECT s.s_nationkey,
            count(*) AS n_items,
-           CAST(sum(CAST(round(l.l_extendedprice * 100) AS BIGINT)) AS BIGINT)
+           CAST(sum({cents_sql("l.l_extendedprice")}) AS BIGINT)
                AS revenue_cents
     FROM lineitem l JOIN supplier s ON s.s_suppkey = l.l_suppkey
     GROUP BY s.s_nationkey
@@ -51,9 +51,7 @@ def join_salted_hotkey(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = salted_join(li, sup, "l_suppkey", "s_suppkey", salt=8)
     return joined.groupBy("s_nationkey").agg(
         F.count("*").alias("n_items"),
-        F.sum(F.round(F.col("l_extendedprice") * 100).cast("long")).alias(
-            "revenue_cents"
-        ),
+        F.sum(cents(F.col("l_extendedprice"))).alias("revenue_cents"),
     )
 
 

@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from debias_spark.catalog import table
+from debias_spark.numeric import cents_sql
 from debias_spark.registry import register
 
 
@@ -90,17 +91,17 @@ def sql_collation_lcase(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_BOM_SQL = """
+_BOM_SQL = f"""
 WITH RECURSIVE bom AS (
     SELECT p_partkey AS pk, 0 AS depth,
-           CAST(round(p_retailprice * 100) AS BIGINT) AS cents
-    FROM {part} WHERE p_partkey = 1
+           {cents_sql("p_retailprice")} AS cents
+    FROM {{part}} WHERE p_partkey = 1
     UNION ALL
     SELECT c.p_partkey AS pk, b.depth + 1 AS depth,
-           CAST(round(c.p_retailprice * 100) AS BIGINT) AS cents
+           {cents_sql("c.p_retailprice")} AS cents
     FROM bom b
     CROSS JOIN (VALUES (0), (1)) AS x(i)
-    JOIN {part} c ON c.p_partkey = b.pk * 2 + x.i
+    JOIN {{part}} c ON c.p_partkey = b.pk * 2 + x.i
 )
 SELECT CAST(depth AS INTEGER) AS depth, count(*) AS n_parts,
        CAST(sum(cents) AS BIGINT) AS cents_total

@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from debias_spark.catalog import table
-from debias_spark.numeric import floor_eps, floor_eps_sql
+from debias_spark.numeric import cents, cents_sql, floor_eps, floor_eps_sql
 from debias_spark.registry import register
 
 _CELL = 0.5  # degrees; at |lat| <= 2 a 3x3 neighborhood covers 50 km (0.45 deg)
@@ -160,7 +160,7 @@ def geo_grid_radius_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH src AS MATERIALIZED (
         SELECT CAST(floor(epoch(ts) / 3600) * 3600 AS BIGINT) AS hour_s,
                event_type,
-               CAST(round(value * 100) AS BIGINT) AS cents
+               {cents_sql("value")} AS cents
         FROM events WHERE event_id % 7 = 0
     ), bounds AS (
         SELECT min(hour_s) AS start_s FROM src
@@ -223,7 +223,7 @@ def timeseries_linear_interp(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = ev.select(
         hour_s,
         "event_type",
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
+        cents(F.col("value")).alias("cents"),
     )
     pts = src.groupBy("hour_s", "event_type").agg(F.avg("cents").alias("v"))
     bounds = src.agg(F.min("hour_s").alias("start_s"))

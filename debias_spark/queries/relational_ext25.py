@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from debias_spark.catalog import table
-from debias_spark.numeric import floor_eps_sql
+from debias_spark.numeric import cents_sql, floor_eps_sql
 from debias_spark.registry import register
 
 
@@ -168,10 +168,10 @@ def orders_mannwhitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Monthly revenue is consumed twice by the pair self-join: the oracle
 # materializes it; the Spark side localCheckpoints the tiny (about 80-row)
 # frame so the orders scan+aggregate runs once.
-_THEILSEN_MONTHLY_SQL = """
-SELECT ({year} - 1995) * 12 + {month} - 1 AS m,
-       sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS cents
-FROM {orders}
+_THEILSEN_MONTHLY_SQL = f"""
+SELECT ({{year}} - 1995) * 12 + {{month}} - 1 AS m,
+       sum({cents_sql("o_totalprice")}) AS cents
+FROM {{orders}}
 GROUP BY m
 """
 

@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from debias_spark.catalog import table
+from debias_spark.numeric import cents, cents_sql
 from debias_spark.registry import register
 
 
@@ -71,9 +72,9 @@ def sql_pivot_multi_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "sql_scalar_udf_create",
     "X129",
-    oracle="""
+    oracle=f"""
     SELECT o_orderpriority,
-           CAST(sum(CAST(round(o_totalprice * (1 - 0.04) * 100) AS BIGINT))
+           CAST(sum({cents_sql("o_totalprice * (1 - 0.04)")})
                 AS BIGINT) AS disc_cents,
            count(*) AS n
     FROM orders
@@ -95,10 +96,10 @@ def sql_scalar_udf_create(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan shape: identical to writing the expression inline — one scan
     with the status filter pushed, one partial+final aggregate."""
     spark.sql(
-        """
+        f"""
         CREATE OR REPLACE TEMPORARY FUNCTION disc_cents_x129(p DOUBLE)
         RETURNS BIGINT
-        RETURN CAST(round(p * (1 - 0.04) * 100) AS BIGINT)
+        RETURN {cents_sql("p * (1 - 0.04)")}
         """
     )
     return spark.sql(
@@ -118,9 +119,9 @@ def sql_scalar_udf_create(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "diag_observe_metrics",
     "X130",
-    oracle="""
+    oracle=f"""
     SELECT count(*) AS n_rows,
-           CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+           CAST(sum({cents_sql("o_totalprice")}) AS BIGINT)
                AS total_cents,
            count(CASE WHEN o_orderstatus = 'F' THEN 1 END) AS n_fulfilled
     FROM orders
@@ -146,9 +147,7 @@ def diag_observe_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     observed = orders.observe(
         obs,
         F.count(F.lit(1)).alias("n_rows"),
-        F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias(
-            "total_cents"
-        ),
+        F.sum(cents(F.col("o_totalprice"))).alias("total_cents"),
         F.count(F.when(F.col("o_orderstatus") == "F", 1)).alias("n_fulfilled"),
     )
     observed.write.format("noop").mode("overwrite").save()  # one real pass
@@ -212,13 +211,13 @@ def window_interval_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "sql_lateral_column_alias",
     "X132",
-    oracle="""
+    oracle=f"""
     SELECT o_orderkey,
-           CAST(round(o_totalprice * 100) AS BIGINT) AS cents,
-           CAST(round(o_totalprice * 100) AS BIGINT)
-               - CAST(round(o_totalprice * 100) AS BIGINT) % 100 AS whole,
-           (CAST(round(o_totalprice * 100) AS BIGINT)
-               - CAST(round(o_totalprice * 100) AS BIGINT) % 100) // 100
+           {cents_sql("o_totalprice")} AS cents,
+           {cents_sql("o_totalprice")}
+               - {cents_sql("o_totalprice")} % 100 AS whole,
+           ({cents_sql("o_totalprice")}
+               - {cents_sql("o_totalprice")} % 100) // 100
                AS dollars
     FROM orders
     WHERE o_orderkey % 50 = 0
@@ -239,12 +238,12 @@ def sql_lateral_column_alias(spark: SparkSession, sf_dir: str) -> DataFrame:
     at analysis time, the physical plan is identical to the expanded
     spelling (one codegen stage over the pushed sampling filter)."""
     return spark.sql(
-        """
+        f"""
         SELECT o_orderkey,
-               CAST(round(o_totalprice * 100) AS BIGINT) AS cents,
+               {cents_sql("o_totalprice")} AS cents,
                cents - cents % 100 AS whole,
                whole div 100 AS dollars
-        FROM {orders}
+        FROM {{orders}}
         WHERE o_orderkey % 50 = 0
         ORDER BY o_orderkey
         """,
@@ -255,10 +254,10 @@ def sql_lateral_column_alias(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "sql_multicol_in_subquery",
     "X133",
-    oracle="""
+    oracle=f"""
     SELECT o_orderpriority,
            count(*) AS n_orders,
-           CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+           CAST(sum({cents_sql("o_totalprice")}) AS BIGINT)
                AS rev_cents
     FROM orders
     WHERE o_orderstatus = 'O' AND EXISTS (
@@ -285,14 +284,14 @@ def sql_multicol_in_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     are engine-handled identically because neither join column is
     nullable in this data."""
     return spark.sql(
-        """
+        f"""
         SELECT o_orderpriority,
                count(*) AS n_orders,
-               CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+               CAST(sum({cents_sql("o_totalprice")}) AS BIGINT)
                    AS rev_cents
-        FROM {orders}
+        FROM {{orders}}
         WHERE (o_custkey, o_orderstatus) IN (
-            SELECT c_custkey, 'O' FROM {customer} WHERE c_acctbal > 5000
+            SELECT c_custkey, 'O' FROM {{customer}} WHERE c_acctbal > 5000
         )
         GROUP BY o_orderpriority
         ORDER BY o_orderpriority
@@ -305,10 +304,10 @@ def sql_multicol_in_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "sql_xpath_extract_pack",
     "X134",
-    oracle="""
+    oracle=f"""
     SELECT o_orderkey,
            o_orderpriority AS prio,
-           CAST(round(o_totalprice * 100) AS BIGINT) AS cents,
+           {cents_sql("o_totalprice")} AS cents,
            CAST(1 AS BIGINT) AS n_items
     FROM orders WHERE o_orderkey % 100 = 0
     ORDER BY o_orderkey
@@ -328,14 +327,14 @@ def sql_xpath_extract_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter — xpath functions evaluate per row JVM-side, no shuffle
     before the final ORDER BY."""
     return spark.sql(
-        """
+        f"""
         WITH xml AS (
             SELECT o_orderkey,
                    format_string(
                        '<order key="%d"><prio>%s</prio><cents>%d</cents><item/></order>',
                        o_orderkey, o_orderpriority,
-                       CAST(round(o_totalprice * 100) AS BIGINT)) AS doc
-            FROM {orders} WHERE o_orderkey % 100 = 0
+                       {cents_sql("o_totalprice")}) AS doc
+            FROM {{orders}} WHERE o_orderkey % 100 = 0
         )
         SELECT o_orderkey,
                xpath_string(doc, '/order/prio') AS prio,

@@ -12,11 +12,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from debias_spark.catalog import table
-from debias_spark.numeric import floor_eps, floor_eps_sql
+from debias_spark.numeric import cents, cents_sql, floor_eps, floor_eps_sql
 from debias_spark.registry import register
 from debias_spark.session import temp_views
-
-_CENTS_SQL = "CAST(round(l_extendedprice * 100) AS BIGINT)"
 
 
 @register(
@@ -26,7 +24,7 @@ _CENTS_SQL = "CAST(round(l_extendedprice * 100) AS BIGINT)"
     WITH parts AS (
         SELECT l_partkey,
                sum(CAST(l_quantity AS BIGINT)) AS x,
-               sum({_CENTS_SQL}) AS y
+               sum({cents_sql("l_extendedprice")}) AS y
         FROM lineitem GROUP BY 1
     ), ranked AS (
         SELECT 2 * rank() OVER (ORDER BY x)
@@ -80,7 +78,7 @@ def stats_spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.select(
             "l_partkey",
             F.col("l_quantity").cast("bigint").alias("q"),
-            F.round(F.col("l_extendedprice") * 100).cast("long").alias("cents"),
+            cents(F.col("l_extendedprice")).alias("cents"),
         )
         .groupBy("l_partkey")
         .agg(F.sum("q").alias("x"), F.sum("cents").alias("y"))
@@ -130,7 +128,7 @@ def stats_spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     SELECT l_returnflag, l_linestatus,
            CAST(count(*) AS BIGINT) AS n_items,
-           CAST(sum({_CENTS_SQL}) AS BIGINT) AS rev_cents
+           CAST(sum({cents_sql("l_extendedprice")}) AS BIGINT) AS rev_cents
     FROM lineitem
     WHERE l_shipdate >= TIMESTAMP '1996-01-01'
     GROUP BY l_returnflag, l_linestatus
@@ -154,7 +152,7 @@ def sql_pipe_syntax_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"""
         FROM {{li}}
         |> WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-        |> EXTEND {_CENTS_SQL} AS cents
+        |> EXTEND {cents_sql("l_extendedprice")} AS cents
         |> AGGREGATE count(*) AS n_items, sum(cents) AS rev_cents
            GROUP BY l_returnflag, l_linestatus
         |> WHERE n_items > 10
@@ -269,11 +267,11 @@ def sql_recursive_cte_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "sql_table_function_lateral",
     "X142",
-    oracle="""
+    oracle=f"""
     SELECT CAST(year(o_orderdate) AS INT) AS yr,
            CAST(month(o_orderdate) AS INT) AS mth,
            CAST(count(*) AS BIGINT) AS n_orders,
-           CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+           CAST(sum({cents_sql("o_totalprice")}) AS BIGINT)
                AS rev_cents
     FROM orders
     WHERE year(o_orderdate) IN (1996, 1997, 1998)
@@ -300,12 +298,12 @@ def sql_table_function_lateral(spark: SparkSession, sf_dir: str) -> DataFrame:
     with temp_views(spark, _x142_orders=table(spark, sf_dir, "orders")):
         try:
             spark.sql(
-                """
+                f"""
                 CREATE OR REPLACE TEMPORARY FUNCTION monthly_report_x142(yr INT)
                 RETURNS TABLE(mth INT, n_orders BIGINT, rev_cents BIGINT)
                 RETURN SELECT CAST(month(o_orderdate) AS INT),
                               count(*),
-                              sum(CAST(round(o_totalprice * 100) AS BIGINT))
+                              sum({cents_sql("o_totalprice")})
                        FROM _x142_orders
                        WHERE year(o_orderdate) = yr
                        GROUP BY 1

@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from debias_spark.catalog import table
-from debias_spark.numeric import floor_eps, floor_eps_sql
+from debias_spark.numeric import cents, cents_sql, floor_eps, floor_eps_sql
 from debias_spark.registry import register
 
 
@@ -27,7 +27,7 @@ from debias_spark.registry import register
     WITH nat AS MATERIALIZED (
         SELECT c.c_nationkey AS nk,
                count(DISTINCT c.c_custkey) AS x,
-               sum(CAST(round(o.o_totalprice * 100) AS BIGINT)) AS y
+               sum({cents_sql("o.o_totalprice")}) AS y
         FROM customer c JOIN orders o ON o.o_custkey = c.c_custkey
         GROUP BY 1
     ), p AS (
@@ -71,7 +71,7 @@ def stats_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("c_nationkey").alias("nk"))
         .agg(
             F.countDistinct("c_custkey").alias("x"),
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("y"),
+            F.sum(cents(F.col("o_totalprice"))).alias("y"),
         )
         .localCheckpoint(eager=True)  # 25 rows, read by pairs AND the count
     )

@@ -14,13 +14,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from debias_spark.catalog import table
+from debias_spark.numeric import cents, cents_sql
 from debias_spark.registry import register
 
 
 @register(
     "sql_try_conversion_pack",
     "X146",
-    oracle="""
+    oracle=f"""
     WITH t AS (
         SELECT o_orderpriority AS prio,
                TRY_CAST(o_orderpriority AS INTEGER) AS whole_cast,
@@ -28,7 +29,7 @@ from debias_spark.registry import register
                    AS prio_num,
                string_split(o_orderpriority, '-')[5] AS elem5,
                CASE WHEN o_custkey % 3 = 0 THEN NULL
-                    ELSE CAST(round(o_totalprice * 100) AS BIGINT)
+                    ELSE {cents_sql("o_totalprice")}
                          // (o_custkey % 3) END AS div_cents,
                TRY_CAST(o_orderstatus AS TIMESTAMP) AS bad_ts
         FROM orders
@@ -61,7 +62,7 @@ def sql_try_conversion_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = table(spark, sf_dir, "orders")
     arr = F.split("o_orderpriority", "-")
     div = F.try_divide(
-        F.round(F.col("o_totalprice") * 100).cast("long"),
+        cents(F.col("o_totalprice")),
         F.col("o_custkey") % 3,
     )
     t = o.select(

@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from debias_spark.catalog import table
+from debias_spark.numeric import cents, cents_sql
 from debias_spark.operators.prefixsum import bucketed_cumsum
 from debias_spark.registry import register
 
@@ -19,12 +20,12 @@ from debias_spark.registry import register
 @register(
     "orders_abc_xyz_classification",
     "X147",
-    oracle="""
+    oracle=f"""
     WITH pm AS MATERIALIZED (
         SELECT l_partkey,
                date_trunc('month', l_shipdate) AS m,
                sum(CAST(l_quantity AS BIGINT)) AS q,
-               sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS cents
+               sum({cents_sql("l_extendedprice")}) AS cents
         FROM lineitem GROUP BY 1, 2
     ), p AS MATERIALIZED (
         SELECT l_partkey,
@@ -78,7 +79,7 @@ def orders_abc_xyz_classification(spark: SparkSession, sf_dir: str) -> DataFrame
         "l_partkey", F.date_trunc("month", "l_shipdate").alias("m")
     ).agg(
         F.sum(F.col("l_quantity").cast("bigint")).alias("q"),
-        F.sum(F.round(F.col("l_extendedprice") * 100).cast("long")).alias("cents"),
+        F.sum(cents(F.col("l_extendedprice"))).alias("cents"),
     )
     p = pm.groupBy("l_partkey").agg(
         F.sum("cents").alias("rev"),

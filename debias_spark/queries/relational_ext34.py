@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from debias_spark.catalog import table
+from debias_spark.numeric import cents, cents_sql
 from debias_spark.registry import register
 from debias_spark.session import pinned_confs, temp_views
 
@@ -45,10 +46,10 @@ def bloom_filtered_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "join_bloom_runtime_filter",
     "X148",
-    oracle="""
+    oracle=f"""
     SELECT p_type,
            count(*) AS n,
-           CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT)
+           CAST(sum({cents_sql("l_extendedprice")}) AS BIGINT)
                AS rev_cents
     FROM lineitem JOIN part ON l_partkey = p_partkey
     WHERE p_size <= 5
@@ -76,9 +77,7 @@ def join_bloom_runtime_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("p_type")
             .agg(
                 F.count("*").alias("n"),
-                F.sum(F.round(F.col("l_extendedprice") * 100).cast("long")).alias(
-                    "rev_cents"
-                ),
+                F.sum(cents(F.col("l_extendedprice"))).alias("rev_cents"),
             )
             .orderBy("p_type")
             .localCheckpoint(eager=True)
@@ -218,10 +217,10 @@ def scalar_hash_fn_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "sql_cache_table_roundtrip",
     "X150",
-    oracle="""
+    oracle=f"""
     SELECT o_orderstatus,
            count(*) AS n,
-           CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+           CAST(sum({cents_sql("o_totalprice")}) AS BIGINT)
                AS rev_cents
     FROM orders GROUP BY 1 ORDER BY 1
     """,
@@ -247,10 +246,10 @@ def sql_cache_table_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         try:
             out = spark.sql(
-                """
+                f"""
                 SELECT o_orderstatus,
                        count(*) AS n,
-                       CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+                       CAST(sum({cents_sql("o_totalprice")}) AS BIGINT)
                            AS rev_cents
                 FROM _x150_cached GROUP BY 1 ORDER BY 1
                 """

@@ -11,24 +11,25 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from debias_spark.catalog import table
+from debias_spark.numeric import cents_sql
 from debias_spark.registry import register
 
-_AGG_SQL = """
-    SELECT '{tag}' AS variant,
+_AGG_SQL = f"""
+    SELECT '{{tag}}' AS variant,
            count(*) AS n,
-           CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+           CAST(sum({cents_sql("o_totalprice")}) AS BIGINT)
                AS rev_cents
-    FROM {rel}
+    FROM {{rel}}
 """
 
 
 @register(
     "sql_partitioning_hints_pack",
     "X152",
-    oracle="""
+    oracle=f"""
     SELECT v.variant,
            (SELECT count(*) FROM orders) AS n,
-           (SELECT CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT))
+           (SELECT CAST(sum({cents_sql("o_totalprice")})
                    AS BIGINT) FROM orders) AS rev_cents
     FROM (SELECT unnest(['coalesce', 'rebalance', 'repartition']) AS variant) v
     ORDER BY v.variant

@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from debias_spark.catalog import table
-from debias_spark.numeric import floor_eps, floor_eps_sql
+from debias_spark.numeric import cents, cents_sql, floor_eps, floor_eps_sql
 from debias_spark.registry import register
 
 
@@ -95,11 +95,11 @@ def join_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "orders_cohort_ltv_curve",
     "X153",
-    oracle="""
+    oracle=f"""
     WITH f AS (
         SELECT o_custkey,
                date_trunc('month', o_orderdate) AS m,
-               CAST(round(o_totalprice * 100) AS BIGINT) AS cents
+               {cents_sql("o_totalprice")} AS cents
         FROM orders
     ), cust AS MATERIALIZED (
         SELECT o_custkey, min(m) AS cohort FROM f GROUP BY 1
@@ -141,7 +141,7 @@ def orders_cohort_ltv_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     f = o.select(
         "o_custkey",
         F.date_trunc("month", "o_orderdate").alias("m"),
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
+        cents(F.col("o_totalprice")).alias("cents"),
     )
     cust = f.groupBy("o_custkey").agg(F.min("m").alias("cohort"))
     ca = (

@@ -17,17 +17,18 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from debias_spark.catalog import table
+from debias_spark.numeric import cents, cents_sql
 from debias_spark.registry import register
 
 
 @register(
     "sql_from_xml_nested",
     "X155",
-    oracle="""
+    oracle=f"""
     SELECT o_orderpriority AS prio,
            count(*) AS n,
            CAST(sum(o_custkey) AS BIGINT) AS cust_sum,
-           CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+           CAST(sum({cents_sql("o_totalprice")}) AS BIGINT)
                AS cents_sum,
            CAST(sum(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END)
                 AS BIGINT) AS n_f
@@ -55,7 +56,7 @@ def sql_from_xml_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("<order><k>"),
         F.col("o_custkey"),
         F.lit("</k><p>"),
-        F.round(F.col("o_totalprice") * 100).cast("long"),
+        cents(F.col("o_totalprice")),
         F.lit("</p><meta><prio>"),
         F.col("o_orderpriority"),
         F.lit("</prio><flags><f>"),

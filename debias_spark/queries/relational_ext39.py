@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from debias_spark.catalog import table
-from debias_spark.numeric import floor_eps, floor_eps_sql
+from debias_spark.numeric import cents, cents_sql, floor_eps, floor_eps_sql
 from debias_spark.registry import register
 
 
@@ -24,10 +24,10 @@ from debias_spark.registry import register
     WITH g AS MATERIALIZED (
         SELECT l_returnflag AS flag,
                CAST(count(*) AS HUGEINT) AS n,
-               CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT))
+               CAST(sum({cents_sql("l_extendedprice")})
                     AS HUGEINT) AS s,
-               CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)
-                        * CAST(round(l_extendedprice * 100) AS BIGINT))
+               CAST(sum({cents_sql("l_extendedprice")}
+                        * {cents_sql("l_extendedprice")})
                     AS HUGEINT) AS q
         FROM lineitem GROUP BY 1
     ), tot AS (
@@ -64,11 +64,11 @@ def lineitem_anova_f(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one map-side-combined grouped moment aggregate, then a
     3-row fold.  Nothing else."""
     li = table(spark, sf_dir, "lineitem")
-    cents = F.round(F.col("l_extendedprice") * 100).cast("long")
+    c = cents(F.col("l_extendedprice"))
     g = li.groupBy(F.col("l_returnflag").alias("flag")).agg(
         F.count("*").cast("decimal(38,0)").alias("n"),
-        F.sum(cents).cast("decimal(38,0)").alias("s"),
-        F.sum(cents * cents).cast("decimal(38,0)").alias("q"),
+        F.sum(c).cast("decimal(38,0)").alias("s"),
+        F.sum(c * c).cast("decimal(38,0)").alias("q"),
     )
     tot = g.agg(
         F.sum("n").alias("nt"),

@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from debias_spark.catalog import table
-from debias_spark.numeric import floor_eps, floor_eps_sql
+from debias_spark.numeric import cents, cents_sql, floor_eps, floor_eps_sql
 from debias_spark.registry import register
 from debias_spark.session import pinned_confs
 
@@ -192,12 +192,12 @@ def join_cbo_reorder_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "events_decayed_engagement",
     "X162",
-    oracle="""
+    oracle=f"""
     WITH ref AS MATERIALIZED (
         SELECT max(CAST(ts AS DATE)) AS rd FROM events
     ), d AS (
         SELECT user_id,
-               CAST(round(value * 100) AS BIGINT)
+               {cents_sql("value")}
                    >> least(CAST(datediff('day', CAST(ts AS DATE), ref.rd)
                                  // 7 AS INT), 62) AS dec_cents
         FROM events, ref
@@ -232,7 +232,7 @@ def events_decayed_engagement(spark: SparkSession, sf_dir: str) -> DataFrame:
         # SQL form: the Python F.shiftright helper only takes a literal
         # shift count; the SQL function accepts a column expression
         F.expr(
-            "shiftright(CAST(round(value * 100) AS BIGINT), "
+            f"shiftright({cents_sql('value')}, "
             "least(CAST(datediff(rd, CAST(ts AS DATE)) DIV 7 AS INT), 62))"
         ).alias("dec_cents"),
     )

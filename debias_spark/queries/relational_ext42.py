@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from debias_spark.catalog import table
+from debias_spark.numeric import cents, cents_sql
 from debias_spark.registry import register
 
 # ---------------------------------------------------------------------------
@@ -103,8 +104,6 @@ def events_kanonymity_generalization(spark: SparkSession, sf_dir: str) -> DataFr
 
 _BROADCAST_ROW_TH = 100  # dims under this many rows broadcast; others SMJ
 
-_CENTS = "CAST(round(o_totalprice * 100) AS BIGINT)"
-
 
 @register(
     "diag_join_strategy_autotune",
@@ -114,7 +113,7 @@ _CENTS = "CAST(round(o_totalprice * 100) AS BIGINT)"
     nc AS (SELECT count(*) AS n FROM nation)
     SELECT n.n_name,
            CAST(count(*) AS BIGINT) AS n_orders,
-           CAST(sum({_CENTS}) AS BIGINT) AS rev_cents,
+           CAST(sum({cents_sql("o_totalprice")}) AS BIGINT) AS rev_cents,
            CASE WHEN (SELECT n FROM cc) < {_BROADCAST_ROW_TH}
                 THEN 'broadcast' ELSE 'smj' END AS customer_path,
            CASE WHEN (SELECT n FROM nc) < {_BROADCAST_ROW_TH}
@@ -161,7 +160,7 @@ def diag_join_strategy_autotune(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("n_name")
         .agg(
             F.count("*").alias("n_orders"),
-            F.sum(F.expr(_CENTS)).alias("rev_cents"),
+            F.sum(cents(F.col("o_totalprice"))).alias("rev_cents"),
         )
         .select(
             "n_name",

@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from debias_spark.catalog import table
+from debias_spark.numeric import cents, cents_sql
 from debias_spark.operators.dedup import MINHASH_P
 from debias_spark.registry import register
 
@@ -23,8 +24,6 @@ from debias_spark.registry import register
 _N_REP = 32  # subsample replicas
 _KEEP_MOD = 5  # each replica keeps ~80% of rows (hash % 5 != 0)
 _LO_RANK, _HI_RANK = 2, 31  # order statistics of the 32 replica means
-
-_CENTS = "CAST(round(o_totalprice * 100) AS BIGINT)"
 
 
 def _coin_rows() -> str:
@@ -45,7 +44,7 @@ def _coin_rows() -> str:
     oracle=f"""
     WITH dims(b, a, bb) AS (VALUES {_coin_rows()}),
     mem AS (
-        SELECT CAST(b AS BIGINT) AS b, {_CENTS} AS cents
+        SELECT CAST(b AS BIGINT) AS b, {cents_sql("o_totalprice")} AS cents
         FROM orders, dims
         WHERE ((o_orderkey % {MINHASH_P}) * a + bb) % {MINHASH_P}
               % {_KEEP_MOD} <> 0
@@ -55,7 +54,7 @@ def _coin_rows() -> str:
     ), ranked AS (
         SELECT m, row_number() OVER (ORDER BY m) AS rn FROM means
     ), full_ AS (
-        SELECT CAST(sum({_CENTS}) AS BIGINT) // count(*) AS mean_cents
+        SELECT CAST(sum({cents_sql("o_totalprice")}) AS BIGINT) // count(*) AS mean_cents
         FROM orders
     )
     SELECT CAST({_N_REP} AS BIGINT) AS n_replicas,
@@ -93,7 +92,7 @@ def stats_subsample_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         for i, (a, bb) in enumerate(minhash_params(_N_REP))
     ) + ")"
     ex = orders.select(
-        F.expr(_CENTS).alias("cents"),
+        cents(F.col("o_totalprice")).alias("cents"),
         "o_orderkey",
         F.explode(F.expr(coins)).alias("c"),
     ).filter(
@@ -110,7 +109,7 @@ def stats_subsample_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.element_at("ms", _HI_RANK).alias("ci_hi_cents"),
     )
     full = orders.agg(
-        F.expr(f"sum({_CENTS}) div count(*)").alias("mean_cents")
+        F.expr(f"sum({cents_sql('o_totalprice')}) div count(*)").alias("mean_cents")
     )
     return full.crossJoin(F.broadcast(stats)).select(
         F.lit(_N_REP).cast("long").alias("n_replicas"),

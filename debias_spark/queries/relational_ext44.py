@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from debias_spark.catalog import table
+from debias_spark.numeric import cents_sql
 from debias_spark.registry import register
 from debias_spark.session import temp_views
 
@@ -125,11 +126,11 @@ def diag_referential_integrity_audit(spark: SparkSession, sf_dir: str) -> DataFr
 @register(
     "sql_execute_immediate_pack",
     "X169",
-    oracle="""
+    oracle=f"""
     WITH mx AS (SELECT max(o_totalprice) AS m FROM orders)
     SELECT o_orderpriority,
            CAST(count(*) AS BIGINT) AS n_orders,
-           CAST(round(max(o_totalprice) * 100) AS BIGINT) AS max_cents
+           {cents_sql("max(o_totalprice)")} AS max_cents
     FROM orders, mx
     WHERE o_totalprice >= mx.m / 2 AND o_orderpriority <> '5-LOW'
     GROUP BY o_orderpriority ORDER BY o_orderpriority
@@ -156,10 +157,10 @@ def sql_execute_immediate_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.sql("EXECUTE IMMEDIATE 'SELECT max(o_totalprice) FROM _ei_orders' INTO ei_max")
         spark.sql("DECLARE OR REPLACE VARIABLE ei_query STRING")
         spark.sql(
-            """SET VARIABLE ei_query =
+            f"""SET VARIABLE ei_query =
                'SELECT o_orderpriority,
                        count(*) AS n_orders,
-                       CAST(round(max(o_totalprice) * 100) AS BIGINT) AS max_cents
+                       {cents_sql("max(o_totalprice)")} AS max_cents
                 FROM _ei_orders
                 WHERE o_totalprice >= ? AND o_orderpriority <> ?
                 GROUP BY o_orderpriority ORDER BY o_orderpriority'"""

@@ -14,19 +14,19 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from debias_spark.catalog import table
-from debias_spark.numeric import floor_eps, floor_eps_sql
+from debias_spark.numeric import cents, cents_sql, floor_eps, floor_eps_sql
 from debias_spark.registry import register
 
 
 @register(
     "customer_rfm_segments",
     "X30",
-    oracle="""
+    oracle=f"""
     WITH rfm AS (
         SELECT o_custkey,
                CAST(max(floor(epoch(o_orderdate))) AS BIGINT) AS last_s,
                count(*) AS frequency,
-               CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+               CAST(sum({cents_sql("o_totalprice")}) AS BIGINT)
                    AS monetary_cents
         FROM orders GROUP BY o_custkey
     ), cuts AS (
@@ -69,15 +69,10 @@ def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketch, bounded state) — that trades the cross-engine determinism this
     oracle needs, so the exact form stays here."""
     o = table(spark, sf_dir, "orders")
-    # money as integer cents: bigint sums are order-independent and
-    # engine-exact, so both the cutoff comparisons and the averages are
-    # deterministic (double sums can differ in the last ulp across engines
-    # and land on opposite sides of a half-cent rounding boundary).
-    cents = F.round(F.col("o_totalprice") * 100).cast("long")
     rfm = o.groupBy("o_custkey").agg(
         F.max(F.unix_seconds(F.col("o_orderdate").cast("timestamp"))).alias("last_s"),
         F.count("*").alias("frequency"),
-        F.sum(cents).alias("monetary_cents"),
+        F.sum(cents(F.col("o_totalprice"))).alias("monetary_cents"),
     )
     cuts = rfm.agg(
         F.percentile("last_s", [0.25, 0.5, 0.75]).alias("rq"),

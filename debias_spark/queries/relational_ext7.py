@@ -17,16 +17,17 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from debias_spark.catalog import table
+from debias_spark.numeric import cents, cents_sql
 from debias_spark.registry import register
 
 
 @register(
     "events_anomaly_mad",
     "X50",
-    oracle="""
+    oracle=f"""
     WITH v AS (
         SELECT event_type, event_id,
-               CAST(round(value * 100) AS BIGINT) AS cents
+               {cents_sql("value")} AS cents
         FROM events WHERE value IS NOT NULL
     ), med AS (
         SELECT event_type, quantile_cont(cents, 0.5) AS med_cents FROM v
@@ -63,7 +64,7 @@ def events_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "event_type",
             "event_id",
-            F.round(F.col("value") * 100).cast("long").alias("cents"),
+            cents(F.col("value")).alias("cents"),
         )
     )
     med = v.groupBy("event_type").agg(

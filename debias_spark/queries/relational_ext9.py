@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from debias_spark.catalog import table
+from debias_spark.numeric import cents, cents_sql
 from debias_spark.registry import register
 
 
@@ -236,10 +237,10 @@ def events_rolling_dau7(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "orders_pareto_share",
     "X62",
-    oracle="""
+    oracle=f"""
     WITH pc AS (
         SELECT o_custkey,
-               CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+               CAST(sum({cents_sql("o_totalprice")}) AS BIGINT)
                    AS rev_cents
         FROM orders GROUP BY o_custkey
     ), c AS (
@@ -269,8 +270,9 @@ def orders_pareto_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     from debias_spark.operators.prefixsum import bucketed_cumsum
 
     o = table(spark, sf_dir, "orders")
-    cents = F.round(F.col("o_totalprice") * 100).cast("long")
-    pc = o.groupBy("o_custkey").agg(F.sum(cents).alias("rev_cents"))
+    pc = o.groupBy("o_custkey").agg(
+        F.sum(cents(F.col("o_totalprice"))).alias("rev_cents")
+    )
     c = bucketed_cumsum(
         pc, value_col="rev_cents", order_col="rev_cents",
         tiebreak_col="o_custkey", descending=True,
@@ -287,11 +289,11 @@ def orders_pareto_share(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "regr_price_vs_quantity",
     "X63",
-    oracle="""
+    oracle=f"""
     WITH j AS (
         SELECT p.p_brand,
                CAST(l.l_quantity AS BIGINT) AS x,
-               CAST(round(l.l_extendedprice * 100) AS BIGINT) AS y
+               {cents_sql("l.l_extendedprice")} AS y
         FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
     ), s AS (
         SELECT p_brand, count(*) AS n, sum(x) AS sx, sum(y) AS sy,
@@ -324,7 +326,7 @@ def regr_price_vs_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
     j = li.join(F.broadcast(p), F.col("p_partkey") == F.col("l_partkey")).select(
         "p_brand",
         F.col("l_quantity").cast("long").alias("x"),
-        F.round(F.col("l_extendedprice") * 100).cast("long").alias("y"),
+        cents(F.col("l_extendedprice")).alias("y"),
     )
     s = j.groupBy("p_brand").agg(
         F.count("*").alias("n"),

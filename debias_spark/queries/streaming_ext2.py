@@ -16,6 +16,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from debias_spark.numeric import cents, cents_sql
 from debias_spark.registry import register
 from debias_spark.streaming import drain_available_now, narrow_shuffle, stream_events
 from debias_spark.warehouse import fresh_scratch_dirs, swap_state_write
@@ -24,11 +25,11 @@ from debias_spark.warehouse import fresh_scratch_dirs, swap_state_write
 @register(
     "stream_foreachbatch_upsert",
     "Z27",
-    oracle="""
+    oracle=f"""
     SELECT event_type,
            count(*) AS n_events,
            count(DISTINCT user_id) AS n_users_lb,
-           CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
+           CAST(sum({cents_sql("value")}) AS BIGINT)
                AS value_cents
     FROM events
     GROUP BY event_type
@@ -51,8 +52,7 @@ def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact COUNT(DISTINCT); count(DISTINCT) does not merge from partials,
     so a multi-batch deployment would carry an HLL sketch column
     (hll_sketch_agg merges exactly) and a keyed merge against the prior
-    state.  The value sum converts to integer cents PER ROW before any
-    aggregation, so shuffle order cannot drift the emitted value.
+    state.
 
     Scale shape: state is keyed by event_type (bounded cardinality) and
     the batch shuffles only its own partial aggregate."""
@@ -76,7 +76,7 @@ def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         part = batch.groupBy("event_type").agg(
             F.count("*").alias("n_events"),
             F.countDistinct("user_id").alias("n_users_lb"),
-            F.sum(F.round(F.col("value") * 100).cast("long")).alias("value_cents"),
+            F.sum(cents(F.col("value"))).alias("value_cents"),
         )
         swap_state_write(part, state_dir)
         written.append(part.schema)

@@ -20,6 +20,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from debias_spark.numeric import cents, cents_sql
 from debias_spark.streaming import drain_available_now, narrow_shuffle
 from debias_spark.registry import register
 from debias_spark.warehouse import fresh_scratch_dirs
@@ -28,11 +29,11 @@ from debias_spark.warehouse import fresh_scratch_dirs
 @register(
     "stream_stream_join_attrib",
     "Z31",
-    oracle="""
+    oracle=f"""
     SELECT p.user_id,
            strftime(p.ts, '%Y-%m-%d %H:%M:%S') AS purchase_time,
            strftime(c.ts, '%Y-%m-%d %H:%M:%S') AS click_time,
-           CAST(round(p.value * 100) AS BIGINT) AS value_cents
+           {cents_sql("p.value")} AS value_cents
     FROM events p
     JOIN events c
       ON c.user_id = p.user_id
@@ -83,7 +84,7 @@ def stream_stream_join_attrib(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         F.date_format("purchase_ts", "yyyy-MM-dd HH:mm:ss").alias("purchase_time"),
         F.date_format("click_ts", "yyyy-MM-dd HH:mm:ss").alias("click_time"),
-        F.round(F.col("value") * 100).cast("long").alias("value_cents"),
+        cents(F.col("value")).alias("value_cents"),
     )
 
     out_dir, ckpt_dir = fresh_scratch_dirs(spark, sf_dir, "ssj_pairs", "ssj_ckpt")

@@ -21,6 +21,7 @@ from pyspark.sql.types import DoubleType
 from pyspark.sql.window import Window
 
 from debias_spark.catalog import table
+from debias_spark.numeric import cents, cents_sql
 from debias_spark.registry import register
 
 # cogroup_asof_attribution's per-bucket row budget (r14): one cogroup
@@ -512,11 +513,11 @@ def udtf_table_argument_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "pandas_udf_iter_bucketize",
     "T11",
-    oracle="""
-    SELECT ((CAST(round(o_totalprice * 100) AS BIGINT) * 2654435761)
+    oracle=f"""
+    SELECT (({cents_sql("o_totalprice")} * 2654435761)
             % 2147483648) % 97 AS bucket,
            CAST(count(*) AS BIGINT) AS n_orders,
-           CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+           CAST(sum({cents_sql("o_totalprice")}) AS BIGINT)
                AS sum_cents
     FROM orders
     GROUP BY 1 ORDER BY 1
@@ -552,7 +553,7 @@ def pandas_udf_iter_bucketize(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield ((cents * mult) % mod) % 97
 
     orders = table(spark, sf_dir, "orders").select(
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents")
+        cents(F.col("o_totalprice")).alias("cents")
     )
     return (
         orders.withColumn("bucket", bucket97("cents"))

@@ -150,20 +150,21 @@ def swap_state_write(frame, state_dir: str) -> None:
 
 
 def compact_partitioned_state(
-    spark, state_dir: str, partition_col: str, n_partitions: int
+    spark, state_dir: str, schema, partition_col: str, n_partitions: int
 ) -> tuple[int, int]:
     """Rewrite an append-only hive-partitioned state dir into few files
     per partition (one shuffle on the partition key) via a staging +
     rename swap (``_swap_in``), so readers never see a HALF-compacted
     state.  Returns (files_before, files_after) for the caller's proof
-    guard.  This is Z73's maintenance operation packaged for the
-    streaming loops whose state grows by per-batch appends (Z68); at
-    100 TB it runs as a background job per partition range against a
-    transactional table."""
+    guard.  ``schema`` is the schema the state was written with, so the
+    read runs no schema-inference job.  This is Z73's maintenance
+    operation packaged for the streaming loops whose state grows by
+    per-batch appends (Z68); at 100 TB it runs as a background job per
+    partition range against a transactional table."""
     before = count_parquet_files(state_dir)
     staging = state_dir + ".compact"
     shutil.rmtree(staging, ignore_errors=True)
-    spark.read.parquet(state_dir).repartition(
+    spark.read.schema(schema).parquet(state_dir).repartition(
         n_partitions, partition_col
     ).write.partitionBy(partition_col).parquet(staging)
     _swap_in(staging, state_dir)

@@ -8,9 +8,10 @@ and summarizing what it omits.
 from __future__ import annotations
 
 import json
+import pathlib
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1]))
 
 from bench import LINE_BUDGET, render_line  # noqa: E402
 
@@ -56,7 +57,7 @@ def test_small_registry_shows_everything():
 def test_merge_bench_band(tmp_path):
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1] / "tools"))
     from merge_bench_band import merge
 
     # 6 stable filler keys keep the one suspect key at 1/8 = 12.5% of the

@@ -4,11 +4,12 @@ failed-newest fallback, and the r10 mechanical contended-run gate."""
 from __future__ import annotations
 
 import json
+import pathlib
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1]))
 
 from tools.merge_bench_band import merge  # noqa: E402
 

@@ -159,6 +159,67 @@ def test_floor_eps_rule_lives_in_one_module():
     assert not hits, "floor-eps rule re-copied outside numeric.py:\n" + "\n".join(hits)
 
 
+def test_cents_rule_lives_in_one_module():
+    """The integer-cents rule is spelled once, in debias_spark/numeric.py.
+    Any other module under debias_spark/ that spells `round(<x> * 100)`
+    (SQL or Column, on one line or several) or binds a `_CENTS` /
+    `_CENTS_SQL` constant has re-copied the rule instead of calling
+    `cents` / `cents_sql`.  The TPC-H revenue rule `floor(x * 100 + 0.5)`
+    and other roundings such as `round(w * least(...), 0)` or
+    `round(100.0 / value)` are not this rule and do not match."""
+    import pathlib
+    import re
+
+    spelled = re.compile(r"\bround\((?:[^()]|\([^()]*\))*\*\s*100\s*\)")
+    bound = re.compile(r"\b_CENTS(?:_SQL)?\s*=(?!=)")
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "debias_spark"
+    hits = []
+    for path in sorted(pkg.rglob("*.py")):
+        if path.name == "numeric.py":
+            continue
+        text = path.read_text()
+        for m in [*spelled.finditer(text), *bound.finditer(text)]:
+            line = text.count("\n", 0, m.start()) + 1
+            hits.append(f"{path.relative_to(pkg)}:{line}: {m.group(0).strip()}")
+    assert not hits, "cents rule re-copied outside numeric.py:\n" + "\n".join(hits)
+
+
+def test_cents_rule_is_pinned_and_agrees_across_engines(spark):
+    """`cents_sql` is spelled into dozens of oracle strings, so its text
+    is pinned: an edit to the helper would silently rewrite all of them.
+    On exact and near ties (x.xx5 inputs of both signs), zero and NULL,
+    the Column form on Spark, the SQL form through Spark SQL and the SQL
+    form on DuckDB return the same values."""
+    import duckdb
+    from pyspark.sql import functions as F
+
+    from debias_spark.numeric import cents, cents_sql
+
+    assert cents_sql("v") == "CAST(round(v * 100) AS BIGINT)"
+    assert str(cents(F.col("v"))) == str(F.round(F.col("v") * 100).cast("long"))
+
+    probes = [0.125, -0.125, 1.005, 2.675, -2.675, 0.285, 0.005, -0.005,
+              1234567.895, -999.995, 0.0, 10.0, None]
+    rows = list(enumerate(probes))
+    df = spark.createDataFrame(rows, "i int, v double")
+    by_column = df.orderBy("i").select(cents(F.col("v")).alias("c")).collect()
+    by_spark_sql = spark.sql(
+        f"SELECT {cents_sql('v')} AS c FROM {{t}} ORDER BY i", t=df
+    ).collect()
+    with duckdb.connect() as con:
+        con.execute("CREATE TABLE t (i INTEGER, v DOUBLE)")
+        con.executemany("INSERT INTO t VALUES (?, ?)", rows)
+        by_duckdb = con.sql(f"SELECT {cents_sql('v')} AS c FROM t ORDER BY i").fetchall()
+
+    spark_column = [r.c for r in by_column]
+    assert spark_column == [r.c for r in by_spark_sql] == [r[0] for r in by_duckdb]
+    # every x.xx5 probe times 100 is an exact half except 1.005 and 0.285
+    # (just below one); exact halves round away from zero on every engine
+    assert spark_column == [
+        13, -13, 100, 268, -268, 28, 1, -1, 123456790, -100000, 0, 1000, None
+    ]
+
+
 def test_scratch_dir_and_drain_rules_live_in_one_module_each():
     """The per-session scratch-dir rule is spelled once, in
     debias_spark/warehouse.py, and the availableNow drain once, in

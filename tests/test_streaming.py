@@ -330,6 +330,7 @@ def test_single_batch_stream_keys_reject_a_second_batch(
         "pipeline_corpus_build",
         "pipeline_corpus_build_incremental",
         "stream_stream_join_attrib",
+        "pipeline_incremental_neardup:compacted",
     ],
 )
 def test_staged_read_backs_carry_the_written_schema(spark, sf_dir, monkeypatch, key):
@@ -337,12 +338,18 @@ def test_staged_read_backs_carry_the_written_schema(spark, sf_dir, monkeypatch, 
     inside foreachBatch, the final state, sink or manifest) is built with
     the schema the key wrote, so none runs Parquet's one-task
     schema-inference job.  Each read runs in its own job group, set on
-    the calling thread, so reads inside the stream's batches count too."""
+    the calling thread, so reads inside the stream's batches count too.
+    ``:compacted`` runs the key with its compaction threshold at 0, so
+    the mid-drain compaction's read of the band state is counted too."""
     from pyspark.sql import DataFrameReader
 
+    from debias_spark.queries import pipeline_e2e2
     from debias_spark.registry import load_all_queries
     from debias_spark.warehouse import scratch_root
 
+    key, _, compacted = key.partition(":")
+    if compacted:
+        monkeypatch.setattr(pipeline_e2e2, "_COMPACT_FILES", 0)
     sc, read, jobs = spark.sparkContext, DataFrameReader.parquet, []
 
     def counted_read(self, *paths, **kwargs):
@@ -359,6 +366,8 @@ def test_staged_read_backs_carry_the_written_schema(spark, sf_dir, monkeypatch, 
     monkeypatch.setattr(DataFrameReader, "parquet", counted_read)
     load_all_queries()[key].fn(spark, sf_dir)
     assert jobs and set(jobs) == {0}, jobs
+    if compacted:
+        assert pipeline_e2e2.LAST_COMPACTIONS >= 1
 
 
 def test_foreachbatch_state_read_back_carries_the_written_schema(spark, sf_dir):

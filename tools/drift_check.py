@@ -14,7 +14,7 @@ them:
   * lineitem.l_linenumber narrowed to SMALLINT.
 
 Usage:
-    PYTHONPATH=/root/repo python tools/drift_check.py [src_sf_dir] [dst_dir]
+    python tools/drift_check.py [src_sf_dir] [dst_dir]
 
 Round-3 result: 185/185 keys green against the drifted copy.
 """
@@ -22,10 +22,11 @@ Round-3 result: 185/185 keys green against the drifted copy.
 from __future__ import annotations
 
 import os
+import pathlib
 import shutil
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1]))
 
 
 def build_drift_copy(src: str, dst: str) -> None:

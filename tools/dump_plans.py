@@ -2,7 +2,7 @@
 
 Evidence artifact for the scale review: the actual .explain("formatted")
 output backing the claims in SCALE.md.  Regenerate with:
-    PYTHONPATH=/root/repo python tools/dump_plans.py
+    PYTHONPATH=. python tools/dump_plans.py
 """
 
 from __future__ import annotations

@@ -4,16 +4,17 @@ the per-gk count WINDOW vs the salted PACK — on a gram stream with one
 viral gram, at increasing skew.  The window funnels the viral gram into
 ONE task; the pack bounds every task at occ/K rows.
 
-Usage: PYTHONPATH=/root/repo python tools/hotgram_stress.py [n_total] [hot_share_pct]
+Usage: python tools/hotgram_stress.py [n_total] [hot_share_pct]
 Prints min-of-3 seconds for each spelling after one warmup.
 """
 
 from __future__ import annotations
 
+import pathlib
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1]))
 
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window

@@ -4,7 +4,7 @@ queries at 1x vs Kx.  Near-linear wall-clock growth is the evidence that
 the plan shapes hold as data grows; anything super-linear is a bug report.
 
 Usage:
-    PYTHONPATH=/root/repo python tools/scale_stress.py [K] [out_dir] [--keys k1,k2]
+    python tools/scale_stress.py [K] [out_dir] [--keys k1,k2]
 
 --keys limits the timed sweep to a comma-separated subset (incremental
 stress of newly-added keys without re-running the full list); replication
@@ -26,10 +26,11 @@ from __future__ import annotations
 
 import json
 import os
+import pathlib
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1]))
 
 from pyspark.sql import functions as F
 

@@ -13,10 +13,11 @@ Usage: python tools/sim_driver.py [sf_dir] [--tuned] [--only k1,k2,...]
 from __future__ import annotations
 
 import json
+import pathlib
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1]))
 
 
 def main() -> None:

@@ -15,10 +15,11 @@ Prints one JSON line per key: {"key":..., "build":..., "compile":..., "run":...}
 from __future__ import annotations
 
 import json
+import pathlib
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1]))
 
 
 def main() -> None:
