@@ -11,6 +11,7 @@ column pruning and partition pruning all happen at the scan.
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -30,65 +31,49 @@ TABLES = [
 ]
 
 
-# Metadata-only schema cache (r14, guide §6): every spark.read.parquet()
-# without an explicit schema re-infers the schema by reading parquet
-# footers on the driver — measured ~75-130 ms per table() call at sf0.1
-# vs ~13 ms with the schema supplied.  A real deployment reads the schema
-# from the metastore (external catalog tables, TESTDATA.md's 100 TB
-# posture); this cache is that metastore behavior for the path-based
-# fixtures.  Keyed by (path, mtime_ns, size) so a regenerated testdata
-# file invalidates its entry, plus the nanosAsLong conf the inferred type
-# of a TIMESTAMP(NANOS) column depends on, so a schema inferred under one
-# value is never served under the other; non-plain-file paths
-# (directories, remote URIs) fall back to normal inference.  The cache
-# holds SCHEMAS ONLY — each call still builds a fresh DataFrame over a
-# fresh scan, so no plan or data is ever reused across queries or runs.
-_SCHEMA_CACHE: dict[tuple, object] = {}
-
-
-def _cached_schema(spark: SparkSession, path: str):
-    try:
-        st = os.stat(path)
-        if not os.path.isfile(path):
-            return None
-        key = (
-            path,
-            st.st_mtime_ns,
-            st.st_size,
-            spark.conf.get("spark.sql.legacy.parquet.nanosAsLong"),
-        )
-    except OSError:
-        return None
-    sch = _SCHEMA_CACHE.get(key)
-    if sch is None:
-        sch = spark.read.parquet(path).schema
-        _SCHEMA_CACHE[key] = sch
-    return sch
-
-
-# ANALYZE-TABLE-style statistics cache (r14): planning statistics a real
-# deployment reads from the metastore (row counts, column sums) are
-# computed once per input-file version and memoized under the same
-# (path, mtime_ns, size) identity as the schema cache.  Statistics gate
-# PLAN SHAPE only (e.g. the hot-gram window-vs-salted-pack choice); the
-# gated spellings are value-identical, so a stale statistic can never
-# change a result — only which equally-correct plan runs.
+# Input-file-version cache (r14): metadata and planning statistics a
+# real deployment reads from the metastore are computed once per input
+# file version and memoized, keyed by (path, mtime_ns, size) so a
+# regenerated testdata file invalidates its entries; non-plain-file
+# paths (directories, remote URIs) are never cached.  Two kinds of entry:
+# * schemas (``_cached_schema``, guide §6): every spark.read.parquet()
+#   without an explicit schema re-infers it from parquet footers on the
+#   driver — measured ~75-130 ms per table() call at sf0.1 vs ~13 ms
+#   with the schema supplied.  Only the schema is held; each call still
+#   builds a fresh DataFrame over a fresh scan, so no plan or data is
+#   ever reused across queries or runs.
+# * ANALYZE-TABLE-style statistics (row counts, column sums, static
+#   per-corpus artifacts): these gate PLAN SHAPE only (e.g. the hot-gram
+#   window-vs-salted-pack choice) or are value-identical by contract, so
+#   a stale entry can never change a result.
 _STAT_CACHE: dict[tuple, object] = {}
 
 
-def cached_input_stat(path: str, stat_key: str, compute):
-    """Return compute() memoized per (input-file version, stat_key);
-    uncacheable paths (directories, remote URIs) just call compute()."""
+def cached_input_stat(path: str, stat_key, compute):
+    """Return compute() memoized per (input-file version, stat_key) —
+    one ``os.stat`` per call; uncacheable paths (missing, directories,
+    remote URIs) just call compute()."""
     try:
         st = os.stat(path)
-        if not os.path.isfile(path):
-            return compute()
-        key = (path, st.st_mtime_ns, st.st_size, stat_key)
     except OSError:
         return compute()
+    if not stat.S_ISREG(st.st_mode):
+        return compute()
+    key = (path, st.st_mtime_ns, st.st_size, stat_key)
     if key not in _STAT_CACHE:
         _STAT_CACHE[key] = compute()
     return _STAT_CACHE[key]
+
+
+def _cached_schema(spark: SparkSession, path: str):
+    """The inferred schema of the parquet file at ``path``, memoized per
+    file version and per value of the nanosAsLong conf (the inferred type
+    of a TIMESTAMP(NANOS) column depends on it, so a schema inferred
+    under one value is never served under the other)."""
+    nanos = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong")
+    return cached_input_stat(
+        path, ("schema", nanos), lambda: spark.read.parquet(path).schema
+    )
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -96,9 +81,7 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
     ensure_runtime_confs(spark)
     path = f"{sf_dir}/{name}.parquet"
-    sch = _cached_schema(spark, path)
-    reader = spark.read.schema(sch) if sch is not None else spark.read
-    df = reader.parquet(path)
+    df = spark.read.schema(_cached_schema(spark, path)).parquet(path)
     if name == "events":
         df = _normalize_events_ts(df)
     return df

@@ -168,33 +168,10 @@ def minhash_signature(shingles: Column, num_hashes: int) -> Column:
     )
 
 
-def lsh_bands(signature: Column, bands: int, rows_per_band: int) -> Column:
-    """Band hashes: hash of each contiguous signature slice (elements
-    comma-joined with the band id appended).  Two docs collide in a band
-    iff that slice matches exactly."""
-    band_ids = F.sequence(F.lit(0), F.lit(bands - 1))
-    return F.transform(
-        band_ids,
-        lambda b: h60(
-            F.concat_ws(
-                ",",
-                F.array_join(
-                    F.transform(
-                        F.slice(signature, b * rows_per_band + 1, rows_per_band),
-                        lambda v: v.cast("string"),
-                    ),
-                    ",",
-                ),
-                b.cast("string"),
-            )
-        ),
-    )
-
-
 def minhash_banded(sh: DataFrame, num_hashes: int, bands: int) -> DataFrame:
     """(id, band_id, band_hash) rows from an (id, sh: array<string>) frame.
 
-    Codegen formulation of minhash_signature + lsh_bands: explode the
+    Codegen formulation of minhash_signature + banding: explode the
     shingle set, compute the md5-derived base hash ONCE per shingle, then
     ``min((a*base + b) % P)`` per doc for each of the ``num_hashes`` affine
     permutations as flat aggregate columns — every expression is a plain
@@ -753,3 +730,70 @@ def band_dropped_ids(b_banded: DataFrame, idx: DataFrame) -> DataFrame:
         .select("id")
         .distinct()
     )
+
+
+def survivor_argmax(frame: DataFrame, carry: str) -> DataFrame:
+    """Exact-dedup survivors of a (doc_id, text, n_chars, ``carry``)
+    frame: one row per md5 of the Z7 normalized text, whose ``b`` is
+    max(struct(n_chars, -doc_id, carry)) — the longest copy, doc_id
+    tiebreak (the Y61 policy).  The struct-max is associative and
+    commutative, so survivor state merged batch by batch is identical
+    however the input was sliced.  Each row shuffles a full 128-bit
+    digest (a truncated one opens a birthday-bound divergence from an
+    oracle partitioned by the normalized text) and a small payload
+    struct, never text."""
+    from debias_spark.operators.text import normalize_strict
+
+    ann = frame.select(
+        F.md5(normalize_strict(F.col("text"))).alias("digest"),
+        F.struct(
+            F.col("n_chars").cast("long").alias("n_chars"),
+            (-F.col("doc_id")).alias("nid"),
+            F.col(carry).alias(carry),
+        ).alias("b"),
+    )
+    return ann.groupBy("digest").agg(F.max("b").alias("b"))
+
+
+def merge_survivor_state(batch: DataFrame, state_dir: str, carry: str) -> None:
+    """Fold a micro-batch's ``survivor_argmax`` into the survivor state
+    at ``state_dir``: union it with what earlier batches wrote, re-take
+    the argmax per digest, and swap the result in
+    (``warehouse.swap_state_write``: never a half-updated state).  The
+    merge groupBy leaves the state hash-partitioned on digest at the
+    drain's shuffle width, so it is written as is — no coalesce(1)
+    single writer, no added shuffle."""
+    from debias_spark.streaming.incremental import read_state
+    from debias_spark.warehouse import swap_state_write
+
+    surv = survivor_argmax(batch, carry)
+    prev = read_state(batch.sparkSession, state_dir, surv.schema)
+    if prev is not None:
+        surv = prev.unionByName(surv).groupBy("digest").agg(F.max("b").alias("b"))
+    swap_state_write(surv, state_dir)
+
+
+def band_screen_state(frame: DataFrame, band_dir: str) -> tuple[DataFrame, DataFrame]:
+    """The incremental near-dup screen (Z68's predicate) for one
+    micro-batch of (doc_id, text): returns (ids of docs with an EARLIER
+    near-duplicate, the batch's band rows).  The batch is MinHash-banded
+    into sig-bearing band rows, probed against the band state at
+    ``band_dir`` UNION its own earlier ids (``band_dropped_ids``: one
+    left-semi EXISTS, no pair materialization), and its band rows are
+    appended to the state, hive-partitioned by band_id so later probes
+    prune to colliding bands.  Dropped docs enter the state too: they
+    keep suppressing later copies, as the pure predicate requires.  The
+    state is signatures, never text.  The signature frame feeds the
+    bands, the probe and the append from above a shuffle and a hash
+    pipeline, so it is checkpointed once."""
+    from debias_spark.streaming.incremental import read_state
+
+    sh = frame.select(
+        F.col("doc_id").alias("id"), word_shingles(F.col("text"), 1).alias("sh")
+    ).filter(F.size("sh") > 0)
+    sig = minhash_sig_wide(sh, NEARDUP_HASHES).localCheckpoint(eager=True)
+    banded = bands_from_sig_keep_sig(sig, NEARDUP_HASHES, NEARDUP_BANDS)
+    prev = read_state(frame.sparkSession, band_dir, banded.schema)
+    dropped = band_dropped_ids(banded, banded if prev is None else prev.unionByName(banded))
+    banded.write.mode("append").partitionBy("band_id").parquet(band_dir)
+    return dropped, banded

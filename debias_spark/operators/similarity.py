@@ -82,36 +82,6 @@ def cosine_topk(
     )
 
 
-def cosine_pairs_above(
-    emb: DataFrame,
-    probe_filter: Column,
-    threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    decimals: int = 4,
-) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs: probe set vs corpus, keep
-    pairs with rounded cosine >= threshold (threshold applied after rounding
-    so the cut is reproducible across engines)."""
-    base = emb.select(
-        F.col(id_col).alias("cand_id"), F.col(vec_col).alias("v"), l2_norm(F.col(vec_col)).alias("nrm")
-    )
-    probes = emb.filter(probe_filter).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q"), l2_norm(F.col(vec_col)).alias("qn")
-    )
-    return (
-        F.broadcast(probes)
-        .crossJoin(base)
-        .filter(F.col("query_id") < F.col("cand_id"))
-        .select(
-            "query_id",
-            "cand_id",
-            F.round(dot(F.col("q"), F.col("v")) / (F.col("qn") * F.col("nrm")), decimals).alias("sim"),
-        )
-        .filter(F.col("sim") >= threshold)
-    )
-
-
 def _score_batches_factory(probes_pd, vec_col: str, id_col: str, decimals: int):
     """mapInPandas scorer: per Arrow batch, one numpy matrix-matrix product
     scores every (probe, row) pair — the vectorized replacement for the
@@ -174,7 +144,10 @@ def cosine_pairs_above_arrow(
     vec_col: str = "embedding",
     decimals: int = 4,
 ) -> DataFrame:
-    """Arrow-vectorized near-dup pairs (same contract as cosine_pairs_above)."""
+    """Embedding-cosine near-duplicate pairs, probe set vs corpus: keep
+    pairs with query_id < cand_id and rounded cosine >= threshold (the
+    threshold applies after rounding, so the cut is reproducible across
+    engines), scored by ``cosine_scores_arrow``."""
     return cosine_scores_arrow(emb, probe_filter, id_col, vec_col, decimals).filter(
         (F.col("query_id") < F.col("cand_id")) & (F.col("sim") >= threshold)
     )

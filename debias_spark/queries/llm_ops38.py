@@ -23,9 +23,6 @@ north-star extension per SURVEY §2.H.
 
 from __future__ import annotations
 
-import os
-import time
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -39,13 +36,9 @@ from debias_spark.operators.similarity import (
     pq_index_frame,
     tombstoned,
 )
-from debias_spark.streaming import drain_file_drops, narrow_shuffle
 from debias_spark.registry import register
-from debias_spark.warehouse import (
-    fresh_scratch_dirs,
-    id_range_bounds,
-    stage_single_file_drop,
-)
+from debias_spark.streaming.incremental import id_range_slices, replay_drops
+from debias_spark.warehouse import fresh_scratch_dirs
 
 # TWO drops, not four (r12 verdict item 1): incremental maintenance
 # needs state to exist when a later drop appends (>= 2); each extra
@@ -87,22 +80,6 @@ def similarity_ann_ivfpq_incremental(spark: SparkSession, sf_dir: str) -> DataFr
     src_dir, idx_dir, ckpt_dir = fresh_scratch_dirs(
         spark, sf_dir, "y75_src", "y75_index", "y75_ckpt"
     )
-    os.makedirs(src_dir)
-
-    # stage _N_DROPS vec_id-ordered drops; the codebook contract
-    # (vec_id < PQ_CODES present) rides in the first drop
-    bounds = id_range_bounds(emb, "vec_id", _N_DROPS)
-    t0 = time.time() - 3600
-    for i in range(len(bounds) - 1):
-        part = emb.filter(
-            (F.col("vec_id") >= bounds[i]) & (F.col("vec_id") < bounds[i + 1])
-        )
-        stage_single_file_drop(part, src_dir, f"drop{i}.parquet", mtime=t0 + 60 * i)
-    if len(bounds) - 1 < 2:
-        raise RuntimeError(
-            f"vec_id-range staging produced {len(bounds) - 1} drop(s); the "
-            "corpus is too small to exercise incremental index maintenance"
-        )
 
     def refresh(batch: DataFrame, batch_id: int) -> None:
         # the drop indexes itself: pure projection, no state read, no
@@ -111,13 +88,12 @@ def similarity_ann_ivfpq_incremental(spark: SparkSession, sf_dir: str) -> DataFr
             "cell"
         ).parquet(idx_dir)
 
-    with narrow_shuffle(spark, 8):
-        batches = drain_file_drops(spark, emb.schema, src_dir, ckpt_dir, refresh)
-    if len(batches) < 2:
-        raise RuntimeError(
-            f"similarity_ann_ivfpq_incremental drained in {len(batches)} "
-            "micro-batch(es); incremental maintenance was not exercised"
-        )
+    # _N_DROPS vec_id-ordered drops; the codebook contract (vec_id <
+    # PQ_CODES present) rides in the first drop
+    slices = id_range_slices(emb, "vec_id", _N_DROPS)
+    replay_drops(
+        spark, "similarity_ann_ivfpq_incremental", emb.schema, src_dir, ckpt_dir, refresh, slices
+    )
 
     index = spark.read.parquet(idx_dir)
     # readback guard (the shard-uniqueness doctrine), ONE aggregate job:

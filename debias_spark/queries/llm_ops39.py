@@ -43,9 +43,9 @@ from debias_spark.operators.similarity import (
     pq_index_frame,
     tombstoned,
 )
-from debias_spark.streaming import narrow_shuffle
 from debias_spark.registry import register
-from debias_spark.warehouse import count_parquet_files, fresh_scratch_dirs, id_range_bounds
+from debias_spark.streaming.incremental import id_range_slices, narrow_shuffle
+from debias_spark.warehouse import count_parquet_files, fresh_scratch_dirs
 
 # two drops (the r13 family-wide drop-count discipline): fragmentation
 # for the strictly-fewer-files proof needs >= 2 appends per cell (8
@@ -94,17 +94,14 @@ def similarity_ann_ivfpq_compacted(spark: SparkSession, sf_dir: str) -> DataFram
 
     # fixture staging: _N_DROPS id-range batch appends, narrow shuffle
     # width so each append leaves several files per cell
-    bounds = id_range_bounds(emb, "vec_id", _N_DROPS)
-    if len(bounds) - 1 < 2:
+    slices = id_range_slices(emb, "vec_id", _N_DROPS)
+    if len(slices) < 2:
         raise RuntimeError(
-            f"vec_id-range staging produced {len(bounds) - 1} drop(s); the "
+            f"vec_id-range staging produced {len(slices)} drop(s); the "
             "corpus is too small to exercise post-append compaction"
         )
     with narrow_shuffle(spark, 8):
-        for i in range(len(bounds) - 1):
-            batch = emb.filter(
-                (F.col("vec_id") >= bounds[i]) & (F.col("vec_id") < bounds[i + 1])
-            )
+        for batch in slices:
             # each drop indexes itself: pure projection, no state read
             pq_index_frame(batch, book).write.mode("append").partitionBy(
                 "cell"

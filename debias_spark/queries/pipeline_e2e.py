@@ -14,16 +14,15 @@ only they are annotated, and the survivor state/sink update in place
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from debias_spark.catalog import table
-from debias_spark.operators.text import NORMALIZE_STRICT_DUCK, normalize_strict
-from debias_spark.streaming import drain_file_drops, narrow_shuffle
+from debias_spark.operators.dedup import merge_survivor_state, survivor_argmax
+from debias_spark.operators.text import NORMALIZE_STRICT_DUCK
 from debias_spark.registry import register
-from debias_spark.warehouse import fresh_scratch_dirs, scratch_dir, swap_state_write
+from debias_spark.streaming.incremental import replay_drops
+from debias_spark.warehouse import fresh_scratch_dirs, scratch_dir
 
 _SHORT_LT = 100  # annotate: docs under this many chars flagged short
 
@@ -68,8 +67,8 @@ def pipeline_incremental_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     Batching-independence (what makes a streaming chain value-oracled):
     the survivor merge is an argmax by (n_chars desc, doc_id asc) — an
     associative, commutative struct-max — so the final state is
-    identical however availableNow slices the input; the foreachBatch
-    body asserts the drain really took >= 2 non-empty batches so the
+    identical however availableNow slices the input; the drain must take
+    >= 2 non-empty batches (streaming.incremental.replay_drops) so the
     incremental path is what got proven, not a degenerate single batch.
 
     Scale shape: each batch shuffles full 128-bit md5 digests (r8
@@ -97,49 +96,21 @@ def pipeline_incremental_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # zone new corpus drops arrive in between refreshes
     docs.repartition(4).write.mode("overwrite").parquet(src_dir)
 
-    norm = normalize_strict(F.col("text"))
+    # each batch's survivors merge into the state (operators.dedup:
+    # argmax per normalized digest, parallel multi-file swap; a hive
+    # partitionBy(prefix) variant measured 2x slower at test SFs from
+    # per-dir commits + partition discovery, with no read-side benefit:
+    # the merge reads ALL state anyway)
+    replay_drops(
+        spark,
+        "pipeline_incremental_refresh",
+        docs.schema,
+        src_dir,
+        ckpt_dir,
+        lambda batch, _: merge_survivor_state(batch, state_dir, "lang"),
+    )
 
-    def survivors_of(frame: DataFrame) -> DataFrame:
-        ann = frame.select(
-            F.md5(norm).alias("digest"),
-            F.struct(
-                F.col("n_chars").cast("long").alias("n_chars"),
-                (-F.col("doc_id")).alias("nid"),
-                F.col("lang").alias("lang"),
-            ).alias("b"),
-        )
-        return ann.groupBy("digest").agg(F.max("b").alias("b"))
-
-    # the state dir's schema, read back with every batch and at the end
-    # (an inferring read runs a one-task footer job each time)
-    state_schema = survivors_of(docs).schema
-
-    def refresh(batch: DataFrame, batch_id: int) -> None:
-        surv = survivors_of(batch)
-        if os.path.isdir(state_dir):
-            prev = batch.sparkSession.read.schema(state_schema).parquet(state_dir)
-            surv = prev.unionByName(surv).groupBy("digest").agg(F.max("b").alias("b"))
-        # never half-update state: parallel multi-file write + atomic
-        # swap (warehouse.swap_state_write).  The merge groupBy already
-        # leaves surv hash-partitioned on digest across the drain's
-        # shuffle width, so writing it AS IS removes the r8 verdict's
-        # coalesce(1) single-writer bottleneck with zero added shuffle
-        # (a hive partitionBy(prefix) variant measured 2x slower at
-        # test SFs from per-dir commits + partition discovery, with no
-        # read-side benefit: the merge reads ALL state anyway)
-        swap_state_write(surv, state_dir)
-
-    # dial shuffle width down for the drain: each micro-batch shuffles a
-    # FRACTION of an already-small state frame, and 200-partition batch
-    # plans pay pure task-launch overhead 4x over (rule-9 cousin)
-    with narrow_shuffle(spark, 8):
-        batches = drain_file_drops(spark, docs.schema, src_dir, ckpt_dir, refresh)
-    if len(batches) < 2:
-        raise RuntimeError(
-            f"pipeline_incremental_refresh drained in {len(batches)} "
-            "micro-batch(es); the incremental merge path was not exercised"
-        )
-
+    state_schema = survivor_argmax(docs, "lang").schema  # what every batch wrote
     state = spark.read.schema(state_schema).parquet(state_dir)
     survivors = state.select(
         F.col("b.lang").alias("lang"),

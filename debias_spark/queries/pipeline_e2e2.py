@@ -12,7 +12,6 @@ near-duplicate screen a real corpus refresh runs on arrival.
 from __future__ import annotations
 
 import os
-import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -23,20 +22,19 @@ from debias_spark.operators.dedup import (
     NEARDUP_HASHES,
     NEARDUP_MATCH_TERMS_DUCK,
     NEARDUP_MIN_MATCHES,
-    band_dropped_ids,
+    band_screen_state,
+    merge_survivor_state,
     minhash_ctes_duck,
+    survivor_argmax,
 )
 from debias_spark.operators.text import NORMALIZE_STRICT_DUCK
 from debias_spark.operators.skew import fan_out
-from debias_spark.streaming import drain_file_drops, narrow_shuffle
 from debias_spark.registry import register
+from debias_spark.streaming.incremental import id_range_slices, replay_drops, stage_and_drain
 from debias_spark.warehouse import (
     compact_partitioned_state,
     count_parquet_files,
     fresh_scratch_dirs,
-    id_range_bounds,
-    stage_single_file_drop,
-    swap_state_write,
 )
 
 _CTES, _ = minhash_ctes_duck(NEARDUP_HASHES, NEARDUP_BANDS)
@@ -113,7 +111,7 @@ def pipeline_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ascending id ranges, ascending mtimes; FileStreamSource processes
     oldest-first).  Dropped docs stay IN the band state — they keep
     suppressing later copies, exactly as the pure predicate requires.
-    The foreachBatch body asserts >= 2 non-empty batches ran.
+    The drain must take >= 2 non-empty batches.
 
     Scale shape: per batch the only wide work is its OWN rows' shingle
     explode (history is signatures and sig-bearing band rows — 32 ints
@@ -133,71 +131,16 @@ def pipeline_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucketed table keyed (band_id, band_hash) — same join, a narrower
     scan; the verification stays a 32-column integer compare with no
     floats anywhere."""
-    from debias_spark.operators.dedup import (
-        bands_from_sig_keep_sig,
-        minhash_sig_wide,
-        word_shingles,
-    )
     global LAST_COMPACTIONS
     LAST_COMPACTIONS = 0
     docs = table(spark, sf_dir, "documents")
-    # z68_sigs is gone (r14): since r13 the band rows CARRY their full
-    # signatures, so the standalone signature state was written every
-    # batch and read by nothing.  The stem stays so dirs from older
-    # sessions still get pruned.
-    src_dir, band_dir, _, pay_dir, ckpt_dir = fresh_scratch_dirs(
-        spark, sf_dir, "z68_src", "z68_bands", "z68_sigs", "z68_payload", "z68_ckpt"
+    src_dir, band_dir, pay_dir, ckpt_dir = fresh_scratch_dirs(
+        spark, sf_dir, "z68_src", "z68_bands", "z68_payload", "z68_ckpt"
     )
-    os.makedirs(src_dir)
 
-    # stage three doc_id-ordered drops with ascending mtimes so the file
-    # stream replays the production arrival order (fixture prep: the
-    # 1-row min/max only slices the staging files, it is not part of the
-    # query).  THREE drops, not four (r12 verdict item 1): >= 2
-    # exercises the state probe, and the third keeps a post-compaction
-    # probe batch alive for the low-threshold test (compaction fires
-    # from batch 2 onward, so batch 3 probes the rewritten dir); a
-    # fourth only re-paid the per-batch fixed cost
-    bounds = id_range_bounds(docs, "doc_id", 3)
-    t0 = time.time() - 3600
-    for i in range(len(bounds) - 1):
-        stage_single_file_drop(
-            docs.filter(
-                (F.col("doc_id") >= bounds[i]) & (F.col("doc_id") < bounds[i + 1])
-            ),
-            src_dir,
-            f"drop{i}.parquet",
-            mtime=t0 + 60 * i,
-        )
-
-    n_seen = 0
-    pay_schema = None  # the payload schema the batches wrote
-
-    def refresh(batch: DataFrame, batch_id: int) -> None:
-        nonlocal n_seen, pay_schema
-        n_seen += 1
-        ss = batch.sparkSession
-        batch = fan_out(batch)  # a staged drop scans as ONE partition (r13)
-        b_sh = batch.select(
-            F.col("doc_id").alias("id"), word_shingles(F.col("text"), 1).alias("sh")
-        ).filter(F.size("sh") > 0)
-        # the signature frame feeds three consumers (bands, probe side,
-        # state append) and sits above a shuffle + crypto-hash pipeline:
-        # checkpoint once (memory rule: checkpoint by reuse count)
-        b_sig = minhash_sig_wide(b_sh, NEARDUP_HASHES).localCheckpoint(eager=True)
-        # sig-bearing band rows (r13): the band state carries each row's
-        # full signature so the near-dup screen is ONE left-semi EXISTS
-        # (band_dropped_ids) instead of pair-materialize + sig re-join +
-        # pair distinct — no O(candidate pairs) exchange, shuffles stay
-        # linear in band rows under bucket skew
-        b_banded = bands_from_sig_keep_sig(b_sig, NEARDUP_HASHES, NEARDUP_BANDS)
-
-        idx = b_banded
-        if os.path.isdir(band_dir):
-            idx = ss.read.schema(b_banded.schema).parquet(band_dir).unionByName(idx)
-        dropped = band_dropped_ids(b_banded, idx)
-        payload = (
-            batch.select(
+    def payload_of(frame: DataFrame, dropped: DataFrame) -> DataFrame:
+        return (
+            frame.select(
                 F.col("doc_id").alias("id"),
                 "lang",
                 F.col("n_chars").cast("long").alias("n_chars"),
@@ -207,12 +150,18 @@ def pipeline_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "id", "lang", "n_chars", F.col("_d").isNotNull().alias("dropped")
             )
         )
-        # append-only state: band rows partitioned by band_id (probe
-        # reads prune to colliding bands; they carry the signatures),
-        # payloads flat
-        b_banded.write.mode("append").partitionBy("band_id").parquet(band_dir)
-        payload.write.mode("append").parquet(pay_dir)
-        pay_schema = payload.schema
+
+    n_seen = 0
+
+    def refresh(batch: DataFrame, batch_id: int) -> None:
+        nonlocal n_seen
+        n_seen += 1
+        batch = fan_out(batch)  # a staged drop scans as ONE partition (r13)
+        # the screen appends the batch's sig-bearing band rows to the
+        # band_id-partitioned state; payloads (dropped flag included)
+        # append flat
+        dropped, b_banded = band_screen_state(batch, band_dir)
+        payload_of(batch, dropped).write.mode("append").parquet(pay_dir)
         # MID-STREAM COMPACTION (the r9 watch item: per-batch appends
         # accumulate small files per band partition without bound):
         # when any band partition exceeds the file-count threshold the
@@ -231,7 +180,7 @@ def pipeline_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
             and _max_band_partition_files(band_dir) > _COMPACT_FILES
         ):
             before, after = compact_partitioned_state(
-                ss, band_dir, b_banded.schema, "band_id", NEARDUP_BANDS
+                batch.sparkSession, band_dir, b_banded.schema, "band_id", NEARDUP_BANDS
             )
             # `after == before` is a legitimate no-op (a lowered
             # threshold can fire on an already-one-file-per-band state
@@ -245,14 +194,20 @@ def pipeline_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
             global LAST_COMPACTIONS
             LAST_COMPACTIONS += 1
 
-    with narrow_shuffle(spark, 8):
-        batches = drain_file_drops(spark, docs.schema, src_dir, ckpt_dir, refresh)
-    if len(batches) < 2:
-        raise RuntimeError(
-            f"pipeline_incremental_neardup drained in {len(batches)} "
-            "micro-batch(es); the incremental screen was not exercised"
-        )
+    # three doc_id-ordered drops with ascending mtimes so the file
+    # stream replays the production arrival order (fixture prep: the
+    # 1-row min/max only slices the staging files, it is not part of the
+    # query).  THREE drops, not four (r12 verdict item 1): >= 2
+    # exercises the state probe, and the third keeps a post-compaction
+    # probe batch alive for the low-threshold test (compaction fires
+    # from batch 2 onward, so batch 3 probes the rewritten dir); a
+    # fourth only re-paid the per-batch fixed cost
+    slices = id_range_slices(docs, "doc_id", 3)
+    replay_drops(
+        spark, "pipeline_incremental_neardup", docs.schema, src_dir, ckpt_dir, refresh, slices
+    )
 
+    pay_schema = payload_of(docs, docs.select(F.col("doc_id").alias("id"))).schema
     pay = spark.read.schema(pay_schema).parquet(pay_dir)
     keep = ~F.col("dropped")
     return (
@@ -309,67 +264,27 @@ def pipeline_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     that the FileStreamSource offset log, not a full re-listing, decides
     the second drain's work — at 100 TB re-listing means re-reading a
     corpus, so checkpoint continuity IS the cost model of a refresh."""
-    from debias_spark.operators.text import normalize_strict
-
     docs = table(spark, sf_dir, "documents")
     src_dir, state_dir, ckpt_dir = fresh_scratch_dirs(
         spark, sf_dir, "z71_src", "z71_state", "z71_ckpt"
     )
-    os.makedirs(src_dir)
+    rows: dict[int, int] = {}  # batch_id -> row count
+
+    def refresh(batch: DataFrame, batch_id: int) -> None:
+        rows[batch_id] = batch.count()
+        merge_survivor_state(batch, state_dir, "source")
 
     # fixture staging only: id-range thirds.  2+1 drops, not 3+1 (r12
     # verdict item 1): the first drain needs >= 2 batches to prove a
     # real checkpoint sequence, the second needs exactly the one late
     # file — a third first-drain drop re-paid the per-batch fixed cost
     # without strengthening either half
-    bounds = id_range_bounds(docs, "doc_id", 3)
-
-    def stage(i: int) -> None:
-        stage_single_file_drop(
-            docs.filter(
-                (F.col("doc_id") >= bounds[i]) & (F.col("doc_id") < bounds[i + 1])
-            ),
-            src_dir,
-            f"drop{i}.parquet",
-        )
-
-    norm = normalize_strict(F.col("text"))
-    rows: dict[int, int] = {}  # batch_id -> row count
-
-    def survivors_of(frame: DataFrame) -> DataFrame:
-        ann = frame.select(
-            F.md5(norm).alias("digest"),
-            F.struct(
-                F.col("n_chars").cast("long").alias("n_chars"),
-                (-F.col("doc_id")).alias("nid"),
-                F.col("source").alias("source"),
-            ).alias("b"),
-        )
-        return ann.groupBy("digest").agg(F.max("b").alias("b"))
-
-    state_schema = survivors_of(docs).schema  # what every batch writes
-
-    def refresh(batch: DataFrame, batch_id: int) -> None:
-        rows[batch_id] = batch.count()
-        surv = survivors_of(batch)
-        if os.path.isdir(state_dir):
-            prev = batch.sparkSession.read.schema(state_schema).parquet(state_dir)
-            surv = prev.unionByName(surv).groupBy("digest").agg(F.max("b").alias("b"))
-        swap_state_write(surv, state_dir)
-
-    def drain() -> list[int]:
-        return drain_file_drops(spark, docs.schema, src_dir, ckpt_dir, refresh)
-
-    with narrow_shuffle(spark, 8):
-        for i in range(2):
-            stage(i)
-        first = drain()
-        if len(first) < 2:
-            raise RuntimeError(
-                f"first drain took {len(first)} non-empty batches; need >= 2"
-            )
-        stage(2)  # the late drop lands between refreshes
-        second = drain()
+    slices = id_range_slices(docs, "doc_id", 3)
+    first = replay_drops(
+        spark, "pipeline_checkpoint_resume", docs.schema, src_dir, ckpt_dir, refresh, slices[:2]
+    )
+    # the late drop lands between refreshes
+    second = stage_and_drain(spark, docs.schema, src_dir, ckpt_dir, refresh, slices[2:])
 
     # exactly-once, both halves: ONE new batch, with exactly the new
     # file's rows, and its batch id CONTINUES the checkpoint's sequence
@@ -377,7 +292,7 @@ def pipeline_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise RuntimeError(
             f"resume drain ran {len(second)} non-empty batches, expected 1: {rows}"
         )
-    n_late = docs.filter(F.col("doc_id") >= bounds[2]).count()
+    n_late = slices[2].count()
     if rows[second[0]] != n_late:
         raise RuntimeError(
             f"resume batch processed {rows[second[0]]} rows, expected {n_late}"
@@ -385,6 +300,7 @@ def pipeline_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     if second[0] <= max(first):
         raise RuntimeError(f"batch ids reset across drains: {rows}")
 
+    state_schema = survivor_argmax(docs, "source").schema  # what every batch wrote
     state = spark.read.schema(state_schema).parquet(state_dir)
     return (
         state.select(

@@ -33,9 +33,9 @@ from debias_spark.operators.text import (
     ROUTE_REASON_DUCK,
     ROUTE_REASON_SPARK,
 )
-from debias_spark.streaming import narrow_shuffle
 from debias_spark.registry import register
-from debias_spark.warehouse import count_parquet_files, fresh_scratch_dirs, id_range_bounds
+from debias_spark.streaming.incremental import id_range_slices, narrow_shuffle
+from debias_spark.warehouse import count_parquet_files, fresh_scratch_dirs
 
 _CTES, _ = minhash_ctes_duck(NEARDUP_HASHES, NEARDUP_BANDS)
 
@@ -98,12 +98,8 @@ def pipeline_state_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     # partition (8 shuffle tasks x 2 appends = up to 16 files/band —
     # ample fragmentation for the strictly-fewer-files proof; the extra
     # two appends only re-paid banding jobs, r12 verdict item 1)
-    bounds = id_range_bounds(docs, "doc_id", 2)
     with narrow_shuffle(spark, 8):
-        for i in range(len(bounds) - 1):
-            batch = docs.filter(
-                (F.col("doc_id") >= bounds[i]) & (F.col("doc_id") < bounds[i + 1])
-            )
+        for batch in id_range_slices(docs, "doc_id", 2):
             sh = batch.select(
                 F.col("doc_id").alias("id"),
                 word_shingles(F.col("text"), 1).alias("sh"),

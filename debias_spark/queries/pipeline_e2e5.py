@@ -25,13 +25,10 @@ the one ``CORPUS_BUILD_ORACLE``.
 
 from __future__ import annotations
 
-import os
-import time
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from debias_spark.catalog import table
+from debias_spark.catalog import cached_input_stat, table
 from debias_spark.operators.dedup import (
     NEARDUP_BANDS,
     NEARDUP_HASHES,
@@ -39,6 +36,7 @@ from debias_spark.operators.dedup import (
     NEARDUP_MIN_MATCHES,
     WORD_TOKENS_DUCK,
     band_dropped_ids,
+    band_screen_state,
     bands_from_sig_keep_sig,
     minhash_ctes_duck,
     minhash_sig_wide,
@@ -63,50 +61,38 @@ from debias_spark.operators.text import (
     word_ngrams_frame,
 )
 from debias_spark.registry import register
-from debias_spark.streaming import drain_file_drops, narrow_shuffle
-from debias_spark.warehouse import fresh_scratch_dirs, id_range_bounds, stage_single_file_drop
-
-# The eval set is STATIC BY CONTRACT (doc_id < eval cutoff of an immutable
-# table): its distinct-gram list and bloom bit literal are per-corpus
-# artifacts, built once and reused across executions in this process — the
-# Z75/Z76 pair under bench's warmup+3 reps otherwise rebuilds the identical
-# artifact 8x per bench run (r11 verdict item 1b, per-drop/per-run
-# orchestration amortization).  Keyed by the documents file signature so a
-# changed corpus can never serve stale artifacts; one corpus held at a time
-# (bounded memory).  Order-insensitive consumers only: bloom bits are a set
-# of OR-ed bit positions and the exact-confirm frame joins as a set.
-_EVAL_CACHE: dict[tuple, tuple[list[str], str]] = {}
+from debias_spark.streaming.incremental import id_range_slices, read_state, replay_drops
+from debias_spark.warehouse import fresh_scratch_dirs
 
 
 def eval_gram_artifacts(spark: SparkSession, sf_dir: str) -> tuple[list[str], str]:
-    """(eset, bloom_bits_literal) for the static eval split, memoized per
-    (sf_dir, documents-file mtime+size)."""
-    path = os.path.join(sf_dir, "documents.parquet")
-    try:
-        st = os.stat(path)
-        key = (os.path.abspath(sf_dir), st.st_mtime_ns, st.st_size)
-    except OSError:
-        key = (os.path.abspath(sf_dir), -1, -1)
-    hit = _EVAL_CACHE.get(key)
-    if hit is not None:
-        return hit
-    docs = table(spark, sf_dir, "documents")
-    eval_grams = (
-        word_ngrams_frame(
-            fan_out(docs.filter(F.col("doc_id") < EVAL_MAX_ID)), DECONTAM_GRAM_N
+    """(eset, bloom_bits_literal) for the static eval split.  The eval
+    set is STATIC BY CONTRACT (doc_id < eval cutoff of an immutable
+    table), so both are per-corpus artifacts, memoized per documents
+    file version (``catalog.cached_input_stat``) and reused across
+    executions in this process: the Z75/Z76 pair under bench's
+    warmup+3 reps otherwise rebuilds the identical artifact 8x per bench
+    run (r11 verdict item 1b).  Order-insensitive consumers only: bloom
+    bits are a set of OR-ed bit positions and the exact-confirm frame
+    joins as a set."""
+
+    def build() -> tuple[list[str], str]:
+        docs = table(spark, sf_dir, "documents")
+        eval_grams = (
+            word_ngrams_frame(
+                fan_out(docs.filter(F.col("doc_id") < EVAL_MAX_ID)), DECONTAM_GRAM_N
+            )
+            .select("gram")
+            .distinct()
         )
-        .select("gram")
-        .distinct()
-    )
-    eset = [r.gram for r in eval_grams.collect()]
-    if len(eset) > EVAL_GRAM_CAP:
-        raise RuntimeError(
-            f"eval gram set {len(eset)} exceeds the {EVAL_GRAM_CAP} bloom cap"
-        )
-    bits = bloom_bits_literal(eset)
-    _EVAL_CACHE.clear()
-    _EVAL_CACHE[key] = (eset, bits)
-    return eset, bits
+        eset = [r.gram for r in eval_grams.collect()]
+        if len(eset) > EVAL_GRAM_CAP:
+            raise RuntimeError(
+                f"eval gram set {len(eset)} exceeds the {EVAL_GRAM_CAP} bloom cap"
+            )
+        return eset, bloom_bits_literal(eset)
+
+    return cached_input_stat(f"{sf_dir}/documents.parquet", "eval_gram_artifacts", build)
 
 
 _VERDICT_DUCK = QUALITY_VERDICT_DUCK.format(
@@ -398,52 +384,11 @@ def pipeline_corpus_build_incremental(spark: SparkSession, sf_dir: str) -> DataF
     # would pay a collect job every batch (measured +3.5 s on the drain)
     eval_df = spark.createDataFrame([(g,) for g in eset], "gram string")
 
-    # z76_sigs is gone (r14): the sig-carrying band rows ARE the
-    # signature state since r13.  The stem stays so dirs from older
-    # sessions still get pruned.
-    src_dir, dg_dir, band_dir, _, man_dir, ckpt_dir = fresh_scratch_dirs(
-        spark,
-        sf_dir,
-        "z76_src",
-        "z76_digests",
-        "z76_bands",
-        "z76_sigs",
-        "z76_manifest",
-        "z76_ckpt",
+    src_dir, dg_dir, band_dir, man_dir, ckpt_dir = fresh_scratch_dirs(
+        spark, sf_dir, "z76_src", "z76_digests", "z76_bands", "z76_manifest", "z76_ckpt"
     )
-    os.makedirs(src_dir)
-
-    # stage two doc_id-ordered drops whose INTERIOR boundary is a
-    # PACK_SHARD multiple: every pack shard then lies wholly inside one
-    # drop.  TWO drops, not four (r12 verdict item 1): the
-    # incremental semantics need >= 2 (state exists when the second drop
-    # probes it) and every extra drop re-pays the per-batch fixed cost —
-    # state re-list + union reads, five write jobs, micro-batch
-    # scheduling — without proving anything four did not; the
-    # batching-independence argument is count-free
-    raw = id_range_bounds(pool, "doc_id", 2)
-    lo, hi = raw[0], raw[-1]
-    interior = sorted({(b // PACK_SHARD) * PACK_SHARD for b in raw[1:-1]})
-    bounds = [lo] + [b for b in interior if lo < b < hi] + [hi]
-    t0 = time.time() - 3600
-    staged = 0
-    for i in range(len(bounds) - 1):
-        part = pool.filter(
-            (F.col("doc_id") >= bounds[i]) & (F.col("doc_id") < bounds[i + 1])
-        )
-        stage_single_file_drop(part, src_dir, f"drop{i}.parquet", mtime=t0 + 60 * i)
-        staged += 1
-    if staged < 2:
-        raise RuntimeError(
-            f"shard-aligned staging produced {staged} drop(s); the corpus is "
-            "too small to exercise the incremental chain"
-        )
-
-    man_schema = None  # the manifest schema the drops wrote
 
     def refresh(batch: DataFrame, batch_id: int) -> None:
-        nonlocal man_schema
-        ss = batch.sparkSession
         batch = fan_out(batch)  # a staged drop scans as ONE partition (r13)
 
         # 1. quality gate
@@ -464,8 +409,8 @@ def pipeline_corpus_build_incremental(spark: SparkSession, sf_dir: str) -> DataF
         # digests history already kept; new digests append to state
         dg = q.select("doc_id", F.md5(normalize_strict(F.col("text"))).alias("dg"))
         drop_reps = dg.groupBy("dg").agg(F.min("doc_id").alias("doc_id"))
-        if os.path.isdir(dg_dir):
-            seen = ss.read.schema(dg.select("dg").schema).parquet(dg_dir)
+        seen = read_state(batch.sparkSession, dg_dir, dg.select("dg").schema)
+        if seen is not None:
             drop_reps = drop_reps.join(seen, "dg", "anti")
         drop_reps = drop_reps.localCheckpoint(eager=True)
         # checkpoint the drop's survivor text: UNLIKE Z75 (whole-corpus
@@ -479,30 +424,15 @@ def pipeline_corpus_build_incremental(spark: SparkSession, sf_dir: str) -> DataF
         )
         drop_reps.select("dg").write.mode("append").parquet(dg_dir)
 
-        # 3. near-dup vs band/sig state (the Z68 refresh body)
-        b_sh = s1.select(
-            F.col("doc_id").alias("id"), word_shingles(F.col("text"), 1).alias("sh")
-        ).filter(F.size("sh") > 0)
-        b_sig = minhash_sig_wide(b_sh, NEARDUP_HASHES).localCheckpoint(eager=True)
-        # sig-bearing band rows (r13): the near-dup screen is ONE
-        # left-semi EXISTS against the sig-carrying band state
-        # (operators.dedup.band_dropped_ids — no pair materialization, no
-        # O(pairs) distinct, no sig-state re-join; same autotuned salt
-        # guard)
-        b_banded = bands_from_sig_keep_sig(b_sig, NEARDUP_HASHES, NEARDUP_BANDS)
-        idx = b_banded
-        if os.path.isdir(band_dir):
-            idx = ss.read.schema(b_banded.schema).parquet(band_dir).unionByName(idx)
-        dropped = band_dropped_ids(b_banded, idx)
-        # s2 feeds both the contamination ngrams and the s3 anti-join;
-        # without the checkpoint the banded near-dup screen (the semi
-        # EXISTS over sig-bearing band rows) replays once per consumer
+        # 3. near-dup vs band state (the Z68 screen; ALL exact survivors
+        # enter the state, so dropped docs keep suppressing).  s2 feeds
+        # both the contamination ngrams and the s3 anti-join; without
+        # the checkpoint the banded near-dup screen (the semi EXISTS over
+        # sig-bearing band rows) replays once per consumer
+        dropped, _ = band_screen_state(s1, band_dir)
         s2 = s1.join(
             dropped.withColumnRenamed("id", "doc_id"), "doc_id", "anti"
         ).localCheckpoint(eager=True)
-        # ALL exact survivors enter state (dropped docs keep suppressing);
-        # the band rows carry the signatures — no standalone sig state
-        b_banded.write.mode("append").partitionBy("band_id").parquet(band_dir)
 
         # 4. decontamination: static bloom prefilter + exact confirm
         # (eval_df built once before the drain — static by contract)
@@ -517,18 +447,22 @@ def pipeline_corpus_build_incremental(spark: SparkSession, sf_dir: str) -> DataF
 
         # 5-6. pack the drop's (whole, by alignment) shards; the manifest
         # delta appends to the sink
-        manifest = _shard_manifest(s3)
-        manifest.write.mode("append").parquet(man_dir)
-        man_schema = manifest.schema
+        _shard_manifest(s3).write.mode("append").parquet(man_dir)
 
-    with narrow_shuffle(spark, 8):
-        batches = drain_file_drops(spark, docs.schema, src_dir, ckpt_dir, refresh)
-    if len(batches) < 2:
-        raise RuntimeError(
-            f"pipeline_corpus_build_incremental drained in {len(batches)} "
-            "micro-batch(es); the incremental chain was not exercised"
-        )
+    # two doc_id-ordered drops whose INTERIOR boundary is a PACK_SHARD
+    # multiple: every pack shard then lies wholly inside one drop.  TWO
+    # drops, not four (r12 verdict item 1): the incremental semantics
+    # need >= 2 (state exists when the second drop probes it) and every
+    # extra drop re-pays the per-batch fixed cost — state re-list +
+    # union reads, five write jobs, micro-batch scheduling — without
+    # proving anything four did not; the batching-independence argument
+    # is count-free
+    slices = id_range_slices(pool, "doc_id", 2, align=PACK_SHARD)
+    replay_drops(
+        spark, "pipeline_corpus_build_incremental", docs.schema, src_dir, ckpt_dir, refresh, slices
+    )
 
+    man_schema = _shard_manifest(pool.select("doc_id", "text")).schema  # what every drop wrote
     out = spark.read.schema(man_schema).parquet(man_dir)
     n, nd = out.count(), out.select("shard").distinct().count()
     if n == 0:

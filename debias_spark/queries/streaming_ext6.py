@@ -9,15 +9,13 @@ is batch-only; Structured Streaming extension per SURVEY §2.H14-H16.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from debias_spark.catalog import table
 from debias_spark.registry import register
-from debias_spark.streaming import run_available_now
-from debias_spark.warehouse import fresh_scratch_dirs, stage_single_file_drop
+from debias_spark.streaming.incremental import run_available_now, stage_drops
+from debias_spark.warehouse import fresh_scratch_dirs
 
 _T0 = "2024-06-01 00:00:00"  # stream epoch; windows are 1h from here
 
@@ -92,14 +90,16 @@ def stream_watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(10800) + sp % 3000,
     )
 
-    # the file source takes oldest files first: pinned mtimes sequence
-    # the batches
+    # the file source takes oldest files first: ascending mtimes
+    # sequence the batches
     (root,) = fresh_scratch_dirs(spark, sf_dir, "z54_stream")
-    os.makedirs(root)
-    stage_single_file_drop(a, root, "f1_a.parquet", mtime=1_000_000)
-    stage_single_file_drop(a2, root, "f2_a2.parquet", mtime=2_000_000)
-    stage_single_file_drop(
-        b_late.unionByName(b_ontime), root, "f3_b.parquet", mtime=3_000_000
+    stage_drops(
+        root,
+        {
+            "f1_a.parquet": a,
+            "f2_a2.parquet": a2,
+            "f3_b.parquet": b_late.unionByName(b_ontime),
+        },
     )
 
     stream = (

@@ -1,6 +1,5 @@
 from debias_spark.streaming.incremental import (
     drain_available_now,
-    drain_file_drops,
     narrow_shuffle,
     run_available_now,
     session_window_counts,
@@ -10,7 +9,6 @@ from debias_spark.streaming.incremental import (
 
 __all__ = [
     "drain_available_now",
-    "drain_file_drops",
     "narrow_shuffle",
     "run_available_now",
     "session_window_counts",

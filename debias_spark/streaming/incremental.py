@@ -20,14 +20,26 @@ surface as a confusing value mismatch), and always stops the query, so
 a failed drain never leaks a live stream into the shared session.
 ``drain_file_drops`` is the landing-zone shape on top of it: one staged
 file per micro-batch, availableNow's trailing empty commit batch
-skipped, the non-empty batch ids returned for the caller's own batch
-count contract.
+skipped, the non-empty batch ids returned.
+
+The drop-replay skeleton, stated once here: the incremental-state keys
+replay the reference's unit of work (one file landing in an input
+directory) by cutting a table into id-range slices
+(``id_range_slices``), staging each as a one-file drop with ascending
+mtimes (``stage_drops``), and draining one drop per micro-batch at
+shuffle width ``DRAIN_WIDTH`` (``stage_and_drain``); ``replay_drops``
+raises unless at least ``MIN_BATCHES`` non-empty batches ran, so the
+incremental path is what got proven, not a degenerate single batch.
+Per-batch state a previous batch wrote is read back with its written
+schema (``read_state``).
 """
 
 from __future__ import annotations
 
+import os
+import time
 import uuid
-from collections.abc import Callable
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -35,8 +47,11 @@ from pyspark.sql.streaming import DataStreamWriter
 from pyspark.sql.types import StructType
 
 from debias_spark.session import ensure_runtime_confs, pinned_confs
+from debias_spark.warehouse import stage_single_file_drop
 
 _DRAIN_TIMEOUT_S = 300
+DRAIN_WIDTH = 8  # shuffle partitions while a drop replay drains
+MIN_BATCHES = 2  # non-empty micro-batches a drop replay must take
 
 
 def narrow_shuffle(spark: SparkSession, n: int = 8):
@@ -93,6 +108,92 @@ def drain_file_drops(
     return done
 
 
+def id_range_slices(df: DataFrame, col: str, n: int, align: int = 1) -> list[DataFrame]:
+    """``df`` cut into at most ``n`` slices by the ID RANGE of ``col``,
+    not the row count: a sparse or offset id space would otherwise
+    leave slices empty or drop ids past count+1.  Slice ``i`` is
+    ``bounds[i] <= col < bounds[i + 1]``; interior bounds round down to
+    multiples of ``align`` and equal bounds collapse, so a span shorter
+    than ``n`` (or than ``align``) yields fewer slices.  One min/max
+    job."""
+    mm = df.agg(F.min(col).alias("lo"), F.max(col).alias("hi")).first()
+    lo, hi = mm.lo, mm.hi + 1
+    cuts = sorted({lo + ((hi - lo) * i) // n for i in range(n + 1)})[1:-1]
+    bounds = [lo] + sorted(b for b in {c // align * align for c in cuts} if b > lo) + [hi]
+    return [
+        df.filter((F.col(col) >= a) & (F.col(col) < b))
+        for a, b in zip(bounds, bounds[1:])
+    ]
+
+
+def stage_drops(src_dir: str, drops: dict[str, DataFrame]) -> None:
+    """Stage each frame as the one-file drop ``src_dir/<name>``, mtimes
+    a minute apart in dict order, after those of the files already in
+    ``src_dir`` (from an hour ago), so FileStreamSource's oldest-first
+    listing replays the staging order."""
+    os.makedirs(src_dir, exist_ok=True)
+    t0 = time.time() - 3600 + 60 * len(os.listdir(src_dir))
+    for i, (name, df) in enumerate(drops.items()):
+        stage_single_file_drop(df, src_dir, name, mtime=t0 + 60 * i)
+
+
+def stage_and_drain(
+    spark: SparkSession,
+    schema: StructType,
+    src_dir: str,
+    ckpt_dir: str,
+    on_batch: Callable[[DataFrame, int], None],
+    slices: Sequence[DataFrame] = (),
+) -> list[int]:
+    """Stage ``slices`` as ``drop<k>.parquet``, numbered on from the
+    drops already in ``src_dir``, then drain one file per micro-batch
+    into ``on_batch`` at shuffle width ``DRAIN_WIDTH`` (each micro-batch
+    shuffles a fraction of a small state frame, and full-width batch
+    plans pay pure task-launch overhead).  Returns the non-empty batch
+    ids unchecked: a resume drain against an existing checkpoint checks
+    its own count."""
+    first = len(os.listdir(src_dir)) if os.path.isdir(src_dir) else 0
+    stage_drops(src_dir, {f"drop{first + i}.parquet": s for i, s in enumerate(slices)})
+    with narrow_shuffle(spark, DRAIN_WIDTH):
+        return drain_file_drops(spark, schema, src_dir, ckpt_dir, on_batch)
+
+
+def replay_drops(
+    spark: SparkSession,
+    key: str,
+    schema: StructType,
+    src_dir: str,
+    ckpt_dir: str,
+    on_batch: Callable[[DataFrame, int], None],
+    slices: Sequence[DataFrame] = (),
+) -> list[int]:
+    """``stage_and_drain`` with the batch-count proof: raises before
+    anything is staged if there are fewer than ``MIN_BATCHES`` slices
+    (none: ``src_dir`` is already staged), and after the drain unless
+    ``MIN_BATCHES`` non-empty batches ran."""
+    if slices and len(slices) < MIN_BATCHES:
+        raise RuntimeError(
+            f"{key} staged {len(slices)} drop(s); the corpus is too small "
+            "to exercise the incremental path"
+        )
+    batches = stage_and_drain(spark, schema, src_dir, ckpt_dir, on_batch, slices)
+    if len(batches) < MIN_BATCHES:
+        raise RuntimeError(
+            f"{key} drained in {len(batches)} micro-batch(es); the "
+            "incremental path was not exercised"
+        )
+    return batches
+
+
+def read_state(spark: SparkSession, state_dir: str, schema: StructType) -> DataFrame | None:
+    """The state earlier micro-batches wrote to ``state_dir``, read with
+    its written ``schema`` (no schema-inference job); None before the
+    first write."""
+    if not os.path.isdir(state_dir):
+        return None
+    return spark.read.schema(schema).parquet(state_dir)
+
+
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events.parquet as a file stream (the schema must be supplied for
     streaming reads; ts arrives either as epoch-nanos long — older
@@ -107,8 +208,6 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     # streaming read needs the schema object anyway; inferring it fresh
     # per call re-read the footer (~0.1 s) on every streaming key
     raw_schema = _cached_schema(spark, f"{sf_dir}/events.parquet")
-    if raw_schema is None:
-        raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     # file stream sources take a directory; glob-filter to the events table
     raw = (
         spark.readStream.schema(raw_schema)

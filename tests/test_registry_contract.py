@@ -262,6 +262,31 @@ def test_scratch_dir_and_drain_rules_live_in_one_module_each():
     assert all(app_reads.get(rel) == 1 for rel in table_name_sites), app_reads
 
 
+def test_drop_replay_lives_in_one_module():
+    """The drop-replay skeleton (id-range slicing, one-file drop staging,
+    the narrow drain and its batch-count proof) is spelled once, in
+    debias_spark/streaming/incremental.py.  A query module that calls
+    ``drain_file_drops``, ``stage_single_file_drop`` or
+    ``id_range_bounds`` itself has re-copied it instead of calling
+    ``replay_drops`` / ``stage_and_drain`` / ``id_range_slices`` /
+    ``stage_drops``."""
+    import ast
+    import pathlib
+
+    banned = {"drain_file_drops", "stage_single_file_drop", "id_range_bounds"}
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "debias_spark" / "queries"
+    paths = sorted(pkg.glob("*.py"))
+    assert paths, pkg  # an empty scan would pass vacuously
+    hits = [
+        f"{path.name}:{node.lineno}"
+        for path in paths
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.Call)
+        and getattr(node.func, "id", getattr(node.func, "attr", None)) in banned
+    ]
+    assert hits == [], "drop-replay skeleton re-copied in queries/:\n" + "\n".join(hits)
+
+
 def test_session_conf_writes_live_in_one_module():
     """Session confs are written only by debias_spark/session.py
     (``pinned_confs`` and ``ensure_runtime_confs``); a ``conf.set(`` or

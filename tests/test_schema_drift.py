@@ -67,7 +67,7 @@ def test_schema_cache_key_carries_the_nanos_conf(spark, tmp_path):
     ts = pa.array([1_700_000_000_000_000_123], pa.timestamp("ns"))
     pq.write_table(pa.table({"ts": ts}), path, store_schema=False)
     key = "spark.sql.legacy.parquet.nanosAsLong"
-    catalog._SCHEMA_CACHE.clear()
+    catalog._STAT_CACHE.clear()
     try:
         with pinned_confs(spark, {key: "false"}):
             with pytest.raises(AnalysisException, match="TIMESTAMP\\(NANOS"):
@@ -78,5 +78,5 @@ def test_schema_cache_key_carries_the_nanos_conf(spark, tmp_path):
             with pytest.raises(AnalysisException, match="TIMESTAMP\\(NANOS"):
                 catalog._cached_schema(spark, path)
     finally:
-        catalog._SCHEMA_CACHE.clear()
+        catalog._STAT_CACHE.clear()
     assert isinstance(on, LongType), on

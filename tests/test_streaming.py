@@ -251,28 +251,58 @@ def test_run_available_now_is_bounded_by_the_drain_timeout(spark, sf_dir, monkey
 )
 def test_file_drop_keys_require_two_batches(spark, sf_dir, monkeypatch, module, key):
     """The ">= 2 non-empty batches" contract of the file-drop pipelines
-    reads what drain_file_drops returns: a drain that reports a single
-    batch fails the key instead of passing on a degenerate drain."""
-    import importlib
-
+    reads what the replay's drain returns: a drain that reports a single
+    batch fails the key instead of passing on a degenerate drain.
+    (``module`` names where the key lives; every key drains through
+    streaming.incremental.replay_drops.)"""
     from debias_spark.registry import load_all_queries
+    from debias_spark.streaming import incremental
 
-    mod = importlib.import_module(f"debias_spark.queries.{module}")
-    monkeypatch.setattr(mod, "drain_file_drops", lambda *args: [0])
-    with pytest.raises(RuntimeError, match="drained in 1 micro-batch"):
+    monkeypatch.setattr(incremental, "drain_file_drops", lambda *args: [0])
+    with pytest.raises(RuntimeError, match=f"{key} drained in 1 micro-batch"):
         load_all_queries()[key].fn(spark, sf_dir)
 
 
 def test_checkpoint_resume_requires_exactly_one_resume_batch(spark, sf_dir, monkeypatch):
     """Z71's second drain must process exactly the late drop: a resume
     drain that reports no batch fails the key."""
-    from debias_spark.queries import pipeline_e2e2
     from debias_spark.registry import load_all_queries
+    from debias_spark.streaming import incremental
 
     drains = iter([[0, 1], []])
-    monkeypatch.setattr(pipeline_e2e2, "drain_file_drops", lambda *args: next(drains))
+    monkeypatch.setattr(incremental, "drain_file_drops", lambda *args: next(drains))
     with pytest.raises(RuntimeError, match="ran 0 non-empty batches, expected 1"):
         load_all_queries()["pipeline_checkpoint_resume"].fn(spark, sf_dir)
+
+
+def test_replay_drops_drains_id_range_slices_in_id_order(spark, sf_dir, tmp_path, monkeypatch):
+    """The drop-replay skeleton: id-range slices staged as one-file drops
+    drain oldest-first, one slice per non-empty micro-batch, in id order;
+    a one-slice input raises before anything is staged or drained."""
+    import os
+
+    from debias_spark.streaming import incremental
+
+    docs = table(spark, sf_dir, "documents").select("doc_id")
+    slices = incremental.id_range_slices(docs, "doc_id", 3)
+    want = [sorted(r.doc_id for r in s.collect()) for s in slices]
+    assert len(want) == 3 and all(want) and want[0][-1] < want[1][0] < want[2][0]
+    got = []
+
+    def on_batch(batch, batch_id):
+        got.append(sorted(r.doc_id for r in batch.collect()))
+
+    src, ckpt = str(tmp_path / "src"), str(tmp_path / "ckpt")
+    ids = incremental.replay_drops(spark, "t", docs.schema, src, ckpt, on_batch, slices)
+    assert got == want and len(ids) == 3 and ids == sorted(ids)
+    assert sorted(os.listdir(src)) == ["drop0.parquet", "drop1.parquet", "drop2.parquet"]
+
+    calls = []
+    monkeypatch.setattr(incremental, "drain_file_drops", lambda *args: calls.append(args))
+    one = str(tmp_path / "one")
+    with pytest.raises(RuntimeError, match="t staged 1 drop"):
+        incremental.replay_drops(spark, "t", docs.schema, one, ckpt, on_batch, slices[:1])
+    assert calls == [] and not os.path.exists(one) and spark.streams.active == []
 
 
 def _two_batch_events(tmp_path):
