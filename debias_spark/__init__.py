@@ -13,15 +13,16 @@ Layout:
     session.py    SparkSession factory tuned for local testing + cluster scale
     catalog.py    testdata loaders / temp-view registration
     registry.py   central query registry: name -> (spark_fn, duckdb_oracle);
-                  QUERIES/ORACLES fill on demand, as each key's module is
-                  imported on its first read through load_all_queries()
+                  its KEY_MODULES table is the key order, and
+                  load_all_queries() imports a key's module on first read
     annotate/     the deterministic batch annotator (reference call-debias.py)
-    queries/      operator implementations grouped by SURVEY §2 sections
+    queries/      query keys, one module per operator family (text, dedup,
+                  tpch, joins, stream, ...)
     pipeline.py   end-to-end scan->annotate->sink->analytics pipeline
     streaming/    Structured Streaming variants (H14-H16)
 """
 
 from debias_spark.session import get_spark
-from debias_spark.registry import QUERIES, ORACLES, register
+from debias_spark.registry import register
 
-__all__ = ["get_spark", "QUERIES", "ORACLES", "register"]
+__all__ = ["get_spark", "register"]

@@ -108,7 +108,7 @@ def normalize_strict(text: Column) -> Column:
     ``normalize_for_fingerprint`` (which keeps punctuation).  The DuckDB
     twin is ``NORMALIZE_STRICT_DUCK``; keep the two spellings in
     lockstep, they are hash-compared by every caller's oracle.
-    (llm_ops4's dedup_exact_normalized predates this helper and inlines
+    (dedup_exact_normalized predates this helper and inlines
     the identical expression — consolidate when that key next changes.)"""
     return F.trim(
         F.regexp_replace(

@@ -6,7 +6,7 @@ rather than stubbed (r6 verdict item 2):
   1. avro format            — spark-avro jar absent
   2. transformWithStateInPandas — google.protobuf absent (the streaming
      Python runner crashes at init; stateful surface ships on
-     applyInPandasWithState instead, see streaming_ext4.py)
+     applyInPandasWithState instead, see stream.py)
   3. bloom_filter_agg / might_contain — not in the public function registry
   4. GROUPS window frames   — unsupported by Spark SQL
 
@@ -34,7 +34,7 @@ def test_avro_format_probe(spark):
         pytest.skip("spark-avro jar absent in this container (documented in SURVEY §7)")
     pytest.fail(
         "avro format is now available: add source_avro_roundtrip / "
-        "sink_avro_roundtrip keys mirroring sink_orc_roundtrip (io_roundtrip.py)"
+        "sink_avro_roundtrip keys mirroring sink_orc_roundtrip (sink_io.py)"
     )
 
 
@@ -49,7 +49,7 @@ def test_protobuf_transform_with_state_probe():
         pytest.skip(
             "google.protobuf absent: transformWithStateInPandas driver runner "
             "crashes at init (STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE, "
-            "documented in streaming_ext4.py); stateful surface ships on "
+            "documented in stream.py); stateful surface ships on "
             "applyInPandasWithState"
         )
     pytest.fail(

@@ -7,15 +7,56 @@ registry."""
 
 from __future__ import annotations
 
+import ast
+import pathlib
+
+import pytest
+
 from debias_spark.registry import (
     CHANGED_SINCE_CHECK,
-    DEFERRED_NEW_KEYS,
     _correctness_evidence,
     _record_green,
     changed_pending,
     load_all_queries,
     priority_ordered,
 )
+
+ROOT = pathlib.Path(__file__).resolve().parent.parent
+PKG = ROOT / "debias_spark"
+
+
+def package_files(*parts: str, root: pathlib.Path = PKG) -> list[pathlib.Path]:
+    """Every ``.py`` file under ``root/<parts>`` (or the one file it names),
+    sorted.  Raises when it finds none, so a repo scan built on it cannot
+    pass vacuously after a move or a mistyped path."""
+    where = root.joinpath(*parts)
+    paths = [where] if where.suffix == ".py" and where.is_file() else sorted(where.rglob("*.py"))
+    if not paths:
+        raise FileNotFoundError(f"no .py files under {where}")
+    return paths
+
+
+def functions_with(pattern, paths) -> list[tuple[str, str]]:
+    """``(file relative to debias_spark/, top-level function)`` for every
+    match of ``pattern`` inside a module-level function's source."""
+    import re
+
+    found = []
+    for path in paths:
+        src = path.read_text()
+        for fn in ast.parse(src).body:
+            if isinstance(fn, ast.FunctionDef):
+                n = len(re.findall(pattern, ast.get_source_segment(src, fn)))
+                found += [(path.relative_to(PKG).as_posix(), fn.name)] * n
+    return found
+
+
+def test_package_scan_refuses_an_empty_root(tmp_path):
+    with pytest.raises(FileNotFoundError, match="no .py files"):
+        package_files(root=tmp_path)
+    with pytest.raises(FileNotFoundError):
+        package_files("no_such_dir")
+    assert package_files("registry.py") == [PKG / "registry.py"]
 
 
 def test_priority_ordering_is_total_permutation():
@@ -30,13 +71,10 @@ def test_never_driver_checked_keys_lead_the_window():
     impossible: every registry key absent from the committed CORRECTNESS
     files must sit at the HEAD of priority_ordered() (before any key the
     driver already proved) — the driver checks exactly the first 50 keys,
-    so an unproven key behind a proven one is a wasted round of evidence.
-    Keys in DEFERRED_NEW_KEYS are the sanctioned exception: built after
-    the window filled, they slot after the failed/changed re-proofs but
-    still before every green."""
+    so an unproven key behind a proven one is a wasted round of evidence."""
     specs = load_all_queries()
     ev = _correctness_evidence()
-    never = {k for k in specs if k not in ev} - set(DEFERRED_NEW_KEYS)
+    never = {k for k in specs if k not in ev}
     order = list(priority_ordered())
     head = set(order[: len(never)])
     assert head == never, (
@@ -80,17 +118,17 @@ def test_green_tail_is_stalest_first():
 
 
 def test_window_covers_every_key_needing_proof():
-    """(new + failed + changed), excluding the consciously DEFERRED new
-    keys, must fit the driver's 50-key window; a 51st unproven key would
-    otherwise silently wait a full round — flag it here so the builder
-    either trims CHANGED_SINCE_CHECK or defers the key explicitly."""
+    """(new + failed + changed) must fit the driver's 50-key window; a
+    51st unproven key would otherwise silently wait a full round — flag
+    it here so CHANGED_SINCE_CHECK is trimmed or the key waits for the
+    next round on purpose."""
     specs = load_all_queries()
     ev = _correctness_evidence()
     pending = set(changed_pending(specs, ev))
     needing = [
         k
         for k in specs
-        if (k not in ev and k not in DEFERRED_NEW_KEYS)
+        if k not in ev
         or (
             k in ev
             and not _record_green(ev[k][2], specs[k].oracle is not None)
@@ -99,7 +137,7 @@ def test_window_covers_every_key_needing_proof():
     ]
     assert len(needing) <= 50, (
         f"{len(needing)} keys need driver proof but the window holds 50: "
-        f"defer new keys (DEFERRED_NEW_KEYS) or trim CHANGED_SINCE_CHECK"
+        f"trim CHANGED_SINCE_CHECK"
     )
 
 
@@ -144,14 +182,12 @@ def test_floor_eps_rule_lives_in_one_module():
     instead of calling `floor_eps` / `floor_eps_sql`.  (Tiebreak keys
     such as `l_quantity + l_orderkey * 1e-9` are not rounding and do not
     match.)"""
-    import pathlib
     import re
 
     copy = re.compile(r"0\.5\s*\+\s*1e-9|0\.500000001|\b_?eps\s*=(?!=)", re.I)
-    pkg = pathlib.Path(__file__).resolve().parent.parent / "debias_spark"
     hits = [
-        f"{path.relative_to(pkg)}:{i}: {line.strip()}"
-        for path in sorted(pkg.rglob("*.py"))
+        f"{path.relative_to(PKG)}:{i}: {line.strip()}"
+        for path in package_files()
         if path.name != "numeric.py"
         for i, line in enumerate(path.read_text().splitlines(), 1)
         if copy.search(line)
@@ -167,20 +203,18 @@ def test_cents_rule_lives_in_one_module():
     `cents` / `cents_sql`.  The TPC-H revenue rule `floor(x * 100 + 0.5)`
     and other roundings such as `round(w * least(...), 0)` or
     `round(100.0 / value)` are not this rule and do not match."""
-    import pathlib
     import re
 
     spelled = re.compile(r"\bround\((?:[^()]|\([^()]*\))*\*\s*100\s*\)")
     bound = re.compile(r"\b_CENTS(?:_SQL)?\s*=(?!=)")
-    pkg = pathlib.Path(__file__).resolve().parent.parent / "debias_spark"
     hits = []
-    for path in sorted(pkg.rglob("*.py")):
+    for path in package_files():
         if path.name == "numeric.py":
             continue
         text = path.read_text()
         for m in [*spelled.finditer(text), *bound.finditer(text)]:
             line = text.count("\n", 0, m.start()) + 1
-            hits.append(f"{path.relative_to(pkg)}:{line}: {m.group(0).strip()}")
+            hits.append(f"{path.relative_to(PKG)}:{line}: {m.group(0).strip()}")
     assert not hits, "cents rule re-copied outside numeric.py:\n" + "\n".join(hits)
 
 
@@ -228,23 +262,14 @@ def test_scratch_dir_and_drain_rules_live_in_one_module_each():
     timeout and always-stop; a ``_WAREHOUSE`` / ``_sink_dir`` /
     ``_write_single_file`` or an ``.applicationId`` read re-derives a
     scratch dir by hand.  The four managed-table sites name catalog
-    tables, not dirs, and keep their own appId read."""
-    import pathlib
+    tables, not dirs, and keep one appId read each."""
     import re
 
-    pkg = pathlib.Path(__file__).resolve().parent.parent / "debias_spark"
     drain = re.compile(r"availableNow\s*=\s*True")
     private = re.compile(r"\b(_WAREHOUSE|_sink_dir|_write_single_file)\b")
-    app_id = re.compile(r"\.applicationId\b")
-    table_name_sites = {
-        "queries/io_roundtrip.py",
-        "queries/io_roundtrip3.py",
-        "queries/relational_ext34.py",
-        "queries/relational_ext41.py",
-    }
-    hits, drains, app_reads = [], [], {}
-    for path in sorted(pkg.rglob("*.py")):
-        rel = path.relative_to(pkg).as_posix()
+    hits, drains = [], []
+    for path in package_files():
+        rel = path.relative_to(PKG).as_posix()
         for i, line in enumerate(path.read_text().splitlines(), 1):
             where = f"{rel}:{i}: {line.strip()}"
             if drain.search(line):
@@ -253,13 +278,16 @@ def test_scratch_dir_and_drain_rules_live_in_one_module_each():
                     hits.append(where)
             if private.search(line):
                 hits.append(where)
-            if app_id.search(line):
-                app_reads[rel] = app_reads.get(rel, 0) + 1
-                if rel not in table_name_sites | {"warehouse.py"}:
-                    hits.append(where)
     assert not hits, "scratch-dir or drain rule re-copied:\n" + "\n".join(hits)
     assert len(drains) == 1, drains  # drain_available_now itself
-    assert all(app_reads.get(rel) == 1 for rel in table_name_sites), app_reads
+    app_reads = functions_with(r"\.applicationId\b", package_files())
+    assert sorted(app_reads) == [
+        ("queries/joins.py", "build_cbo_star_tables"),
+        ("queries/sink_io.py", "sink_bucketed_join_noshuffle"),
+        ("queries/sink_io.py", "sink_managed_table_insert"),
+        ("queries/sql_surface.py", "sql_analyze_table_stats"),
+        ("warehouse.py", "scratch_dir"),
+    ], app_reads
 
 
 def test_drop_replay_lives_in_one_module():
@@ -270,16 +298,10 @@ def test_drop_replay_lives_in_one_module():
     ``id_range_bounds`` itself has re-copied it instead of calling
     ``replay_drops`` / ``stage_and_drain`` / ``id_range_slices`` /
     ``stage_drops``."""
-    import ast
-    import pathlib
-
     banned = {"drain_file_drops", "stage_single_file_drop", "id_range_bounds"}
-    pkg = pathlib.Path(__file__).resolve().parent.parent / "debias_spark" / "queries"
-    paths = sorted(pkg.glob("*.py"))
-    assert paths, pkg  # an empty scan would pass vacuously
     hits = [
         f"{path.name}:{node.lineno}"
-        for path in paths
+        for path in package_files("queries")
         for node in ast.walk(ast.parse(path.read_text()))
         if isinstance(node, ast.Call)
         and getattr(node.func, "id", getattr(node.func, "attr", None)) in banned
@@ -293,14 +315,12 @@ def test_session_conf_writes_live_in_one_module():
     ``conf.unset(`` anywhere else under debias_spark/ is a hand-rolled
     save/set/restore, and ``_RUNTIME_CONFS`` was the duplicate of
     ``session._BASE_CONF``."""
-    import pathlib
     import re
 
     write = re.compile(r"conf\.(set|unset)\(")
-    pkg = pathlib.Path(__file__).resolve().parent.parent / "debias_spark"
     hits = [
-        f"{path.relative_to(pkg)}:{i}: {line.strip()}"
-        for path in sorted(pkg.rglob("*.py"))
+        f"{path.relative_to(PKG)}:{i}: {line.strip()}"
+        for path in package_files()
         for i, line in enumerate(path.read_text().splitlines(), 1)
         if "_RUNTIME_CONFS" in line
         or (write.search(line) and path.name != "session.py")
@@ -315,15 +335,13 @@ def test_pipeline_reuses_results_through_staged_writes_only():
     ``localCheckpoint(`` in pipeline.py, report.py, sources/ or annotate/
     could serve an earlier run's rows for an identical plan, or lose them
     with an executor."""
-    import pathlib
     import re
 
-    pkg = pathlib.Path(__file__).resolve().parent.parent / "debias_spark"
     reuse = re.compile(r"\.cache\(|\.persist\(|localCheckpoint\(")
-    paths = [pkg / "pipeline.py", pkg / "report.py"]
-    paths += sorted((pkg / "sources").rglob("*.py")) + sorted((pkg / "annotate").rglob("*.py"))
+    paths = [p for part in ("pipeline.py", "report.py", "sources", "annotate")
+             for p in package_files(part)]
     hits = [
-        f"{path.relative_to(pkg)}:{i}: {line.strip()}"
+        f"{path.relative_to(PKG)}:{i}: {line.strip()}"
         for path in paths
         for i, line in enumerate(path.read_text().splitlines(), 1)
         if reuse.search(line)
@@ -335,21 +353,22 @@ def test_key_order_lives_in_one_table():
     """registry.KEY_MODULES is the one statement of the key order:
     queries/__init__.py imports no module (an eager import list there
     would be a second order), every ``@register(`` key under queries/
-    sits in the table exactly once under its own file's module, and a
-    full load in a fresh interpreter registers keys in table order."""
-    import ast
-    import pathlib
+    sits in the table exactly once under its own file's module, and in a
+    fresh interpreter, after a full load, everything that reaches the
+    driver follows the table: ``load_all_queries()`` iterates in table
+    order, ``__spark_entry__.queries()`` / ``oracle_sql()`` iterate in
+    ``priority_ordered()`` order, and QUERIES / ORACLES hold exactly the
+    table's keys and oracled keys.  QUERIES and ORACLES are caches filled
+    in import order, which is module order, not key order."""
     import subprocess
     import sys
 
     from debias_spark.registry import KEY_MODULES
 
-    root = pathlib.Path(__file__).resolve().parent.parent
-    pkg = root / "debias_spark" / "queries"
-    init = ast.parse((pkg / "__init__.py").read_text())
+    init = ast.parse((PKG / "queries" / "__init__.py").read_text())
     assert not [n for n in ast.walk(init) if isinstance(n, (ast.Import, ast.ImportFrom))]
     found = []
-    for path in sorted(pkg.glob("*.py")):
+    for path in package_files("queries"):
         for node in ast.walk(ast.parse(path.read_text())):
             if isinstance(node, ast.FunctionDef):
                 found += [
@@ -360,13 +379,54 @@ def test_key_order_lives_in_one_table():
     assert len(found) == len({k for k, _ in found}), "a key is registered twice"
     assert sorted(found) == sorted(KEY_MODULES.items())
     load = (
+        "import __spark_entry__ as entry\n"
         "from debias_spark import registry\n"
         "specs = registry.load_all_queries()\n"
         "list(specs.values())\n"
-        "assert list(registry.QUERIES) == list(registry.KEY_MODULES)\n"
-        "assert list(registry.ORACLES) == [k for k, s in specs.items() if s.oracle]\n"
+        "assert list(specs) == list(registry.KEY_MODULES)\n"
+        "assert set(registry.QUERIES) == set(registry.KEY_MODULES)\n"
+        "assert set(registry.ORACLES) == {k for k, s in specs.items() if s.oracle}\n"
+        "order = list(registry.priority_ordered())\n"
+        "assert list(entry.queries()) == order\n"
+        "assert list(entry.oracle_sql()) == [k for k in order if specs[k].oracle]\n"
     )
-    subprocess.run([sys.executable, "-c", load], cwd=root, check=True)
+    subprocess.run([sys.executable, "-c", load], cwd=ROOT, check=True)
+
+
+def test_query_caches_are_read_only_by_the_registry():
+    """QUERIES and ORACLES fill in import order, so code that iterates
+    them sees module order, not key order.  Outside registry.py and
+    tests/, the only use allowed is ``.clear()`` (perfbench's restart);
+    everything else reads keys through ``load_all_queries()``."""
+    paths = [ROOT / "__spark_entry__.py", ROOT / "bench.py"]
+    paths += [p for part in ("perfbench", "tools") for p in package_files(part, root=ROOT)]
+    paths += [p for p in package_files() if p.name != "registry.py"]
+    bad = []
+    for path in paths:
+        tree = ast.parse(path.read_text())
+        parent = {c: n for n in ast.walk(tree) for c in ast.iter_child_nodes(n)}
+        for node in ast.walk(tree):
+            name = getattr(node, "id", getattr(node, "attr", None))
+            if name not in ("QUERIES", "ORACLES") or isinstance(node, ast.alias):
+                continue
+            up = parent.get(node)
+            if not (isinstance(up, ast.Attribute) and up.attr == "clear"):
+                bad.append(f"{path.relative_to(ROOT)}:{node.lineno}")
+    assert bad == [], bad
+
+
+def test_query_modules_are_named_by_family():
+    """Query modules are named for what they hold, not for when they were
+    added: no module name ends in a digit, none runs past 2,500 lines,
+    and every KEY_MODULES value names a module that exists."""
+    from debias_spark.registry import KEY_MODULES
+
+    paths = package_files("queries")
+    stems = {p.stem for p in paths}
+    assert [s for s in stems if s[-1].isdigit()] == []
+    long = {p.name: n for p in paths if (n := len(p.read_text().splitlines())) > 2500}
+    assert long == {}
+    assert set(KEY_MODULES.values()) <= stems, set(KEY_MODULES.values()) - stems
 
 
 def test_query_modules_are_leaves():
@@ -375,12 +435,8 @@ def test_query_modules_are_leaves():
     reading a key imports exactly one query module and KEY_MODULES' order
     needs no import-order rule.  Code two keys share lives in operators/
     or warehouse.py."""
-    import ast
-    import pathlib
-
-    pkg = pathlib.Path(__file__).resolve().parent.parent / "debias_spark" / "queries"
     bad = []
-    for path in sorted(pkg.glob("*.py")):
+    for path in package_files("queries"):
         for node in ast.walk(ast.parse(path.read_text())):
             if isinstance(node, ast.ImportFrom):
                 names = [node.module or ""] + [
@@ -405,36 +461,25 @@ def test_temp_views_and_tokenizer_live_in_one_place_each():
     Spark word tokenizer is spelled once, as ``dedup.word_tokens``; the
     one other ``F.split(F.lower(`` is text_ngram_counts, which trims
     first and so plans differently."""
-    import ast
-    import pathlib
-
     views = {"createOrReplaceTempView", "createTempView", "createGlobalTempView",
              "createOrReplaceGlobalTempView", "registerTempTable"}
-    pkg = pathlib.Path(__file__).resolve().parent.parent / "debias_spark"
-    view_sites, split_sites = [], []
-    for path in sorted(pkg.rglob("*.py")):
-        rel = str(path.relative_to(pkg))
-        src = path.read_text()
-        for fn in ast.walk(ast.parse(src)):
+    view_sites = []
+    for path in package_files():
+        rel = str(path.relative_to(PKG))
+        for fn in ast.walk(ast.parse(path.read_text())):
             if not isinstance(fn, ast.FunctionDef):
                 continue
             for node in ast.walk(fn):
                 if isinstance(node, ast.Attribute) and node.attr in views:
                     view_sites.append((rel, fn.name))
-        split_sites += [
-            (rel, line.strip())
-            for line in src.splitlines()
-            if "F.split(F.lower(" in line
-        ]
     assert sorted(view_sites) == [
         ("catalog.py", "register_views"),
         ("session.py", "temp_views"),
     ], view_sites
+    split_sites = functions_with(r"F\.split\(F\.lower\(", package_files())
     assert split_sites == [
-        ("operators/dedup.py",
-         'return F.filter(F.split(F.lower(text), r"\\s+"), lambda t: t != "")'),
-        ("queries/llm_ops3.py",
-         'F.split(F.lower(F.trim(F.col("text"))), r"\\s+"), lambda t: t != ""'),
+        ("operators/dedup.py", "word_tokens"),
+        ("queries/text.py", "text_ngram_counts"),
     ], split_sites
 
 
@@ -549,3 +594,25 @@ def test_changed_entries_drain_once_reproven():
     stale_ev = dict(fake_ev)
     stale_ev[any_key] = (need - 1, 0, fake_ev[any_key][2])
     assert any_key in changed_pending(specs, stale_ev)
+
+
+def test_registry_surface_masks_per_run_names(spark, sf_dir):
+    """tools/registry_surface.py is the identity gate for refactors: its
+    line for a key must not change from one build of the key to the next.
+    sink_bucketed_join_noshuffle's plan names catalog tables after the
+    application id, which the mask must hide."""
+    import sys
+
+    from debias_spark.registry import KEY_MODULES
+
+    sys.path.insert(0, str(ROOT))
+    from tools.registry_surface import surface_rows
+
+    keys = ["sink_bucketed_join_noshuffle", "tpch_q3_shipping_priority"]
+    first = [row.split("\t") for row in surface_rows(spark, sf_dir, keys)]
+    second = [row.split("\t") for row in surface_rows(spark, sf_dir, keys)]
+    specs = load_all_queries()
+    for key, a, b in zip(keys, first, second):
+        assert a[:6] == b[:6], (a, b)
+        assert a[:4] == [key, KEY_MODULES[key], specs[key].section, str(specs[key].bench)]
+        assert len(a[5]) == 16 and a[6].isdigit(), a

@@ -82,7 +82,7 @@ def test_compaction_noop_on_already_compact_state(spark, specs, monkeypatch):
     """The Z68 drain with a lowered threshold must survive a
     compaction firing on an already-compact state (after == before is a
     no-op, not a failure — r11 advice)."""
-    import debias_spark.queries.pipeline_e2e2 as mod
+    import debias_spark.queries.e2e_pipeline as mod
 
     # threshold 0: every post-2nd-batch compaction fires, including ones
     # where the state is already one file per band

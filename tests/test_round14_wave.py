@@ -20,12 +20,12 @@ def specs():
 
 
 def test_substring_dup_spans_two_pass_path_equivalence(spark, specs, monkeypatch):
-    """The hot-gram skew gate (llm_ops31._GRAM_WINDOW_MAX) picks between
+    """The hot-gram skew gate (docs_dedup._GRAM_WINDOW_MAX) picks between
     the per-gk count window and the two-pass spelling (per-gk hash
     aggregate + left-semi join); both must produce the identical span
     report.  Forcing the gate to 0 exercises the two-pass path on the
     fixture corpus (whose gram count is far below the production bound)."""
-    import debias_spark.queries.llm_ops31 as m
+    import debias_spark.queries.docs_dedup as m
 
     plain = specs["docs_substring_dup_spans"].fn(spark, SF).collect()
     monkeypatch.setattr(m, "_GRAM_WINDOW_MAX", 0)

@@ -46,7 +46,7 @@ def test_skyline_anticorrelated_data_handled_and_capped(spark, sf_dir):
     becoming a single-task bottleneck."""
     import pytest
 
-    from debias_spark.queries.relational_ext12 import _skyline_batches
+    from debias_spark.queries.orders import _skyline_batches
 
     n = 400
     # price RISES with size: cheaper always means smaller, so no point

@@ -209,7 +209,7 @@ def test_kmeans_assign_and_update_consistent(spark, sf_dir):
     assert sum(n for n, *_ in got_upd.values()) == len(vecs)
 
     def e4(x: float) -> int:
-        # the round-6 floor-eps emission (llm_ops12): floor(x*1e4+0.5+eps)
+        # the round-6 floor-eps emission (embedding.py): floor(x*1e4+0.5+eps)
         import math
 
         return int(math.floor(x * 10000 + 0.5 + 1e-9))

@@ -248,7 +248,7 @@ def test_scripting_key_restores_conf_when_table_raises(spark, sf_dir, monkeypatc
     that raises leaves spark.sql.scripting.enabled as it was."""
     import pytest
 
-    from debias_spark.queries import relational_ext27
+    from debias_spark.queries import sql_surface
 
     key = "spark.sql.scripting.enabled"
     before = spark.conf.get(key, None)
@@ -256,7 +256,7 @@ def test_scripting_key_restores_conf_when_table_raises(spark, sf_dir, monkeypatc
     def broken(*args):
         raise OSError("orders unreadable")
 
-    monkeypatch.setattr(relational_ext27, "table", broken)
+    monkeypatch.setattr(sql_surface, "table", broken)
     with pytest.raises(OSError, match="orders unreadable"):
         SPECS["sql_scripting_budget_loop"].fn(spark, sf_dir)
     assert spark.conf.get(key, None) == before
@@ -319,7 +319,7 @@ def test_udtf_table_arg_one_row_per_lang_tie_break(spark, sf_dir):
 def test_state_store_reader_metadata_names_the_operator(spark, sf_dir):
     """The state-metadata companion format must name the aggregation
     operator whose state the key reads."""
-    from debias_spark.queries.streaming_ext4 import state_metadata
+    from debias_spark.queries.stream import state_metadata
     from debias_spark.warehouse import scratch_dir
 
     SPECS["stream_state_store_reader"].fn(spark, sf_dir).collect()
@@ -676,7 +676,7 @@ def test_mmr_registered_sql_matches_python_greedy_replay(spark, sf_dir):
     embeddings table and require the full ranked sequence to match."""
     import math
 
-    from debias_spark.queries.llm_ops20 import _K_CAND, _LAMBDA
+    from debias_spark.queries.embedding import _K_CAND, _LAMBDA
 
     lam = float(_LAMBDA)  # the key embeds it as SQL literal text
 

@@ -78,7 +78,7 @@ def test_hll_intersection_band_holds(spark, specs):
 def test_aqe_skew_split_plan_marker(spark, specs):
     """The final adaptive plan of the skewed SMJ must carry the
     OptimizeSkewedJoin marker (skew=true) under the key's confs."""
-    from debias_spark.queries.relational_ext30 import _SKEW_CONFS, skewed_join_frame
+    from debias_spark.queries.joins import _SKEW_CONFS, skewed_join_frame
     from debias_spark.session import pinned_confs
 
     with pinned_confs(spark, _SKEW_CONFS):
@@ -95,7 +95,7 @@ def test_aqe_skew_split_plan_marker(spark, specs):
 
 
 def test_aqe_skew_key_restores_confs(spark, specs):
-    from debias_spark.queries.relational_ext30 import _SKEW_CONFS
+    from debias_spark.queries.joins import _SKEW_CONFS
 
     before = {k: spark.conf.get(k, None) for k in _SKEW_CONFS}
     specs["join_aqe_skew_split"].fn(spark, SF).collect()
@@ -136,7 +136,7 @@ def test_rowgroup_sink_footer_stats_prunable(spark):
     stats must be tight enough that the 1997 predicate overlaps only a
     minority of row groups — the statistics that make the reader skip."""
     pa = pytest.importorskip("pyarrow.parquet")
-    from debias_spark.queries.io_roundtrip5 import write_rowgroup_sink
+    from debias_spark.queries.sink_io import write_rowgroup_sink
 
     out = write_rowgroup_sink(spark, "/root/testdata/sf0.01")
     import datetime as dt

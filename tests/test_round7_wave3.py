@@ -40,8 +40,8 @@ def test_watermark_drop_emits_exactly_three_closed_windows(spark, specs):
 
 
 def test_asof_forward_handbuilt(spark):
-    from debias_spark.queries.temporal_udf2 import join_asof_forward_tolerance  # noqa: F401
-    import debias_spark.queries.temporal_udf2 as m
+    from debias_spark.queries.joins import join_asof_forward_tolerance  # noqa: F401
+    import debias_spark.queries.joins as m
 
     df = spark.createDataFrame(
         [
@@ -93,7 +93,7 @@ def test_try_conversion_null_accounting(spark, specs):
 
 
 def test_typed_partition_discovery_prunes(spark, specs):
-    from debias_spark.queries.io_roundtrip5 import write_typed_partitions
+    from debias_spark.queries.source_io import write_typed_partitions
 
     out = write_typed_partitions(spark, SF)
     rb = spark.read.parquet(out)

@@ -19,7 +19,7 @@ def specs():
 
 
 def test_bloom_runtime_filter_in_plan(spark):
-    from debias_spark.queries.relational_ext34 import _BLOOM_CONFS, bloom_filtered_join
+    from debias_spark.queries.joins import _BLOOM_CONFS, bloom_filtered_join
     from debias_spark.session import pinned_confs
 
     with pinned_confs(spark, _BLOOM_CONFS):
@@ -33,7 +33,7 @@ def test_bloom_runtime_filter_in_plan(spark):
 
 
 def test_bloom_key_restores_confs(spark, specs):
-    from debias_spark.queries.relational_ext34 import _BLOOM_CONFS
+    from debias_spark.queries.joins import _BLOOM_CONFS
 
     before = {k: spark.conf.get(k, None) for k in _BLOOM_CONFS}
     specs["join_bloom_runtime_filter"].fn(spark, SF).collect()

@@ -109,8 +109,8 @@ def test_cbo_join_reorder_actually_fires(spark, specs):
     order survives."""
     import re
 
-    from debias_spark.queries.relational_ext41 import CBO_CONFS as confs
-    from debias_spark.queries.relational_ext41 import build_cbo_star_tables
+    from debias_spark.queries.joins import CBO_CONFS as confs
+    from debias_spark.queries.joins import build_cbo_star_tables
     from debias_spark.session import pinned_confs
 
     names = {}

@@ -270,7 +270,7 @@ def test_incremental_neardup_compaction_gate(spark, specs, monkeypatch):
     never pays the rewrite; with the threshold forced to 0 it fires
     mid-drain, and the post-compaction batches probing the REWRITTEN dir
     still produce the identical rollup (results-unchanged proof)."""
-    from debias_spark.queries import pipeline_e2e2 as mod
+    from debias_spark.queries import e2e_pipeline as mod
 
     baseline = sorted(
         map(tuple, specs["pipeline_incremental_neardup"].fn(spark, SF).collect())

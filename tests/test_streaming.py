@@ -243,10 +243,10 @@ def test_run_available_now_is_bounded_by_the_drain_timeout(spark, sf_dir, monkey
 @pytest.mark.parametrize(
     "module, key",
     [
-        ("pipeline_e2e", "pipeline_incremental_refresh"),
-        ("pipeline_e2e2", "pipeline_incremental_neardup"),
-        ("pipeline_e2e5", "pipeline_corpus_build_incremental"),
-        ("llm_ops38", "similarity_ann_ivfpq_incremental"),
+        ("e2e_pipeline", "pipeline_incremental_refresh"),
+        ("e2e_pipeline", "pipeline_incremental_neardup"),
+        ("e2e_pipeline", "pipeline_corpus_build_incremental"),
+        ("similarity", "similarity_ann_ivfpq_incremental"),
     ],
 )
 def test_file_drop_keys_require_two_batches(spark, sf_dir, monkeypatch, module, key):
@@ -335,11 +335,11 @@ def test_single_batch_stream_keys_reject_a_second_batch(
     oracle-exact only for a single-batch drain; fed a two-file source
     they fail loudly, and the drain leaves no live stream behind."""
     import debias_spark.streaming
-    from debias_spark.queries import streaming_ext2
+    from debias_spark.queries import stream
     from debias_spark.registry import load_all_queries
 
     specs = load_all_queries()
-    monkeypatch.setattr(streaming_ext2, "stream_events", _two_batch_events(tmp_path / "a"))
+    monkeypatch.setattr(stream, "stream_events", _two_batch_events(tmp_path / "a"))
     with pytest.raises(Exception, match="stream_foreachbatch_upsert drained in >1"):
         specs["stream_foreachbatch_upsert"].fn(spark, sf_dir)
     assert spark.streams.active == []
@@ -373,13 +373,13 @@ def test_staged_read_backs_carry_the_written_schema(spark, sf_dir, monkeypatch, 
     the mid-drain compaction's read of the band state is counted too."""
     from pyspark.sql import DataFrameReader
 
-    from debias_spark.queries import pipeline_e2e2
+    from debias_spark.queries import e2e_pipeline
     from debias_spark.registry import load_all_queries
     from debias_spark.warehouse import scratch_root
 
     key, _, compacted = key.partition(":")
     if compacted:
-        monkeypatch.setattr(pipeline_e2e2, "_COMPACT_FILES", 0)
+        monkeypatch.setattr(e2e_pipeline, "_COMPACT_FILES", 0)
     sc, read, jobs = spark.sparkContext, DataFrameReader.parquet, []
 
     def counted_read(self, *paths, **kwargs):
@@ -397,7 +397,7 @@ def test_staged_read_backs_carry_the_written_schema(spark, sf_dir, monkeypatch, 
     load_all_queries()[key].fn(spark, sf_dir)
     assert jobs and set(jobs) == {0}, jobs
     if compacted:
-        assert pipeline_e2e2.LAST_COMPACTIONS >= 1
+        assert e2e_pipeline.LAST_COMPACTIONS >= 1
 
 
 def test_foreachbatch_state_read_back_carries_the_written_schema(spark, sf_dir):
