@@ -220,12 +220,11 @@ def pipeline_state_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("doc_id").alias("id"),
                 word_shingles(F.col("text"), 1).alias("sh"),
             ).filter(F.size("sh") > 0)
-            minhash_banded(sh, NEARDUP_HASHES, NEARDUP_BANDS).write.mode("append").partitionBy(
-                "band_id"
-            ).parquet(band_dir)
+            banded = minhash_banded(sh, NEARDUP_HASHES, NEARDUP_BANDS)
+            banded.write.mode("append").partitionBy("band_id").parquet(band_dir)
 
     files_before = count_parquet_files(band_dir)
-    orig = spark.read.parquet(band_dir).select("id", "band_hash", "band_id")
+    orig = spark.read.schema(banded.schema).parquet(band_dir).select("id", "band_hash", "band_id")
     # THE COMPACTION: one shuffle on the partition key, few files out
     orig.repartition(NEARDUP_BANDS, "band_id").write.partitionBy("band_id").parquet(
         compact_dir
@@ -236,7 +235,7 @@ def pipeline_state_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"compaction did not shrink the file count: {files_before} -> "
             f"{files_after}"
         )
-    comp = spark.read.parquet(compact_dir).select("id", "band_hash", "band_id")
+    comp = spark.read.schema(orig.schema).parquet(compact_dir).select("id", "band_hash", "band_id")
     # unchanged-results proof, both directions (raise: must survive -O)
     missing = orig.exceptAll(comp).count()
     extra = comp.exceptAll(orig).count()

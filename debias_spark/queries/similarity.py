@@ -246,6 +246,7 @@ def similarity_ann_ivfpq_incremental(spark: SparkSession, sf_dir: str) -> DataFr
     src_dir, idx_dir, ckpt_dir = fresh_scratch_dirs(
         spark, sf_dir, "y75_src", "y75_index", "y75_ckpt"
     )
+    index_schema = pq_index_frame(emb, book).schema  # what every drop appends
 
     def refresh(batch: DataFrame, batch_id: int) -> None:
         # the drop indexes itself: pure projection, no state read, no
@@ -261,7 +262,7 @@ def similarity_ann_ivfpq_incremental(spark: SparkSession, sf_dir: str) -> DataFr
         spark, "similarity_ann_ivfpq_incremental", emb.schema, src_dir, ckpt_dir, refresh, slices
     )
 
-    index = spark.read.parquet(idx_dir)
+    index = spark.read.schema(index_schema).parquet(idx_dir)
     # readback guard (the shard-uniqueness doctrine), ONE aggregate job:
     # exactly one index row per vector (a drop that double-indexed or
     # skipped indexing would corrupt search silently) and the
@@ -462,12 +463,11 @@ def similarity_ann_ivfpq_compacted(spark: SparkSession, sf_dir: str) -> DataFram
     with narrow_shuffle(spark, 8):
         for batch in slices:
             # each drop indexes itself: pure projection, no state read
-            pq_index_frame(batch, book).write.mode("append").partitionBy(
-                "cell"
-            ).parquet(idx_dir)
+            drop = pq_index_frame(batch, book)
+            drop.write.mode("append").partitionBy("cell").parquet(idx_dir)
 
     files_before = count_parquet_files(idx_dir)
-    state = spark.read.parquet(idx_dir)
+    state = spark.read.schema(drop.schema).parquet(idx_dir)
     tombs = emb.select("vec_id").filter(tombstoned(F.col("vec_id")))
     live = state.join(F.broadcast(tombs), "vec_id", "anti")
 
@@ -482,7 +482,7 @@ def similarity_ann_ivfpq_compacted(spark: SparkSession, sf_dir: str) -> DataFram
             f"{files_after}"
         )
 
-    comp = spark.read.parquet(compact_dir)
+    comp = spark.read.schema(live.schema).parquet(compact_dir)
     cols = ["vec_id", "nrm", "cell", "codes"]
     # deletion proof + preservation proof (one pass each way; narrow rows)
     g = comp.agg(

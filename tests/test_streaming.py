@@ -361,6 +361,9 @@ def test_single_batch_stream_keys_reject_a_second_batch(
         "pipeline_corpus_build_incremental",
         "stream_stream_join_attrib",
         "pipeline_incremental_neardup:compacted",
+        "pipeline_state_compaction",
+        "similarity_ann_ivfpq_incremental",
+        "similarity_ann_ivfpq_compacted",
     ],
 )
 def test_staged_read_backs_carry_the_written_schema(spark, sf_dir, monkeypatch, key):

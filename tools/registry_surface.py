@@ -6,7 +6,7 @@ For every key in ``registry.KEY_MODULES`` order the line holds:
     key  module  section  bench  oracle-sha  plan-sha  jobs
 
 ``plan-sha`` hashes the key's optimized logical plan with expression ids,
-application ids and uuids masked; ``jobs`` counts the Spark jobs that
+lambda-variable numbers, application ids and uuids masked; ``jobs`` counts the Spark jobs that
 building the frame and planning it run under the key's own job group.
 Every query module is imported first, and each key starts its expression
 ids at a fixed offset: some optimizer rules order by expression id, so a
@@ -30,6 +30,7 @@ sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1]))
 
 _MASKS = [
     (re.compile(r"#\d+L?"), "#"),
+    (re.compile(r"\b(lambda \w+?)_\d+#"), r"\1#"),  # lambda variables draw on a global counter
     (re.compile(r"(?<![A-Za-z])(?:local|app)[-_]\d+(?:[-_]\d+)?"), "<app>"),
     (re.compile(r"[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}"), "<uuid>"),
 ]
