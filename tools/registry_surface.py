@@ -6,14 +6,15 @@ For every key in ``registry.KEY_MODULES`` order the line holds:
     key  module  section  bench  oracle-sha  plan-sha  jobs
 
 ``plan-sha`` hashes the key's optimized logical plan with expression ids,
-lambda-variable numbers, application ids and uuids masked; ``jobs`` counts the Spark jobs that
-building the frame and planning it run under the key's own job group.
-Every query module is imported first, and each key starts its expression
-ids at a fixed offset: some optimizer rules order by expression id, so a
-plan's text would otherwise depend on what ran before it.
-Two closing lines hash ``list(priority_ordered())`` and
-``__spark_entry__.oracle_sql()``.  Run it twice on one tree first: the
-outputs must be identical, or the masking missed something.
+lambda-variable numbers, application ids, uuids and the warehouse path
+masked; ``jobs`` counts the Spark jobs that building the frame and
+planning it run under the key's own job group.  Every query module is
+imported first, and each key starts its expression ids at a fixed
+offset: some optimizer rules order by expression id, so a plan's text
+would otherwise depend on what ran before it.  Two closing lines hash
+``list(priority_ordered())`` and ``__spark_entry__.oracle_sql()``.  Run
+it twice on one tree first: the outputs must be identical, or the
+masking missed something.
 
 Usage: python tools/registry_surface.py [sf_dir] [--only k1,k2]
 """
@@ -25,6 +26,7 @@ import json
 import pathlib
 import re
 import sys
+import traceback
 
 sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1]))
 
@@ -41,7 +43,10 @@ def _sha(text: str) -> str:
 
 
 def masked_plan(df) -> str:
+    from debias_spark.warehouse import warehouse_root
+
     plan = df._jdf.queryExecution().optimizedPlan().toString()
+    plan = plan.replace(warehouse_root(), "<warehouse>")  # differs per checkout
     for pattern, repl in _MASKS:
         plan = pattern.sub(repl, plan)
     return plan
@@ -92,6 +97,7 @@ def surface_rows(spark, sf_dir: str, keys=None) -> list[str]:
         try:
             plan = _sha(masked_plan(spec.fn(spark, sf_dir)))
         except Exception as exc:  # a broken key is a surface difference too
+            traceback.print_exc()
             plan = f"error:{type(exc).__name__}"
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
