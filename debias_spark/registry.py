@@ -282,14 +282,13 @@ def priority_ordered() -> dict[str, QuerySpec]:
 # Every key's module under debias_spark.queries, in key order: the one
 # statement of the order the driver's correctness window starts from
 # (load_all_queries() iterates this table, and priority_ordered() lists
-# never-checked keys in this order).  Keys whose modules lacked driver
-# evidence when they were added come first, so a per-round key cap or time
-# cutoff lands on keys that already have green CORRECTNESS_r01 rows.  A
-# key's module is its operator family (queries/__init__.py), so one
-# module's keys are spread through the table; QUERIES and ORACLES fill in
-# whatever order modules happen to be imported and carry no order.  No
-# query module imports another (shared code lives in operators/ and
-# warehouse.py).  A new key is added here, under its family's module.
+# never-checked keys in this order).  Keys that lacked driver evidence
+# when they were added come first, so a per-round key cap or time cutoff
+# lands on keys that already have green CORRECTNESS_r01 rows.  A key's
+# module is its operator family (queries/__init__.py), so one module's
+# keys are spread through the table.  No query module imports another
+# (shared code lives in operators/ and warehouse.py).  A new key is added
+# here, under its family's module.
 KEY_MODULES: dict[str, str] = {
     # Y5b pinned-centroid IVF, Y73 substring scrubber (round 10)
     "similarity_ann_ivf_pinned": "similarity",

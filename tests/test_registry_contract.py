@@ -407,7 +407,7 @@ def test_query_caches_are_read_only_by_the_registry():
         parent = {c: n for n in ast.walk(tree) for c in ast.iter_child_nodes(n)}
         for node in ast.walk(tree):
             name = getattr(node, "id", getattr(node, "attr", None))
-            if name not in ("QUERIES", "ORACLES") or isinstance(node, ast.alias):
+            if name not in ("QUERIES", "ORACLES"):
                 continue
             up = parent.get(node)
             if not (isinstance(up, ast.Attribute) and up.attr == "clear"):

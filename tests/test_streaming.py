@@ -241,20 +241,22 @@ def test_run_available_now_is_bounded_by_the_drain_timeout(spark, sf_dir, monkey
 
 
 @pytest.mark.parametrize(
-    "module, key",
+    "key",
     [
-        ("e2e_pipeline", "pipeline_incremental_refresh"),
-        ("e2e_pipeline", "pipeline_incremental_neardup"),
-        ("e2e_pipeline", "pipeline_corpus_build_incremental"),
-        ("similarity", "similarity_ann_ivfpq_incremental"),
+        # the ids are these tests' established names, kept as they were
+        pytest.param("pipeline_incremental_refresh", id="pipeline_e2e-pipeline_incremental_refresh"),
+        pytest.param("pipeline_incremental_neardup", id="pipeline_e2e2-pipeline_incremental_neardup"),
+        pytest.param(
+            "pipeline_corpus_build_incremental", id="pipeline_e2e5-pipeline_corpus_build_incremental"
+        ),
+        pytest.param("similarity_ann_ivfpq_incremental", id="llm_ops38-similarity_ann_ivfpq_incremental"),
     ],
 )
-def test_file_drop_keys_require_two_batches(spark, sf_dir, monkeypatch, module, key):
+def test_file_drop_keys_require_two_batches(spark, sf_dir, monkeypatch, key):
     """The ">= 2 non-empty batches" contract of the file-drop pipelines
     reads what the replay's drain returns: a drain that reports a single
     batch fails the key instead of passing on a degenerate drain.
-    (``module`` names where the key lives; every key drains through
-    streaming.incremental.replay_drops.)"""
+    (Every key drains through streaming.incremental.replay_drops.)"""
     from debias_spark.registry import load_all_queries
     from debias_spark.streaming import incremental
 
