@@ -19,6 +19,7 @@ from debias_spark.registry import register
 # Stats-driven join-strategy selection with a physical-plan assertion —
 # completes the autotune family started by Z66 salt autotune and X161 CBO
 # reorder.
+
 # ---------------------------------------------------------------------------
 # X164: stats-driven join-strategy autotune (diagnose -> remedy loop 3)
 # ---------------------------------------------------------------------------
@@ -277,6 +278,7 @@ def diag_encoding_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
 # The reference trusts its inputs blindly (call-debias.py reads whatever
 # the folder holds); this is the constraint audit a lakehouse runs because
 # nothing enforces foreign keys at 100 TB.
+
 # ---------------------------------------------------------------------------
 # X168: referential-integrity / constraint audit
 # ---------------------------------------------------------------------------

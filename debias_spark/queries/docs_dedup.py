@@ -33,6 +33,7 @@ from debias_spark.registry import register
 # duplicated 20-char window keeps its FIRST corpus occurrence and every
 # later occurrence is CUT from the text, with per-doc removed-char
 # accounting and the digest of the rewritten document.
+
 # ---------------------------------------------------------------------------
 # Y73: exact-substring scrubber — CUT the spans Y68 measures
 # ---------------------------------------------------------------------------

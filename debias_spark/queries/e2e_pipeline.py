@@ -288,6 +288,7 @@ def pipeline_state_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
 # publishable sink exactly-once and repeat offenders stay dead-lettered;
 # the rollup is computed from sink READBACKS and the exactly-once contract
 # (no dup, no loss) is raised on directly.
+
 # ---------------------------------------------------------------------------
 # Z74: quarantine replay-after-fix, exactly-once
 # ---------------------------------------------------------------------------
@@ -439,6 +440,7 @@ def pipeline_quarantine_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (analytics/dashboard_widget.py:72-79) re-reads everything and dedups
 # nothing; Z65 gave it exact-digest survivors, this key gives it the
 # near-duplicate screen a real corpus refresh runs on arrival.
+
 # In-loop band-state compaction triggers only when some band partition
 # accumulates more than this many parquet files (r10 verdict item 5: the
 # unconditional batch-2 compaction cost the 4-batch local drain ~2.6 s
@@ -1163,6 +1165,7 @@ def pipeline_corpus_build_incremental(spark: SparkSession, sf_dir: str) -> DataF
 # (docs_substring_dup_spans, corpus_repeat_epoch_plan,
 # docs_shard_rendezvous_stability) are the monitoring and planning surface
 # a 100 TB corpus pipeline needs AROUND that refresh loop.
+
 # ---------------------------------------------------------------------------
 # Y66: survivor-state drift between two corpus generations
 # ---------------------------------------------------------------------------

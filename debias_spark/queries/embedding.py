@@ -1145,6 +1145,7 @@ def embedding_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
 # embedded as LITERALS in both the Spark expression and the oracle SQL —
 # per SCALE.md's py4j finding, the 8x64-term expression is assembled as SQL
 # text and parsed once with F.expr, not built Column-by-Column.
+
 # Achlioptas-style sign matrix, fixed seed: 8 output dims x 64 input dims,
 # entries in {-1, +1}; projections divide by sqrt(8).  Literal-embedded in
 # both engines so the oracle is exact.

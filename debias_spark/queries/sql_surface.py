@@ -20,6 +20,7 @@ from debias_spark.session import pinned_confs, temp_views
 # Spark 4's dynamic-SQL entry point (string query + USING parameters +
 # INTO variable), the remaining parameterization surface after
 # sql_parameterized_query and sql_session_variables.
+
 # ---------------------------------------------------------------------------
 # X169: EXECUTE IMMEDIATE — dynamic SQL with USING params and INTO variable
 # ---------------------------------------------------------------------------

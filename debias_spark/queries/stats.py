@@ -20,6 +20,7 @@ from debias_spark.registry import register
 # The reference reports point estimates only (analytics/parser.py
 # aggregates); this key adds the uncertainty a 100 TB report needs without
 # RNG state.
+
 # ---------------------------------------------------------------------------
 # X165: deterministic subsample confidence interval (RNG-free bootstrap)
 # ---------------------------------------------------------------------------

@@ -83,7 +83,7 @@ def build_section() -> str:
     ]
     for name in rows_only:
         note = ROWS_ONLY_NOTES.get(
-            name, "declared rows-only; see module docstring for the reason"
+            name, "declared rows-only; see the key's docstring for the reason"
         )
         lines.append(f"- `{name}` — {note}")
     unexplained = [n for n in rows_only if n not in ROWS_ONLY_NOTES]

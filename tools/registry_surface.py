@@ -93,7 +93,7 @@ def surface_rows(spark, sf_dir: str, keys=None) -> list[str]:
         spec = specs[key]
         raise_to(10**10 + position[key] * 10**7)
         group = f"surface-{key}"
-        sc.setJobGroup(group, group)
+        sc.setLocalProperty("spark.jobGroup.id", group)
         try:
             plan = _sha(masked_plan(spec.fn(spark, sf_dir)))
         except Exception as exc:  # a broken key is a surface difference too
