@@ -209,6 +209,14 @@ def pipeline_state_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
     band_dir, compact_dir = fresh_scratch_dirs(spark, sf_dir, "z73_state", "z73_compact")
 
+    def banded(frame: DataFrame) -> DataFrame:
+        sh = frame.select(
+            F.col("doc_id").alias("id"),
+            word_shingles(F.col("text"), 1).alias("sh"),
+        ).filter(F.size("sh") > 0)
+        return minhash_banded(sh, NEARDUP_HASHES, NEARDUP_BANDS)
+
+    band_schema = banded(docs).schema  # what every batch appends
     # fixture staging: 2 id-range batches appended separately, narrow
     # shuffle width so each append leaves several files per band
     # partition (8 shuffle tasks x 2 appends = up to 16 files/band —
@@ -216,15 +224,10 @@ def pipeline_state_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     # two appends only re-paid banding jobs, r12 verdict item 1)
     with narrow_shuffle(spark, 8):
         for batch in id_range_slices(docs, "doc_id", 2):
-            sh = batch.select(
-                F.col("doc_id").alias("id"),
-                word_shingles(F.col("text"), 1).alias("sh"),
-            ).filter(F.size("sh") > 0)
-            banded = minhash_banded(sh, NEARDUP_HASHES, NEARDUP_BANDS)
-            banded.write.mode("append").partitionBy("band_id").parquet(band_dir)
+            banded(batch).write.mode("append").partitionBy("band_id").parquet(band_dir)
 
     files_before = count_parquet_files(band_dir)
-    orig = spark.read.schema(banded.schema).parquet(band_dir).select("id", "band_hash", "band_id")
+    orig = spark.read.schema(band_schema).parquet(band_dir).select("id", "band_hash", "band_id")
     # THE COMPACTION: one shuffle on the partition key, few files out
     orig.repartition(NEARDUP_BANDS, "band_id").write.partitionBy("band_id").parquet(
         compact_dir

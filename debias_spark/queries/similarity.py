@@ -465,14 +465,14 @@ def similarity_ann_ivfpq_compacted(spark: SparkSession, sf_dir: str) -> DataFram
             f"vec_id-range staging produced {len(slices)} drop(s); the "
             "corpus is too small to exercise post-append compaction"
         )
+    index_schema = pq_index_frame(emb, book).schema  # what every drop appends
     with narrow_shuffle(spark, 8):
         for batch in slices:
             # each drop indexes itself: pure projection, no state read
-            drop = pq_index_frame(batch, book)
-            drop.write.mode("append").partitionBy("cell").parquet(idx_dir)
+            pq_index_frame(batch, book).write.mode("append").partitionBy("cell").parquet(idx_dir)
 
     files_before = count_parquet_files(idx_dir)
-    state = spark.read.schema(drop.schema).parquet(idx_dir)
+    state = spark.read.schema(index_schema).parquet(idx_dir)
     tombs = emb.select("vec_id").filter(tombstoned(F.col("vec_id")))
     live = state.join(F.broadcast(tombs), "vec_id", "anti")
 

@@ -36,18 +36,28 @@ def package_files(*parts: str, root: pathlib.Path = PKG) -> list[pathlib.Path]:
     return paths
 
 
-def functions_with(pattern, paths) -> list[tuple[str, str]]:
-    """``(file relative to debias_spark/, top-level function)`` for every
-    match of ``pattern`` inside a module-level function's source."""
+def functions_with(pattern, paths, root: pathlib.Path = PKG) -> list[tuple[str, str]]:
+    """``(file relative to root, owner)`` for every match of ``pattern``
+    anywhere in the file.  The owner is the enclosing top-level function
+    or class, ``Class.method`` for a method, and ``<module>`` for
+    anything outside them, so no match escapes the listed pairs."""
     import re
 
     found = []
     for path in paths:
         src = path.read_text()
-        for fn in ast.parse(src).body:
-            if isinstance(fn, ast.FunctionDef):
-                n = len(re.findall(pattern, ast.get_source_segment(src, fn)))
-                found += [(path.relative_to(PKG).as_posix(), fn.name)] * n
+        owner = {}
+        for node in ast.parse(src).body:
+            scopes = [(node, node.name)] if hasattr(node, "decorator_list") else []
+            if isinstance(node, ast.ClassDef):
+                scopes += [(m, f"{node.name}.{m.name}") for m in node.body
+                           if isinstance(m, (ast.FunctionDef, ast.AsyncFunctionDef))]
+            for scope, name in scopes:
+                first = min([scope.lineno] + [d.lineno for d in scope.decorator_list])
+                owner.update(dict.fromkeys(range(first, scope.end_lineno + 1), name))
+        for m in re.finditer(pattern, src):
+            line = src.count("\n", 0, m.start()) + 1
+            found.append((path.relative_to(root).as_posix(), owner.get(line, "<module>")))
     return found
 
 
@@ -57,6 +67,31 @@ def test_package_scan_refuses_an_empty_root(tmp_path):
     with pytest.raises(FileNotFoundError):
         package_files("no_such_dir")
     assert package_files("registry.py") == [PKG / "registry.py"]
+
+
+def test_function_scan_reports_every_match(tmp_path):
+    """A match in a method, an async def, a decorator or a module-level
+    statement is reported under its owner, never dropped."""
+    copy = tmp_path / "warehouse.py"
+    copy.write_text(
+        (PKG / "warehouse.py").read_text()
+        + "\n\nAPP = spark.sparkContext.applicationId\n\n\n"
+        "class Reader:\n"
+        "    def read(self):\n"
+        "        return self.sc.applicationId\n\n\n"
+        "async def fetch(sc):\n"
+        "    return sc.applicationId\n\n\n"
+        "@tag(sc.applicationId)\n"
+        "def tagged():\n"
+        "    pass\n"
+    )
+    assert sorted(functions_with(r"\.applicationId\b", [copy], root=tmp_path)) == [
+        ("warehouse.py", "<module>"),
+        ("warehouse.py", "Reader.read"),
+        ("warehouse.py", "fetch"),
+        ("warehouse.py", "scratch_dir"),
+        ("warehouse.py", "tagged"),
+    ]
 
 
 def test_priority_ordering_is_total_permutation():
@@ -596,21 +631,29 @@ def test_changed_entries_drain_once_reproven():
     assert any_key in changed_pending(specs, stale_ev)
 
 
-def test_registry_surface_masks_per_run_names(spark, sf_dir):
+def test_registry_surface_masks_per_run_names(sf_dir):
     """tools/registry_surface.py is the identity gate for refactors: its
-    line for a key must not change from one build of the key to the next.
+    line for a key must not change from one run to the next.
     sink_bucketed_join_noshuffle's plan names catalog tables after the
-    application id, which the mask must hide."""
+    application id, which differs per run and which the mask must hide.
+    Each run is its own interpreter and Spark application, so this
+    test's session is left as it was."""
+    import subprocess
     import sys
 
     from debias_spark.registry import KEY_MODULES
 
-    sys.path.insert(0, str(ROOT))
-    from tools.registry_surface import surface_rows
-
     keys = ["sink_bucketed_join_noshuffle", "tpch_q3_shipping_priority"]
-    first = [row.split("\t") for row in surface_rows(spark, sf_dir, keys)]
-    second = [row.split("\t") for row in surface_rows(spark, sf_dir, keys)]
+    cmd = [sys.executable, "tools/registry_surface.py", sf_dir, "--only", ",".join(keys)]
+    runs = [
+        [line.split("\t") for line in subprocess.run(
+            cmd, cwd=ROOT, check=True, capture_output=True, text=True
+        ).stdout.splitlines()]
+        for _ in range(2)
+    ]
+    first, second = runs
+    assert [r[0] for r in first] == keys + ["priority_ordered", "oracle_sql"], first
+    assert first[len(keys):] == second[len(keys):]
     specs = load_all_queries()
     for key, a, b in zip(keys, first, second):
         assert a[:6] == b[:6], (a, b)
