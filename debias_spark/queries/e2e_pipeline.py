@@ -120,11 +120,15 @@ def pipeline_quarantine_dead_letter(spark: SparkSession, sf_dir: str) -> DataFra
         F.col("n_chars").cast("long").alias("n_chars"),
         F.expr(ROUTE_REASON_SPARK).alias("reason"),
     ).localCheckpoint(eager=True)
-    routed.filter(F.col("reason").isNull()).drop("reason").write.parquet(keep_dir)
+    keep = routed.filter(F.col("reason").isNull()).drop("reason")
+    keep.write.parquet(keep_dir)
     routed.filter(F.col("reason").isNotNull()).write.parquet(dlq_dir)
 
+    # read each sink back with the schema it was written with: no
+    # schema-inference job
     kept = (
-        spark.read.parquet(keep_dir)
+        spark.read.schema(keep.schema)
+        .parquet(keep_dir)
         .groupBy("lang")
         .agg(
             F.lit("kept").alias("route"),
@@ -133,7 +137,8 @@ def pipeline_quarantine_dead_letter(spark: SparkSession, sf_dir: str) -> DataFra
         )
     )
     dlq = (
-        spark.read.parquet(dlq_dir)
+        spark.read.schema(routed.schema)
+        .parquet(dlq_dir)
         .groupBy(F.concat(F.lit("quarantined:"), F.col("reason")).alias("route"), "lang")
         .agg(F.count("*").alias("n_docs"), F.sum("n_chars").alias("sum_chars"))
     )
@@ -377,15 +382,19 @@ def pipeline_quarantine_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         "text",
         F.expr(ROUTE_REASON_SPARK).alias("reason"),
     ).localCheckpoint(eager=True)
-    routed.filter(F.col("reason").isNull()).select(
+    kept = routed.filter(F.col("reason").isNull()).select(
         "doc_id", "lang", "n_chars", F.lit(False).alias("replayed")
-    ).write.parquet(kept_dir)
-    routed.filter(F.col("reason").isNotNull()).select(
+    )
+    dlq = routed.filter(F.col("reason").isNotNull()).select(
         "doc_id", "lang", "text", "n_chars", "reason"
-    ).write.parquet(dlq_dir)
+    )
+    # every read-back below uses the schema its dir was written with, so
+    # none runs a schema-inference job; the replayed append matches kept's
+    kept.write.parquet(kept_dir)
+    dlq.write.parquet(dlq_dir)
 
     # pass 2: remedy -> re-gate -> append passers / dead-letter failers
-    fixed = spark.read.parquet(dlq_dir).select(
+    fixed = spark.read.schema(dlq.schema).parquet(dlq_dir).select(
         "doc_id", "lang", F.expr(_REMEDY_SPARK).alias("text")
     )
     regated = fixed.select(
@@ -397,12 +406,13 @@ def pipeline_quarantine_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     regated.filter(F.col("reason2").isNull()).select(
         "doc_id", "lang", "n_chars", F.lit(True).alias("replayed")
     ).write.mode("append").parquet(kept_dir)
-    regated.filter(F.col("reason2").isNotNull()).select(
+    dead = regated.filter(F.col("reason2").isNotNull()).select(
         "doc_id", "lang", "n_chars", F.col("reason2").alias("reason")
-    ).write.parquet(dead_dir)
+    )
+    dead.write.parquet(dead_dir)
 
-    kept_rb = spark.read.parquet(kept_dir)
-    dead_rb = spark.read.parquet(dead_dir)
+    kept_rb = spark.read.schema(kept.schema).parquet(kept_dir)
+    dead_rb = spark.read.schema(dead.schema).parquet(dead_dir)
     # exactly-once, both halves, from the readbacks (raise: survives -O)
     st = (
         kept_rb.select("doc_id")

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, StringType, StructField, StructType
 
 from debias_spark.annotate.annotator import TAG_SCHEMA
+from debias_spark.sources.small_input import one_partition_if_small
 
 # SURVEY §1.2 — the canonical nested response document
 RESPONSE_SCHEMA = StructType(
@@ -145,9 +146,11 @@ def write_outputs_per_file(annotated: DataFrame, output_dir: str) -> list[str]:
 def read_outputs(spark: SparkSession, output_dir: str) -> DataFrame:
     """Analytics source: glob *-output.json response docs back into the
     nested row type + source filename (analytics/parser.py:16-20)."""
-    return (
+    docs = (
         spark.read.schema(RESPONSE_SCHEMA)
         .option("multiLine", "true")
         .json(f"{output_dir}/*-output.json")
-        .withColumn("file", F.regexp_extract(F.input_file_name(), r"/([^/]+)$", 1))
+    )
+    return one_partition_if_small(docs).withColumn(
+        "file", F.regexp_extract(F.input_file_name(), r"/([^/]+)$", 1)
     )

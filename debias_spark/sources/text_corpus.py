@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from debias_spark.sources.small_input import one_partition_if_small
+
 # call-debias.py:36 — the reference's language gate
 SUPPORTED_LANGUAGES = ("nl", "en", "de", "it", "fr")
 
@@ -33,7 +35,7 @@ def read_corpus(
     reference's batching, retry and output naming.
     """
     df = (
-        spark.read.text(f"{input_dir}/*/*.csv")
+        one_partition_if_small(spark.read.text(f"{input_dir}/*/*.csv"))
         .withColumn("_path", F.input_file_name())
         .withColumn("language", F.regexp_extract("_path", r"/([^/]+)/[^/]+$", 1))
         .withColumn("src_file", F.regexp_extract("_path", r"/([^/]+)$", 1))
@@ -57,9 +59,11 @@ def with_line_seq(df: DataFrame) -> DataFrame:
 
     monotonically_increasing_id() is (partition_id << 33) + row-in-partition;
     text splits of one file are assigned ascending partition ids in file
-    order, so ordering by it within src_file IS line order.  The window
-    shuffles by src_file — apply it on the per-file compat path only (the
-    partitioned scale sink doesn't need an ordering column).
+    order, so ordering by it within src_file IS line order; a small corpus
+    that ``read_corpus`` read as one partition holds those splits in the
+    same order.  The window shuffles by src_file (above one partition) —
+    apply it on the per-file compat path only (the partitioned scale sink
+    doesn't need an ordering column).
     """
     from pyspark.sql.window import Window
 

@@ -390,6 +390,93 @@ def test_staged_read_back_carries_the_written_schema(spark, tmp_path, monkeypatc
     assert annotated.orderBy(*order).collect() == inferred.orderBy(*order).collect()
 
 
+def _exchanges(df) -> int:
+    """Exchange nodes in the physical plan of ``df`` (AQE's initial plan,
+    read before the action runs)."""
+    import re
+
+    return len(re.findall(r"\bExchange\b", df._jdf.queryExecution().executedPlan().toString()))
+
+
+def _whole_run(spark, inp, out):
+    """One reference_pipeline operation over ``inp``: the per-file docs'
+    and reports' bytes, the CLI summary rows, the analytics actions' rows
+    (N+1 row count and both distributions) and each action's exchange
+    count."""
+    from debias_spark.cli import summary_frame
+    from debias_spark.report import render_reports
+
+    annotated = run_pipeline(spark, PipelineConfig(str(inp), str(out), max_retries=2))
+    summary = [tuple(r) for r in summary_frame(annotated).collect()]
+    render_reports(report_rows(annotated), str(out))
+    frame = analytics_view(spark, str(out))
+    actions = {
+        "rows": frame.groupBy().count(),
+        "issue_all": issue_distribution(frame),
+        "issue_en": issue_distribution(frame, "en"),
+        "records": record_distribution(frame),
+    }
+    exchanges = {name: _exchanges(df) for name, df in actions.items()}
+    results = {name: [tuple(r) for r in df.collect()] for name, df in actions.items()}
+    files = {p.name: p.read_bytes() for p in sorted(out.glob("*-output.json"))}
+    files.update((p.name, p.read_bytes()) for p in sorted(out.glob("*.txt")))
+    return files, summary, results, exchanges
+
+
+def test_small_input_gate_keeps_results(spark, tmp_path):
+    """Reading the small inputs as one partition changes plans, not
+    results: with ``minPartitionSize`` pinned to 1 byte (the gate off, the
+    plans of a large corpus) the docs, reports, summary, N+1 row count and
+    distributions are byte-identical to the default run's.  The small
+    run's four analytics actions plan no exchange; pinned off they keep
+    one for the global count, a hash and a range exchange per issue
+    distribution, and two hash plus one range for the record histogram."""
+    from debias_spark.session import pinned_confs
+    from debias_spark.sources.small_input import MIN_PARTITION_SIZE
+
+    inp = _write_corpus(tmp_path / "input")
+    files, summary, results, exchanges = _whole_run(spark, inp, tmp_path / "small")
+    with pinned_confs(spark, {MIN_PARTITION_SIZE: "1b"}):
+        off = _whole_run(spark, inp, tmp_path / "large")
+    assert sorted(files) == [
+        "alpha-output.json", "alpha.txt", "beta-output.json", "gamma-output.json", "gamma.txt"
+    ]
+    assert (files, summary, results) == off[:3]
+    assert results["rows"] == [(11,)]
+    assert exchanges == dict.fromkeys(exchanges, 0)
+    assert off[3] == {"rows": 1, "issue_all": 2, "issue_en": 2, "records": 3}
+
+
+def test_line_order_survives_several_read_splits(spark, tmp_path):
+    """With 2 KB read splits and no open cost, one input file spans several
+    scan partitions; read as one partition, its results array and its
+    report rows still follow input line order."""
+    from debias_spark.report import render_reports
+    from debias_spark.session import pinned_confs
+    from debias_spark.sources import read_corpus
+
+    lines = [f"{i}, slow item number {i:04d}" for i in range(1, 401)]
+    inp = _write_corpus(
+        tmp_path / "input",
+        {"en/long.csv": "\n".join(lines) + "\n", "de/short.csv": "1, ein big\n2, gut\n"},
+    )
+    out = tmp_path / "out"
+    splits = {
+        "spark.sql.files.maxPartitionBytes": "2k",
+        "spark.sql.files.openCostInBytes": "0",
+    }
+    with pinned_confs(spark, splits):
+        assert spark.read.text(f"{inp}/en/long.csv").rdd.getNumPartitions() > 3
+        assert read_corpus(spark, str(inp)).rdd.getNumPartitions() == 1
+        annotated = run_pipeline(spark, PipelineConfig(str(inp), str(out), max_retries=2))
+        render_reports(report_rows(annotated), str(out))
+    doc = json.loads((out / "long-output.json").read_text())
+    assert [r["literal"] for r in doc["results"]] == lines
+    rows = (out / "long.txt").read_text().splitlines()[4:]
+    cells = [row.split(" | ", 1)[0] for row in rows]
+    assert [c for c in cells if c] == [str(i) for i in range(1, 401)]
+
+
 def test_rerun_returns_fresh_annotations(spark, tmp_path):
     """A second run into the same folder over a changed input returns the
     new annotations, not rows from the first run."""

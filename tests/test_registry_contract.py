@@ -384,6 +384,21 @@ def test_pipeline_reuses_results_through_staged_writes_only():
     assert not hits, "pipeline result reused without a staged write:\n" + "\n".join(hits)
 
 
+def test_pipeline_reads_small_inputs_as_one_partition_in_one_place():
+    """The paper pipeline's small-input rule (read an input at or below
+    AQE's minimum partition size as one partition) is spelled once, in
+    ``sources.small_input.one_partition_if_small``.  A ``.coalesce(1)``
+    anywhere else in pipeline.py, report.py, cli.py, dashboard.py,
+    sources/ or annotate/ is an unconditional single partition, which a
+    writer must never take (``warehouse.swap_state_write``) and a large
+    input must never get."""
+    paths = [p for part in ("pipeline.py", "report.py", "cli.py", "dashboard.py",
+                            "sources", "annotate")
+             for p in package_files(part)]
+    sites = set(functions_with(r"\.coalesce\(\s*1\s*\)", paths))
+    assert sites == {("sources/small_input.py", "one_partition_if_small")}, sites
+
+
 def test_key_order_lives_in_one_table():
     """registry.KEY_MODULES is the one statement of the key order:
     queries/__init__.py imports no module (an eager import list there

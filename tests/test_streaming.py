@@ -366,6 +366,8 @@ def test_single_batch_stream_keys_reject_a_second_batch(
         "pipeline_state_compaction",
         "similarity_ann_ivfpq_incremental",
         "similarity_ann_ivfpq_compacted",
+        "pipeline_quarantine_dead_letter",
+        "pipeline_quarantine_replay",
     ],
 )
 def test_staged_read_backs_carry_the_written_schema(spark, sf_dir, monkeypatch, key):
