@@ -30,11 +30,14 @@ default), sized from the scan's own file listing, becomes one partition.
 At that size AQE would coalesce any shuffle of it to one partition
 anyway, so the exchange buys no parallelism; without it the line-order
 window, the CLI summary's ``groupBy`` and the analytics' ``groupBy`` and
-``orderBy`` plan no exchange and no AQE job.  On perfbench's corpus
-(1,741 records, inputs under 300 KB, ``local[4]``) one operation runs 10
-jobs instead of 25 and 10 tasks instead of 40 (SCALE.md, "Small inputs
-as one partition").  An input above the threshold keeps every plan it
-had, so the 100 TB path is unchanged, and no option is added.
+``orderBy`` plan no exchange and no AQE job, and neither do the per-file
+sinks, which group by file (``write_outputs_per_file``,
+``report.render_reports``).  On perfbench's corpus (1,741 records,
+inputs under 300 KB, ``local[4]``) one operation runs 8 jobs instead of
+25 and 8 tasks instead of 40 (SCALE.md, "Small inputs as one partition"
+and "Per-file sinks as one row per output file").  An input above the
+threshold keeps every plan it had, so the 100 TB path is unchanged, and
+no option is added.
 """
 
 from __future__ import annotations

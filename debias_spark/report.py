@@ -15,6 +15,7 @@ from __future__ import annotations
 import pathlib
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 try:  # optional dependency, exactly like the reference's reportlab
     import reportlab  # noqa: F401
@@ -35,36 +36,24 @@ def render_reports(rows: DataFrame, output_dir: str, fmt: str = "text") -> list[
     (the frame is already flagged-only)."""
     out = pathlib.Path(output_dir)
     out.mkdir(parents=True, exist_ok=True)
-    # Hash-partition by src_file so each file's rows sit contiguously in one
-    # partition, sort within partitions, and stream one partition at a time
-    # (toLocalIterator): driver memory is bounded by one partition, not the
-    # corpus, and no range-bounds sampling job runs.  Sort key is
-    # (src_file, seq, tag_pos) — input-file line order, the reference's
-    # report order (record_cell is blanked on tag rows and must never be a
-    # sort key).
-    order_cols = ["src_file", "seq", "tag_pos"] if "seq" in rows.columns else [
-        "src_file", "tag_pos"
+    render = _render_pdf if fmt == "pdf" else _render_text
+    # One row per report: each file's rows gathered and sorted on
+    # (seq, tag_pos), the input-file line order of the reference's report.
+    # That pair is unique within a file, so the blanked record_cell never
+    # decides the order.  Over a one-partition input the groupBy plans no
+    # exchange; streaming with toLocalIterator bounds driver memory by one
+    # partition of reports, not the corpus.
+    per_file = rows.groupBy("src_file").agg(
+        F.sort_array(
+            F.collect_list(
+                F.struct("seq", "tag_pos", "record_cell", "literal_cell", "tag_details")
+            )
+        ).alias("rows")
+    )
+    written = [
+        render(r.src_file.rsplit(".", 1)[0], r.rows, out)
+        for r in per_file.toLocalIterator()
     ]
-    written = []
-    cur_file: str | None = None
-    buf: list = []
-
-    def _flush() -> None:
-        if cur_file is None:
-            return
-        stem = cur_file.rsplit(".", 1)[0]
-        if fmt == "pdf":
-            written.append(_render_pdf(stem, buf, out))
-        else:
-            written.append(_render_text(stem, buf, out))
-
-    ordered = rows.repartition("src_file").sortWithinPartitions(*order_cols)
-    for r in ordered.toLocalIterator():
-        if r.src_file != cur_file:
-            _flush()
-            cur_file, buf = r.src_file, []
-        buf.append(r)
-    _flush()
     return sorted(written)
 
 

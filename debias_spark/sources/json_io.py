@@ -11,17 +11,17 @@ load-bearing.  Two sinks:
 * ``write_outputs_per_file`` — the compatibility path: exact per-file
   response documents with the reference's naming contract, so existing
   consumers of the reference's output directory can point at ours
-  unchanged.  Document assembly AND writing happen distributed
-  (groupBy + to_json -> partitionBy(src_file) text write); the driver's
-  only work is an O(#files) metadata rename pass to apply the
-  ``<stem>-output.json`` names — no row data ever lands on the driver.
+  unchanged.  Document assembly is distributed (groupBy + to_json, one
+  row per input file); the write streams those rows through the driver
+  one partition at a time (``toLocalIterator``) straight to their final
+  ``<stem>-output.json`` names.  It needs a driver-visible POSIX output
+  folder and is not the scale path: ``write_outputs_partitioned`` is.
 """
 
 from __future__ import annotations
 
+import os
 import pathlib
-import shutil
-import urllib.parse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -81,7 +81,8 @@ def write_outputs_partitioned(annotated: DataFrame, output_dir: str) -> None:
 
 def assemble_response_docs(annotated: DataFrame) -> DataFrame:
     """(src_file, json) — one reference-shaped response document per input
-    file, assembled distributed (collect_list under the src_file shuffle).
+    file, assembled distributed (collect_list grouped by src_file: a hash
+    exchange above one partition, none over a one-partition input).
 
     collect_list order after a shuffle is partition-arrival order — not
     stable across runs.  The reference emits results in input-file line
@@ -111,35 +112,24 @@ def assemble_response_docs(annotated: DataFrame) -> DataFrame:
 
 def write_outputs_per_file(annotated: DataFrame, output_dir: str) -> list[str]:
     """Compatibility sink honoring the '<stem>-output.json' naming contract.
-    Returns the written filenames.
+    Returns the written filenames, sorted.
 
-    Fully distributed: the assembled documents are written partitioned by
-    src_file (one row -> one part file per partition dir), then the driver
-    performs an O(#files) rename/manifest pass — pure filesystem metadata,
-    no document content through driver memory."""
+    ``assemble_response_docs`` already yields one row per input file, so
+    the driver streams those rows (one partition in memory at a time) and
+    writes each document to a dot-prefixed temp file in the output folder,
+    then ``os.replace``-s it onto its final name: a reader of the folder
+    sees the old document or the new one, never a torn one, and Spark's
+    file listing skips the temp name.  Over a one-partition input the
+    aggregate plans no exchange, so the sink runs one job."""
     out = pathlib.Path(output_dir)
     out.mkdir(parents=True, exist_ok=True)
-    staging = out / "_staging_per_file"
-    (
-        assemble_response_docs(annotated)
-        .select("src_file", F.col("json").alias("value"))
-        .repartition("src_file")
-        .write.mode("overwrite")
-        .partitionBy("src_file")
-        .text(str(staging))
-    )
     written = []
-    for part_dir in staging.glob("src_file=*"):
-        # partition dir names are URL-encoded partition values
-        src_file = urllib.parse.unquote(part_dir.name.split("=", 1)[1])
-        stem = src_file.rsplit(".", 1)[0]
-        name = f"{stem}-output.json"
-        parts = sorted(p for p in part_dir.glob("part-*") if p.stat().st_size > 0)
-        if not parts:
-            continue
-        parts[0].replace(out / name)
+    for row in assemble_response_docs(annotated).toLocalIterator():
+        name = f"{row.src_file.rsplit('.', 1)[0]}-output.json"
+        tmp = out / f".{name}.tmp"
+        tmp.write_text(row.json + "\n", encoding="utf-8")
+        os.replace(tmp, out / name)
         written.append(name)
-    shutil.rmtree(staging, ignore_errors=True)
     return sorted(written)
 
 

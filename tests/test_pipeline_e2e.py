@@ -176,9 +176,42 @@ def test_results_order_is_input_line_order(pipeline_out):
     assert lits == ["1, the slow old system", "2, all good here", "3, big and slow"]
 
 
-def test_no_staging_dir_left_behind(pipeline_out):
+def test_no_staging_dir_left_behind(spark, pipeline_out, tmp_path):
+    """The per-file sink writes each doc straight to its final name: no
+    ``_staging_per_file`` dir and no temp file stay behind, the returned
+    names are the sorted docs written, a rerun over changed input
+    replaces a doc's content in place, and a file name shared by two
+    language folders still gives one doc and one report (``src_file`` is
+    the bare file name)."""
+    from debias_spark.report import render_reports
+    from debias_spark.sources import write_outputs_per_file
+
+    def leftovers(folder):
+        return [p.name for p in folder.iterdir() if p.name.startswith((".", "_staging"))]
+
     _, out = pipeline_out
-    assert not (out / "_staging_per_file").exists()
+    assert leftovers(out) == []
+
+    inp, out = tmp_path / "input", tmp_path / "out"
+    cfg = PipelineConfig(str(inp), str(out), max_retries=2)
+    for text, want in (("1, slow thing\n", ["slow"]), ("1, big thing\n", ["big"])):
+        _write_corpus(inp, {"en/alpha.csv": text, "en/beta.csv": "1, fine\n"})
+        run_pipeline(spark, cfg)
+        doc = json.loads((out / "alpha-output.json").read_text())
+        assert [[t["literal"] for t in r["tags"]] for r in doc["results"]] == [want]
+        assert leftovers(out) == []
+
+    _write_corpus(inp, {"en/alpha.csv": "1, slow thing\n", "de/alpha.csv": "1, ein big\n"})
+    annotated = run_pipeline(spark, cfg)
+    again = tmp_path / "again"
+    names = write_outputs_per_file(annotated, str(again))
+    assert names == sorted(p.name for p in again.glob("*-output.json")) == ["alpha-output.json"]
+    assert leftovers(again) == []
+    doc = json.loads((again / "alpha-output.json").read_text())
+    assert sorted(r["language"] for r in doc["results"]) == ["de", "en"]
+    assert render_reports(report_rows(annotated), str(again)) == ["alpha.txt"]
+    rows = (again / "alpha.txt").read_text().splitlines()[4:]
+    assert sorted(row.split(" | ")[1] for row in rows) == ["ein big", "slow thing"]
 
 
 def test_dashboard_html_export(spark, pipeline_out, tmp_path):
@@ -447,13 +480,17 @@ def test_small_input_gate_keeps_results(spark, tmp_path):
     assert off[3] == {"rows": 1, "issue_all": 2, "issue_en": 2, "records": 3}
 
 
-def test_line_order_survives_several_read_splits(spark, tmp_path):
+@pytest.mark.parametrize("min_partition", [None, "1b"], ids=["default", "1b"])
+def test_line_order_survives_several_read_splits(spark, tmp_path, min_partition):
     """With 2 KB read splits and no open cost, one input file spans several
-    scan partitions; read as one partition, its results array and its
-    report rows still follow input line order."""
+    scan partitions.  Read as one partition (the default gate), or kept as
+    several with ``minPartitionSize`` pinned to 1 byte so the line-order
+    window and both per-file sinks shuffle (the plans of a large corpus),
+    its results array and its report rows still follow input line order."""
     from debias_spark.report import render_reports
     from debias_spark.session import pinned_confs
     from debias_spark.sources import read_corpus
+    from debias_spark.sources.small_input import MIN_PARTITION_SIZE
 
     lines = [f"{i}, slow item number {i:04d}" for i in range(1, 401)]
     inp = _write_corpus(
@@ -465,9 +502,12 @@ def test_line_order_survives_several_read_splits(spark, tmp_path):
         "spark.sql.files.maxPartitionBytes": "2k",
         "spark.sql.files.openCostInBytes": "0",
     }
+    if min_partition is not None:
+        splits[MIN_PARTITION_SIZE] = min_partition
     with pinned_confs(spark, splits):
         assert spark.read.text(f"{inp}/en/long.csv").rdd.getNumPartitions() > 3
-        assert read_corpus(spark, str(inp)).rdd.getNumPartitions() == 1
+        scan_parts = read_corpus(spark, str(inp)).rdd.getNumPartitions()
+        assert scan_parts == 1 if min_partition is None else scan_parts > 3
         annotated = run_pipeline(spark, PipelineConfig(str(inp), str(out), max_retries=2))
         render_reports(report_rows(annotated), str(out))
     doc = json.loads((out / "long-output.json").read_text())
@@ -475,6 +515,41 @@ def test_line_order_survives_several_read_splits(spark, tmp_path):
     rows = (out / "long.txt").read_text().splitlines()[4:]
     cells = [row.split(" | ", 1)[0] for row in rows]
     assert [c for c in cells if c] == [str(i) for i in range(1, 401)]
+
+
+def test_per_file_sinks_run_one_job_without_exchange(spark, tmp_path, monkeypatch):
+    """Over the small fixture corpus (read as one partition) the doc sink
+    and the report renderer each run exactly one Spark job, counted per
+    job group, and the frame each streams plans no exchange: both group
+    by file over the one partition instead of repartitioning it."""
+    from debias_spark.report import render_reports
+    from debias_spark.sources import write_outputs_per_file
+
+    inp = _write_corpus(tmp_path / "input")
+    annotated = run_pipeline(spark, PipelineConfig(str(inp), str(tmp_path / "out"), max_retries=2))
+    frame_type = type(annotated)
+    streamed, stream = [], frame_type.toLocalIterator
+
+    def spy_stream(self, *args, **kwargs):
+        streamed.append(_exchanges(self))
+        return stream(self, *args, **kwargs)
+
+    monkeypatch.setattr(frame_type, "toLocalIterator", spy_stream)
+    sc, jobs = spark.sparkContext, {}
+    sinks = {
+        "per-file-docs": lambda folder: write_outputs_per_file(annotated, folder),
+        "per-file-reports": lambda folder: render_reports(report_rows(annotated), folder),
+    }
+    for group, sink in sinks.items():
+        sc.setLocalProperty("spark.jobGroup.id", group)
+        try:
+            assert sink(str(tmp_path / group))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+        jobs[group] = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs == dict.fromkeys(sinks, 1)
+    assert streamed == [0, 0]
 
 
 def test_rerun_returns_fresh_annotations(spark, tmp_path):

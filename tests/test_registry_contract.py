@@ -369,19 +369,25 @@ def test_pipeline_reuses_results_through_staged_writes_only():
     or executor-local blocks: a ``.cache(``, ``.persist(`` or
     ``localCheckpoint(`` in pipeline.py, report.py, sources/ or annotate/
     could serve an earlier run's rows for an identical plan, or lose them
-    with an executor."""
+    with an executor.  The per-file sinks group by file instead of
+    repartitioning: a ``.repartition(`` in pipeline.py, report.py or
+    sources/json_io.py is a shuffle (and a job) even over a one-partition
+    input."""
     import re
 
-    reuse = re.compile(r"\.cache\(|\.persist\(|localCheckpoint\(")
-    paths = [p for part in ("pipeline.py", "report.py", "sources", "annotate")
-             for p in package_files(part)]
-    hits = [
-        f"{path.relative_to(PKG)}:{i}: {line.strip()}"
-        for path in paths
-        for i, line in enumerate(path.read_text().splitlines(), 1)
-        if reuse.search(line)
-    ]
-    assert not hits, "pipeline result reused without a staged write:\n" + "\n".join(hits)
+    def hits(pattern, parts):
+        return [
+            f"{path.relative_to(PKG)}:{i}: {line.strip()}"
+            for path in (p for part in parts for p in package_files(part))
+            for i, line in enumerate(path.read_text().splitlines(), 1)
+            if re.search(pattern, line)
+        ]
+
+    reuse = hits(r"\.cache\(|\.persist\(|localCheckpoint\(",
+                 ("pipeline.py", "report.py", "sources", "annotate"))
+    assert not reuse, "pipeline result reused without a staged write:\n" + "\n".join(reuse)
+    shuffle = hits(r"\.repartition\(", ("pipeline.py", "report.py", "sources/json_io.py"))
+    assert not shuffle, "per-file sink repartitions:\n" + "\n".join(shuffle)
 
 
 def test_pipeline_reads_small_inputs_as_one_partition_in_one_place():
