@@ -21,6 +21,13 @@ annotator and the API behind it.  Spark and Hadoop readers skip
 ``_``-prefixed dirs, and the analytics glob ``*-output.json`` does not
 match it.
 
+Per-file contract: ``read_corpus`` sets each row's file (``src_file``,
+the bare, URI-decoded input name) and line position (``_seq``) once, at
+the scan, and ``text_corpus.write_per_file`` writes both the documents
+and the reports from them, in line order, under the bare input name.
+Nothing between the scan and the staging write shuffles, so the
+annotator gets the scan's partitions.
+
 Small inputs are read as one partition.  The pipeline's three reads (the
 corpus glob, the ``_annotated/`` read-back and the ``*-output.json``
 glob) each pass through ``sources.small_input.one_partition_if_small``
@@ -28,16 +35,15 @@ right at the scan: an input of at most
 ``spark.sql.adaptive.coalescePartitions.minPartitionSize`` bytes (1 MB by
 default), sized from the scan's own file listing, becomes one partition.
 At that size AQE would coalesce any shuffle of it to one partition
-anyway, so the exchange buys no parallelism; without it the line-order
-window, the CLI summary's ``groupBy`` and the analytics' ``groupBy`` and
-``orderBy`` plan no exchange and no AQE job, and neither do the per-file
-sinks, which group by file (``write_outputs_per_file``,
-``report.render_reports``).  On perfbench's corpus (1,741 records,
-inputs under 300 KB, ``local[4]``) one operation runs 8 jobs instead of
-25 and 8 tasks instead of 40 (SCALE.md, "Small inputs as one partition"
-and "Per-file sinks as one row per output file").  An input above the
-threshold keeps every plan it had, so the 100 TB path is unchanged, and
-no option is added.
+anyway, so the exchange buys no parallelism; without it the CLI
+summary's ``groupBy`` and the analytics' ``groupBy`` and ``orderBy`` plan
+no exchange and no AQE job, and neither do the per-file sinks, which
+group by file (``write_outputs_per_file``, ``report.render_reports``).
+On perfbench's corpus (1,741 records, inputs under 300 KB, ``local[4]``)
+one operation runs 8 jobs instead of 25 and 8 tasks instead of 40
+(SCALE.md, "Small inputs as one partition" and "Per-file sinks as one
+row per output file").  An input above the threshold keeps every plan
+it had, so the 100 TB path is unchanged, and no option is added.
 """
 
 from __future__ import annotations
@@ -57,11 +63,7 @@ from debias_spark.sources import (
     write_outputs_per_file,
 )
 from debias_spark.sources.small_input import one_partition_if_small
-from debias_spark.sources.text_corpus import (
-    SUPPORTED_LANGUAGES,
-    split_record,
-    with_line_seq,
-)
+from debias_spark.sources.text_corpus import split_record
 
 
 @dataclass
@@ -135,7 +137,6 @@ def run_pipeline(
     cfg: PipelineConfig,
     client_factory=None,
     per_file_compat: bool = True,
-    languages: tuple[str, ...] = SUPPORTED_LANGUAGES,
 ) -> DataFrame:
     """Scan -> annotate -> stage -> sink.  Returns the annotated corpus,
     read back from its staged Parquet copy in ``<output_folder>/_annotated/``
@@ -144,11 +145,7 @@ def run_pipeline(
     per_file_compat=True writes the reference's '<stem>-output.json' docs;
     False writes the distributed language-partitioned NDJSON sink (the
     100 TB path)."""
-    corpus = read_corpus(spark, cfg.input_folder, languages=languages)
-    # _seq (the record's position among its file's non-blank lines) makes
-    # the per-file results arrays and the report row order deterministic in
-    # input order, like the reference.
-    corpus = with_line_seq(corpus)
+    corpus = read_corpus(spark, cfg.input_folder)
     ann_cfg = AnnotateConfig(
         max_retries=cfg.max_retries, use_ner=cfg.use_ner, use_llm=cfg.use_llm
     )
@@ -176,15 +173,9 @@ def report_rows(annotated: DataFrame) -> DataFrame:
     the record cells blanked after the first tag row (enumerate-index
     semantics at :106-107).  Rendering (reportlab) stays a driver-side sink
     over this frame."""
-    base = split_record(flagged(annotated), "value")
-    # seq = input-file line order so rendered rows appear in the same order
-    # as the reference's report (it walks lines sequentially).
-    seq = (
-        F.col("_seq") if "_seq" in base.columns else F.monotonically_increasing_id()
-    )
-    ex = base.select(
+    ex = split_record(flagged(annotated), "value").select(
         "src_file",
-        seq.cast("long").alias("seq"),
+        "_seq",
         "record_num",
         "literal_text",
         F.posexplode("tags").alias("tag_pos", "tag"),
@@ -192,7 +183,7 @@ def report_rows(annotated: DataFrame) -> DataFrame:
     first = F.col("tag_pos") == 0
     return ex.select(
         "src_file",
-        "seq",
+        "_seq",
         F.when(first, F.col("record_num")).otherwise("").alias("record_cell"),
         F.when(first, F.col("literal_text")).otherwise("").alias("literal_cell"),
         F.format_string(

@@ -15,7 +15,8 @@ from __future__ import annotations
 import pathlib
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from debias_spark.sources.text_corpus import write_per_file
 
 try:  # optional dependency, exactly like the reference's reportlab
     import reportlab  # noqa: F401
@@ -33,42 +34,25 @@ def render_reports(rows: DataFrame, output_dir: str, fmt: str = "text") -> list[
     Returns the written filenames, sorted ('<stem>.txt' / '<stem>.pdf' —
     the reference derives report names from input names with a suffix swap,
     call-debias.py:64).  Only files with >= 1 flagged record get a report
-    (the frame is already flagged-only)."""
-    out = pathlib.Path(output_dir)
-    out.mkdir(parents=True, exist_ok=True)
-    render = _render_pdf if fmt == "pdf" else _render_text
-    # One row per report: each file's rows gathered and sorted on
-    # (seq, tag_pos), the input-file line order of the reference's report.
-    # That pair is unique within a file, so the blanked record_cell never
-    # decides the order.  Over a one-partition input the groupBy plans no
-    # exchange; streaming with toLocalIterator bounds driver memory by one
-    # partition of reports, not the corpus.
-    per_file = rows.groupBy("src_file").agg(
-        F.sort_array(
-            F.collect_list(
-                F.struct("seq", "tag_pos", "record_cell", "literal_cell", "tag_details")
-            )
-        ).alias("rows")
-    )
-    written = [
-        render(r.src_file.rsplit(".", 1)[0], r.rows, out)
-        for r in per_file.toLocalIterator()
-    ]
-    return sorted(written)
+    (the frame is already flagged-only).  ``write_per_file`` lists each
+    file's rows on (_seq, tag_pos), the input-file line order of the
+    reference's report; that pair is unique within a file, so the blanked
+    record_cell never decides the order."""
+    cells = rows.select("src_file", "_seq", "tag_pos", "record_cell", "literal_cell", "tag_details")
+    if fmt == "pdf":
+        return write_per_file(cells, output_dir, ".pdf", _render_pdf)
+    return write_per_file(cells, output_dir, ".txt", _render_text)
 
 
-def _render_text(stem: str, rows: list, out: pathlib.Path) -> str:
-    name = f"{stem}.txt"
+def _render_text(stem: str, rows: list, path: pathlib.Path) -> None:
     lines = [f"De-bias report: {stem}", "", " | ".join(HEADER), "-" * 60]
     for r in rows:
         details = r.tag_details.replace("\n", "; ")
         lines.append(f"{r.record_cell} | {r.literal_cell} | {details}")
-    (out / name).write_text("\n".join(lines) + "\n")
-    return name
+    path.write_text("\n".join(lines) + "\n")
 
 
-def _render_pdf(stem: str, rows: list, out: pathlib.Path) -> str:
-    name = f"{stem}.pdf"
+def _render_pdf(stem: str, rows: list, path: pathlib.Path) -> None:
     if HAVE_REPORTLAB:
         from reportlab.lib.pagesizes import A4, landscape
         from reportlab.platypus import SimpleDocTemplate, Table
@@ -76,13 +60,12 @@ def _render_pdf(stem: str, rows: list, out: pathlib.Path) -> str:
         data = [list(HEADER)] + [
             [r.record_cell, r.literal_cell, r.tag_details] for r in rows
         ]
-        doc = SimpleDocTemplate(str(out / name), pagesize=landscape(A4))
-        doc.build([Table(data)])
-        return name
+        SimpleDocTemplate(str(path), pagesize=landscape(A4)).build([Table(data)])
+        return
     from debias_spark.pdfmin import write_table_pdf
 
     write_table_pdf(
-        out / name,
+        path,
         f"De-bias report: {stem}",
         HEADER,
         [
@@ -90,4 +73,3 @@ def _render_pdf(stem: str, rows: list, out: pathlib.Path) -> str:
             for r in rows
         ],
     )
-    return name

@@ -177,12 +177,12 @@ def test_results_order_is_input_line_order(pipeline_out):
 
 
 def test_no_staging_dir_left_behind(spark, pipeline_out, tmp_path):
-    """The per-file sink writes each doc straight to its final name: no
-    ``_staging_per_file`` dir and no temp file stay behind, the returned
-    names are the sorted docs written, a rerun over changed input
-    replaces a doc's content in place, and a file name shared by two
-    language folders still gives one doc and one report (``src_file`` is
-    the bare file name)."""
+    """The per-file writer puts each doc and each text or PDF report
+    straight onto its final name: no ``_staging_per_file`` dir and no
+    temp file stay behind, the returned names are the sorted docs
+    written, a rerun over changed input replaces each doc and report in
+    place, and a file name shared by two language folders still gives
+    one doc and one report (``src_file`` is the bare file name)."""
     from debias_spark.report import render_reports
     from debias_spark.sources import write_outputs_per_file
 
@@ -196,9 +196,13 @@ def test_no_staging_dir_left_behind(spark, pipeline_out, tmp_path):
     cfg = PipelineConfig(str(inp), str(out), max_retries=2)
     for text, want in (("1, slow thing\n", ["slow"]), ("1, big thing\n", ["big"])):
         _write_corpus(inp, {"en/alpha.csv": text, "en/beta.csv": "1, fine\n"})
-        run_pipeline(spark, cfg)
+        annotated = run_pipeline(spark, cfg)
+        assert render_reports(report_rows(annotated), str(out)) == ["alpha.txt"]
+        assert render_reports(report_rows(annotated), str(out), fmt="pdf") == ["alpha.pdf"]
         doc = json.loads((out / "alpha-output.json").read_text())
         assert [[t["literal"] for t in r["tags"]] for r in doc["results"]] == [want]
+        assert f"Literal: {want[0]}" in (out / "alpha.txt").read_text()
+        assert f"{want[0]} thing".encode() in (out / "alpha.pdf").read_bytes()
         assert leftovers(out) == []
 
     _write_corpus(inp, {"en/alpha.csv": "1, slow thing\n", "de/alpha.csv": "1, ein big\n"})
@@ -484,9 +488,9 @@ def test_small_input_gate_keeps_results(spark, tmp_path):
 def test_line_order_survives_several_read_splits(spark, tmp_path, min_partition):
     """With 2 KB read splits and no open cost, one input file spans several
     scan partitions.  Read as one partition (the default gate), or kept as
-    several with ``minPartitionSize`` pinned to 1 byte so the line-order
-    window and both per-file sinks shuffle (the plans of a large corpus),
-    its results array and its report rows still follow input line order."""
+    several with ``minPartitionSize`` pinned to 1 byte so both per-file
+    sinks shuffle (the plans of a large corpus), its results array and
+    its report rows still follow input line order."""
     from debias_spark.report import render_reports
     from debias_spark.session import pinned_confs
     from debias_spark.sources import read_corpus
@@ -515,6 +519,73 @@ def test_line_order_survives_several_read_splits(spark, tmp_path, min_partition)
     rows = (out / "long.txt").read_text().splitlines()[4:]
     cells = [row.split(" | ", 1)[0] for row in rows]
     assert [c for c in cells if c] == [str(i) for i in range(1, 401)]
+
+
+def test_staged_frame_keeps_the_scan_partitions(spark, tmp_path, monkeypatch):
+    """Above the small-input gate (``minPartitionSize`` pinned to 1 byte)
+    nothing between the scan and the staging write shuffles: the frame
+    ``run_pipeline`` stages plans no ``Window`` and no ``Exchange``, and a
+    file read as several 2 KB splits reaches the annotator in as many
+    partitions, not in one task per input file."""
+    from pyspark.sql import DataFrameWriter
+    from pyspark.sql import functions as F
+
+    from debias_spark.session import pinned_confs
+    from debias_spark.sources.small_input import MIN_PARTITION_SIZE
+
+    lines = [f"{i}, slow item number {i:04d}" for i in range(1, 401)]
+    inp = _write_corpus(
+        tmp_path / "input",
+        {"en/long.csv": "\n".join(lines) + "\n", "de/short.csv": "1, ein big\n"},
+    )
+    staged, write = [], DataFrameWriter.parquet
+
+    def spy_write(self, path, *args, **kwargs):
+        staged.append(self._df)
+        return write(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy_write)
+    confs = {
+        "spark.sql.files.maxPartitionBytes": "2k",
+        "spark.sql.files.openCostInBytes": "0",
+        MIN_PARTITION_SIZE: "1b",
+    }
+    with pinned_confs(spark, confs):
+        run_pipeline(spark, PipelineConfig(str(inp), str(tmp_path / "out"), max_retries=2))
+        (frame,) = staged
+        plan = frame._jdf.queryExecution().executedPlan().toString()
+        long_parts = (
+            frame.filter(F.col("src_file") == "long.csv")
+            .select(F.spark_partition_id())
+            .distinct()
+            .count()
+        )
+    assert "Window" not in plan and _exchanges(frame) == 0, plan
+    assert long_parts > 3
+
+
+def test_escaped_file_names_keep_their_bare_names(spark, tmp_path, capsys):
+    """Input names that a URI escapes are decoded exactly once: the CLI
+    summary, the docs, the reports and the analytics' ``file`` column all
+    carry the bare name, as the reference names its outputs
+    (call-debias.py:64, :141).  ``a+b`` keeps its '+', and a literal
+    ``x%2Fy.csv`` stays one file inside the output folder."""
+    from debias_spark.cli import main
+
+    stems = ["a+b", "b c%", "x%2Fy", "é#x"]
+    inp = _write_corpus(tmp_path / "input", {f"en/{s}.csv": "1, slow thing\n" for s in stems})
+    out = tmp_path / "out"
+    assert main(["--input", str(inp), "--output", str(out), "--reports", "text"]) == 0
+    stdout = capsys.readouterr().out
+    for stem in stems:
+        assert f"{stem}.csv [en]: 1 records, 1 flagged, 0 errors" in stdout
+    docs = sorted(f"{s}-output.json" for s in stems)
+    assert sorted(p.name for p in out.glob("*-output.json")) == docs
+    assert sorted(p.name for p in out.glob("*.txt")) == sorted(f"{s}.txt" for s in stems)
+    assert sorted(p.name for p in out.iterdir() if p.is_dir()) == ["_annotated"]
+    assert (out / "b c%.txt").read_text().startswith("De-bias report: b c%\n")
+    frame = analytics_view(spark, str(out))
+    assert sorted(r.file for r in frame.select("file").distinct().collect()) == docs
 
 
 def test_per_file_sinks_run_one_job_without_exchange(spark, tmp_path, monkeypatch):

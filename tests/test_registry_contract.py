@@ -390,6 +390,29 @@ def test_pipeline_reuses_results_through_staged_writes_only():
     assert not shuffle, "per-file sink repartitions:\n" + "\n".join(shuffle)
 
 
+def test_per_file_contract_lives_in_one_module():
+    """Which file a pipeline row came from, where it sits in that file and
+    what its output is called are each spelled in one module: the scanned
+    file's name (``_metadata``; ``input_file_name(`` was its URI-escaped
+    predecessor) and the ``<stem><suffix>`` naming and line-order writer
+    in sources/text_corpus.py, the document suffix in sources/json_io.py.
+    ``Window`` / ``row_number`` belong to the dashboard's ranking only: a
+    line-order window shuffles the corpus by file ahead of the annotator."""
+    homes = {
+        r"input_file_name\(|_metadata": "sources/text_corpus.py",
+        r"""rsplit\(["']\.["'], 1\)""": "sources/text_corpus.py",
+        r"""["']-output\.json["']""": "sources/json_io.py",
+        r"\bWindow\b|row_number": "dashboard.py",
+    }
+    paths = [p for part in ("pipeline.py", "report.py", "cli.py", "dashboard.py", "sources")
+             for p in package_files(part)]
+    spread = {
+        pattern: sorted({rel for rel, _ in functions_with(pattern, paths)} - {home})
+        for pattern, home in homes.items()
+    }
+    assert spread == dict.fromkeys(homes, []), spread
+
+
 def test_pipeline_reads_small_inputs_as_one_partition_in_one_place():
     """The paper pipeline's small-input rule (read an input at or below
     AQE's minimum partition size as one partition) is spelled once, in

@@ -9,19 +9,20 @@ from debias_spark.annotate import annotate
 from debias_spark.catalog import table
 from debias_spark.pipeline import report_rows
 from debias_spark.report import HAVE_REPORTLAB, render_reports
+from debias_spark.sources import read_corpus
 from debias_spark.streaming import run_available_now, stream_events
 from debias_spark.streaming.stateful import running_user_counts
 
 
 @pytest.fixture()
-def annotated(spark):
-    rows = [
-        ("1, slow old ride", "en", "a.csv"),
-        ("2, clean", "en", "a.csv"),
-        ("1, big thing", "de", "b.csv"),
-    ]
-    df = spark.createDataFrame(rows, ["value", "language", "src_file"])
-    return annotate(df, text_col="value", lang_col="language")
+def annotated(spark, tmp_path_factory):
+    """The annotated corpus of two files, scanned by ``read_corpus`` so it
+    carries ``src_file`` and ``_seq`` like every pipeline frame."""
+    inp = tmp_path_factory.mktemp("corpus")
+    for rel, text in (("en/a.csv", "1, slow old ride\n2, clean\n"), ("de/b.csv", "1, big thing\n")):
+        (inp / rel).parent.mkdir(exist_ok=True)
+        (inp / rel).write_text(text)
+    return annotate(read_corpus(spark, str(inp)), text_col="value", lang_col="language")
 
 
 def test_render_text_reports(annotated, tmp_path):
