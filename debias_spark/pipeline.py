@@ -10,8 +10,8 @@ sinks are distributed with a per-file compatibility mode; analytics are the
 registered E-series queries over the re-read outputs.
 
 ``run_pipeline`` annotates each record exactly once per run: it writes the
-annotated corpus once as Parquet to ``<output_folder>/_annotated/`` and
-returns a frame read back from that directory.  The sink, the CLI summary
+annotated corpus once as Parquet to ``<output_folder>/_annotated/corpus/``
+and returns a frame read back from that directory.  The sink, the CLI summary
 and the report all read this one committed copy, so the annotator (and a
 real HTTP API behind it) sees every record once, and a non-deterministic
 API cannot make the written docs, the summary and the report disagree.
@@ -19,7 +19,9 @@ The returned frame stays valid until the same output folder is rewritten.
 At 100 TB this one columnar write replaces three more passes over the
 annotator and the API behind it.  Spark and Hadoop readers skip
 ``_``-prefixed dirs, and the analytics glob ``*-output.json`` does not
-match it.
+match it.  The Parquet sits one level below ``_annotated/`` so that its
+read-back names a leaf Spark does not take for hidden: named by its own
+``_`` leaf, Spark logs ``All paths were ignored`` and reads it anyway.
 
 Per-file contract: ``read_corpus`` sets each row's file (``src_file``,
 the bare, URI-decoded input name) and line position (``_seq``) once, at
@@ -139,8 +141,9 @@ def run_pipeline(
     per_file_compat: bool = True,
 ) -> DataFrame:
     """Scan -> annotate -> stage -> sink.  Returns the annotated corpus,
-    read back from its staged Parquet copy in ``<output_folder>/_annotated/``
-    (see the module docstring); a rerun into the same folder replaces it.
+    read back from its staged Parquet copy in
+    ``<output_folder>/_annotated/corpus/`` (see the module docstring); a
+    rerun into the same folder replaces it.
 
     per_file_compat=True writes the reference's '<stem>-output.json' docs;
     False writes the distributed language-partitioned NDJSON sink (the
@@ -155,7 +158,7 @@ def run_pipeline(
     # A committed write, not cache()/persist(): the cache manager would hand
     # a later run with the same plan (same input path, same client) this
     # run's rows, and executor-local blocks do not survive executor loss.
-    staged = f"{cfg.output_folder}/_annotated"
+    staged = f"{cfg.output_folder}/_annotated/corpus"
     annotated.write.mode("overwrite").parquet(staged)
     # Reading with the written schema skips Parquet's schema-inference job;
     # the file source makes every field nullable, as inference would.

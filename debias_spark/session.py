@@ -16,6 +16,7 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession
 
 APP_NAME = "debias-spark"
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 # Scale posture (SURVEY §6): these settings are chosen for correctness at
 # local scale AND sanity at cluster scale.  shuffle.partitions=32 matches
@@ -53,6 +54,12 @@ _BASE_CONF = {
     # no double round-trip).  Harmless for µs-timestamp generations, where
     # catalog.py detects the timestamp dtype and skips the rebuild.
     "spark.sql.legacy.parquet.nanosAsLong": "true",
+    # The Python daemon sets up zip imports and the collector once per
+    # worker process, not once per task (pyworker.py); the path finds it
+    # from any working directory.  A session not built here (the driver
+    # harness's own) keeps Spark's stock daemon.
+    "spark.python.daemon.module": "debias_spark.pyworker",
+    "spark.executorEnv.PYTHONPATH": _PACKAGE_ROOT,
 }
 
 

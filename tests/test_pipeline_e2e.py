@@ -412,7 +412,7 @@ def test_staged_read_back_carries_the_written_schema(spark, tmp_path, monkeypatc
     monkeypatch.setattr(DataFrameWriter, "parquet", spy_write)
     monkeypatch.setattr(pipeline, "write_outputs_per_file", spy_sink)
     inp, out = _write_corpus(tmp_path / "input"), tmp_path / "out"
-    staged = f"{out}/_annotated"
+    staged = f"{out}/_annotated/corpus"
     sc.setLocalProperty("spark.jobGroup.id", group)
     try:
         annotated = run_pipeline(spark, PipelineConfig(str(inp), str(out), max_retries=2))
@@ -425,6 +425,40 @@ def test_staged_read_back_carries_the_written_schema(spark, tmp_path, monkeypatc
     assert annotated.schema == inferred.schema
     order = ("src_file", "_seq")
     assert annotated.orderBy(*order).collect() == inferred.orderBy(*order).collect()
+
+
+def test_staged_read_back_logs_no_ignored_paths(tmp_path):
+    """run_pipeline reads the staged corpus back from
+    ``_annotated/corpus/``: naming the ``_``-prefixed directory itself
+    makes Spark log ``All paths were ignored`` and then read it anyway.
+    A fresh process, so its log holds this run alone; it logs one WARN of
+    its own to show WARN lines reach stderr."""
+    import pathlib
+    import subprocess
+    import sys
+
+    inp, out = _write_corpus(tmp_path / "input"), tmp_path / "out"
+    script = (
+        "import sys\n"
+        "from debias_spark.pipeline import PipelineConfig, run_pipeline\n"
+        "from debias_spark.session import get_spark\n"
+        "spark = get_spark('staged-read-back-log')\n"
+        "run_pipeline(spark, PipelineConfig(sys.argv[1], sys.argv[2], max_retries=2))\n"
+        "spark._jvm.org.apache.log4j.LogManager.getLogger('probe').warn('probe-warning')\n"
+    )
+    run = subprocess.run(
+        [sys.executable, "-c", script, str(inp), str(out)],
+        cwd=pathlib.Path(__file__).resolve().parent.parent,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert run.returncode == 0, run.stderr[-4000:]
+    assert sorted(p.name for p in out.glob("*-output.json")) == [
+        "alpha-output.json", "beta-output.json", "gamma-output.json"
+    ]
+    assert "probe-warning" in run.stderr
+    assert "All paths were ignored" not in run.stderr
 
 
 def _exchanges(df) -> int:

@@ -363,6 +363,42 @@ def test_session_conf_writes_live_in_one_module():
     assert not hits, "session conf written outside session.py:\n" + "\n".join(hits)
 
 
+def test_python_daemon_lives_in_one_module():
+    """The engine's Python daemon is named once, as
+    ``spark.python.daemon.module`` in session.py, and the import
+    machinery it replaces (``zipimport``, ``sys.path_hooks``,
+    ``path_importer_cache``) and the collector it freezes
+    (``gc.freeze``) are touched only in debias_spark/pyworker.py.
+    Importing it, which imports ``debias_spark`` in the daemon before
+    the daemon forks its workers, starts no thread beyond those Spark's
+    own daemon starts (a forked worker keeps only the forking thread) and
+    touches no SparkContext."""
+    import subprocess
+    import sys
+
+    paths = package_files() + package_files(root=ROOT / "tools") + sorted(ROOT.glob("*.py"))
+
+    def homes(pattern):
+        return {rel for rel, _ in functions_with(pattern, paths, root=ROOT)}
+
+    assert homes(r"spark\.python\.daemon\.module") == {"debias_spark/session.py"}
+    assert homes(r"\bzipimport\b|\bpath_hooks\b|\bpath_importer_cache\b|\bgc\.freeze\b") == {
+        "debias_spark/pyworker.py"
+    }
+    probe = (
+        "import os, threading\n"
+        "from pyspark import SparkContext, daemon\n"
+        "def threads():\n"
+        "    return len(os.listdir('/proc/self/task')), threading.active_count()\n"
+        "before = threads()\n"
+        "import debias_spark.pyworker\n"
+        "assert threads() == before, (before, threads())\n"
+        "assert SparkContext._active_spark_context is None\n"
+        "assert SparkContext._gateway is None and SparkContext._jvm is None\n"
+    )
+    subprocess.run([sys.executable, "-c", probe], cwd=ROOT, check=True)
+
+
 def test_pipeline_reuses_results_through_staged_writes_only():
     """The annotated corpus is reused through one committed Parquet write
     (``run_pipeline``'s ``_annotated/``), never through the cache manager
